@@ -192,6 +192,12 @@ def build_driver_line(total: float, queries: dict, scalars: dict) -> str:
         integer deciseconds, everything else as the "v" decisecond
         array in numeric-id order among the rest; "qids" stays the FULL
         registry id list (rest ids = qids minus the named keys)."""
+        # two names sharing a qnum would collapse to one named key and
+        # shift the rest-ids decode: fail loudly, never emit that line
+        qnums = [_qnum(n) for n in queries]
+        if len(set(qnums)) != len(qnums):
+            dup = sorted(q for q in set(qnums) if qnums.count(q) > 1)
+            raise ValueError(f"registry names share query numbers: {dup}")
         by_slow = sorted(queries.items(), key=lambda kv: (-kv[1], kv[0]))
         named = dict(
             sorted(

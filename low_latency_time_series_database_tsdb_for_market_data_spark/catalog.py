@@ -31,6 +31,7 @@ comparison (a column-side cast would silently kill pushdown).
 from __future__ import annotations
 
 import datetime as _dt
+from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -105,23 +106,64 @@ def ts_lit(df: DataFrame, value: _dt.datetime, *, col: str = "ts") -> Column:
     return F.expr(f"TIMESTAMP '{iso}'")
 
 
-def _footer_metadatas(path: str):
-    """Parquet FileMetaData for every file under `path` (a file or a
-    directory tree), or None when the path is missing, unlistable, or
-    holds no parquet files.  Shared walk for the planning-time footer
-    probes — they are optimizations, so every failure mode maps to None
-    and the caller's Spark data probe."""
-    from pathlib import Path
+def local_path(path: str) -> Path | None:
+    """``path`` on the local filesystem (a plain path or a ``file:`` URI),
+    or None for any other scheme (object stores, HDFS), which the footer
+    probes cannot list."""
+    from urllib.parse import urlparse
 
+    u = urlparse(path)
+    if u.scheme == "file":
+        return Path(u.path)
+    return Path(path) if u.scheme == "" else None
+
+
+def _spark_hidden(name: str) -> bool:
+    """Spark's listing rule for one path component
+    (``PartitioningAwareFileIndex.shouldFilterOutPathName``): names
+    starting with ``_`` (unless a ``k=v`` partition directory) or ``.``,
+    and in-flight ``._COPYING_`` files, are never read — a crashed
+    append's ``_temporary/`` among them."""
+    if name.startswith(("_common_metadata", "_metadata")):
+        return False
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _parquet_files(path: str) -> list[Path] | None:
+    """The parquet files Spark reads under ``path`` (a file or a directory
+    tree), sorted; [] when the path is missing, None when it is not
+    local.  Raises OSError when the tree cannot be listed."""
+    p = local_path(path)
+    if p is None:
+        return None
+    if not p.is_dir():
+        return [p] if p.exists() else []
+    return sorted(
+        f
+        for f in p.glob("**/*.parquet")
+        if not any(_spark_hidden(c) for c in f.relative_to(p).parts)
+    )
+
+
+def _footer_metadatas(path: str):
+    """Parquet FileMetaData for every file Spark would read under `path`
+    (a file or a directory tree), or None when the path is missing, not
+    local, unlistable, or holds no parquet files.  Shared walk for the
+    footer probes — they are optimizations, so every such case maps to
+    None and the caller's Spark data probe."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     try:
-        p = Path(path)
-        files = sorted(p.glob("**/*.parquet")) if p.is_dir() else [p]
-        if not files or not files[0].exists():
+        files = _parquet_files(path)
+        if not files:
             return None
         return [pq.ParquetFile(f).metadata for f in files]
-    except Exception:  # missing/corrupt/unlistable -> data-probe fallback
+    except (OSError, pa.ArrowInvalid):  # unlistable/corrupt -> data probe
         return None
 
 
@@ -212,27 +254,58 @@ def parquet_num_rows(path: str) -> int | None:
     return sum(md.num_rows for md in mds)
 
 
+def parquet_int_max(path: str, col: str) -> int | None:
+    """Maximum of integer column ``col`` from parquet footer statistics —
+    no scan, no Spark job.  None when the footers cannot answer: the
+    path is missing, not local or holds no rows, a file lacks ``col`` or
+    stores it as anything but a plain integer, or a non-empty row group
+    has no min/max stats.  The caller then runs its Spark aggregation."""
+    mds = _footer_metadatas(path)
+    if mds is None:
+        return None
+    hi: int | None = None
+    for md in mds:
+        names = [md.schema.column(i).name for i in range(md.num_columns)]
+        if col not in names:
+            return None
+        i = names.index(col)
+        for rg in range(md.num_row_groups):
+            if md.row_group(rg).num_rows == 0:
+                continue
+            st = md.row_group(rg).column(i).statistics
+            if st is None or not st.has_min_max or not isinstance(st.max, int):
+                return None  # no stats, or a date/time logical type
+            hi = st.max if hi is None else max(hi, st.max)
+    return hi
+
+
+# fingerprint of a path whose files cannot be stat-ed: distinct from any
+# real fingerprint, () included (the fingerprint of an empty dir)
+UNSTATABLE = ("<unstat-able>",)
+
+
 def parquet_fingerprint(path: str) -> tuple:
     """Cheap identity of a parquet file/dir: sorted (name, size,
-    mtime_ns) of its parquet files — os.stat only, no footer reads, no
-    Spark job.  Session caches keyed on a data DIRECTORY (the verdict
-    model, the corpus signature table) add this to their key so a
-    fixture dir regenerated in-place within a long-lived session
+    mtime_ns) of the parquet files Spark reads — os.stat only, no footer
+    reads, no Spark job.  Session caches keyed on a data DIRECTORY (the
+    verdict model, the corpus signature table) add this to their key so
+    a fixture dir regenerated in-place within a long-lived session
     (soak/test tooling does) invalidates instead of serving stale
-    training (round-14 advice).  Unstat-able paths fingerprint as an
-    empty tuple — the cache then keys on path alone, the old behavior."""
-    from pathlib import Path
-
+    training (round-14 advice).  A path that cannot be listed or stat-ed
+    (or is not local) fingerprints as ``UNSTATABLE``, never as the
+    ``()`` of an empty dir, so a readability blip cannot alias a
+    fingerprinted key."""
     try:
-        p = Path(path)
-        files = sorted(p.glob("**/*.parquet")) if p.is_dir() else [p]
+        files = _parquet_files(path)
+        if files is None:
+            return UNSTATABLE
         return tuple(
             (f.name, st.st_size, st.st_mtime_ns)
             for f in files
             for st in (f.stat(),)
         )
-    except Exception:
-        return ()
+    except OSError:
+        return UNSTATABLE
 
 
 # Relation cache (round 12, r11 verdict item #6 — the cold first-query

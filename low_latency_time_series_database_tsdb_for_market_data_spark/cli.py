@@ -23,6 +23,15 @@ partition column — the reference's directory-per-symbol model,
 `column_storage.cpp:13-18`), time-sorted row groups via the engine's
 writer.  Timestamps are epoch seconds held as int64, exactly the
 reference's opaque-u64 model (`timeseries_db.hpp:19-24`).
+
+Index reads: the parquet footers are this table's index (SURVEY §1.3), as
+the B+ tree is the reference's.  The next arrival seq is read from the
+seq statistics in the footers under the symbol's partition directory,
+and `maintain` takes its row counts from footer ``num_rows`` — neither
+runs a Spark job.  Only inputs the footers cannot serve (a row group
+without stats, a non-local path) fall back to a Spark aggregation.  An
+``insert`` therefore runs one Spark job (the write) and a ``query`` one
+(the collect; its rows are ordered on the driver).
 """
 
 from __future__ import annotations
@@ -30,7 +39,8 @@ from __future__ import annotations
 import sys
 import time
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -60,19 +70,53 @@ def _table_path(data_dir: str) -> str:
 
 def _load(spark: SparkSession, data_dir: str, symbol: str) -> DataFrame | None:
     """Symbol slice of the tick table (partition-pruned scan), or None if
-    the table does not exist yet."""
+    the table does not exist yet.  Any other read failure propagates: a
+    table that exists but cannot be read must not answer as empty."""
     try:
         df = spark.read.schema(TICK_SCHEMA).parquet(_table_path(data_dir))
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return None
     return df.where(F.col("symbol") == symbol)
 
 
-def _next_seq(df: DataFrame | None) -> int:
-    if df is None:
+def _symbol_dir(spark: SparkSession, data_dir: str, symbol: str) -> str:
+    """The symbol's partition directory, named with Spark's own escaping
+    (``BRK/B`` is stored under ``symbol=BRK%2FB``)."""
+    escape = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    return f"{_table_path(data_dir)}/symbol={escape.escapePathName(symbol)}"
+
+
+def _probe_max_seq(spark: SparkSession, data_dir: str, symbol: str) -> int | None:
+    """max(seq) of the symbol's slice by a Spark aggregation job."""
+    df = _load(spark, data_dir, symbol)
+    return None if df is None else df.agg(F.max("seq")).collect()[0][0]
+
+
+def _next_seq(spark: SparkSession, data_dir: str, symbol: str) -> int:
+    """Next arrival seq for ``symbol``: one past its stored max, 0 for a
+    new symbol or a missing table.
+
+    The max comes from the footer index — the seq min/max statistics of
+    the parquet files under the symbol's partition directory
+    (``catalog.parquet_int_max``), the way the reference's writer keeps
+    its counter in memory instead of scanning.  No Spark job runs.  The
+    directory is named by Spark's own escaping, so a symbol like
+    ``BRK/B`` is found and its seq does not restart at 0.  Fallback: when
+    the footers cannot answer (a row group without stats, a non-local
+    path), the max(seq) aggregation over the partition-pruned scan
+    answers instead."""
+    from .catalog import local_path, parquet_int_max
+
+    part = _symbol_dir(spark, data_dir, symbol)
+    local = local_path(part)
+    if local is not None and not local.exists():
         return 0
-    row = df.agg(F.max("seq").alias("m")).collect()[0]
-    return 0 if row["m"] is None else int(row["m"]) + 1
+    hi = parquet_int_max(part, "seq")
+    if hi is None:
+        hi = _probe_max_seq(spark, data_dir, symbol)
+    return 0 if hi is None else hi + 1
 
 
 def _append(
@@ -80,18 +124,28 @@ def _append(
 ) -> int:
     """Append (ts, price, volume) rows with monotone seq; returns count.
 
-    CLI appends are small interactive batches, so assigning seq from one
-    driver-side max() is correct (single-writer, like the reference's one
-    writer thread).  Bulk pipelines use sources/writer.py where seq comes
-    from the source."""
+    CLI appends are small interactive batches, so assigning seq from the
+    driver-side max (:func:`_next_seq`) is correct (single-writer, like
+    the reference's one writer thread).  Bulk pipelines use
+    sources/writer.py where seq comes from the source.
+
+    The rows go to Spark as an Arrow table typed to TICK_SCHEMA, which
+    plans as a LocalRelation: no parallelize into slices and no pickle
+    round trip through Python workers, and the written parquet schema
+    (required columns, Spark row metadata) is the same as a list-of-Rows
+    DataFrame's."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from .sources.writer import write_ticks
 
-    base = _next_seq(_load(spark, data_dir, symbol))
+    base = _next_seq(spark, data_dir, symbol)
     data = [
-        Row(ts=int(ts), price=float(p), volume=int(v), seq=base + i, symbol=symbol)
+        dict(ts=int(ts), price=float(p), volume=int(v), seq=base + i, symbol=symbol)
         for i, (ts, p, v) in enumerate(rows)
     ]
-    df = spark.createDataFrame(data, TICK_SCHEMA)
+    table = pa.Table.from_pylist(data, schema=to_arrow_schema(TICK_SCHEMA))
+    df = spark.createDataFrame(table, TICK_SCHEMA)
     write_ticks(df, _table_path(data_dir), mode="append")
     return len(data)
 
@@ -114,15 +168,19 @@ def cmd_insert(
 def cmd_query(
     spark: SparkSession, data_dir: str, symbol: str, start: int, end: int
 ) -> list[str]:
-    """Inclusive time-range scan, ts-ordered, seq-ordered ties (S4)."""
+    """Inclusive time-range scan, ts-ordered, seq-ordered ties (S4).
+
+    The slice is sorted on the driver: every matching row is collected
+    anyway, and a Spark ``orderBy`` would add a range-sampling job and a
+    shuffle for the same order.  (ts, seq) is a total order (seq is
+    unique per symbol), so the output matches the Spark sort's."""
     df = _load(spark, data_dir, symbol)
     rows = (
         []
         if df is None
-        else df.where((F.col("ts") >= start) & (F.col("ts") <= end))
-        .orderBy("ts", "seq")
-        .collect()
+        else df.where((F.col("ts") >= start) & (F.col("ts") <= end)).collect()
     )
+    rows.sort(key=lambda r: (r["ts"], r["seq"]))
     return [f"Found {len(rows)} results:"] + _fmt(rows)
 
 
@@ -158,7 +216,7 @@ def cmd_import(
     from .sources.csv_ticks import read_tick_csv
     from .sources.writer import write_ticks
 
-    base = _next_seq(_load(spark, data_dir, symbol))
+    base = _next_seq(spark, data_dir, symbol)
     parsed = read_tick_csv(spark, csv_path)
     counts = dict(
         (r["pid"], r["n"])
@@ -206,7 +264,7 @@ def cmd_benchmark(
     # seq must continue from the symbol's current max (same contract as
     # _append), else a benchmark on a pre-populated symbol duplicates seq
     # values and corrupts `last` ordering / (ts, seq) tie-breaking
-    base = _next_seq(_load(spark, data_dir, symbol))
+    base = _next_seq(spark, data_dir, symbol)
     gen = spark.range(count).select(
         (F.lit(now) + F.col("id")).alias("ts"),
         (100.0 + F.rand(7) * 100.0).alias("price"),

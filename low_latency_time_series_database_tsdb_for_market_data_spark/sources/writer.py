@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import invalidate_relation
+from ..catalog import invalidate_relation, parquet_num_rows
 
 
 def write_ticks(
@@ -97,14 +97,19 @@ def compact_ticks(
 
     Same stage-then-swap discipline as retention: the compacted table is
     fully materialized next to the original before the swap, so a crash
-    leaves a complete table at one of the two paths.  Returns
-    {rows, files_before, files_after}."""
+    leaves a complete table at one of the two paths.  The swap is gated
+    by a barrier: the staged row count must equal the original's, else
+    RuntimeError and the original stays in place.  Both counts come from
+    the footer index (``catalog.parquet_num_rows`` — committed files'
+    ``num_rows``, over exactly the files Spark lists), not from two
+    count() jobs; a path the footers cannot serve (not local) falls back
+    to count().  Returns {rows, files_before, files_after}."""
     import shutil as _shutil
     from pathlib import Path as _Path
 
     files_before = len(list(_Path(path).glob("**/*.parquet")))
     ticks = spark.read.parquet(path)
-    rows = ticks.count()
+    rows = _row_count(spark, path)
     stage = f"{path.rstrip('/')}__compact_stage"
     write_ticks(
         ticks,
@@ -113,7 +118,7 @@ def compact_ticks(
         colocate=True,
         target_files=target_files,
     )
-    staged = spark.read.parquet(stage).count()
+    staged = _row_count(spark, stage)
     if staged != rows:  # barrier: must survive python -O (assert strips)
         raise RuntimeError(f"compact stage incomplete: {staged} != {rows}")
     _shutil.rmtree(path)
@@ -125,3 +130,10 @@ def compact_ticks(
         "files_before": files_before,
         "files_after": files_after,
     }
+
+
+def _row_count(spark: SparkSession, path: str) -> int:
+    """Rows Spark reads under ``path``: footer ``num_rows`` when local,
+    else a count() job."""
+    n = parquet_num_rows(path)
+    return spark.read.parquet(path).count() if n is None else n

@@ -237,3 +237,14 @@ def test_registry_query_numbers_unique():
     nums = [bench._qnum(n) for n in reg]
     assert len(nums) == len(set(nums)), "duplicate query numbers"
     assert all(n < 10**9 for n in nums), "unparseable registry name"
+
+
+def test_shared_query_number_fails_loudly():
+    """Two registry names with one qnum would collapse to one named key
+    in the ds-mix block; build_driver_line must raise instead."""
+    import pytest
+
+    qs = _fake_queries(253)
+    qs["q07_another_name"] = 0.5
+    with pytest.raises(ValueError, match=r"share query numbers: \[7\]"):
+        build_driver_line(round(sum(qs.values()), 4), qs, _SCALARS)
