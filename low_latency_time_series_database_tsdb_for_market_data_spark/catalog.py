@@ -26,11 +26,23 @@ native type so the comparison reaches the parquet scan as a pushed filter
 range probe, `bplus_tree.hpp:70-91`).  `ts_bound`/`ts_lit` build literals
 of the matching type so no cast ever lands on the column side of the
 comparison (a column-side cast would silently kill pushdown).
+
+Schema memo: a ``spark.read.parquet`` without a schema runs a one-task
+job that infers the data schema from ONE footer — the first listed file
+by full path string — and the session's converter confs.  ``read_parquet``
+keys what Spark answered by exactly those inputs (app id, the confs in
+``_SCHEMA_CONFS``, the footer's leaf columns and Spark row metadata) and
+passes it back as the read schema on the next read of any path whose first
+file has the same footer, so appends, stream drains and refreshes re-read
+a changed table without that job.  Globs, non-local paths, summary files
+and ``mergeSchema`` read more than one footer, or one we cannot see, and
+keep Spark's inference.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import os
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -133,20 +145,35 @@ def _spark_hidden(name: str) -> bool:
     )
 
 
-def _parquet_files(path: str) -> list[Path] | None:
-    """The parquet files Spark reads under ``path`` (a file or a directory
-    tree), sorted; [] when the path is missing, None when it is not
-    local.  Raises OSError when the tree cannot be listed."""
+def _spark_listing(path: str) -> list[Path] | None:
+    """Every file Spark lists under ``path`` (a file or a directory tree),
+    whatever its name ends in, summary files included; [] when the path
+    is missing, None when it is not local.  Raises OSError when the tree
+    cannot be listed."""
     p = local_path(path)
     if p is None:
         return None
     if not p.is_dir():
         return [p] if p.exists() else []
-    return sorted(
-        f
-        for f in p.glob("**/*.parquet")
-        if not any(_spark_hidden(c) for c in f.relative_to(p).parts)
-    )
+
+    def fail(e: OSError) -> None:
+        raise e
+
+    out = []
+    for d, dirs, files in os.walk(p, onerror=fail):
+        dirs[:] = [x for x in dirs if not _spark_hidden(x)]
+        out += [Path(d, f) for f in files if not _spark_hidden(f)]
+    return out
+
+
+def _parquet_files(path: str) -> list[Path] | None:
+    """The ``*.parquet`` files Spark reads under ``path``, sorted; [] when
+    the path is missing, None when it is not local.  Raises OSError when
+    the tree cannot be listed."""
+    files = _spark_listing(path)
+    if files is None:
+        return None
+    return sorted(f for f in files if f.name.endswith(".parquet"))
 
 
 def _footer_metadatas(path: str):
@@ -167,12 +194,23 @@ def _footer_metadatas(path: str):
         return None
 
 
-def ts_min_epoch_ns(path: str, col: str = "ts") -> int | None:
-    """Minimum ts as UTC epoch nanos read from parquet FOOTER statistics —
-    no data scan, no Spark job.  Row-group min/max stats are this engine's
-    index (SURVEY §1.3); a point-probe that only needs a scalar bound
-    should read the index footers exactly like the reference descends its
-    B+ tree root (`bplus_tree.hpp:95-106`), not run an aggregation job.
+def _utc_naive(v) -> _dt.datetime | None:
+    """A timestamp statistic as a naive UTC datetime, or None when the
+    statistic is not a datetime at all."""
+    if not isinstance(v, _dt.datetime):
+        return None
+    if v.tzinfo is not None:  # adjusted-to-UTC stats are tz-aware
+        v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+    return v
+
+
+def ts_bounds_epoch_ns(path: str, col: str = "ts") -> tuple[int, int] | None:
+    """(min, max) ts as UTC epoch nanos read from parquet FOOTER
+    statistics in one walk — no data scan, no Spark job.  Row-group
+    min/max stats are this engine's index (SURVEY §1.3); a point-probe
+    that only needs a scalar bound should read the index footers exactly
+    like the reference descends its B+ tree root
+    (`bplus_tree.hpp:95-106`), not run an aggregation job.
 
     Returns None (caller falls back to a Spark agg probe) when any row
     group lacks stats, for the int64-nanos physical layout — pyarrow
@@ -180,11 +218,14 @@ def ts_min_epoch_ns(path: str, col: str = "ts") -> int | None:
     not worth trusting for an exactness-gated literal — or when the path
     is not locally listable (object stores): the probe is an
     optimization, so every failure degrades to the data probe."""
+    import pyarrow as pa
+
     mds = _footer_metadatas(path)
     if mds is None:
         return None
+    lo: _dt.datetime | None = None
+    hi: _dt.datetime | None = None
     try:
-        lo: _dt.datetime | None = None
         for md in mds:
             idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
             if col not in idx:
@@ -196,51 +237,36 @@ def ts_min_epoch_ns(path: str, col: str = "ts") -> int | None:
                 st = md.row_group(rg).column(idx[col]).statistics
                 if st is None or not st.has_min_max:
                     return None
-                mn = st.min
-                if not isinstance(mn, _dt.datetime):
+                mn, mx = _utc_naive(st.min), _utc_naive(st.max)
+                if mn is None or mx is None:
                     return None
-                if mn.tzinfo is not None:  # adjusted-to-UTC stats are tz-aware
-                    mn = mn.astimezone(_dt.timezone.utc).replace(tzinfo=None)
                 lo = mn if lo is None or mn < lo else lo
-        if lo is None:
-            return None
-        return ((lo - _EPOCH) // _dt.timedelta(microseconds=1)) * 1000
-    except Exception:  # malformed stats -> data-probe fallback
+                hi = mx if hi is None or mx > hi else hi
+    # what decoding a malformed statistic can raise: a value past
+    # datetime's year-9999 range fails the conversion with OverflowError
+    # or ValueError, and bytes pyarrow cannot decode raise ArrowException.
+    # All of them mean "the footers cannot answer", never a wrong bound;
+    # any other error is a bug and propagates
+    except (OverflowError, ValueError, pa.ArrowException):
         return None
+    if lo is None or hi is None:
+        return None
+    us = _dt.timedelta(microseconds=1)
+    return ((lo - _EPOCH) // us) * 1000, ((hi - _EPOCH) // us) * 1000
+
+
+def ts_min_epoch_ns(path: str, col: str = "ts") -> int | None:
+    """Minimum ts as UTC epoch nanos from the footer statistics, or None
+    (see :func:`ts_bounds_epoch_ns`)."""
+    bounds = ts_bounds_epoch_ns(path, col)
+    return None if bounds is None else bounds[0]
 
 
 def ts_max_epoch_ns(path: str, col: str = "ts") -> int | None:
-    """Maximum ts as UTC epoch nanos from parquet footer statistics — the
-    upper-bound twin of :func:`ts_min_epoch_ns`, same contract: None on
-    any layout/stat the probe cannot trust, caller falls back to a data
-    probe."""
-    mds = _footer_metadatas(path)
-    if mds is None:
-        return None
-    try:
-        hi: _dt.datetime | None = None
-        for md in mds:
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            if col not in idx:
-                return None
-            lt = str(md.schema.column(idx[col]).logical_type)
-            if not lt.startswith("Timestamp(") or "timeUnit=microseconds" not in lt:
-                return None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx[col]).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                mx = st.max
-                if not isinstance(mx, _dt.datetime):
-                    return None
-                if mx.tzinfo is not None:
-                    mx = mx.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-                hi = mx if hi is None or mx > hi else hi
-        if hi is None:
-            return None
-        return ((hi - _EPOCH) // _dt.timedelta(microseconds=1)) * 1000
-    except Exception:  # malformed stats -> data-probe fallback
-        return None
+    """Maximum ts as UTC epoch nanos from the footer statistics, or None
+    (see :func:`ts_bounds_epoch_ns`)."""
+    bounds = ts_bounds_epoch_ns(path, col)
+    return None if bounds is None else bounds[1]
 
 
 def parquet_num_rows(path: str) -> int | None:
@@ -321,20 +347,147 @@ def parquet_fingerprint(path: str) -> tuple:
 # use this cache, so ingest tests see fresh listings as before.
 _RELATION_CACHE: dict[tuple[str, str], DataFrame] = {}
 
+# Parquet schema memo: the data schema Spark inferred, reused by
+# read_parquet so a re-read of a changed path skips the inference job.
+# Keyed by (app id, converter confs, footer signature of the one file
+# inference reads); the value keeps its session for eviction.
+_SCHEMA_MEMO: dict[tuple, tuple[SparkSession, T.StructType]] = {}
+
+# the session confs ParquetToSparkSchemaConverter reads, plus the
+# case-sensitivity that decides how data and partition columns match
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+)
+_SUMMARY_FILES = ("_metadata", "_common_metadata")
+_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _alive(spark: SparkSession) -> bool:
+    """Whether the session's SparkContext still runs.  A stopped context
+    nulls its JVM handle, so the probe is a local attribute check — no
+    py4j round-trip; any introspection surprise counts as dead."""
+    try:
+        return spark.sparkContext._jsc is not None
+    except Exception:
+        return False
+
 
 def _evict_dead_sessions() -> None:
-    """Drop cached relations whose owning SparkContext has stopped
-    (ADVICE r12: a long-lived process cycling SparkSessions otherwise
-    accumulates dead DataFrame references forever).  A stopped context
-    nulls its JVM handle, so the probe is a local attribute check —
-    no py4j round-trip; any introspection surprise counts as dead."""
+    """Drop cached relations and memoized schemas whose owning
+    SparkContext has stopped (ADVICE r12: a long-lived process cycling
+    SparkSessions otherwise accumulates dead references forever)."""
+    # pop, not del: two threads may evict the same entry
     for k, df in list(_RELATION_CACHE.items()):
-        try:
-            alive = df.sparkSession.sparkContext._jsc is not None
-        except Exception:
-            alive = False
-        if not alive:
-            del _RELATION_CACHE[k]
+        if not _alive(df.sparkSession):
+            _RELATION_CACHE.pop(k, None)
+    for k, (owner, _) in list(_SCHEMA_MEMO.items()):
+        if not _alive(owner):
+            _SCHEMA_MEMO.pop(k, None)
+
+
+def _footer_signature(md) -> tuple | None:
+    """Everything in one footer that Spark's schema inference reads: per
+    leaf column its path, physical, logical and converted types,
+    definition and repetition levels, length, precision and scale, plus
+    the Spark row metadata that overrides them when present.  None for a
+    nested schema, whose group annotations the leaves do not carry."""
+    cols = []
+    for i in range(md.num_columns):
+        c = md.schema.column(i)
+        if "." in c.path:
+            return None
+        cols.append((c.path, c.physical_type, str(c.logical_type), c.converted_type,
+                     c.max_definition_level, c.max_repetition_level, c.length,
+                     c.precision, c.scale))
+    return tuple(cols), (md.metadata or {}).get(_ROW_METADATA)
+
+
+def _schema_memo_key(spark: SparkSession, path: str) -> tuple | None:
+    """The memo key of a schema-less read of ``path``, or None where the
+    memo does not apply and Spark must infer: a glob or non-local path,
+    no files, summary files or ``mergeSchema`` (inference then reads
+    more than one footer), an unreadable or nested first footer, or a
+    data column named like a partition directory key (Spark then types
+    that column from the directories).
+
+    Inference reads the first file of the listing sorted by full path
+    string (``ParquetUtils.splitFiles``), compared as Java strings are:
+    by UTF-16 code unit.  Whole strings, not ``pathlib`` part tuples,
+    which order ``symbol=A/`` and ``symbol=A-B/`` the other way round."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if any(c in path for c in "*?[]{}\\"):
+        return None
+    if spark.conf.get("spark.sql.parquet.mergeSchema").lower() == "true":
+        return None
+    try:
+        files = _spark_listing(path)
+        if not files or any(f.name in _SUMMARY_FILES for f in files):
+            return None
+        first = min(files, key=lambda f: str(f).encode("utf-16-be", "surrogatepass"))
+        sig = _footer_signature(pq.read_metadata(first))
+    except (OSError, pa.ArrowInvalid):
+        return None
+    if sig is None:
+        return None
+    root = local_path(path)
+    part_keys = {
+        c.split("=", 1)[0].lower()
+        for f in files
+        if f != root
+        for c in f.relative_to(root).parts[:-1]
+        if "=" in c
+    }
+    if part_keys & {col[0].lower() for col in sig[0]}:
+        return None
+    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    return spark.sparkContext.applicationId, confs, sig
+
+
+def _data_schema(df: DataFrame) -> T.StructType | None:
+    """The data columns (partition columns excluded) of a fresh
+    ``spark.read.parquet`` relation, as Spark resolved them."""
+    from pyspark.sql.types import _parse_datatype_json_string
+
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    return _parse_datatype_json_string(plan.relation().dataSchema().json())
+
+
+def read_parquet(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job where
+    the answer is already known.
+
+    With ``schema``, read with it.  Otherwise look the data schema up in
+    the memo of schemas Spark inferred before (``_schema_memo_key``): on a
+    hit, read with it — Spark still discovers and types the partition
+    columns from the directories, as on every read — and on a miss let
+    Spark infer, then memoize what it found.  The key holds the one
+    input inference reads, so a hit gives the schema inference would.
+    A miss is stored only if the first file did not change while Spark
+    inferred.  Non-local paths, globs, summary files and ``mergeSchema``
+    keep plain inference."""
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    key = _schema_memo_key(spark, path)
+    hit = None if key is None else _SCHEMA_MEMO.get(key)
+    if hit is not None:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None and _schema_memo_key(spark, path) == key:
+        data = _data_schema(df)
+        if data is not None:
+            _evict_dead_sessions()
+            _SCHEMA_MEMO[key] = (spark, data)
+    return df
 
 
 def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
@@ -342,7 +495,7 @@ def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     df = _RELATION_CACHE.get(key)
     if df is None:
         _evict_dead_sessions()  # only on miss: hits stay dict-speed
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         _RELATION_CACHE[key] = df
     return df
 

@@ -30,8 +30,9 @@ seq statistics in the footers under the symbol's partition directory,
 and `maintain` takes its row counts from footer ``num_rows`` — neither
 runs a Spark job.  Only inputs the footers cannot serve (a row group
 without stats, a non-local path) fall back to a Spark aggregation.  An
-``insert`` therefore runs one Spark job (the write) and a ``query`` one
-(the collect; its rows are ordered on the driver).
+``insert`` therefore runs one Spark job (the write), a ``query`` one
+(the collect; its rows are ordered on the driver) and an ``import`` of a
+one-split CSV one (the write; its count is read back from the footers).
 """
 
 from __future__ import annotations
@@ -193,6 +194,17 @@ def cmd_last(spark: SparkSession, data_dir: str, symbol: str, n: int) -> list[st
     return [f"Last {len(rows)} ticks for {symbol}:"] + _fmt(rows)
 
 
+def _split_counts(parsed: DataFrame) -> dict[int, int]:
+    """Surviving rows per input split, by one tiny Spark job (one row per
+    split — KBs at any import size)."""
+    return dict(
+        (r["pid"], r["n"])
+        for r in parsed.groupBy(F.spark_partition_id().alias("pid"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+
+
 def cmd_import(
     spark: SparkSession, data_dir: str, symbol: str, csv_path: str
 ) -> list[str]:
@@ -204,35 +216,42 @@ def cmd_import(
     partitioned writer — no driver collect of row data (the old
     `.collect()` round-trip was the classic scale-killer at any real
     import size).  seq continues from the symbol's max in FILE-LINE order
-    with NO Exchange at all: one tiny probe job collects per-split
-    surviving-row counts (one row per split — KBs at any import size),
-    the driver turns them into cumulative per-split seq bases (splits are
-    planned in file-offset order, so split k's base = rows of splits
-    < k), and seq = base + split_base[partition] + in-split record index
-    (the documented low-33-bit payload of monotonically_increasing_id).
-    A pure narrow expression — the old single-partition row_number window
+    with NO Exchange at all: seq = base + split_base[partition] +
+    in-split record index (the documented low-33-bit payload of
+    monotonically_increasing_id), where split k's base is the surviving
+    rows of splits < k (splits are planned in file-offset order).  A pure
+    narrow expression — the old single-partition row_number window
     serialized the whole import through one task; this keeps the scan's
-    own parallelism while assigning the identical numbers."""
+    own parallelism while assigning the identical numbers.
+
+    The planned split count (no job) picks how the split bases are
+    found.  A one-split CSV on a local table needs none: its bases are
+    ``[0]``, the write is the only Spark job, and the imported count is
+    read back from the footer index afterwards — the symbol's next seq
+    minus ``base``, the same footer read :func:`_next_seq` makes (seq is
+    dense from ``base``).  Otherwise one tiny probe job collects
+    per-split surviving-row counts (:func:`_split_counts`) and the
+    driver turns them into cumulative bases and the total."""
+    from .catalog import local_path
     from .sources.csv_ticks import read_tick_csv
     from .sources.writer import write_ticks
 
     base = _next_seq(spark, data_dir, symbol)
     parsed = read_tick_csv(spark, csv_path)
-    counts = dict(
-        (r["pid"], r["n"])
-        for r in parsed.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    # dense base array indexed by partition id (empty splits hold a 0
-    # placeholder): element_at on an array literal is an O(1) index, where
-    # a literal map would be a per-row linear key scan at import scale
-    bases: list[int] = []
-    total = 0
-    for pid in range(max(counts) + 1 if counts else 0):
-        bases.append(total)
-        total += counts.get(pid, 0)
-    if total:
+    splits = parsed._jdf.queryExecution().toRdd().getNumPartitions()
+    if splits == 1 and local_path(_table_path(data_dir)) is not None:
+        bases, total = [0], None  # total read from the footers below
+    else:
+        counts = _split_counts(parsed)
+        # dense base array indexed by partition id (empty splits hold a 0
+        # placeholder): element_at on an array literal is an O(1) index,
+        # where a literal map would be a per-row linear key scan at import
+        # scale
+        bases, total = [], 0
+        for pid in range(max(counts) + 1 if counts else 0):
+            bases.append(total)
+            total += counts.get(pid, 0)
+    if total != 0:
         local_idx = F.monotonically_increasing_id() - F.shiftleft(
             F.spark_partition_id().cast("long"), 33
         )
@@ -252,6 +271,8 @@ def cmd_import(
             F.lit(symbol).alias("symbol"),
         )
         write_ticks(df, _table_path(data_dir), mode="append")
+    if total is None:
+        total = _next_seq(spark, data_dir, symbol) - base
     return [f"Imported {total} ticks for {symbol} from {csv_path}"]
 
 
@@ -304,16 +325,20 @@ def cmd_maintain(
     `timeseries_db.cpp:157-168`): compact the tick table to bound file
     count and restore the time-clustered layout that keeps row-group
     stats selective after many small appends.  Stage-then-swap, so a
-    crash leaves a complete table at one of the two paths."""
-    from pathlib import Path
-
+    crash leaves a complete table at one of the two paths.  The table is
+    read with TICK_SCHEMA, as ``_load`` reads it, so no schema-inference
+    job runs and the symbol partition stays a string."""
+    from .catalog import _parquet_files
     from .sources.writer import compact_ticks
 
     path = _table_path(data_dir)
-    has_data = Path(path).exists() and any(Path(path).glob("**/*.parquet"))
-    if not has_data:
+    # only files Spark reads count: a crashed append's _temporary/ is
+    # not data
+    if not _parquet_files(path):
         return ["Nothing to maintain: no tick table at " + path]
-    audit = compact_ticks(spark, path, target_files=target_files)
+    audit = compact_ticks(
+        spark, path, target_files=target_files, schema=TICK_SCHEMA
+    )
     return [
         f"Compacted {audit['rows']} ticks: "
         f"{audit['files_before']} -> {audit['files_after']} files"

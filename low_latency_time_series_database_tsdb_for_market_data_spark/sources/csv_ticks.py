@@ -31,10 +31,12 @@ def read_tick_csv(spark: SparkSession, path: str) -> DataFrame:
     """
     lines = spark.read.text(path)
     toks = lines.select(F.split(F.col("value"), ",").alias("t"))
+    # get() is NULL past the end of a short row, where t[i] raises under
+    # ANSI mode once the row's leading tokens parse
     parsed = toks.select(
-        F.trim(F.col("t")[0]).try_cast("bigint").alias("ts"),
-        F.trim(F.col("t")[1]).try_cast("double").alias("price"),
-        F.trim(F.col("t")[2]).try_cast("bigint").alias("volume"),
+        F.trim(F.get("t", 0)).try_cast("bigint").alias("ts"),
+        F.trim(F.get("t", 1)).try_cast("double").alias("price"),
+        F.trim(F.get("t", 2)).try_cast("bigint").alias("volume"),
     )
     return parsed.where(
         F.col("ts").isNotNull()

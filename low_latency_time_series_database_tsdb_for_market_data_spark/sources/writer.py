@@ -18,8 +18,14 @@ never monotonically_increasing_id in a correctness path (SURVEY.md §7).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-from ..catalog import invalidate_relation, parquet_num_rows
+from ..catalog import (
+    _parquet_files,
+    invalidate_relation,
+    parquet_num_rows,
+    read_parquet,
+)
 
 
 def write_ticks(
@@ -84,6 +90,7 @@ def compact_ticks(
     spark: SparkSession,
     path: str,
     target_files: int | None = None,
+    schema: StructType | None = None,
 ) -> dict:
     """Rewrite a tick table to bound its file count — the maintenance
     pass that undoes small-file accumulation from incremental appends
@@ -103,12 +110,16 @@ def compact_ticks(
     the footer index (``catalog.parquet_num_rows`` — committed files'
     ``num_rows``, over exactly the files Spark lists), not from two
     count() jobs; a path the footers cannot serve (not local) falls back
-    to count().  Returns {rows, files_before, files_after}."""
+    to count().  The table is read with ``schema`` when given (the CLI
+    passes its TICK_SCHEMA), else through ``catalog.read_parquet``'s
+    schema memo — no schema-inference job either way.  File counts are
+    of the files Spark reads (``catalog._parquet_files``), so a crashed
+    append's ``_temporary/`` leftovers are not counted.  Returns {rows,
+    files_before, files_after}."""
     import shutil as _shutil
-    from pathlib import Path as _Path
 
-    files_before = len(list(_Path(path).glob("**/*.parquet")))
-    ticks = spark.read.parquet(path)
+    files_before = len(_parquet_files(path) or ())
+    ticks = read_parquet(spark, path, schema)
     rows = _row_count(spark, path)
     stage = f"{path.rstrip('/')}__compact_stage"
     write_ticks(
@@ -124,7 +135,7 @@ def compact_ticks(
     _shutil.rmtree(path)
     _shutil.move(stage, path)
     invalidate_relation(path)  # in-place swap: cached listings are stale
-    files_after = len(list(_Path(path).glob("**/*.parquet")))
+    files_after = len(_parquet_files(path) or ())
     return {
         "rows": rows,
         "files_before": files_before,

@@ -15,7 +15,8 @@ the documented late-data policy the reference never had.
 The event-time column is SCHEMA-ADAPTIVE like the batch catalog
 (catalog.py module docstring): the file stream source needs a declared
 schema, so `stream_schema` reads it from the parquet footers (a
-metadata-only batch read, no data scan), and `with_ts_event` branches on
+metadata-only batch read, no data scan; after the first drain a memo hit
+with no Spark job at all), and `with_ts_event` branches on
 the loaded ts dtype — int64 epoch nanos vs native parquet timestamp.
 """
 
@@ -42,12 +43,20 @@ def stream_schema(spark: SparkSession, source_dir: str) -> T.StructType:
     one breaks on producer drift — exactly what happened when events.ts
     moved from TIMESTAMP(NANOS) to TIMESTAMP(MICROS)).
 
+    The read goes through ``catalog.read_parquet``: Spark infers the
+    schema once, and later drains over the same first file (a source
+    dir only gains files) reuse that answer without the one-task
+    inference job, so a drain costs its batch, not a fresh batch read of
+    the source's schema.
+
     Also pins the session to UTC (tune) — with_ts_event's TIMESTAMP_NTZ
     branch casts via the session zone, and a foreign non-UTC session
     would otherwise shift ts_event relative to the batch catalog path."""
+    from ..catalog import read_parquet
+
     tune(spark)
     require_nanos_as_long(spark)
-    return spark.read.parquet(source_dir).schema
+    return read_parquet(spark, source_dir).schema
 
 
 def with_ts_event(df: DataFrame, col: str = "ts") -> DataFrame:

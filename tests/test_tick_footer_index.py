@@ -15,6 +15,9 @@ from pyspark.sql import Row
 
 from low_latency_time_series_database_tsdb_for_market_data_spark import catalog, cli
 from low_latency_time_series_database_tsdb_for_market_data_spark.sources import writer
+from low_latency_time_series_database_tsdb_for_market_data_spark.sources.csv_ticks import (
+    read_tick_csv,
+)
 
 
 def _seqs(spark, d: str, symbol: str) -> list[int]:
@@ -25,15 +28,18 @@ def _parquet(path: Path) -> list[Path]:
     return sorted(path.glob("**/*.parquet"))
 
 
-def _jobs(spark, fn, group: str) -> int:
-    """Spark jobs ``fn`` runs, counted by its own job group."""
+def _jobs(spark, fn, group: str, *more_groups: list[str]) -> int:
+    """Spark jobs ``fn`` runs, counted by its own job group plus any group
+    names ``fn`` appends to ``more_groups`` (a stream's run id)."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    groups = [group] + [g for names in more_groups for g in names]
+    return sum(len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups)
 
 
 def test_footer_walk_skips_spark_hidden_paths(spark, tmp_path):
@@ -201,14 +207,143 @@ def test_compact_barrier_raises_on_short_stage(spark, tmp_path, monkeypatch):
     assert cli.run(["query", "AAPL", "0", "9"], spark, d) == before
 
 
-def test_cli_jobs_per_operation(spark, tmp_path):
-    """The footer index leaves one Spark job per insert and per query,
-    and at most four per maintain."""
+def _plant_leftover(table: Path, src: Path) -> None:
+    """What a crashed append leaves: a part file under ``_temporary/``."""
+    stray = table / "_temporary" / "0" / "part-x.parquet"
+    stray.parent.mkdir(parents=True)
+    shutil.copy(src, stray)
+
+
+def test_maintain_counts_only_files_spark_reads(spark, tmp_path):
     d = str(tmp_path / "data")
+    for ts in (1, 2):
+        cli.run(["insert", "AAPL", str(ts), "1.0", "1"], spark, d)
+    table = tmp_path / "data" / "ticks"
+    _plant_leftover(table, _parquet(table)[0])
+    assert cli.run(["maintain"], spark, d) == ["Compacted 2 ticks: 2 -> 1 files"]
+
+
+def test_maintain_on_leftovers_only(spark, tmp_path):
+    d = str(tmp_path / "data")
+    cli.run(["insert", "AAPL", "1", "1.0", "1"], spark, d)
+    table = tmp_path / "data" / "ticks"
+    _plant_leftover(table, _parquet(table)[0])
+    shutil.rmtree(table / "symbol=AAPL")
+    assert cli.run(["maintain"], spark, d) == [f"Nothing to maintain: no tick table at {table}"]
+
+
+def test_maintain_keeps_numeric_looking_symbols(spark, tmp_path):
+    """maintain reads the table with TICK_SCHEMA: ``symbol=007`` stays a
+    string partition, not the int 7 that directory inference makes it."""
+    d = str(tmp_path / "data")
+    for ts in (1, 2):
+        cli.run(["insert", "007", str(ts), "1.0", "1"], spark, d)
+    cli.run(["maintain"], spark, d)
+    assert [p.name for p in (tmp_path / "data" / "ticks").glob("symbol=*")] == ["symbol=007"]
+    assert cli.run(["last", "007", "5"], spark, d)[0] == "Last 2 ticks for 007:"
+    assert cli._next_seq(spark, d, "007") == 2
+
+
+def _csv(path: Path, lines: list[str]) -> str:
+    path.write_text("timestamp,price,volume\n" + "".join(f"{x}\n" for x in lines))
+    return str(path)
+
+
+def test_import_one_split_and_multi_split(spark, tmp_path, monkeypatch):
+    """A one-split CSV imports with the write as its only job and takes
+    its count from the footers; a multi-split CSV keeps the per-split
+    count job.  Both assign seq densely in file-line order."""
+    d = str(tmp_path / "data")
+    cli.run(["insert", "S", "1", "1.0", "1"], spark, d)
+    lines = [f"{1000 + i},{i}.5,{i + 1}" if i % 7 else "bad,row" for i in range(60)]
+    good = [int(x.split(",")[0]) for x in lines if not x.startswith("bad")]
+    calls = []
+    real = cli._split_counts
+    monkeypatch.setattr(cli, "_split_counts", lambda df: calls.append(1) or real(df))
+
+    one = _csv(tmp_path / "one.csv", lines)
+    assert cli.run(["import", "S", one], spark, d) == [f"Imported {len(good)} ticks for S from {one}"]
+    assert calls == []
+
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "256")
+    try:
+        many = _csv(tmp_path / "many.csv", lines)
+        assert read_tick_csv(spark, many).rdd.getNumPartitions() > 1
+        jobs = _jobs(spark, lambda: cli.run(["import", "S", many], spark, d),
+                     f"{tmp_path.name}-multi")
+    finally:
+        spark.conf.set(key, saved)
+    assert calls == [1] and jobs > 1
+    rows = sorted(cli._load(spark, d, "S").collect(), key=lambda r: r.seq)
+    assert [r.seq for r in rows] == list(range(1 + 2 * len(good)))
+    assert [r.ts for r in rows] == [1] + good + good
+    assert cli._next_seq(spark, d, "S") == 1 + 2 * len(good)
+
+
+def test_import_of_all_malformed_csv(spark, tmp_path):
+    d = str(tmp_path / "data")
+    # "3" parses its first token: the short row must drop, not raise
+    bad = _csv(tmp_path / "bad.csv", ["bad,row", "1,x,2", "3", "4,5"])
+    assert cli.run(["import", "X", bad], spark, d) == [f"Imported 0 ticks for X from {bad}"]
+    assert cli.run(["query", "X", "0", "9"], spark, d) == ["Found 0 results:"]
+    assert cli.run(["last", "X", "3"], spark, d) == ["Last 0 ticks for X:"]
+    assert cli.run(["maintain"], spark, d) == [f"Nothing to maintain: no tick table at {d}/ticks"]
+    cli.run(["insert", "X", "5", "1.0", "1"], spark, d)
+    assert cli.run(["import", "X", bad], spark, d) == [f"Imported 0 ticks for X from {bad}"]
+    assert cli._next_seq(spark, d, "X") == 1
+
+
+def test_cli_jobs_per_operation(spark, tmp_path, monkeypatch):
+    """The footer index and the schema memo leave one Spark job per
+    insert, query, one-split import, stream drain and PointServer
+    refresh, and at most three per maintain."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from low_latency_time_series_database_tsdb_for_market_data_spark.serving import PointServer
+    from low_latency_time_series_database_tsdb_for_market_data_spark.streaming import (
+        ingest_available_now,
+    )
+    from tests.test_catalog_adaptive import _write_events
+
+    d = str(tmp_path / "data")
+    csv = _csv(tmp_path / "t.csv", ["7,1.5,10", "8,2.5,20"])
     cli.run(["insert", "AAPL", "5", "1.0", "1"], spark, d)
+    cli.run(["maintain"], spark, d)
     jobs = {
         argv[0]: _jobs(spark, lambda: cli.run(argv, spark, d), f"{tmp_path.name}-{argv[0]}")
         for argv in (["insert", "AAPL", "3", "1.0", "1"], ["query", "AAPL", "0", "9"],
-                     ["maintain"])
+                     ["import", "AAPL", csv], ["maintain"])
     }
-    assert jobs["insert"] == 1 and jobs["query"] == 1 and jobs["maintain"] <= 4, jobs
+
+    # a stream's batches run under its run id's job group
+    run_ids: list[str] = []
+    start = DataStreamWriter.start
+
+    def tracked_start(self, *a, **k):
+        q = start(self, *a, **k)
+        run_ids.append(str(q.runId))
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", tracked_start)
+    feed = tmp_path / "feed" / "events.parquet"
+    feed.mkdir(parents=True)
+    shutil.move(_write_events(str(tmp_path), "us"), feed / "part-0.parquet")
+    drain = [str(feed), str(tmp_path / "dest"), str(tmp_path / "ckpt")]
+    ingest_available_now(spark, *drain)
+    shutil.copy(feed / "part-0.parquet", feed / "part-1.parquet")
+    run_ids.clear()
+    jobs["drain"] = _jobs(spark, lambda: ingest_available_now(spark, *drain),
+                          f"{tmp_path.name}-drain", run_ids)
+
+    srv = PointServer(spark, str(feed.parent))
+    srv.open()
+    shutil.copy(feed / "part-0.parquet", feed / "part-2.parquet")
+    try:
+        jobs["refresh"] = _jobs(spark, srv.refresh, f"{tmp_path.name}-refresh")
+        assert srv.range(0, 2**62).count() == 12
+    finally:
+        srv.close()
+    want = {"insert": 1, "query": 1, "import": 1, "drain": 1, "refresh": 1}
+    assert {k: jobs[k] for k in want} == want and jobs["maintain"] <= 3, jobs

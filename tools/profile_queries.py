@@ -6,7 +6,10 @@ SortMergeJoin/BroadcastHashJoin, BatchEvalPython/ArrowEvalPython,
 FileScan), count Spark jobs run, and time the noop-sink
 materialization (min-of-2, GC outside the timer) — bench.py's exact
 methodology, isolated to a query list so measure -> change -> re-measure
-loops stay cheap.
+loops stay cheap.  Each run executes under its own Spark job group and
+its jobs are counted by that group (as perfbench's ``Tracer.group_stats``
+does), never as deltas of the ungrouped job list, which the status store
+trims to ``spark.ui.retainedJobs`` entries in a long session.
 
 Usage:
     python tools/profile_queries.py q243_knn_eval,q182_user_rfm [tag]
@@ -62,10 +65,11 @@ def main() -> None:
     )
     os.makedirs(plans_dir, exist_ok=True)
 
+    sc = spark.sparkContext
     out: dict[str, dict] = {}
     for name in names:
         qd = reg[name]
-        spark.sparkContext.setJobDescription(f"profile:{name}")
+        sc.setJobDescription(f"profile:{name}")
         t0 = time.perf_counter()
         df = qd.fn(spark, SF_DIR)
         build_sec = time.perf_counter() - t0
@@ -74,18 +78,23 @@ def main() -> None:
         )
         with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as f:
             f.write(plan)
-        tracker = spark.sparkContext.statusTracker()
         times = []
-        for _ in range(2):
+        for run in range(2):
             gc.collect()
             spark._jvm.System.gc()
-            jobs_before = len(tracker.getJobIdsForGroup(None))
-            t0 = time.perf_counter()
-            qd.fn(spark, SF_DIR).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            times.append(time.perf_counter() - t0)
-            jobs = len(tracker.getJobIdsForGroup(None)) - jobs_before
+            group = f"profile:{name}:{tag}:{run}"
+            sc.setJobGroup(group, f"profile:{name}")
+            try:
+                t0 = time.perf_counter()
+                qd.fn(spark, SF_DIR).write.mode("overwrite").format(
+                    "noop"
+                ).save()
+                times.append(time.perf_counter() - t0)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            # the status store fills from the listener bus: drain it first
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         out[name] = {
             "sec": round(min(times), 3),
             "runs": [round(t, 3) for t in times],
@@ -102,7 +111,7 @@ def main() -> None:
             + plan.count("FileScan"),
         }
         print(name, json.dumps(out[name]))
-        spark.sparkContext.setJobDescription(None)
+        sc.setJobDescription(None)
     print(json.dumps({"sf_dir": SF_DIR, "tag": tag, "profile": out}))
 
 
