@@ -50,6 +50,7 @@ join.  Nothing about the batch path shuffles the historical corpus.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -62,6 +63,11 @@ from .dedup import (
     connected_components,
     lsh_candidate_pairs,
 )
+
+
+# the strict-cap guard's one worker, shared by every fold (a pool per
+# fold churned a thread per call)
+_GUARD_POOL = ThreadPoolExecutor(max_workers=1, thread_name_prefix="dedup-cap-guard")
 
 
 class DedupState(NamedTuple):
@@ -316,83 +322,85 @@ def dedup_state_apply(
     # built/folded through these APIs has every bucket < cap (build and
     # every prior fold enforced it), so hits <= nn * cap rows per band
     # even on the violating batch.
-    guard_fut = None
-    if strict_cap:
-        from concurrent.futures import ThreadPoolExecutor
-
-        _guard_pool = ThreadPoolExecutor(max_workers=1)
-        guard_fut = _guard_pool.submit(
-            _assert_buckets_under_cap, bands_b, hits, max_bucket
-        )
-        _guard_pool.shutdown(wait=False)
-
-    members_b = (
-        new_docs.select("doc_id")
-        .join(cc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("cluster_id", "doc_id").alias("cluster_id"),
-        )
-    ).localCheckpoint(eager=False)
-
-    # old clusters appearing as CC nodes remap to the merged canonical
-    old_clusters = state.members.select(
-        F.col("cluster_id").alias("doc_id")
-    ).distinct()
-    remap = (
-        cc.join(old_clusters, "doc_id")
-        .where(F.col("doc_id") != F.col("cluster_id"))
-        .select(
-            F.col("doc_id").alias("old_cluster"),
-            F.col("cluster_id").alias("new_cluster"),
-        )
-    ).localCheckpoint(eager=False)
-
-    def remapped(df: DataFrame) -> DataFrame:
-        other = [c for c in df.columns if c != "cluster_id"]
-        return (
-            df.join(
-                remap, df["cluster_id"] == remap["old_cluster"], "left"
-            )
+    guard_fut = (
+        _GUARD_POOL.submit(_assert_buckets_under_cap, bands_b, hits, max_bucket)
+        if strict_cap
+        else None
+    )
+    try:
+        members_b = (
+            new_docs.select("doc_id")
+            .join(cc, "doc_id", "left")
             .select(
-                *other,
-                F.coalesce("new_cluster", df["cluster_id"]).alias(
-                    "cluster_id"
-                ),
+                "doc_id",
+                F.coalesce("cluster_id", "doc_id").alias("cluster_id"),
+            )
+        ).localCheckpoint(eager=False)
+
+        # old clusters appearing as CC nodes remap to the merged canonical
+        old_clusters = state.members.select(
+            F.col("cluster_id").alias("doc_id")
+        ).distinct()
+        remap = (
+            cc.join(old_clusters, "doc_id")
+            .where(F.col("doc_id") != F.col("cluster_id"))
+            .select(
+                F.col("doc_id").alias("old_cluster"),
+                F.col("cluster_id").alias("new_cluster"),
+            )
+        ).localCheckpoint(eager=False)
+
+        def remapped(df: DataFrame) -> DataFrame:
+            other = [c for c in df.columns if c != "cluster_id"]
+            return (
+                df.join(
+                    remap, df["cluster_id"] == remap["old_cluster"], "left"
+                )
+                .select(
+                    *other,
+                    F.coalesce("new_cluster", df["cluster_id"]).alias(
+                        "cluster_id"
+                    ),
+                )
+            )
+
+        texts_b = (
+            # fp carried through from the pinned collapse — no md5 re-hash
+            fresh.select("fp", F.col("doc_id").alias("rep_id"))
+            .join(
+                members_b.select(F.col("doc_id").alias("rep_id"), "cluster_id"),
+                "rep_id",
+            )
+            .select("fp", "rep_id", "cluster_id")
+        )
+        new_state = DedupState(
+            texts=remapped(state.texts).unionByName(texts_b),
+            bands=state.bands.unionByName(bands_b),
+            members=remapped(state.members).unionByName(members_b),
+        )
+
+        delta = members_b.select(
+            "doc_id",
+            "cluster_id",
+            F.when(F.col("doc_id") == F.col("cluster_id"), "survivor")
+            .otherwise("duplicate")
+            .alias("status"),
+        ).unionByName(
+            remap.select(
+                F.col("old_cluster").alias("doc_id"),
+                F.col("new_cluster").alias("cluster_id"),
+                F.lit("demoted").alias("status"),
             )
         )
-
-    texts_b = (
-        # fp carried through from the pinned collapse — no md5 re-hash
-        fresh.select("fp", F.col("doc_id").alias("rep_id"))
-        .join(
-            members_b.select(F.col("doc_id").alias("rep_id"), "cluster_id"),
-            "rep_id",
-        )
-        .select("fp", "rep_id", "cluster_id")
-    )
-    new_state = DedupState(
-        texts=remapped(state.texts).unionByName(texts_b),
-        bands=state.bands.unionByName(bands_b),
-        members=remapped(state.members).unionByName(members_b),
-    )
-
-    delta = members_b.select(
-        "doc_id",
-        "cluster_id",
-        F.when(F.col("doc_id") == F.col("cluster_id"), "survivor")
-        .otherwise("duplicate")
-        .alias("status"),
-    ).unionByName(
-        remap.select(
-            F.col("old_cluster").alias("doc_id"),
-            F.col("new_cluster").alias("cluster_id"),
-            F.lit("demoted").alias("status"),
-        )
-    )
-    if guard_fut is not None:
-        guard_fut.result()  # re-raises the cap violation, if any
-    return new_state, delta
+        if guard_fut is not None:
+            guard_fut.result()  # re-raises the cap violation, if any
+        return new_state, delta
+    finally:
+        # an error above left the guard pending: cancel it, or wait for
+        # it if it already runs (its own error is dropped so the first
+        # one propagates) — no guard job outlives the fold
+        if guard_fut is not None and not guard_fut.cancel():
+            guard_fut.exception()
 
 
 def save_dedup_state(

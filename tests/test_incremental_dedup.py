@@ -133,6 +133,60 @@ def test_incremental_strict_cap_raises_on_hot_bucket(spark):
     assert st.members.count() == 6
 
 
+def test_fold_error_never_leaves_the_cap_guard_running(spark, monkeypatch):
+    """Fault injection between the strict-cap guard's submit and its
+    result: the injected error propagates (not the guard's own), and the
+    guard is either cancelled before it starts or waited for — no guard
+    job outlives the fold."""
+    import threading
+    import time
+
+    import pytest
+
+    from low_latency_time_series_database_tsdb_for_market_data_spark.operators.llm import (
+        incremental,
+    )
+
+    state_a = dedup_state_build(_df(spark, _A), 8)
+    started, raised, finished = threading.Event(), threading.Event(), threading.Event()
+
+    def slow_failing_guard(*_a, **_k):
+        started.set()
+        raised.wait(10)  # still running well after the fold's error
+        time.sleep(0.3)
+        finished.set()
+        raise RuntimeError("guard: exceeds max_bucket")
+
+    def injected(wait_for_guard: bool):
+        def fail(**_k):
+            if wait_for_guard:
+                assert started.wait(10)
+            raised.set()
+            raise ValueError("injected")
+        return fail
+
+    monkeypatch.setattr(incremental, "_assert_buckets_under_cap", slow_failing_guard)
+    # (a) the guard is running when the error hits: the fold waits for it
+    monkeypatch.setattr(incremental, "DedupState", injected(True))
+    with pytest.raises(ValueError, match="injected"):
+        dedup_state_apply(state_a, _df(spark, _B), 8)
+    assert finished.is_set()
+    # (b) the guard is still queued behind other work: it is cancelled
+    for ev in (started, raised, finished):
+        ev.clear()
+    gate = threading.Event()
+    blocker = incremental._GUARD_POOL.submit(gate.wait, 10)
+    monkeypatch.setattr(incremental, "DedupState", injected(False))
+    try:
+        with pytest.raises(ValueError, match="injected"):
+            dedup_state_apply(state_a, _df(spark, _B), 8)
+    finally:
+        gate.set()
+    blocker.result()
+    incremental._GUARD_POOL.submit(lambda: None).result()  # drain the queue
+    assert not started.is_set()
+
+
 def test_bucketed_state_roundtrip_and_apply_equivalence(spark, tmp_path):
     """Round 11 (r10 verdict item #5): state saved as bucketed catalog
     tables must round-trip, and folding with broadcast_probe=False over

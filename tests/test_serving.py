@@ -1,11 +1,13 @@
 """PointServer (hot-slice serving path): results must be identical to
-the registry's q04/q05 — only the physical source (InMemoryTableScan vs
-parquet FileScan) may differ — and probes outside the cached slice must
-fall back to the parquet path transparently."""
+the registry's q04/q05 and to the parquet path — only the physical source
+(a LocalTableScan cut from the driver-side index vs a parquet FileScan)
+may differ — an in-slice probe runs no Spark job, and probes outside the
+indexed slice must fall back to the parquet path transparently."""
 
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from low_latency_time_series_database_tsdb_for_market_data_spark.catalog import (
@@ -20,6 +22,8 @@ from low_latency_time_series_database_tsdb_for_market_data_spark.serving import 
     PointServer,
 )
 from tests.oracle_diff import assert_df_equal
+from tests.test_catalog_adaptive import _BASE_US
+from tests.test_tick_footer_index import _jobs
 
 SF = "/root/testdata/sf0.01"
 
@@ -27,6 +31,22 @@ SF = "/root/testdata/sf0.01"
 def _sorted(df) -> pd.DataFrame:
     pdf = df.toPandas()
     return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _assert_indexed(spark, df) -> None:
+    """Served from the index: a LocalTableScan whose collect runs no
+    Spark job."""
+    assert _plan(df).startswith("LocalTableScan"), _plan(df)
+    assert _jobs(spark, df.collect, "serving-probe") == 0
+
+
+def _assert_parquet(df) -> None:
+    plan = _plan(df)
+    assert "FileScan parquet" in plan and "LocalTableScan" not in plan, plan
 
 
 def test_point_server_matches_q05(spark):
@@ -37,9 +57,8 @@ def test_point_server_matches_q05(spark):
         got = _sorted(srv.point(srv.table_min_ns()))
         want = _sorted(reg["q05_point_lookup"].fn(spark, SF))
         assert_df_equal(got, want, name="server point vs q05")
-        # the cached probe really serves from the in-memory relation
-        plan = srv.point(srv.table_min_ns())._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" in plan
+        # the in-slice probe really serves from the index, with no job
+        _assert_indexed(spark, srv.point(srv.table_min_ns()))
     finally:
         srv.close()
 
@@ -79,15 +98,14 @@ def test_range_matches_q04_and_footer_bounds(spark):
 def test_probe_outside_cached_slice_falls_back(spark):
     """A server caching only a late window must still answer an early
     probe correctly (parquet fallback), and the plan must NOT be the
-    cache."""
+    index."""
     reg = load_all()
     lo = ts_min_epoch_ns(f"{SF}/events.parquet")
-    srv = PointServer(spark, SF, lo_ns=lo + 10**15)  # cache starts later
+    srv = PointServer(spark, SF, lo_ns=lo + 10**15)  # index starts later
     try:
         srv.open()
         q = srv.point(lo)
-        plan = q._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" not in plan
+        _assert_parquet(q)
         got = _sorted(q)
         want = _sorted(reg["q05_point_lookup"].fn(spark, SF))
         assert_df_equal(got, want, name="fallback point vs q05")
@@ -96,10 +114,10 @@ def test_probe_outside_cached_slice_falls_back(spark):
 
 
 def test_symbol_sliced_server(spark):
-    """A server caching one event_type slice: (a) a probe restricted to
-    that slice serves FROM the cache and matches the raw-path filter
+    """A server indexing one event_type slice: (a) a probe restricted to
+    that slice serves FROM the index and matches the raw-path filter
     exactly; (b) a ts-only probe must NOT serve from the symbol-sliced
-    cache (it would silently drop the other event types) and still
+    index (it would silently drop the other event types) and still
     returns the full q04-equivalent result; (c) construction with the
     default symbol_col works against the events schema (round-6 advice:
     the old code filtered a nonexistent `symbol` column and ignored the
@@ -117,10 +135,9 @@ def test_symbol_sliced_server(spark):
     srv = PointServer(spark, SF, symbols=["click"])
     try:
         srv.open()
-        # (a) restricted probe: cached, and value-identical to raw
+        # (a) restricted probe: indexed, and value-identical to raw
         q = srv.range(_T1_NS, _T2_NS, symbols=["click"])
-        plan = q._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" in plan
+        _assert_indexed(spark, q)
         raw = events_raw(spark, SF)
         want_df = with_ts(
             raw.where(
@@ -135,29 +152,23 @@ def test_symbol_sliced_server(spark):
         assert (_sorted(q)["event_type"] == "click").all()
         # (b) ts-only probe: falls back AND returns every event type
         q2 = srv.range(_T1_NS, _T2_NS)
-        plan2 = q2._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" not in plan2
+        _assert_parquet(q2)
         want2 = _sorted(reg["q04_range_scan"].fn(spark, SF))
         assert_df_equal(_sorted(q2), want2, name="ts-only fallback")
         # (c) a superset symbol probe also falls back
         q3 = srv.range(_T1_NS, _T2_NS, symbols=["click", "view"])
-        assert "InMemoryTableScan" not in (
-            q3._jdf.queryExecution().executedPlan().toString()
-        )
+        _assert_parquet(q3)
     finally:
         srv.close()
 
 
 def test_refresh_picks_up_externally_appended_rows(spark, tmp_path):
-    """Same-session Spark writes auto-refresh cached plans
-    (refreshByPath), so the stale-cache case is an EXTERNAL writer
-    (another process/cluster commits files).  Simulated by copying a
-    part file in at the filesystem level: the served slice keeps
-    answering from the pinned listing until refresh() re-resolves the
-    table."""
+    """The index is a snapshot: another process committing files is
+    invisible until refresh() re-resolves the table.  Simulated by
+    copying a part file in at the filesystem level.  Probes issued while
+    refresh() runs read the old index or the new one, never neither."""
     import shutil
-
-    import os
+    import threading
     from pathlib import Path
 
     live = str(tmp_path / "live_sf")
@@ -177,11 +188,189 @@ def test_refresh_picks_up_externally_appended_rows(spark, tmp_path):
         # (no Spark write path, no refreshByPath)
         part = next(dst.glob("part-*.parquet"))
         shutil.copy(part, part.with_name("part-ext-copy.parquet"))
-        # stale cache still answers from the pinned listing
+        # the stale index still answers from the old listing
         assert srv.point(lo).count() == before
-        srv.refresh()
+        seen, errors, done = set(), [], threading.Event()
+
+        def probe() -> None:
+            try:
+                while not done.is_set():
+                    seen.add(len(srv.point(lo).collect()))
+            except Exception as e:  # surfaced by the assert below
+                errors.append(e)
+
+        t = threading.Thread(target=probe)
+        t.start()
+        try:
+            srv.refresh()
+        finally:
+            done.set()
+            t.join(60)
+        assert not t.is_alive()
+        assert not errors and seen <= {before, 2 * before}, (errors, seen)
         assert srv.point(lo).count() == 2 * before
-        plan = srv.point(lo)._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" in plan
+        _assert_indexed(spark, srv.point(lo))
+    finally:
+        srv.close()
+
+
+def _parquet_path(spark, d, lo_ns, hi_ns, symbols=None):
+    """The parquet-path answer for a probe, built from the catalog's
+    bounds exactly as the fallback builds it."""
+    from low_latency_time_series_database_tsdb_for_market_data_spark.catalog import (  # noqa: E501
+        ts_bound,
+        with_ts,
+    )
+
+    raw = events_raw(spark, d)
+    out = raw.where(
+        (F.col("ts") >= ts_bound(raw, lo_ns))
+        & (F.col("ts") <= ts_bound(raw, hi_ns, upper=True))
+    )
+    if symbols:
+        out = out.where(F.col("event_type").isin(symbols))
+    return with_ts(out)
+
+
+@pytest.fixture(scope="module")
+def dup_layouts(tmp_path_factory):
+    """The ns/us/us_utc events layouts, each as a two-file table whose
+    second file repeats the first: every timestamp appears twice."""
+    import shutil
+
+    from tests.test_catalog_adaptive import _write_events
+
+    base = tmp_path_factory.mktemp("serving_layouts")
+    out = {}
+    for unit in ("ns", "us", "us_utc"):
+        table = base / unit / "events.parquet"
+        table.mkdir(parents=True)
+        src = _write_events(str(base / unit), unit)
+        shutil.move(src, table / "part-0.parquet")
+        shutil.copy(table / "part-0.parquet", table / "part-1.parquet")
+        out[unit] = str(base / unit)
+    return out
+
+
+_B_NS = _BASE_US * 1000
+_DAY_NS = 86_400 * 10**9
+# (lo, hi) in epoch ns around the fixture rows at B-1us, B, B+5us, B+1d:
+# round and non-round nanosecond bounds, both inclusive ends hit, and an
+# in-slice window between rows that holds nothing
+_PROBES = [
+    (_B_NS, _B_NS),
+    (_B_NS + 1, _B_NS + 1),
+    (_B_NS - 1, _B_NS - 1),
+    (_B_NS - 1000, _B_NS),
+    (_B_NS - 999, _B_NS + 4999),
+    (_B_NS - 999, _B_NS - 1),
+    (_B_NS + 5000, _B_NS + 5000 + _DAY_NS),
+    (_B_NS + 1000, _B_NS + 4000),  # empty
+    (0, 2**62),
+]
+
+
+@pytest.mark.parametrize("unit", ["ns", "us", "us_utc"])
+def test_in_slice_probes_match_parquet_path(spark, dup_layouts, unit):
+    """Every in-slice probe returns exactly the parquet path's rows and
+    schema, for each ts layout, for a window-sliced server whose slice
+    bounds are non-round nanoseconds, and for a symbol-sliced server."""
+    d = dup_layouts[unit]
+    full = PointServer(spark, d)
+    sliced = PointServer(spark, d, lo_ns=_B_NS - 500, hi_ns=_B_NS + 5001)
+    by_sym = PointServer(spark, d, symbols=["view", "click"])
+    cases = [(full, lo, hi, None) for lo, hi in _PROBES]
+    cases += [(sliced, lo, hi, None) for lo, hi in
+              [(_B_NS - 500, _B_NS), (_B_NS - 500, _B_NS + 5001), (_B_NS + 1, _B_NS + 4999)]]
+    cases += [(by_sym, lo, hi, syms) for lo, hi in _PROBES[:5]
+              for syms in (["view"], ["click"], ["click", "view"])]
+    try:
+        for srv in (full, sliced, by_sym):
+            srv.open()
+        for srv, lo, hi, syms in cases:
+            got = srv.range(lo, hi, syms)
+            want = _parquet_path(spark, d, lo, hi, syms)
+            assert got.schema == want.schema
+            assert sorted(got.collect()) == sorted(want.collect()), (unit, lo, hi, syms)
+        assert sum(s.stats()["index_hits"] for s in (full, sliced, by_sym)) == len(cases)
+        assert full.stats()["indexed_rows"] == 8
+        # a symbol the slice holds no rows for, and the empty window
+        assert full.range(_B_NS + 1000, _B_NS + 4000).collect() == []
+        assert by_sym.point(_B_NS, ["click"]).collect() == []
+        _assert_indexed(spark, full.range(_B_NS - 1000, _B_NS))
+    finally:
+        for srv in (full, sliced, by_sym):
+            srv.close()
+
+
+def test_stats_count_a_mixed_probe_sequence(spark, dup_layouts):
+    """Index hits, footer-answered empties and parquet fallbacks are
+    counted apart; a window outside the footer ts bounds answers empty,
+    equal to the parquet path, without a Spark job."""
+    d = dup_layouts["us"]
+    srv = PointServer(spark, d, lo_ns=_B_NS, hi_ns=_B_NS + _DAY_NS)
+    assert srv.stats() == {"index_hits": 0, "footer_empty": 0, "parquet_fallbacks": 0,
+                           "indexed_rows": 0, "open_s": None, "refresh_s": None}
+    assert srv.table_min_ns() == _B_NS - 1000
+    try:
+        srv.open()
+        srv.point(_B_NS).collect()                      # hit
+        srv.range(_B_NS, _B_NS + _DAY_NS).collect()    # hit
+        fb = srv.point(_B_NS - 1000)                    # before the slice
+        _assert_parquet(fb)
+        assert len(fb.collect()) == 2
+        for lo, hi in [(0, _B_NS - 1001), (_B_NS + _DAY_NS + 1000, 2**62)]:
+            empty = srv.range(lo, hi)         # outside slice and table
+            assert _plan(empty).startswith("LocalTableScan")
+            assert _jobs(spark, empty.collect, "serving-empty") == 0
+            want = _parquet_path(spark, d, lo, hi)
+            assert empty.schema == want.schema and want.collect() == []
+        srv.refresh()
+        st = srv.stats()
+        assert st["open_s"] > 0 and st["refresh_s"] > 0
+        assert {k: st[k] for k in ("index_hits", "footer_empty", "parquet_fallbacks",
+                                   "indexed_rows")} == {
+            "index_hits": 2, "footer_empty": 2, "parquet_fallbacks": 1, "indexed_rows": 6}
+    finally:
+        srv.close()
+    assert srv.stats()["indexed_rows"] == 0
+
+
+def test_stats_survive_concurrent_probes(spark, dup_layouts):
+    """More probing threads than cores, with a short switch interval:
+    no counter update is lost."""
+    import sys
+    import threading
+
+    srv = PointServer(spark, dup_layouts["us"])
+    srv.open()
+    threads = [threading.Thread(target=lambda: [srv.point(_B_NS) for _ in range(10)])
+               for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(interval)
+        srv.close()
+    assert not any(t.is_alive() for t in threads)
+    assert srv.stats()["index_hits"] == 80
+
+
+def test_nanos_layout_has_no_footer_shortcut(spark, dup_layouts):
+    """The int64-nanos layout has no trusted footer bounds, so a probe
+    outside the table still takes the parquet path (and finds nothing)."""
+    srv = PointServer(spark, dup_layouts["ns"], lo_ns=_B_NS)
+    try:
+        srv.open()
+        assert srv.table_min_ns() is None
+        q = srv.range(0, _B_NS - 2000)
+        _assert_parquet(q)
+        assert q.collect() == []
+        assert srv.stats()["parquet_fallbacks"] == 1
+        assert srv.stats()["footer_empty"] == 0
     finally:
         srv.close()

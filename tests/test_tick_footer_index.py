@@ -298,7 +298,8 @@ def test_import_of_all_malformed_csv(spark, tmp_path):
 def test_cli_jobs_per_operation(spark, tmp_path, monkeypatch):
     """The footer index and the schema memo leave one Spark job per
     insert, query, one-split import, stream drain and PointServer
-    refresh, and at most three per maintain."""
+    refresh, and at most three per maintain; a PointServer probe inside
+    its indexed slice runs none."""
     from pyspark.sql.streaming.readwriter import DataStreamWriter
 
     from low_latency_time_series_database_tsdb_for_market_data_spark.serving import PointServer
@@ -342,8 +343,11 @@ def test_cli_jobs_per_operation(spark, tmp_path, monkeypatch):
     shutil.copy(feed / "part-0.parquet", feed / "part-2.parquet")
     try:
         jobs["refresh"] = _jobs(spark, srv.refresh, f"{tmp_path.name}-refresh")
-        assert srv.range(0, 2**62).count() == 12
+        rows: list = []
+        jobs["probe"] = _jobs(spark, lambda: rows.extend(srv.range(0, 2**62).collect()),
+                              f"{tmp_path.name}-probe")
+        assert len(rows) == 12
     finally:
         srv.close()
-    want = {"insert": 1, "query": 1, "import": 1, "drain": 1, "refresh": 1}
+    want = {"insert": 1, "query": 1, "import": 1, "drain": 1, "refresh": 1, "probe": 0}
     assert {k: jobs[k] for k in want} == want and jobs["maintain"] <= 3, jobs
