@@ -44,6 +44,7 @@ from __future__ import annotations
 import datetime as _dt
 import os
 from pathlib import Path
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -179,19 +180,265 @@ def _parquet_files(path: str) -> list[Path] | None:
 def _footer_metadatas(path: str):
     """Parquet FileMetaData for every file Spark would read under `path`
     (a file or a directory tree), or None when the path is missing, not
-    local, unlistable, or holds no parquet files.  Shared walk for the
-    footer probes — they are optimizations, so every such case maps to
-    None and the caller's Spark data probe."""
+    local, unlistable, holds no files, or lists a file whose name does
+    not end in ``.parquet`` (Spark reads it whatever its suffix, so the
+    footers of the ``.parquet`` files alone would miss its rows).  Shared
+    walk for the footer probes — they are optimizations, so every such
+    case maps to None and the caller's Spark data probe."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     try:
-        files = _parquet_files(path)
-        if not files:
+        files = _spark_listing(path)
+        if not files or not all(f.name.endswith(".parquet") for f in files):
             return None
-        return [pq.ParquetFile(f).metadata for f in files]
+        return [pq.ParquetFile(f).metadata for f in sorted(files)]
     except (OSError, pa.ArrowInvalid):  # unlistable/corrupt -> data probe
         return None
+
+
+def input_files(df: DataFrame) -> list[Path] | None:
+    """The files the file relation ``df`` listed when it was built (Spark
+    pins that listing until the relation is rebuilt), as local paths;
+    None if ``df`` is not a bare file relation or any file is not local.
+    Read off the analyzed plan: ``DataFrame.inputFiles`` runs the
+    optimizer first, several ms per call."""
+    from urllib.parse import unquote, urlparse
+
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if rel.getClass().getSimpleName() != "HadoopFsRelation":
+        return None
+    out = []
+    for uri in rel.inputFiles():
+        u = urlparse(uri)
+        if u.scheme not in ("", "file"):
+            return None
+        out.append(Path(unquote(u.path)))
+    return out
+
+
+# Rows the row groups a driver-side read keeps may hold before
+# ``local_rows`` hands the read back to Spark.  Measured on a 4-core VM,
+# min of 5 warm runs, driver read vs the same read as a local Spark job:
+# a CLI ``query`` of 200 ticks out of N rows in eight unsorted files took
+# 21/39/59/134 ms vs 239/282/223/235 ms at N = 0.4M/1M/2M/4M (one sorted
+# row group: 5/39/77 ms vs 110/169/246 ms at 20 000/1M/2M), so the
+# crossover lies near 7M rows; an out-of-slice PointServer probe over
+# events rows (six columns, two of them strings) took 60/90 ms vs
+# 129/204 ms at 1M/2M.  The cap stays well below the crossover, so wider
+# rows are still faster on the driver, and it bounds the driver memory
+# one read takes.
+LOCAL_READ_MAX_ROWS = 1_000_000
+
+_INT64 = (-(2**63), 2**63 - 1)
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+class _Group(NamedTuple):
+    """One non-empty row group and its footer min/max of the key column."""
+
+    file: object  # the open pyarrow ParquetFile
+    index: int
+    rows: int
+    lo: int
+    hi: int
+
+
+def _read_set(spark, root: Path, files: list[Path],
+              partition: tuple[str, str] | None) -> list[Path] | None:
+    """The files of ``files`` a read of ``partition`` (name, value)
+    scans, or of the whole table without one; None when the layout is
+    not one whose rows the driver can give exactly: a listed file not
+    named ``*.parquet``, or anything but one ``name=v`` directory level
+    (partitioned) or files straight under ``root`` (unpartitioned).
+    Directory values are compared after Spark's unescaping, as Spark's
+    partition discovery does, and the null partition never matches."""
+    if not all(f.name.endswith(".parquet") for f in files):
+        return None
+    if partition is None:
+        return files if all(f == root or f.parent == root for f in files) else None
+    name, value = partition
+    unescape = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    out = []
+    for f in files:
+        if root not in f.parents or len(f.relative_to(root).parts) != 2:
+            return None
+        key, _, v = f.parent.name.partition("=")
+        if key != name or not v:
+            return None
+        if v != _HIVE_NULL and (unescape.unescapePathName(v) if "%" in v else v) == value:
+            out.append(f)
+    return out
+
+
+def _row_groups(pf, schema, col: str, no_nulls: bool,
+                nanos_as_long: bool) -> list[_Group] | None:
+    """The non-empty row groups of one open file with their footer
+    min/max of ``col``, or None when the file cannot be read exactly:
+    a ``schema`` column missing or of another type (the one conversion
+    allowed is TIMESTAMP(NANOS) to int64, which Spark's nanosAsLong
+    reads as the raw count), column names equal but for case, ``col``
+    not a physical INT64, or a row group without min/max stats (or with
+    nulls, when ``no_nulls``)."""
+    import pyarrow as pa
+
+    arrow = pf.schema_arrow
+    if len({n.lower() for n in arrow.names}) != len(arrow.names):
+        return None
+    for field in schema:
+        i = arrow.get_field_index(field.name)
+        if i < 0:
+            return None
+        t = arrow.field(i).type
+        if t != field.type and not (
+            nanos_as_long and field.type == pa.int64()
+            and pa.types.is_timestamp(t) and t.unit == "ns"
+        ):
+            return None
+    md = pf.metadata
+    paths = [md.schema.column(i).path for i in range(md.num_columns)]
+    if col not in paths or md.schema.column(paths.index(col)).physical_type != "INT64":
+        return None
+    c = paths.index(col)
+    out = []
+    for r in range(md.num_row_groups):
+        rg = md.row_group(r)
+        if rg.num_rows == 0:
+            continue
+        st = rg.column(c).statistics
+        if st is None or not st.has_min_max:
+            return None
+        if no_nulls and (not st.has_null_count or st.null_count):
+            return None
+        out.append(_Group(pf, r, rg.num_rows, st.min_raw, st.max_raw))
+    return out
+
+
+def _read_groups(groups: list[_Group], schema):
+    """The ``schema`` columns of ``groups``, each file's part cast to
+    ``schema`` (nullable, so required and optional columns concatenate)."""
+    import pyarrow as pa
+
+    parts = []
+    for pf in dict.fromkeys(g.file for g in groups):
+        idx = [g.index for g in groups if g.file is pf]
+        part = pf.read_row_groups(idx, columns=schema.names)
+        parts.append(pa.Table.from_arrays(
+            [part.column(f.name).cast(f.type) for f in schema], schema=schema))
+    return pa.concat_tables(parts) if parts else schema.empty_table()
+
+
+def _key(tbl, col: str):
+    """``col`` as its raw int64 values (timestamps as their unit count)."""
+    import pyarrow as pa
+
+    return tbl.column(col).cast(pa.int64())
+
+
+def local_rows(
+    spark: SparkSession,
+    path: str,
+    schema,
+    col: str,
+    *,
+    window: tuple[int, int] | None = None,
+    top: int | None = None,
+    partition: tuple[str, str] | None = None,
+    files: list[Path] | None = None,
+):
+    """A small local parquet read answered on the driver: the rows Spark
+    would return, as a ``pyarrow.Table`` with the ``schema`` columns, or
+    None when the driver cannot guarantee exactly those rows and the
+    caller must run its Spark read.  No Spark job runs.
+
+    ``path`` is the table Spark reads; ``files`` the listing its relation
+    pinned (default: Spark's listing of ``path`` now).  With
+    ``partition=(name, value)`` the table must be partitioned by exactly
+    that column and only directories whose unescaped value is ``value``
+    are read; without it every file must sit straight under ``path``.
+    Every listed file must be named ``*.parquet``: Spark reads a file of
+    any other name too, and the footer probes (``_footer_metadatas``)
+    decline such a listing the same way.
+
+    ``col`` is a physical INT64 column (an integer or a timestamp, seen
+    as its raw count) whose footer min/max prunes row groups before any
+    data is read:
+
+    * ``window=(lo, hi)``: the rows with ``lo <= col <= hi``;
+    * ``top=n``: the ``n`` rows with the largest ``col``, ascending.  Row
+      groups are read in descending max order until they hold ``n`` rows;
+      with ``t`` the n-th largest value read, every other row group whose
+      max reaches ``t`` is read too, so ties at ``t`` are all seen.
+
+    Each file's part is cast to ``schema`` with every field nullable
+    (``_row_groups`` admits only exact casts).  None when: the path is
+    not local or missing, the layout or a file's columns differ, a
+    footer or page cannot be read, a row group lacks stats, ``top < 0``
+    (Spark raises), ``col`` holds nulls under ``top``, a bound does not
+    fit an int64, or the kept row groups hold more than
+    ``LOCAL_READ_MAX_ROWS`` rows."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    root = local_path(path)
+    if root is None or (top is not None and top < 0):
+        return None
+    if window is not None and not all(_INT64[0] <= b <= _INT64[1] for b in window):
+        return None
+    schema = pa.schema([f.with_nullable(True) for f in schema])
+    opened = []
+    try:
+        if not root.exists():
+            return None
+        listing = _spark_listing(path) if files is None else files
+        read = _read_set(spark, root, listing, partition)
+        if read is None:
+            return None
+        nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "true"
+        groups = []
+        for f in sorted(read):
+            opened.append(pq.ParquetFile(f))
+            g = _row_groups(opened[-1], schema, col, top is not None, nanos)
+            if g is None:
+                return None
+            groups += g
+        if window is not None:
+            lo, hi = window
+            groups = [g for g in groups if g.hi >= lo and g.lo <= hi]
+            if sum(g.rows for g in groups) > LOCAL_READ_MAX_ROWS:
+                return None
+            tbl = _read_groups(groups, schema)
+            key = _key(tbl, col)
+            return tbl.filter(pc.and_(pc.greater_equal(key, lo), pc.less_equal(key, hi)))
+        groups.sort(key=lambda g: g.hi, reverse=True)
+        first, rows = 0, 0
+        while first < len(groups) and rows < top:
+            rows += groups[first].rows
+            first += 1
+        if rows > LOCAL_READ_MAX_ROWS:
+            return None
+        tbl = _read_groups(groups[:first], schema)
+        if top and rows >= top:
+            keys = _key(tbl, col).to_numpy()
+            t = np.partition(keys, rows - top)[rows - top]
+            more = [g for g in groups[first:] if g.hi >= t]
+            if rows + sum(g.rows for g in more) > LOCAL_READ_MAX_ROWS:
+                return None
+            tbl = pa.concat_tables([tbl, _read_groups(more, schema)])
+        tbl = tbl.sort_by([(col, "descending")]).slice(0, top)
+        return tbl.sort_by([(col, "ascending")])
+    # a file, footer or page pyarrow cannot read (or decode): Spark reads
+    # it, or raises for it
+    except (OSError, pa.ArrowInvalid, pa.ArrowNotImplementedError):
+        return None
+    finally:
+        for pf in opened:
+            pf.close()
 
 
 def _utc_naive(v) -> _dt.datetime | None:
@@ -312,8 +559,8 @@ UNSTATABLE = ("<unstat-able>",)
 
 def parquet_fingerprint(path: str) -> tuple:
     """Cheap identity of a parquet file/dir: sorted (name, size,
-    mtime_ns) of the parquet files Spark reads — os.stat only, no footer
-    reads, no Spark job.  Session caches keyed on a data DIRECTORY (the
+    mtime_ns) of every file Spark lists, whatever its suffix — os.stat
+    only, no footer reads, no Spark job.  Session caches keyed on a data DIRECTORY (the
     verdict model, the corpus signature table) add this to their key so
     a fixture dir regenerated in-place within a long-lived session
     (soak/test tooling does) invalidates instead of serving stale
@@ -322,12 +569,12 @@ def parquet_fingerprint(path: str) -> tuple:
     ``()`` of an empty dir, so a readability blip cannot alias a
     fingerprinted key."""
     try:
-        files = _parquet_files(path)
+        files = _spark_listing(path)
         if files is None:
             return UNSTATABLE
         return tuple(
             (f.name, st.st_size, st.st_mtime_ns)
-            for f in files
+            for f in sorted(files)
             for st in (f.stat(),)
         )
     except OSError:

@@ -28,11 +28,18 @@ Index reads: the parquet footers are this table's index (SURVEY §1.3), as
 the B+ tree is the reference's.  The next arrival seq is read from the
 seq statistics in the footers under the symbol's partition directory,
 and `maintain` takes its row counts from footer ``num_rows`` — neither
-runs a Spark job.  Only inputs the footers cannot serve (a row group
-without stats, a non-local path) fall back to a Spark aggregation.  An
-``insert`` therefore runs one Spark job (the write), a ``query`` one
-(the collect; its rows are ordered on the driver) and an ``import`` of a
-one-split CSV one (the write; its count is read back from the footers).
+runs a Spark job.  ``query`` and ``last`` read on the driver
+(``catalog.local_rows``): the row groups of the symbol's partition whose
+footer ts range meets the window, or those with the largest footer seq,
+are read with pyarrow, filtered or cut to n and ordered there.  Only
+inputs the footers cannot serve fall back to Spark: a non-local path, a
+row group without stats, a footer that cannot be read, a listed file not
+named ``*.parquet`` or not directly in a ``symbol=`` directory, a file
+whose columns differ from TICK_SCHEMA, a bound outside int64, a
+negative n (Spark raises), or more than ``catalog.LOCAL_READ_MAX_ROWS``
+rows in the kept row groups.  Spark jobs per command: ``query`` 0,
+``last`` 0, ``insert`` 1 (the write) and an ``import`` of a one-split
+CSV 1 (the write; its count is read back from the footers).
 """
 
 from __future__ import annotations
@@ -166,31 +173,57 @@ def cmd_insert(
     return [f"Inserted tick for {symbol}"]
 
 
+def _local_slice(spark: SparkSession, data_dir: str, symbol: str, col: str, **select):
+    """The symbol's rows that ``select`` (``window`` or ``top`` on ``col``)
+    picks, read on the driver from the footer-pruned row groups of its
+    partition directory (``catalog.local_rows``), or None when only the
+    Spark read can give them exactly."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from .catalog import local_rows
+
+    data = T.StructType([f for f in TICK_SCHEMA.fields if f.name != "symbol"])
+    return local_rows(spark, _table_path(data_dir), to_arrow_schema(data), col,
+                      partition=("symbol", symbol), **select)
+
+
 def cmd_query(
     spark: SparkSession, data_dir: str, symbol: str, start: int, end: int
 ) -> list[str]:
     """Inclusive time-range scan, ts-ordered, seq-ordered ties (S4).
 
-    The slice is sorted on the driver: every matching row is collected
-    anyway, and a Spark ``orderBy`` would add a range-sampling job and a
-    shuffle for the same order.  (ts, seq) is a total order (seq is
-    unique per symbol), so the output matches the Spark sort's."""
-    df = _load(spark, data_dir, symbol)
-    rows = (
-        []
-        if df is None
-        else df.where((F.col("ts") >= start) & (F.col("ts") <= end)).collect()
-    )
-    rows.sort(key=lambda r: (r["ts"], r["seq"]))
+    The driver reads the row groups whose footer ts range meets the
+    window (:func:`_local_slice`) — no Spark job.  When it cannot, the
+    partition-pruned Spark scan collects the slice.  Either way the rows
+    are sorted on the driver by (ts, seq), a total order (seq is unique
+    per symbol), so both paths print the same lines."""
+    tbl = _local_slice(spark, data_dir, symbol, "ts", window=(start, end))
+    if tbl is not None:
+        rows = tbl.sort_by([("ts", "ascending"), ("seq", "ascending")]).to_pylist()
+    else:
+        df = _load(spark, data_dir, symbol)
+        rows = (
+            []
+            if df is None
+            else df.where((F.col("ts") >= start) & (F.col("ts") <= end)).collect()
+        )
+        rows.sort(key=lambda r: (r["ts"], r["seq"]))
     return [f"Found {len(rows)} results:"] + _fmt(rows)
 
 
 def cmd_last(spark: SparkSession, data_dir: str, symbol: str, n: int) -> list[str]:
-    """Last-N in arrival order, emitted oldest-first (S6)."""
-    df = _load(spark, data_dir, symbol)
-    rows = []
-    if df is not None:
-        rows = df.orderBy(F.desc("seq")).limit(n).orderBy("seq").collect()
+    """Last-N in arrival order, emitted oldest-first (S6).  The driver
+    reads the row groups with the largest footer seq until they hold the
+    top n (:func:`_local_slice`); otherwise, and for n < 0 (which Spark
+    rejects), the Spark sort-limit answers."""
+    tbl = _local_slice(spark, data_dir, symbol, "seq", top=n)
+    if tbl is not None:
+        rows = tbl.to_pylist()
+    else:
+        df = _load(spark, data_dir, symbol)
+        rows = []
+        if df is not None:
+            rows = df.orderBy(F.desc("seq")).limit(n).orderBy("seq").collect()
     return [f"Last {len(rows)} ticks for {symbol}:"] + _fmt(rows)
 
 

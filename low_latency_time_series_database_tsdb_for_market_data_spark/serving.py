@@ -14,8 +14,25 @@ them back as ``spark.createDataFrame(arrow_slice, schema)``, a
 on it runs no Spark job (an Arrow-enabled ``toPandas()`` still schedules
 one job over the local rows, and a probe whose Arrow result exceeds
 ``spark.sql.execution.arrow.localRelationThreshold`` comes back as an
-RDD scan).  Probes outside the slice read the parquet table, whose
-row-group min/max stats are the engine's on-disk index (SURVEY.md §1.3).
+RDD scan).
+
+A probe takes one of three paths, counted apart in ``stats()``:
+
+* index (``index_hits``): inside the slice, cut from the sorted index;
+* driver read (``local_reads``): outside the slice, the parquet table's
+  row-group min/max stats — the engine's on-disk index (SURVEY.md §1.3)
+  — prune the files the relation lists to the row groups that meet the
+  window, which pyarrow reads on the driver (``catalog.local_rows``);
+  the rows are converted to the served schema as ``with_ts`` converts
+  them and handed back as a ``LocalRelation`` too, so no job runs;
+* parquet (``parquet_fallbacks``): a Spark scan of the parquet table,
+  when the driver cannot give exactly its rows (a non-local path, a
+  row group without stats, an unexpected file or column, a timestamp
+  layout in a non-UTC session, or more than
+  ``catalog.LOCAL_READ_MAX_ROWS`` rows in the kept row groups).
+
+A window outside the footer ts bounds answers empty first
+(``footer_empty``).
 
 Keys and bounds follow ``catalog.ts_bound`` exactly, so an in-slice probe
 returns the rows the parquet path returns: in the int64-nanos layout the
@@ -28,7 +45,8 @@ Measured on a 4-core VM (``perfbench`` ``tick_ingest``, 2 000-row feed
 files, median of ten runs): an in-slice probe, built and collected,
 takes 19 ms for a point and 22 ms for a range, against 89/91 ms when the
 slice was a Spark columnar cache (one ``InMemoryTableScan`` job per
-probe) and about 120 ms for a probe on the parquet path.
+probe); outside the slice a driver read takes 24/27 ms and a probe on
+the parquet path about 125 ms.
 
 Scale shape: nobody indexes a 100 TB table on one driver.  The server
 takes an optional ts window (hot days) and/or symbol list (hot
@@ -56,7 +74,9 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from .catalog import (
     events_raw,
+    input_files,
     invalidate_relation,
+    local_rows,
     ts_bound,
     ts_bounds_epoch_ns,
     ts_is_long,
@@ -80,6 +100,7 @@ class _View(NamedTuple):
     schema: T.StructType  # served schema, with_ts(raw).schema
     ns: bool  # int64-nanos layout: keys are raw ts
     bounds: tuple[int, int] | None  # footer ts bounds, epoch ns
+    files: list | None  # the files ``raw`` lists, when all are local
     index: _Index | None  # None until open(), and after close()
 
 
@@ -91,7 +112,7 @@ class PointServer:
 
         srv = PointServer(spark, sf_dir)
         open_sec = srv.open()          # one job: collect + sort the slice
-        df = srv.point(epoch_ns)       # no Spark job inside the slice
+        df = srv.point(epoch_ns)       # index or driver read: no job
         df = srv.range(lo_ns, hi_ns)
         srv.stats()                    # hits, fallbacks, rows, open cost
         srv.close()
@@ -99,7 +120,8 @@ class PointServer:
     Results are identical to the registry's q04/q05 — same catalog
     bounds, same with_ts projection, same served schema — only the
     physical source (LocalTableScan vs parquet FileScan) differs, which
-    tests pin.  An in-slice result comes back in ts order.
+    tests pin.  An in-slice result comes back in ts order; a driver
+    read's in file order, like the parquet path's.
     """
 
     def __init__(
@@ -120,7 +142,8 @@ class PointServer:
         # deployments with a real symbol column pass symbol_col="symbol"
         self._symbols = list(symbols) if symbols else None
         self._symbol_col = symbol_col
-        self._counts = dict.fromkeys(("index_hits", "footer_empty", "parquet_fallbacks"), 0)
+        self._counts = dict.fromkeys(
+            ("index_hits", "footer_empty", "local_reads", "parquet_fallbacks"), 0)
         self._lock = threading.Lock()
         self._open_s: float | None = None
         self._refresh_s: float | None = None
@@ -132,7 +155,7 @@ class PointServer:
         bounds, so the known-empty test below never hides a listed row."""
         raw = events_raw(self._spark, self._sf_dir)
         return _View(raw, with_ts(raw).schema, ts_is_long(raw),
-                     ts_bounds_epoch_ns(self._path), None)
+                     ts_bounds_epoch_ns(self._path), input_files(raw), None)
 
     def _build(self, view: _View) -> _Index:
         """Collect the slice with its probe key (one Spark job) and sort
@@ -211,6 +234,10 @@ class PointServer:
             self._count("footer_empty")
             empty = to_arrow_schema(view.schema).empty_table()
             return self._spark.createDataFrame(empty, view.schema)
+        part = self._local(view, lo_ns, hi_ns, symbols)
+        if part is not None:
+            self._count("local_reads")
+            return self._spark.createDataFrame(part, view.schema)
         self._count("parquet_fallbacks")
         out = view.raw.where(
             (F.col("ts") >= ts_bound(view.raw, lo_ns))
@@ -228,11 +255,43 @@ class PointServer:
         lo, hi = (lo_ns, hi_ns + 999) if view.ns else (lo_ns // 1000, hi_ns // 1000)
         i = int(np.searchsorted(keys, lo, side="left"))
         j = int(np.searchsorted(keys, hi, side="right"))
-        part = table.slice(i, max(j - i, 0))
-        if symbols:
-            col = part.column(self._symbol_col)
-            part = part.filter(pc.is_in(col, pa.array(list(symbols), col.type)))
-        return part
+        return self._only(table.slice(i, max(j - i, 0)), symbols)
+
+    def _local(
+        self, view: _View, lo_ns: int, hi_ns: int, symbols: list[str] | None
+    ) -> pa.Table | None:
+        """The parquet path's rows read on the driver from the row groups
+        whose footer ts range meets ``ts_bound``'s window
+        (``catalog.local_rows`` over the files ``raw`` lists), in the
+        served schema; None when only Spark can give them exactly.  The
+        timestamp layouts need a UTC session: Spark reads the UTC
+        layout's bounds, and serves NTZ values, in the session time
+        zone."""
+        if view.files is None or (
+            not view.ns and self._spark.conf.get("spark.sql.session.timeZone") != "UTC"
+        ):
+            return None
+        window = (lo_ns, hi_ns + 999) if view.ns else (lo_ns // 1000, hi_ns // 1000)
+        part = local_rows(self._spark, self._path, to_arrow_schema(view.raw.schema), "ts",
+                          window=window, files=view.files)
+        if part is None:
+            return None
+        served = to_arrow_schema(view.schema)
+        # with_ts: nanos truncate toward zero to micros (Spark's ``div``,
+        # Arrow's integer divide); NTZ micros are read as UTC instants
+        ts = part.column("ts")
+        if view.ns:
+            ts = pc.divide(ts, 1000)
+        i = part.schema.get_field_index("ts")
+        part = part.set_column(i, served.field("ts"), ts.cast(served.field("ts").type))
+        return self._only(part, symbols).cast(served)
+
+    def _only(self, part: pa.Table, symbols: list[str] | None) -> pa.Table:
+        """``part`` restricted to ``symbols`` (all rows when None/empty)."""
+        if not symbols:
+            return part
+        col = part.column(self._symbol_col)
+        return part.filter(pc.is_in(col, pa.array(list(symbols), col.type)))
 
     def _count(self, kind: str) -> None:
         with self._lock:
@@ -241,9 +300,11 @@ class PointServer:
     def stats(self) -> dict:
         """Probe counters since construction — ``index_hits`` (served
         from the index), ``footer_empty`` (outside the footer ts bounds,
-        answered empty without a job), ``parquet_fallbacks`` — plus the
-        rows the index holds and the last ``open()``/``refresh()``
-        seconds (None before the first call)."""
+        answered empty without a job), ``local_reads`` (read on the
+        driver from the footer-pruned row groups, no job),
+        ``parquet_fallbacks`` — plus the rows the index holds and the
+        last ``open()``/``refresh()`` seconds (None before the first
+        call)."""
         index = self._view.index
         with self._lock:
             counts = dict(self._counts)

@@ -1,8 +1,10 @@
 """PointServer (hot-slice serving path): results must be identical to
 the registry's q04/q05 and to the parquet path — only the physical source
-(a LocalTableScan cut from the driver-side index vs a parquet FileScan)
-may differ — an in-slice probe runs no Spark job, and probes outside the
-indexed slice must fall back to the parquet path transparently."""
+(a LocalTableScan cut from the driver-side index or read from the
+footer-pruned row groups, vs a parquet FileScan) may differ.  A probe
+inside the indexed slice runs no Spark job, nor does one outside it that
+the driver can read exactly; any other probe falls back to the parquet
+path transparently."""
 
 from __future__ import annotations
 
@@ -10,6 +12,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from low_latency_time_series_database_tsdb_for_market_data_spark import catalog
 from low_latency_time_series_database_tsdb_for_market_data_spark.catalog import (
     events_raw,
     ts_min_epoch_ns,
@@ -37,9 +40,9 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _assert_indexed(spark, df) -> None:
-    """Served from the index: a LocalTableScan whose collect runs no
-    Spark job."""
+def _assert_local(spark, df) -> None:
+    """Served on the driver (from the index, or by a driver read): a
+    LocalTableScan whose collect runs no Spark job."""
     assert _plan(df).startswith("LocalTableScan"), _plan(df)
     assert _jobs(spark, df.collect, "serving-probe") == 0
 
@@ -47,6 +50,12 @@ def _assert_indexed(spark, df) -> None:
 def _assert_parquet(df) -> None:
     plan = _plan(df)
     assert "FileScan parquet" in plan and "LocalTableScan" not in plan, plan
+
+
+def _over_cap(monkeypatch) -> None:
+    """Force the parquet path for any probe whose row groups hold rows:
+    the driver read's row cap drops to 0."""
+    monkeypatch.setattr(catalog, "LOCAL_READ_MAX_ROWS", 0)
 
 
 def test_point_server_matches_q05(spark):
@@ -58,7 +67,7 @@ def test_point_server_matches_q05(spark):
         want = _sorted(reg["q05_point_lookup"].fn(spark, SF))
         assert_df_equal(got, want, name="server point vs q05")
         # the in-slice probe really serves from the index, with no job
-        _assert_indexed(spark, srv.point(srv.table_min_ns()))
+        _assert_local(spark, srv.point(srv.table_min_ns()))
     finally:
         srv.close()
 
@@ -95,25 +104,29 @@ def test_range_matches_q04_and_footer_bounds(spark):
         srv.close()
 
 
-def test_probe_outside_cached_slice_falls_back(spark):
+def test_probe_outside_cached_slice_falls_back(spark, monkeypatch):
     """A server caching only a late window must still answer an early
-    probe correctly (parquet fallback), and the plan must NOT be the
-    index."""
+    probe correctly: by a driver read of the footer-pruned row groups
+    (no job), or over the driver read's cap by the parquet path."""
     reg = load_all()
     lo = ts_min_epoch_ns(f"{SF}/events.parquet")
     srv = PointServer(spark, SF, lo_ns=lo + 10**15)  # index starts later
     try:
         srv.open()
+        want = _sorted(reg["q05_point_lookup"].fn(spark, SF))
+        q = srv.point(lo)
+        _assert_local(spark, q)
+        assert_df_equal(_sorted(q), want, name="driver-read point vs q05")
+        _over_cap(monkeypatch)
         q = srv.point(lo)
         _assert_parquet(q)
-        got = _sorted(q)
-        want = _sorted(reg["q05_point_lookup"].fn(spark, SF))
-        assert_df_equal(got, want, name="fallback point vs q05")
+        assert_df_equal(_sorted(q), want, name="fallback point vs q05")
+        assert srv.stats()["local_reads"] == 1 and srv.stats()["parquet_fallbacks"] == 1
     finally:
         srv.close()
 
 
-def test_symbol_sliced_server(spark):
+def test_symbol_sliced_server(spark, monkeypatch):
     """A server indexing one event_type slice: (a) a probe restricted to
     that slice serves FROM the index and matches the raw-path filter
     exactly; (b) a ts-only probe must NOT serve from the symbol-sliced
@@ -137,7 +150,7 @@ def test_symbol_sliced_server(spark):
         srv.open()
         # (a) restricted probe: indexed, and value-identical to raw
         q = srv.range(_T1_NS, _T2_NS, symbols=["click"])
-        _assert_indexed(spark, q)
+        _assert_local(spark, q)
         raw = events_raw(spark, SF)
         want_df = with_ts(
             raw.where(
@@ -150,14 +163,24 @@ def test_symbol_sliced_server(spark):
             _sorted(q), _sorted(want_df), name="symbol-sliced range"
         )
         assert (_sorted(q)["event_type"] == "click").all()
-        # (b) ts-only probe: falls back AND returns every event type
+        # (b) ts-only probe: not from the index, AND returns every event
+        # type — by a driver read, or over its cap by the parquet path
+        want2 = _sorted(reg["q04_range_scan"].fn(spark, SF))
+        q2 = srv.range(_T1_NS, _T2_NS)
+        _assert_local(spark, q2)
+        assert_df_equal(_sorted(q2), want2, name="ts-only driver read")
+        # (c) a superset symbol probe is not served from the index either
+        want3 = _sorted(_parquet_path(spark, SF, _T1_NS, _T2_NS, ["click", "view"]))
+        q3 = srv.range(_T1_NS, _T2_NS, symbols=["click", "view"])
+        assert_df_equal(_sorted(q3), want3, name="superset driver read")
+        assert srv.stats()["local_reads"] == 2
+        _over_cap(monkeypatch)
         q2 = srv.range(_T1_NS, _T2_NS)
         _assert_parquet(q2)
-        want2 = _sorted(reg["q04_range_scan"].fn(spark, SF))
         assert_df_equal(_sorted(q2), want2, name="ts-only fallback")
-        # (c) a superset symbol probe also falls back
         q3 = srv.range(_T1_NS, _T2_NS, symbols=["click", "view"])
         _assert_parquet(q3)
+        assert_df_equal(_sorted(q3), want3, name="superset fallback")
     finally:
         srv.close()
 
@@ -209,7 +232,7 @@ def test_refresh_picks_up_externally_appended_rows(spark, tmp_path):
         assert not t.is_alive()
         assert not errors and seen <= {before, 2 * before}, (errors, seen)
         assert srv.point(lo).count() == 2 * before
-        _assert_indexed(spark, srv.point(lo))
+        _assert_local(spark, srv.point(lo))
     finally:
         srv.close()
 
@@ -297,26 +320,32 @@ def test_in_slice_probes_match_parquet_path(spark, dup_layouts, unit):
         # a symbol the slice holds no rows for, and the empty window
         assert full.range(_B_NS + 1000, _B_NS + 4000).collect() == []
         assert by_sym.point(_B_NS, ["click"]).collect() == []
-        _assert_indexed(spark, full.range(_B_NS - 1000, _B_NS))
+        _assert_local(spark, full.range(_B_NS - 1000, _B_NS))
     finally:
         for srv in (full, sliced, by_sym):
             srv.close()
 
 
-def test_stats_count_a_mixed_probe_sequence(spark, dup_layouts):
-    """Index hits, footer-answered empties and parquet fallbacks are
-    counted apart; a window outside the footer ts bounds answers empty,
-    equal to the parquet path, without a Spark job."""
+def test_stats_count_a_mixed_probe_sequence(spark, dup_layouts, monkeypatch):
+    """Index hits, footer-answered empties, driver reads and parquet
+    fallbacks are counted apart; a window outside the footer ts bounds
+    answers empty, equal to the parquet path, without a Spark job."""
     d = dup_layouts["us"]
     srv = PointServer(spark, d, lo_ns=_B_NS, hi_ns=_B_NS + _DAY_NS)
-    assert srv.stats() == {"index_hits": 0, "footer_empty": 0, "parquet_fallbacks": 0,
-                           "indexed_rows": 0, "open_s": None, "refresh_s": None}
+    assert srv.stats() == {"index_hits": 0, "footer_empty": 0, "local_reads": 0,
+                           "parquet_fallbacks": 0, "indexed_rows": 0, "open_s": None,
+                           "refresh_s": None}
     assert srv.table_min_ns() == _B_NS - 1000
     try:
         srv.open()
         srv.point(_B_NS).collect()                      # hit
         srv.range(_B_NS, _B_NS + _DAY_NS).collect()    # hit
-        fb = srv.point(_B_NS - 1000)                    # before the slice
+        local = srv.point(_B_NS - 1000)                 # before the slice
+        _assert_local(spark, local)
+        assert len(local.collect()) == 2
+        with monkeypatch.context() as m:
+            _over_cap(m)
+            fb = srv.point(_B_NS - 1000)
         _assert_parquet(fb)
         assert len(fb.collect()) == 2
         for lo, hi in [(0, _B_NS - 1001), (_B_NS + _DAY_NS + 1000, 2**62)]:
@@ -328,9 +357,10 @@ def test_stats_count_a_mixed_probe_sequence(spark, dup_layouts):
         srv.refresh()
         st = srv.stats()
         assert st["open_s"] > 0 and st["refresh_s"] > 0
-        assert {k: st[k] for k in ("index_hits", "footer_empty", "parquet_fallbacks",
-                                   "indexed_rows")} == {
-            "index_hits": 2, "footer_empty": 2, "parquet_fallbacks": 1, "indexed_rows": 6}
+        assert {k: st[k] for k in ("index_hits", "footer_empty", "local_reads",
+                                   "parquet_fallbacks", "indexed_rows")} == {
+            "index_hits": 2, "footer_empty": 2, "local_reads": 1, "parquet_fallbacks": 1,
+            "indexed_rows": 6}
     finally:
         srv.close()
     assert srv.stats()["indexed_rows"] == 0
@@ -360,17 +390,107 @@ def test_stats_survive_concurrent_probes(spark, dup_layouts):
     assert srv.stats()["index_hits"] == 80
 
 
-def test_nanos_layout_has_no_footer_shortcut(spark, dup_layouts):
+def test_nanos_layout_has_no_footer_shortcut(spark, dup_layouts, monkeypatch):
     """The int64-nanos layout has no trusted footer bounds, so a probe
-    outside the table still takes the parquet path (and finds nothing)."""
+    outside the table is no footer-answered empty: the driver read
+    prunes every row group (no job), and with the driver read declined
+    the parquet path finds nothing."""
+    from low_latency_time_series_database_tsdb_for_market_data_spark import serving
+
     srv = PointServer(spark, dup_layouts["ns"], lo_ns=_B_NS)
     try:
         srv.open()
         assert srv.table_min_ns() is None
         q = srv.range(0, _B_NS - 2000)
+        _assert_local(spark, q)
+        assert q.collect() == []
+        monkeypatch.setattr(serving, "local_rows", lambda *a, **k: None)
+        q = srv.range(0, _B_NS - 2000)
         _assert_parquet(q)
         assert q.collect() == []
+        assert srv.stats()["local_reads"] == 1
         assert srv.stats()["parquet_fallbacks"] == 1
         assert srv.stats()["footer_empty"] == 0
     finally:
         srv.close()
+
+
+@pytest.mark.parametrize("unit", ["ns", "us", "us_utc"])
+def test_out_of_slice_probes_match_parquet_path(spark, dup_layouts, unit):
+    """Every probe outside the indexed slice returns exactly the parquet
+    path's rows and schema, for each ts layout, from a driver read that
+    runs no Spark job: a server whose slice starts after the table, and
+    a symbol-sliced server probed ts-only or with a superset."""
+    d = dup_layouts[unit]
+    late = PointServer(spark, d, lo_ns=2**62)
+    by_sym = PointServer(spark, d, symbols=["click"])
+    cases = [(late, lo, hi, syms) for lo, hi in _PROBES for syms in (None, ["view"])]
+    cases += [(by_sym, lo, hi, syms) for lo, hi in _PROBES for syms in (None, ["click", "view"])]
+    try:
+        for srv in (late, by_sym):
+            srv.open()
+        for srv, lo, hi, syms in cases:
+            got = srv.range(lo, hi, syms)
+            want = _parquet_path(spark, d, lo, hi, syms)
+            assert got.schema == want.schema
+            assert _plan(got).startswith("LocalTableScan"), (unit, lo, hi, syms)
+            assert sorted(got.collect()) == sorted(want.collect()), (unit, lo, hi, syms)
+        st = [s.stats() for s in (late, by_sym)]
+        assert sum(x["local_reads"] + x["footer_empty"] for x in st) == len(cases)
+        assert sum(x["local_reads"] for x in st) > 0
+        assert sum(x["parquet_fallbacks"] + x["index_hits"] for x in st) == 0
+        _assert_local(spark, late.range(_B_NS - 1000, _B_NS))
+    finally:
+        for srv in (late, by_sym):
+            srv.close()
+
+
+def test_driver_read_truncates_pre_1970_nanos_like_spark(spark, tmp_path):
+    """In the int64-nanos layout the served ts is ``ts div 1000``, which
+    truncates toward zero: pre-1970 values must land on the microsecond
+    the parquet path serves."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = tmp_path / "events.parquet"
+    table.mkdir()
+    ns = [-2_000_500, -1_500, -1_000, -999, -1, 0, 1, 999, 1_000, 1_500]
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(len(ns)), pa.int64()),
+        "ts": pa.array(ns, pa.timestamp("ns")),
+        "event_type": pa.array(["view"] * len(ns)),
+    }), table / "part-0.parquet")
+    srv = PointServer(spark, str(tmp_path), lo_ns=2**62)
+    try:
+        srv.open()
+        for lo, hi in [(-3_000_000, 2_000), (-1_500, -1_500), (-1_999, -1_000), (-1_000, -1),
+                       (-999, 0), (0, 0), (1, 999)]:
+            got = srv.range(lo, hi)
+            want = _parquet_path(spark, str(tmp_path), lo, hi)
+            assert got.schema == want.schema
+            assert sorted(got.collect()) == sorted(want.collect()), (lo, hi)
+        assert srv.stats()["local_reads"] == 7
+    finally:
+        srv.close()
+
+
+def test_timestamp_layouts_need_a_utc_session(spark, dup_layouts):
+    """Spark reads the timestamp layouts' bounds (and NTZ values) in the
+    session time zone, so outside UTC the driver read declines and the
+    parquet path answers; the nanos layout does not depend on it."""
+    key = "spark.sql.session.timeZone"
+    servers = {u: PointServer(spark, dup_layouts[u], lo_ns=2**62) for u in ("ns", "us")}
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        for unit, srv in servers.items():
+            q = srv.range(_B_NS - 1000, _B_NS)
+            if unit == "ns":
+                assert _plan(q).startswith("LocalTableScan")
+            else:
+                _assert_parquet(q)
+            assert len(q.collect()) == 4
+    finally:
+        spark.conf.set(key, saved)
+    assert servers["us"].stats()["parquet_fallbacks"] == 1
+    assert servers["ns"].stats()["local_reads"] == 1

@@ -5,6 +5,7 @@ the footer answers equal to what Spark reads."""
 
 from __future__ import annotations
 
+import itertools
 import shutil
 from pathlib import Path
 
@@ -110,6 +111,8 @@ def test_load_raises_on_unreadable_table(spark, tmp_path, monkeypatch):
         def parquet(self, path):
             raise AnalysisException(message=f"cannot list {path}")
 
+    # the Spark read is the path under test: the driver reader declines
+    monkeypatch.setattr(catalog, "local_rows", lambda *a, **k: None)
     monkeypatch.setattr(type(spark), "read", property(lambda self: Broken()))
     with pytest.raises(AnalysisException):
         cli.run(["query", "X", "0", "9"], spark, d)
@@ -297,9 +300,11 @@ def test_import_of_all_malformed_csv(spark, tmp_path):
 
 def test_cli_jobs_per_operation(spark, tmp_path, monkeypatch):
     """The footer index and the schema memo leave one Spark job per
-    insert, query, one-split import, stream drain and PointServer
-    refresh, and at most three per maintain; a PointServer probe inside
-    its indexed slice runs none."""
+    insert, one-split import, stream drain and PointServer refresh, and
+    at most three per maintain; ``query`` and ``last`` read on the
+    driver and run none, as does a PointServer probe inside its indexed
+    slice or outside it.  A query over the driver-read cap runs its one
+    Spark job."""
     from pyspark.sql.streaming.readwriter import DataStreamWriter
 
     from low_latency_time_series_database_tsdb_for_market_data_spark.serving import PointServer
@@ -315,8 +320,12 @@ def test_cli_jobs_per_operation(spark, tmp_path, monkeypatch):
     jobs = {
         argv[0]: _jobs(spark, lambda: cli.run(argv, spark, d), f"{tmp_path.name}-{argv[0]}")
         for argv in (["insert", "AAPL", "3", "1.0", "1"], ["query", "AAPL", "0", "9"],
-                     ["import", "AAPL", csv], ["maintain"])
+                     ["last", "AAPL", "2"], ["import", "AAPL", csv], ["maintain"])
     }
+    with monkeypatch.context() as m:
+        m.setattr(catalog, "LOCAL_READ_MAX_ROWS", 1)
+        jobs["query_over_cap"] = _jobs(spark, lambda: cli.run(["query", "AAPL", "0", "9"], spark, d),
+                                       f"{tmp_path.name}-query-over-cap")
 
     # a stream's batches run under its run id's job group
     run_ids: list[str] = []
@@ -341,13 +350,226 @@ def test_cli_jobs_per_operation(spark, tmp_path, monkeypatch):
     srv = PointServer(spark, str(feed.parent))
     srv.open()
     shutil.copy(feed / "part-0.parquet", feed / "part-2.parquet")
+    late = None
     try:
         jobs["refresh"] = _jobs(spark, srv.refresh, f"{tmp_path.name}-refresh")
+        late = PointServer(spark, str(feed.parent), lo_ns=2**62)  # probes fall outside
+        late.open()
         rows: list = []
         jobs["probe"] = _jobs(spark, lambda: rows.extend(srv.range(0, 2**62).collect()),
                               f"{tmp_path.name}-probe")
-        assert len(rows) == 12
+        jobs["out_of_slice_probe"] = _jobs(
+            spark, lambda: rows.extend(late.range(0, 2**61).collect()),
+            f"{tmp_path.name}-out-of-slice-probe")
+        assert len(rows) == 24 and late.stats()["local_reads"] == 1
     finally:
         srv.close()
-    want = {"insert": 1, "query": 1, "import": 1, "drain": 1, "refresh": 1, "probe": 0}
+        if late is not None:
+            late.close()
+    want = {"insert": 1, "query": 0, "last": 0, "query_over_cap": 1, "import": 1,
+            "drain": 1, "refresh": 1, "probe": 0, "out_of_slice_probe": 0}
     assert {k: jobs[k] for k in want} == want and jobs["maintain"] <= 3, jobs
+
+
+# -- driver-side reads: ``query`` and ``last`` answered from the footer-pruned
+# row groups of the symbol's partition, equal to the Spark read's lines
+
+_GROUPS = itertools.count()
+_SYMBOLS = ["BRK/B", "A=B", "X%1", "007"]
+
+
+def _both(spark, monkeypatch, argv: list[str], d: str):
+    """``argv``'s lines on the default path with the Spark jobs it ran,
+    and its lines with the Spark read forced (the driver reader
+    declines)."""
+    got: list[str] = []
+    jobs = _jobs(spark, lambda: got.extend(cli.run(argv, spark, d)), f"both-{next(_GROUPS)}")
+    with monkeypatch.context() as m:
+        m.setattr(catalog, "local_rows", lambda *a, **k: None)
+        want = cli.run(argv, spark, d)
+    return got, jobs, want
+
+
+def _outcome(fn):
+    """``fn()``'s lines, or the name of the exception it raised."""
+    try:
+        return fn()
+    except Exception as e:  # compared between the two paths by the caller
+        return type(e).__name__
+
+
+def _local(spark, d: str, symbol: str, **select):
+    col = "ts" if "window" in select else "seq"
+    return cli._local_slice(spark, d, symbol, col, **select)
+
+
+@pytest.fixture(scope="module")
+def tick_table(spark, tmp_path_factory):
+    """Every escaped symbol in one table: an insert, an import whose ts
+    come in pairs, then two inserts (one repeating a ts); plus what a
+    crashed append leaves (``_temporary/``, a hidden ``.part`` file)."""
+    base = tmp_path_factory.mktemp("driver_reads")
+    d = str(base / "data")
+    csv = _csv(base / "t.csv", [f"{100 + i // 2},{i}.25,{i + 1}" for i in range(40)] + ["bad,row"])
+    for sym in _SYMBOLS:
+        cli.run(["insert", sym, "110", "9.5", "5"], spark, d)
+        cli.run(["import", sym, csv], spark, d)
+        cli.run(["insert", sym, "100", "1.0", "1"], spark, d)
+        cli.run(["insert", sym, "125", "2.0", "2"], spark, d)
+    table = base / "data" / "ticks"
+    src = _parquet(table)[0]
+    _plant_leftover(table, src)
+    for part in table.glob("symbol=*"):
+        shutil.copy(src, part / ".part-y.parquet")
+    return d
+
+
+@pytest.mark.parametrize("symbol", _SYMBOLS)
+def test_driver_query_and_last_match_spark(spark, tick_table, symbol, monkeypatch):
+    """Duplicate ts, both inclusive ends, an inverted and an empty
+    window, the int64 extremes, ``last 0`` and n past the row count, in
+    a partition of insert files (required columns) and an import file
+    (optional ones): the driver path prints the Spark path's lines and
+    runs no job.  A negative n still raises, as Spark does."""
+    from pyspark.errors import AnalysisException
+
+    part = Path(cli._symbol_dir(spark, tick_table, symbol))
+    assert {pq.read_schema(f).field("ts").nullable for f in _parquet(part)} == {False, True}
+    cases = [["query", symbol, lo, hi] for lo, hi in [
+        ("100", "110"), ("110", "100"), ("100", "100"), ("119", "125"), ("126", "200"),
+        (str(-(2**63)), str(2**63 - 1))]]
+    cases += [["last", symbol, n] for n in ("0", "1", "3", "42", "43", "1000")]
+    for argv in cases:
+        got, jobs, want = _both(spark, monkeypatch, argv, tick_table)
+        assert (got, jobs) == (want, 0), argv
+    got, _, _ = _both(spark, monkeypatch, ["query", symbol, "100", "110"], tick_table)
+    assert got[:3] == ["Found 24 results:", "Timestamp: 100 Price: 0.25 Volume: 1",
+                       "Timestamp: 100 Price: 1.25 Volume: 2"]
+    assert got[-1] == "Timestamp: 110 Price: 21.25 Volume: 22"
+    got, _, _ = _both(spark, monkeypatch, ["last", symbol, "3"], tick_table)
+    assert got == [f"Last 3 ticks for {symbol}:", "Timestamp: 119 Price: 39.25 Volume: 40",
+                   "Timestamp: 100 Price: 1.00 Volume: 1", "Timestamp: 125 Price: 2.00 Volume: 2"]
+    assert _local(spark, tick_table, symbol, top=-1) is None
+    with pytest.raises(AnalysisException, match="INVALID_LIMIT_LIKE_EXPRESSION"):
+        cli.run(["last", symbol, "-1"], spark, tick_table)
+
+
+def test_corrupt_footer_raises_on_the_driver_path(spark, tmp_path):
+    """A file whose footer cannot be read sends the read to Spark, which
+    fails on it: a table that cannot be read never prints as empty."""
+    d = str(tmp_path / "data")
+    cli.run(["insert", "S", "5", "1.0", "1"], spark, d)
+    cli.run(["insert", "T", "5", "1.0", "1"], spark, d)
+    (tmp_path / "data" / "ticks" / "symbol=S" / "part-bad.parquet").write_bytes(b"PAR1 not parquet")
+    assert _local(spark, d, "S", window=(0, 9)) is None
+    assert _local(spark, d, "S", top=1) is None
+    for argv in (["query", "S", "0", "9"], ["last", "S", "1"]):
+        assert _outcome(lambda: cli.run(argv, spark, d)) in ("SparkException", "Py4JJavaError")
+    # another symbol's partition is neither read by Spark nor by the driver
+    assert cli.run(["query", "T", "0", "9"], spark, d) == [
+        "Found 1 results:", "Timestamp: 5 Price: 1.00 Volume: 1"]
+
+
+def _plant(path: Path, **cols) -> None:
+    """Write a tick data file straight with pyarrow (columns by keyword,
+    default int64 ts/volume/seq and double price)."""
+    data = {"ts": [40], "price": [4.0], "volume": [4], "seq": [9], **cols}
+    path.parent.mkdir(parents=True, exist_ok=True)
+    pq.write_table(pa.table(data), path, write_statistics=path.suffix != ".nostats")
+
+
+def test_driver_reads_over_overlapping_row_groups(spark, tmp_path, monkeypatch):
+    """Row groups whose ts and seq ranges interleave, as compaction's
+    ts-sorted rewrite leaves them: ``last`` must also read every row
+    group whose max seq reaches the n-th largest seq read first, and a
+    window keeps only its rows from each surviving group."""
+    d = str(tmp_path / "data")
+    part = tmp_path / "data" / "ticks" / "symbol=S"
+    part.mkdir(parents=True)
+    for name, ts, seq in (("a", [1, 4, 9], [0, 5, 9]), ("b", [2, 3, 5, 6], [6, 7, 8, 1])):
+        n = len(ts)
+        pq.write_table(pa.table({"ts": ts, "price": [0.5] * n, "volume": seq, "seq": seq}),
+                       part / f"part-{name}.parquet", row_group_size=2)
+    for argv in ([["last", "S", str(n)] for n in range(8)]
+                 + [["query", "S", lo, hi] for lo, hi in (("0", "9"), ("2", "4"), ("5", "5"))]):
+        got, jobs, want = _both(spark, monkeypatch, argv, d)
+        assert (got, jobs) == (want, 0), argv
+    assert _local(spark, d, "S", top=3).column("seq").to_pylist() == [7, 8, 9]
+
+
+def test_driver_reads_fall_back_where_they_cannot_be_exact(spark, tmp_path, monkeypatch):
+    """Each fallback trigger alone sends ``query``/``last`` to Spark (or
+    raises where Spark raises), and the lines are the Spark read's."""
+    d = str(tmp_path / "data")
+    for ts in (10, 20, 30):
+        cli.run(["insert", "S", str(ts), "1.0", "1"], spark, d)
+    part = tmp_path / "data" / "ticks" / "symbol=S"
+    assert _local(spark, d, "S", window=(0, 99)).num_rows == 3
+    assert _local(spark, d, "S", top=2).column("seq").to_pylist() == [1, 2]
+    schema = pa.schema([("ts", pa.int64())])
+    assert catalog.local_rows(spark, "s3a://b/ticks", schema, "ts", window=(0, 9)) is None
+    assert _local(spark, d, "S", window=(0, 2**63)) is None
+    assert _local(spark, d, "NEW", window=(0, 99)).num_rows == 0
+    assert catalog.local_rows(spark, str(tmp_path / "missing"), schema, "ts", window=(0, 9)) is None
+
+    monkeypatch.setattr(catalog, "LOCAL_READ_MAX_ROWS", 2)
+    assert _local(spark, d, "S", window=(0, 99)) is None
+    assert _local(spark, d, "S", window=(15, 25)).num_rows == 1
+    assert _local(spark, d, "S", top=1).num_rows == 1  # reads 1 + the ties at its seq
+    assert _local(spark, d, "S", top=3) is None
+    monkeypatch.undo()
+
+    plants = {
+        "no stats": part / "part-p.parquet.nostats",
+        "float price": part / "part-p.parquet",
+        "suffix": part / "part-p.snappy.pq",
+        "nested dir": part / "x=1" / "part-p.parquet",
+        "root file": part.parent / "part-p.parquet",
+    }
+    for why, path in plants.items():
+        if why == "no stats":
+            _plant(path)
+            path = path.rename(path.with_suffix(""))
+        else:
+            _plant(path, **({"price": pa.array([4.0], pa.float32())} if why == "float price" else {}))
+        assert _local(spark, d, "S", window=(0, 99)) is None, why
+        for argv in (["query", "S", "0", "99"], ["last", "S", "2"]):
+            got = _outcome(lambda: cli.run(argv, spark, d))
+            with monkeypatch.context() as m:
+                m.setattr(catalog, "local_rows", lambda *a, **k: None)
+                assert got == _outcome(lambda: cli.run(argv, spark, d)), (why, argv)
+        if why in ("no stats", "suffix"):
+            assert got[-1] == "Timestamp: 40 Price: 4.00 Volume: 4", why  # seq 9 is last
+        path.unlink()
+    assert _local(spark, d, "S", window=(0, 99)).num_rows == 3
+
+
+def test_footer_probes_agree_with_spark_on_any_suffix(spark, tmp_path, monkeypatch):
+    """Spark reads every non-hidden file whatever its suffix; the footer
+    probes, which read only ``*.parquet`` footers, must decline such a
+    listing, and the fingerprint must see the file."""
+    from tests.test_catalog_adaptive import _write_events
+
+    d = str(tmp_path / "data")
+    for ts in (10, 20, 30):
+        cli.run(["insert", "AAPL", str(ts), "1.0", "1"], spark, d)
+    table = tmp_path / "data" / "ticks"
+    part = table / "symbol=AAPL"
+    assert catalog.parquet_num_rows(str(table)) == 3
+    assert catalog.parquet_int_max(str(part), "seq") == 2
+    _plant(part / "part-extra.snappy.pq")
+    assert spark.read.parquet(str(table)).count() == 4
+    assert catalog.parquet_num_rows(str(table)) is None
+    assert catalog.parquet_int_max(str(part), "seq") is None
+    assert cli._next_seq(spark, d, "AAPL") == 10  # Spark's max(seq) 9, plus one
+    assert "part-extra.snappy.pq" in [name for name, *_ in catalog.parquet_fingerprint(str(table))]
+    for argv in (["query", "AAPL", "0", "99"], ["last", "AAPL", "1"]):
+        got, jobs, want = _both(spark, monkeypatch, argv, d)
+        assert got == want and got[-1] == "Timestamp: 40 Price: 4.00 Volume: 4"
+
+    ev = tmp_path / "ev" / "events.parquet"
+    ev.mkdir(parents=True)
+    shutil.move(_write_events(str(tmp_path / "ev"), "us"), ev / "part-0.parquet")
+    assert catalog.ts_bounds_epoch_ns(str(ev)) is not None
+    shutil.copy(ev / "part-0.parquet", ev / "part-1.pq")
+    assert catalog.ts_bounds_epoch_ns(str(ev)) is None
