@@ -49,9 +49,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# the per-query benchmark set: every registered query
-SKIP = set()  # all queries run; keep hook for pathological cases
-
 
 def materialize(df) -> None:
     df.write.mode("overwrite").format("noop").save()
@@ -497,8 +494,6 @@ def main() -> None:
     # load_factor reflects the WHOLE run, single spin each, pennies)
     load_spin_mid: list[float] = []
     for qi, (name, qd) in enumerate(sorted(reg.items())):
-        if name in SKIP:
-            continue
         if qi % 25 == 0 and qi > 0:
             t0 = time.perf_counter()
             x = 0
@@ -583,20 +578,21 @@ def main() -> None:
     # the session-scoped verdict-model / dedup-state builders run once
     # per process inside the FIRST timed run of their first consumer;
     # with per-query min-of-2 the published per-query numbers are
-    # therefore model-warm (training amortized once per suite).  The
-    # builders self-time their cache-miss path; surfacing the totals
-    # here makes the cold cost reconstructable: first-run time of the
-    # first consumer ≈ its published time + these scalars. ---
-    from low_latency_time_series_database_tsdb_for_market_data_spark.operators.llm import (
-        incremental as _incr,
-    )
-    from low_latency_time_series_database_tsdb_for_market_data_spark.operators.llm import (
-        similarity as _sim,
+    # therefore model-warm (training amortized once per suite).
+    # session_cache times each build (nested builds counted once);
+    # surfacing the totals here makes the cold cost reconstructable:
+    # first-run time of the first consumer ≈ its published time + these
+    # scalars.  The even-half state's lazy checkpoints materialize
+    # inside its first consumer's job, so only its construction counts. ---
+    from low_latency_time_series_database_tsdb_for_market_data_spark.session_cache import (
+        build_seconds,
     )
 
     one_time = {
-        "verdict_model_train_sec": round(_sim.VERDICT_MODEL_TRAIN_SEC, 4),
-        "dedup_state_build_sec": round(_incr.DEDUP_STATE_BUILD_SEC, 4),
+        "verdict_model_train_sec": round(build_seconds("verdict_model"), 4),
+        "dedup_state_build_sec": round(
+            build_seconds("corpus_bands") + build_seconds("even_half_state"), 4
+        ),
         "one_time_note": (
             "once-per-process shared training/state builds paid inside "
             "the first timed run of their first consumer; per-query "

@@ -30,13 +30,13 @@ comparison (a column-side cast would silently kill pushdown).
 Schema memo: a ``spark.read.parquet`` without a schema runs a one-task
 job that infers the data schema from ONE footer — the first listed file
 by full path string — and the session's converter confs.  ``read_parquet``
-keys what Spark answered by exactly those inputs (app id, the confs in
-``_SCHEMA_CONFS``, the footer's leaf columns and Spark row metadata) and
-passes it back as the read schema on the next read of any path whose first
-file has the same footer, so appends, stream drains and refreshes re-read
-a changed table without that job.  Globs, non-local paths, summary files
-and ``mergeSchema`` read more than one footer, or one we cannot see, and
-keep Spark's inference.
+keys what Spark answered by exactly those inputs (the confs in
+``_SCHEMA_CONFS``, the footer's leaf columns and Spark row metadata) in
+``session_cache`` and passes it back as the read schema on the next read
+of any path whose first file has the same footer, so appends, stream
+drains and refreshes re-read a changed table without that job.  Globs,
+non-local paths, summary files and ``mergeSchema`` read more than one
+footer, or one we cannot see, and keep Spark's inference.
 """
 
 from __future__ import annotations
@@ -50,6 +50,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import session_cache
 from .session import tune
 
 TABLES = (
@@ -560,11 +561,11 @@ UNSTATABLE = ("<unstat-able>",)
 def parquet_fingerprint(path: str) -> tuple:
     """Cheap identity of a parquet file/dir: sorted (name, size,
     mtime_ns) of every file Spark lists, whatever its suffix — os.stat
-    only, no footer reads, no Spark job.  Session caches keyed on a data DIRECTORY (the
-    verdict model, the corpus signature table) add this to their key so
-    a fixture dir regenerated in-place within a long-lived session
-    (soak/test tooling does) invalidates instead of serving stale
-    training (round-14 advice).  A path that cannot be listed or stat-ed
+    only, no footer reads, no Spark job.  The verdicts' ``session_cache``
+    entries (the verdict model, the corpus signature table) pass it as
+    their fingerprint, so a table regenerated in place within a
+    long-lived session rebuilds them instead of serving stale training,
+    and frees what it replaces.  A path that cannot be listed or stat-ed
     (or is not local) fingerprints as ``UNSTATABLE``, never as the
     ``()`` of an empty dir, so a readability blip cannot alias a
     fingerprinted key."""
@@ -581,25 +582,6 @@ def parquet_fingerprint(path: str) -> tuple:
         return UNSTATABLE
 
 
-# Relation cache (round 12, r11 verdict item #6 — the cold first-query
-# floor): every fresh spark.read.parquet pays ~0.1-0.2 s of datasource
-# resolution (py4j round-trips, file listing, footer schema) even in a
-# warm session; a long-lived query service opening the same immutable
-# table per request re-pays it on EVERY query.  Caching the resolved
-# relation per (session, path) drops repeat opens to a dict hit.
-# Invariant: the underlying files are immutable while cached (true for
-# the testdata tables and the serving layer's published snapshots);
-# writers that replace a table call invalidate_relation() — the
-# parquet writer's own read path (sources.writer.read_ticks) does not
-# use this cache, so ingest tests see fresh listings as before.
-_RELATION_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-# Parquet schema memo: the data schema Spark inferred, reused by
-# read_parquet so a re-read of a changed path skips the inference job.
-# Keyed by (app id, converter confs, footer signature of the one file
-# inference reads); the value keeps its session for eviction.
-_SCHEMA_MEMO: dict[tuple, tuple[SparkSession, T.StructType]] = {}
-
 # the session confs ParquetToSparkSchemaConverter reads, plus the
 # case-sensitivity that decides how data and partition columns match
 _SCHEMA_CONFS = (
@@ -611,29 +593,6 @@ _SCHEMA_CONFS = (
 )
 _SUMMARY_FILES = ("_metadata", "_common_metadata")
 _ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def _alive(spark: SparkSession) -> bool:
-    """Whether the session's SparkContext still runs.  A stopped context
-    nulls its JVM handle, so the probe is a local attribute check — no
-    py4j round-trip; any introspection surprise counts as dead."""
-    try:
-        return spark.sparkContext._jsc is not None
-    except Exception:
-        return False
-
-
-def _evict_dead_sessions() -> None:
-    """Drop cached relations and memoized schemas whose owning
-    SparkContext has stopped (ADVICE r12: a long-lived process cycling
-    SparkSessions otherwise accumulates dead references forever)."""
-    # pop, not del: two threads may evict the same entry
-    for k, df in list(_RELATION_CACHE.items()):
-        if not _alive(df.sparkSession):
-            _RELATION_CACHE.pop(k, None)
-    for k, (owner, _) in list(_SCHEMA_MEMO.items()):
-        if not _alive(owner):
-            _SCHEMA_MEMO.pop(k, None)
 
 
 def _footer_signature(md) -> tuple | None:
@@ -692,8 +651,7 @@ def _schema_memo_key(spark: SparkSession, path: str) -> tuple | None:
     }
     if part_keys & {col[0].lower() for col in sig[0]}:
         return None
-    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
-    return spark.sparkContext.applicationId, confs, sig
+    return tuple(spark.conf.get(k) for k in _SCHEMA_CONFS), sig
 
 
 def _data_schema(df: DataFrame) -> T.StructType | None:
@@ -725,33 +683,24 @@ def read_parquet(
     if schema is not None:
         return spark.read.schema(schema).parquet(path)
     key = _schema_memo_key(spark, path)
-    hit = None if key is None else _SCHEMA_MEMO.get(key)
-    if hit is not None:
-        return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    if key is not None and _schema_memo_key(spark, path) == key:
-        data = _data_schema(df)
-        if data is not None:
-            _evict_dead_sessions()
-            _SCHEMA_MEMO[key] = (spark, data)
-    return df
+    if key is None:
+        return spark.read.parquet(path)
+    inferred = []
+
+    def infer() -> T.StructType | None:
+        inferred.append(spark.read.parquet(path))
+        if _schema_memo_key(spark, path) != key:
+            return None
+        return _data_schema(inferred[0])
+
+    data = session_cache.get(spark, "schema", key, infer)
+    if inferred:
+        return inferred[0]
+    return spark.read.schema(data).parquet(path)
 
 
 def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, path)
-    df = _RELATION_CACHE.get(key)
-    if df is None:
-        _evict_dead_sessions()  # only on miss: hits stay dict-speed
-        df = read_parquet(spark, path)
-        _RELATION_CACHE[key] = df
-    return df
-
-
-def invalidate_relation(path: str) -> None:
-    """Drop every session's cached relation for ``path`` (call after
-    replacing a table's files in place)."""
-    for k in [k for k in _RELATION_CACHE if k[1] == path]:
-        del _RELATION_CACHE[k]
+    return session_cache.get(spark, "relation", path, lambda: read_parquet(spark, path))
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

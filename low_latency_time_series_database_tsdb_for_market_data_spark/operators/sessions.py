@@ -141,9 +141,11 @@ def q39_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     via applyInPandas: state is a single scalar per key, the shuffle
     is the same one exchange a window would need, and inside the batch
     pandas' C ewm kernel does the scan.  The final round happens
-    JVM-side (F.round, half-up — numpy rounds half-even, which would
-    diverge from the oracle's ROUND at exact .00005 boundaries); the
-    DuckDB oracle replays the same recurrence via a recursive CTE."""
+    JVM-side as DuckDB's ``ROUND(x, 4)`` does it: round x*10^4 half
+    away from zero in binary, then divide (``F.round(x, 4)`` rounds the
+    decimal form, which differs near ties: 264.54155 -> 264.5416, not
+    DuckDB's 264.5415); the DuckDB oracle replays the same recurrence
+    via a recursive CTE."""
     import pandas as pd
 
     ev = table(spark, sf_dir, "events")
@@ -159,7 +161,7 @@ def q39_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select("event_id", "event_type", "ts", "value")
         .groupBy("event_type")
         .applyInPandas(ewma, schema)
-        .withColumn("ewma", F.round("ewma", 4))
+        .withColumn("ewma", F.round(F.col("ewma") * 10000.0) / 10000.0)
     )
 
 

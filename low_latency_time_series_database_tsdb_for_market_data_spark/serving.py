@@ -72,10 +72,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from . import session_cache
 from .catalog import (
     events_raw,
     input_files,
-    invalidate_relation,
     local_rows,
     ts_bound,
     ts_bounds_epoch_ns,
@@ -325,10 +325,9 @@ class PointServer:
         probes issued meanwhile read the old view.  Returns the seconds
         it took."""
         t0 = time.perf_counter()
-        # the catalog's per-session relation cache pins the file
-        # listing — an external writer's commit is invisible until the
-        # entry is dropped
-        invalidate_relation(self._path)
+        # the session cache's relation entry pins the file listing —
+        # an external writer's commit is invisible until it is dropped
+        session_cache.drop("relation", self._path)
         view = self._resolve()
         self._view = view._replace(index=self._build(view))
         self._refresh_s = time.perf_counter() - t0

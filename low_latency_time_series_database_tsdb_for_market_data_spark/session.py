@@ -13,14 +13,13 @@ import os
 
 from pyspark.sql import SparkSession
 
+from . import session_cache
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def cpu_count() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-
-_WARMED: set[tuple[str, str | None]] = set()
 
 
 def warm_start(spark: SparkSession, sf_dir: str | None = None) -> None:
@@ -43,32 +42,25 @@ def warm_start(spark: SparkSession, sf_dir: str | None = None) -> None:
     it — total process wall-clock is their metric, and lazy init pays
     the same cost only once either way.  All warm costs are recorded by
     bench.py as warm_start_sec — nothing hides."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _WARMED:
-        return
+    session_cache.get(spark, "warm", None, lambda: _warm(spark, None))
+    if sf_dir is not None:
+        session_cache.get(spark, "warm", sf_dir, lambda: _warm(spark, sf_dir))
+
+
+def _warm(spark: SparkSession, sf_dir: str | None) -> bool:
     import shutil
     import tempfile
 
-    if (spark.sparkContext.applicationId, None) not in _WARMED:
-        tmp = tempfile.mkdtemp(prefix="tsdb_warm_")
-        try:
+    tmp = tempfile.mkdtemp(prefix="tsdb_warm_")
+    try:
+        if sf_dir is None:
             spark.range(1).selectExpr(
                 "id", "cast(id as double) AS d", "'x' AS s"
             ).write.mode("overwrite").parquet(f"{tmp}/w")
             spark.read.parquet(f"{tmp}/w").filter("id >= 0").write.mode(
                 "overwrite"
             ).format("noop").save()
-        except Exception:
-            # warm-up is best-effort: on a cluster a driver-local temp
-            # path is not executor-visible — first-use init then simply
-            # lands on the first real query, which is the un-warmed
-            # behaviour, never a reason to fail session construction
-            pass
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-        _WARMED.add((spark.sparkContext.applicationId, None))
-    if sf_dir is not None:
-        try:
+        else:
             from .catalog import events_raw, ts_bound, with_ts
 
             raw = events_raw(spark, sf_dir)
@@ -76,9 +68,15 @@ def warm_start(spark: SparkSession, sf_dir: str | None = None) -> None:
                 raw.where(raw.ts <= ts_bound(raw, 0))
             )  # empty-range point shape: same codegen, ~zero rows
             pt.write.mode("overwrite").format("noop").save()
-        except Exception:
-            pass  # best-effort, as above
-    _WARMED.add(key)
+    except Exception:
+        # warm-up is best-effort: on a cluster a driver-local temp
+        # path is not executor-visible — first-use init then simply
+        # lands on the first real query, which is the un-warmed
+        # behaviour, never a reason to fail session construction
+        pass
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return True
 
 
 def get_spark(app_name: str = "tsdb-spark", warm: bool = False) -> SparkSession:

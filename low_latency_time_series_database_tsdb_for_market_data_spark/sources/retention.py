@@ -29,7 +29,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import invalidate_relation
+from .. import session_cache
 from ..streaming.rollup import _partial_bars, fold_bars
 from .writer import read_ticks, write_ticks
 
@@ -71,7 +71,7 @@ def _finish_bars_append(bars_stage: str, bars_dir: str) -> None:
             )
         _shutil.move(str(f), str(dest))
     _shutil.rmtree(bars_stage)
-    invalidate_relation(bars_dir)  # live table grew: cached listings stale
+    session_cache.drop("relation", bars_dir)  # live table grew: cached listings stale
 
 
 def recover_retention(raw_dir: str, bars_dir: str) -> list[str]:
@@ -92,7 +92,7 @@ def recover_retention(raw_dir: str, bars_dir: str) -> list[str]:
             if Path(raw_dir).exists():
                 _shutil.rmtree(raw_dir)
             _shutil.move(raw_stage, raw_dir)
-            invalidate_relation(raw_dir)
+            session_cache.drop("relation", raw_dir)
             actions.append("raw_swap_finished")
         if Path(bars_stage).exists():
             _finish_bars_append(bars_stage, bars_dir)
@@ -188,7 +188,7 @@ def apply_retention(
         raise RuntimeError("injected crash: after commit marker")
     _shutil.rmtree(raw_dir)
     _shutil.move(raw_stage, raw_dir)
-    invalidate_relation(raw_dir)
+    session_cache.drop("relation", raw_dir)
     if _crash_at == "raw_swapped":
         raise RuntimeError("injected crash: after raw swap")
     _finish_bars_append(bars_stage, bars_dir)

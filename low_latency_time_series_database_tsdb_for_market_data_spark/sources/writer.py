@@ -20,9 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from .. import session_cache
 from ..catalog import (
     _parquet_files,
-    invalidate_relation,
     parquet_num_rows,
     read_parquet,
 )
@@ -79,7 +79,7 @@ def write_ticks(
     ticks.write.mode(mode).partitionBy(symbol_col).parquet(path)
     # the writer owns the invalidation (ADVICE r12): any session that
     # cached this path's relation must re-list after the files change
-    invalidate_relation(path)
+    session_cache.drop("relation", path)
 
 
 def read_ticks(spark: SparkSession, path: str) -> DataFrame:
@@ -134,7 +134,7 @@ def compact_ticks(
         raise RuntimeError(f"compact stage incomplete: {staged} != {rows}")
     _shutil.rmtree(path)
     _shutil.move(stage, path)
-    invalidate_relation(path)  # in-place swap: cached listings are stale
+    session_cache.drop("relation", path)  # in-place swap: cached listings are stale
     files_after = len(_parquet_files(path) or ())
     return {
         "rows": rows,

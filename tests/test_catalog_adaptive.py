@@ -12,6 +12,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from low_latency_time_series_database_tsdb_for_market_data_spark import session_cache
 from low_latency_time_series_database_tsdb_for_market_data_spark.catalog import (
     events_raw,
     table,
@@ -21,6 +22,7 @@ from low_latency_time_series_database_tsdb_for_market_data_spark.catalog import 
 from low_latency_time_series_database_tsdb_for_market_data_spark.plans import (
     pushed_filters,
 )
+from tests.test_tick_footer_index import _jobs
 
 # one logical table: 3 events around the q04 bounds, plus a sub-second tail
 _BASE_US = 1704844800 * 1_000_000  # 2024-01-10T00:00:00Z
@@ -163,7 +165,7 @@ def test_streaming_ingest_both_layouts(spark, layouts, tmp_path):
 def test_relation_cache_reuses_and_invalidates(spark, tmp_path):
     """Round-12 cold-floor work: table()/events_raw() resolve a path
     once per session (the ~0.1-0.2 s datasource re-resolution was the
-    cold first-query's biggest component); invalidate_relation() drops
+    cold first-query's biggest component); session_cache.drop() drops
     the entry so a replaced table is re-listed."""
     import pyspark.sql.functions as F
 
@@ -175,12 +177,14 @@ def test_relation_cache_reuses_and_invalidates(spark, tmp_path):
     spark.range(3).withColumnRenamed("id", "doc_id").write.parquet(
         f"{d}/documents.parquet"
     )
+    path = f"{d}/documents.parquet"
     a = cat.table(spark, d, "documents")
-    b = cat.table(spark, d, "documents")
-    # the same resolved relation object comes back (no re-listing)
-    key = (spark.sparkContext.applicationId, f"{d}/documents.parquet")
-    assert key in cat._RELATION_CACHE
-    assert a is b
+    b = []
+    # the same resolved relation object comes back (no re-listing, no job)
+    assert _jobs(spark, lambda: b.append(cat.table(spark, d, "documents")),
+                 "relation-hit") == 0
+    assert session_cache.get(spark, "relation", path, pytest.fail) is a
+    assert a is b[0]
     assert a.count() == 3
 
     # replace the files in place -> stale listing would break the read;
@@ -191,22 +195,19 @@ def test_relation_cache_reuses_and_invalidates(spark, tmp_path):
     spark.range(5).withColumnRenamed("id", "doc_id").write.parquet(
         f"{d}/documents.parquet"
     )
-    cat.invalidate_relation(f"{d}/documents.parquet")
-    assert key not in cat._RELATION_CACHE
+    session_cache.drop("relation", path)
+    assert session_cache.get(spark, "relation", path, lambda: None) is None
     assert cat.table(spark, d, "documents").count() == 5
 
 
 def test_warm_start_sf_dir_preopens_events(spark, sf_dir):
     """warm_start(spark, sf_dir) must pre-resolve the events relation
     (the q05 cold path then hits the cache) and be idempotent."""
-    from low_latency_time_series_database_tsdb_for_market_data_spark import (
-        catalog as cat,
-    )
     from low_latency_time_series_database_tsdb_for_market_data_spark.session import (
         warm_start,
     )
 
     warm_start(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, f"{sf_dir}/events.parquet")
-    assert key in cat._RELATION_CACHE
+    path = f"{sf_dir}/events.parquet"
+    assert session_cache.get(spark, "relation", path, pytest.fail) is not None
     warm_start(spark, sf_dir)  # second call: no-op, no error

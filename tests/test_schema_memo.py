@@ -12,17 +12,25 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from low_latency_time_series_database_tsdb_for_market_data_spark import catalog, cli
+from low_latency_time_series_database_tsdb_for_market_data_spark import (
+    catalog,
+    cli,
+    session_cache,
+)
 from tests.test_catalog_adaptive import _write_events
 from tests.test_tick_footer_index import _jobs
 
 
 @pytest.fixture()
-def memo(monkeypatch):
-    """An empty memo, so the first read of each test is a miss."""
-    m: dict = {}
-    monkeypatch.setattr(catalog, "_SCHEMA_MEMO", m)
-    return m
+def memo(spark):
+    """``memo(path)``: the schema the memo holds for ``path``'s key, or
+    None; the lookup never builds one."""
+
+    def stored(path):
+        key = catalog._schema_memo_key(spark, str(path))
+        return key and session_cache.get(spark, "schema", key, lambda: None)
+
+    return stored
 
 
 @pytest.fixture()
@@ -57,11 +65,12 @@ def test_memo_matches_inference_for_event_layouts(spark, tmp_path, memo, unit):
     d.mkdir()
     shutil.move(_write_events(str(tmp_path), unit), d / "part-0.parquet")
     _same_twice(spark, str(d))
-    assert len(memo) == 1
+    key = catalog._schema_memo_key(spark, str(d))
+    assert memo(d) == spark.read.parquet(str(d)).schema
     # a file appended after the first one keeps the key: still a hit
     shutil.copy(d / "part-0.parquet", d / "part-1.parquet")
     _same_twice(spark, str(d))
-    assert len(memo) == 1
+    assert catalog._schema_memo_key(spark, str(d)) == key
 
 
 @pytest.mark.parametrize("symbols", [["BRK/B", "123"], ["123"]])
@@ -76,10 +85,10 @@ def test_memo_matches_inference_for_cli_tables(spark, tmp_path, memo, symbols):
     _same_twice(spark, table)
     int_typed = spark.read.parquet(table).schema["symbol"].dataType.typeName()
     assert int_typed == ("integer" if symbols == ["123"] else "string")
-    assert len(memo) == 1
+    assert memo(table) is not None and "symbol" not in memo(table).fieldNames()
 
 
-def test_memo_misses_after_a_converter_conf_change(spark, tmp_path, memo, conf):
+def test_memo_misses_after_a_converter_conf_change(spark, tmp_path, conf):
     catalog._allow_nanos(spark)
     us = tmp_path / "us"
     us.mkdir()
@@ -106,7 +115,7 @@ def test_memo_misses_after_a_converter_conf_change(spark, tmp_path, memo, conf):
         catalog.read_parquet(spark, str(ns))
 
 
-def test_memo_follows_the_file_inference_reads(spark, tmp_path, memo):
+def test_memo_follows_the_file_inference_reads(spark, tmp_path):
     """Spark infers from the first file by full path string: a new first
     file with another footer misses, and ``symbol=A-B/`` sorts before
     ``symbol=A/`` (``-`` < ``/``) although its part tuple sorts after."""
@@ -125,25 +134,28 @@ def test_memo_follows_the_file_inference_reads(spark, tmp_path, memo):
     _same_twice(spark, str(p))
 
 
-def test_no_memo_with_summary_files_or_merge_schema(spark, tmp_path, memo, conf):
+def test_no_memo_with_summary_files_or_merge_schema(spark, tmp_path, conf):
+    built = session_cache.build_seconds("schema")
     d = tmp_path / "t"
     _x_file(d / "part-0.parquet", pa.int64())
     pq.write_metadata(pa.schema([("x", pa.int32())]), d / "_metadata")
     assert catalog._schema_memo_key(spark, str(d)) is None
     _same_twice(spark, str(d))
-    assert memo == {}
+    assert session_cache.build_seconds("schema") == built
 
     m = tmp_path / "m"
     _x_file(m / "part-0.parquet", pa.int64())
     conf("spark.sql.parquet.mergeSchema", "true")
     assert catalog._schema_memo_key(spark, str(m)) is None
     _same_twice(spark, str(m))
-    assert memo == {}
+    assert session_cache.build_seconds("schema") == built
 
 
 def test_memo_hit_runs_no_spark_job(spark, tmp_path, memo):
     d = tmp_path / "t"
     _x_file(d / "part-0.parquet", pa.int64())
+    session_cache.drop("schema", catalog._schema_memo_key(spark, str(d)))
+    assert memo(d) is None
     dfs = []
     jobs = [
         _jobs(spark, lambda: dfs.append(catalog.read_parquet(spark, str(d))),
@@ -154,11 +166,22 @@ def test_memo_hit_runs_no_spark_job(spark, tmp_path, memo):
     assert jobs == [1, 0]
 
 
-def test_memo_entries_of_a_stopped_session_are_evicted(memo):
+def test_memo_entries_of_a_stopped_session_are_evicted(spark):
+    """Entries of every kind whose SparkContext stopped are evicted on the
+    next miss, whichever session misses."""
+
     class Dead:
         class sparkContext:
-            _jsc = None
+            applicationId = "stopped-app"
+            _jsc = object()
 
-    memo[("app", (), ())] = (Dead(), None)
-    catalog._evict_dead_sessions()
-    assert memo == {}
+    kinds = ("relation", "schema", "corpus_bands", "even_half_state",
+             "verdict_model", "warm")
+    for kind in kinds:
+        session_cache.get(Dead(), kind, "k", lambda: "v", "fp")
+    for kind in kinds:
+        assert session_cache.get(Dead(), kind, "k", pytest.fail, "fp") == "v"
+    Dead.sparkContext._jsc = None  # the context stops
+    session_cache.get(spark, "warm", object(), lambda: None)
+    for kind in kinds:
+        assert session_cache.get(Dead(), kind, "k", lambda: None, "fp") is None

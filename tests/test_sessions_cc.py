@@ -74,6 +74,34 @@ def test_ewma_recurrence(spark, sf_dir):
     assert checked == len(ev)
 
 
+def test_ewma_rounds_half_way_values_like_duckdb(spark, tmp_path):
+    """One event per event_type, so each EWMA is its own value: q39 must
+    round these near-half-way doubles exactly as the oracle's ROUND."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    values = [264.54155, 341.75305, 459.31084999999996]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array([0, 0, 0], pa.timestamp("us")),
+            "user_id": pa.array([1, 1, 1], pa.int64()),
+            "event_type": ["click", "view", "buy"],
+            "value": values,
+            "props": ["", "", ""],
+        }),
+        tmp_path / "events.parquet",
+    )
+    q = REG["q39_ewma"]
+    got = sorted((r.event_id, r.ewma) for r in q.fn(spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+    want = sorted(con.execute(f"SELECT event_id, ewma FROM ({q.oracle})").fetchall())
+    con.close()
+    assert got == want
+
+
 def test_approx_percentile_close_to_exact(spark, sf_dir):
     """q73's t-digest estimates must track q27's exact interpolated
     percentiles (2% relative — the sketch returns an actual data value,
