@@ -319,7 +319,7 @@ def main() -> None:
     materialize(reg["q05_point_lookup"].fn(spark, SF_DIR))
     warm_point_rebuild_sec = time.perf_counter() - t0
 
-    # steady-state serving path: PointServer collects the hot slice once
+    # steady-state serving path: PointServer reads the hot slice once
     # into a driver-side ts-sorted index (open cost recorded — nothing
     # hides) and answers each probe from it with no Spark job — the
     # reference's open-time B+ tree rebuild, the shape a long-lived

@@ -37,15 +37,27 @@ row group without stats, a footer that cannot be read, a listed file not
 named ``*.parquet`` or not directly in a ``symbol=`` directory, a file
 whose columns differ from TICK_SCHEMA, a bound outside int64, a
 negative n (Spark raises), or more than ``catalog.LOCAL_READ_MAX_ROWS``
-rows in the kept row groups.  Spark jobs per command: ``query`` 0,
-``last`` 0, ``insert`` 1 (the write) and an ``import`` of a one-split
-CSV 1 (the write; its count is read back from the footers).
+rows in the kept row groups.
+
+Inserts are written on the driver too: on a local table ``insert``
+writes its rows with pyarrow as one parquet file in the symbol's
+partition directory, with the footer Spark's writer would give it
+(``_append``); other tables keep the Spark write.
+
+Spark jobs per command on a local table: ``query`` 0, ``last`` 0,
+``insert`` 0, and an ``import`` of a one-split CSV 1 (the write; its
+count is read back from the footers).  On any other table ``insert``
+runs 1 (the write).
 """
 
 from __future__ import annotations
 
+import os
+import re
 import sys
 import time
+import uuid
+from pathlib import Path
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -61,6 +73,8 @@ TICK_SCHEMA = T.StructType(
         T.StructField("symbol", T.StringType(), False),
     ]
 )
+# the columns a data file holds: symbol is the partition directory
+_DATA_SCHEMA = T.StructType([f for f in TICK_SCHEMA.fields if f.name != "symbol"])
 
 HELP = """Usage:
   cli insert <symbol> <timestamp> <price> <volume>
@@ -127,6 +141,48 @@ def _next_seq(spark: SparkSession, data_dir: str, symbol: str) -> int:
     return 0 if hi is None else hi + 1
 
 
+def _spark_footer_metadata(spark: SparkSession) -> dict[bytes, bytes] | None:
+    """The key-value metadata Spark's parquet writer puts in the footer
+    of a tick data file (``ParquetWriteSupport``): the row schema as
+    the JVM renders it and the short Spark version.  None when this
+    session's writer would write what a driver-side file does not
+    reproduce: a codec other than snappy, or a LEGACY datetime or INT96
+    rebase mode (which add their own keys)."""
+    conf = spark.conf
+    if conf.get("spark.sql.parquet.compression.codec").lower() != "snappy" or "LEGACY" in (
+        conf.get("spark.sql.parquet.datetimeRebaseModeInWrite").upper(),
+        conf.get("spark.sql.parquet.int96RebaseModeInWrite").upper(),
+    ):
+        return None
+    row = spark._jvm.org.apache.spark.sql.types.DataType.fromJson(_DATA_SCHEMA.json()).json()
+    version = re.match(r"\d+\.\d+\.\d+", spark.version).group(0)
+    return {
+        b"org.apache.spark.version": version.encode(),
+        b"org.apache.spark.sql.parquet.row.metadata": row.encode(),
+    }
+
+
+def _write_part(part_dir: Path, table, metadata: dict[bytes, bytes]) -> None:
+    """Write ``table`` as one new data file of ``part_dir``, named as a
+    Spark task names its output.  The file is written under a
+    ``.``-prefixed name, which Spark's listing and the footer probes
+    skip, and renamed into place once complete: a killed insert leaves
+    at most a hidden file, never a torn one that readers list."""
+    import pyarrow.parquet as pq
+
+    name = f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"
+    tmp = part_dir / f".{name}"
+    part_dir.mkdir(parents=True, exist_ok=True)
+    try:
+        # pyarrow keeps the schema metadata only beside its own
+        # ARROW:schema key, which Spark does not read
+        pq.write_table(table.replace_schema_metadata(metadata), tmp, compression="snappy")
+        os.replace(tmp, part_dir / name)
+    except BaseException:
+        tmp.unlink(missing_ok=True)
+        raise
+
+
 def _append(
     spark: SparkSession, data_dir: str, symbol: str, rows: list[tuple[int, float, int]]
 ) -> int:
@@ -137,14 +193,20 @@ def _append(
     the reference's one writer thread).  Bulk pipelines use
     sources/writer.py where seq comes from the source.
 
-    The rows go to Spark as an Arrow table typed to TICK_SCHEMA, which
-    plans as a LocalRelation: no parallelize into slices and no pickle
-    round trip through Python workers, and the written parquet schema
-    (required columns, Spark row metadata) is the same as a list-of-Rows
-    DataFrame's."""
+    On a local table the rows are written on the driver, as the
+    reference's writer appends to its column files: one ts-sorted
+    parquet file in the symbol's partition directory (the escaped name
+    :func:`_symbol_dir` gives), typed to TICK_SCHEMA without ``symbol``
+    and carrying Spark's footer metadata (:func:`_spark_footer_metadata`),
+    so Spark reads it, and infers the same schema from it, as it would
+    read a file of its own.  No Spark job runs.  Otherwise the rows go
+    to Spark as an Arrow table typed to TICK_SCHEMA, a LocalRelation,
+    and ``write_ticks`` writes them (one job)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    from . import session_cache
+    from .catalog import local_path
     from .sources.writer import write_ticks
 
     base = _next_seq(spark, data_dir, symbol)
@@ -153,8 +215,15 @@ def _append(
         for i, (ts, p, v) in enumerate(rows)
     ]
     table = pa.Table.from_pylist(data, schema=to_arrow_schema(TICK_SCHEMA))
-    df = spark.createDataFrame(table, TICK_SCHEMA)
-    write_ticks(df, _table_path(data_dir), mode="append")
+    path = _table_path(data_dir)
+    part = local_path(_symbol_dir(spark, data_dir, symbol))
+    metadata = None if part is None else _spark_footer_metadata(spark)
+    if metadata is None:
+        write_ticks(spark.createDataFrame(table, TICK_SCHEMA), path, mode="append")
+    else:
+        _write_part(part, table.drop_columns(["symbol"]).sort_by("ts"), metadata)
+        # as write_ticks does: cached relations must re-list
+        session_cache.drop("relation", path)
     return len(data)
 
 
@@ -182,8 +251,7 @@ def _local_slice(spark: SparkSession, data_dir: str, symbol: str, col: str, **se
 
     from .catalog import local_rows
 
-    data = T.StructType([f for f in TICK_SCHEMA.fields if f.name != "symbol"])
-    return local_rows(spark, _table_path(data_dir), to_arrow_schema(data), col,
+    return local_rows(spark, _table_path(data_dir), to_arrow_schema(_DATA_SCHEMA), col,
                       partition=("symbol", symbol), **select)
 
 

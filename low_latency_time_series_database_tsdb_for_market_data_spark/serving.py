@@ -4,10 +4,14 @@ The reference serves its main read path, a point or an inclusive range,
 by descending an in-memory B+ tree ``timestamp -> row``
 (`bplus_tree.hpp:70-91`) that its storage constructor rebuilds by
 replaying every tick at open (`timeseries_db.cpp:29-59`, `:157-168`).
-`PointServer` is that open-time replay.  ``open()`` collects the hot
-slice once through Arrow (one Spark job), stable-sorts it on a probe key
-and keeps ``(keys, table)`` on the driver: the sorted int64 key array is
-the tree's leaf level and ``numpy.searchsorted`` its descent.  A probe
+`PointServer` is that open-time replay.  ``open()`` reads the hot slice
+of every file the relation lists on the driver (``catalog.local_rows``,
+the row groups whose footer ts range meets the slice window), stable-
+sorts it on a probe key and keeps ``(keys, table)`` there: the sorted
+int64 key array is the tree's leaf level and ``numpy.searchsorted`` its
+descent.  No Spark job runs, unless the driver cannot read exactly what
+Spark would (the same triggers as the driver-read probes below): then
+one Spark job collects the slice through Arrow.  A probe
 inside the slice cuts the matching rows out of the Arrow table and hands
 them back as ``spark.createDataFrame(arrow_slice, schema)``, a
 ``LocalRelation``: its plan is a ``LocalTableScan``, and ``collect()``
@@ -52,16 +56,32 @@ Scale shape: nobody indexes a 100 TB table on one driver.  The server
 takes an optional ts window (hot days) and/or symbol list (hot
 partitions) and indexes only that slice; the slice lives in DRIVER
 memory, so the caller bounds it with ``lo_ns``/``hi_ns``/``symbols``.
-A slice too big to collect fails ``open()`` loudly on Spark's own
-``spark.driver.maxResultSize``.  The parquet table stays the source of
-truth: the index is a snapshot that ``refresh()`` rebuilds after a
-writer commits, never a write-through copy.
+A slice of more than ``catalog.LOCAL_READ_MAX_ROWS`` rows is collected
+by Spark, and one too big to collect fails ``open()`` loudly on Spark's
+own ``spark.driver.maxResultSize``.
+
+The parquet table stays the source of truth: the index is a snapshot
+that ``refresh()`` brings up to date after a writer commits, never a
+write-through copy.  Like the reference, which inserts each appended
+tick into its tree and rebuilds the tree only at open
+(`timeseries_db.cpp:60-155`), ``refresh()`` is incremental when it can
+be: if every file the index was read from is still listed with the
+size, mtime and inode it had when read, only the added files are read
+(on the driver) and their keys merged into the index.  A file removed
+or rewritten (``maintain``, retention, compaction), a changed served
+schema, an index Spark collected, or added files the driver cannot read
+rebuild the index in full, as ``open()`` builds it.  (A rewrite that
+keeps a file's size and inode within one tick of the filesystem clock
+goes unseen, as by any stat-based listing cache.)  Both leave the same
+keys and the same rows per key; the order of rows with equal ts is
+unspecified, as it is on the parquet path.
 """
 
 from __future__ import annotations
 
 import threading
 import time
+from pathlib import Path
 from typing import NamedTuple
 
 import numpy as np
@@ -84,11 +104,15 @@ from .catalog import (
 )
 
 _KEY = "__probe_key"
+_INT64 = (-(2**63), 2**63 - 1)
 
 
 class _Index(NamedTuple):
     keys: np.ndarray  # sorted probe keys: raw ns, or unix micros
     table: pa.Table  # the slice in the served schema, in key order
+    # _identity of each file the index was read from on the driver,
+    # taken before the read; None for a Spark-collected index
+    source: dict[Path, tuple[int, int, int]] | None
 
 
 class _View(NamedTuple):
@@ -111,7 +135,7 @@ class PointServer:
     Usage::
 
         srv = PointServer(spark, sf_dir)
-        open_sec = srv.open()          # one job: collect + sort the slice
+        open_sec = srv.open()          # read + sort the slice on the driver
         df = srv.point(epoch_ns)       # index or driver read: no job
         df = srv.range(lo_ns, hi_ns)
         srv.stats()                    # hits, fallbacks, rows, open cost
@@ -143,10 +167,12 @@ class PointServer:
         self._symbols = list(symbols) if symbols else None
         self._symbol_col = symbol_col
         self._counts = dict.fromkeys(
-            ("index_hits", "footer_empty", "local_reads", "parquet_fallbacks"), 0)
+            ("index_hits", "footer_empty", "local_reads", "parquet_fallbacks",
+             "delta_refreshes", "full_refreshes"), 0)
         self._lock = threading.Lock()
         self._open_s: float | None = None
         self._refresh_s: float | None = None
+        self._refresh_rows: int | None = None
         self._view = self._resolve()
 
     def _resolve(self) -> _View:
@@ -157,9 +183,43 @@ class PointServer:
         return _View(raw, with_ts(raw).schema, ts_is_long(raw),
                      ts_bounds_epoch_ns(self._path), input_files(raw), None)
 
-    def _build(self, view: _View) -> _Index:
-        """Collect the slice with its probe key (one Spark job) and sort
-        it on the key.  Rows with a null ts never match a probe."""
+    def _window(self, view: _View, lo_ns: int | None, hi_ns: int | None) -> tuple[int, int]:
+        """``ts_bound``'s window for ``[lo_ns, hi_ns]`` in raw ts units
+        (an int64 extreme for an open end): ``[lo_ns, hi_ns + 999]`` in
+        the int64-nanos layout, ``[lo_ns // 1000, hi_ns // 1000]`` in
+        micros otherwise."""
+        lo = _INT64[0] if lo_ns is None else lo_ns if view.ns else lo_ns // 1000
+        hi = _INT64[1] if hi_ns is None else hi_ns + 999 if view.ns else hi_ns // 1000
+        return lo, hi
+
+    def _read(self, view: _View, window: tuple[int, int], files: list[Path]) -> pa.Table | None:
+        """The rows of ``files`` (listed by ``view.raw``) whose raw ts
+        lies in ``window``, read on the driver from the footer-pruned row
+        groups (``catalog.local_rows``) and converted to the served
+        schema, plus the probe key ``_KEY`` (the raw ts as an int64);
+        None when only Spark can give them exactly.  The timestamp
+        layouts need a UTC session: Spark reads the UTC layout's bounds,
+        and serves NTZ values, in the session time zone."""
+        if view.files is None or (
+            not view.ns and self._spark.conf.get("spark.sql.session.timeZone") != "UTC"
+        ):
+            return None
+        part = local_rows(self._spark, self._path, to_arrow_schema(view.raw.schema), "ts",
+                          window=window, files=files)
+        if part is None:
+            return None
+        served = to_arrow_schema(view.schema)
+        # with_ts: nanos truncate toward zero to micros (Spark's ``div``,
+        # Arrow's integer divide); NTZ micros are read as UTC instants
+        key = part.column("ts").cast(pa.int64())
+        ts = pc.divide(key, 1000) if view.ns else part.column("ts")
+        i = part.schema.get_field_index("ts")
+        part = part.set_column(i, served.field("ts"), ts.cast(served.field("ts").type))
+        return part.cast(served).append_column(_KEY, key)
+
+    def _collect(self, view: _View) -> pa.Table:
+        """The slice with its probe key, collected by Spark (one job):
+        the build wherever the driver read declines."""
         raw = view.raw
         slice_df = raw.where(F.col("ts").isNotNull())
         if self._lo is not None:
@@ -174,14 +234,59 @@ class PointServer:
             )
         # the served ts in micros: with_ts casts NTZ to timestamp the same way
         key = F.col("ts") if view.ns else F.unix_micros(F.col("ts").cast("timestamp"))
-        table = with_ts(slice_df.withColumn(_KEY, key)).toArrow()
-        table = table.take(pc.sort_indices(table, [(_KEY, "ascending")]))
-        return _Index(table.column(_KEY).to_numpy(), table.drop_columns([_KEY]))
+        return with_ts(slice_df.withColumn(_KEY, key)).toArrow()
+
+    def _merge(self, index: _Index | None, part: pa.Table,
+               source: dict[Path, tuple[int, int, int]] | None) -> _Index:
+        """``index`` (None: empty) with the slice rows of ``part`` merged
+        in by key.  The sort is stable: rows of equal key keep the
+        index's order, and ``part``'s follow them."""
+        part = self._only(part, self._symbols)
+        keys = part.column(_KEY).to_numpy()
+        table = part.drop_columns([_KEY])
+        if index is not None:
+            keys = np.concatenate([index.keys, keys])
+            table = pa.concat_tables([index.table, table])
+        order = np.argsort(keys, kind="stable")
+        return _Index(keys[order], table.take(order), source)
+
+    def _build(self, view: _View) -> _Index:
+        """The index of the whole slice: read on the driver from every
+        file ``view.raw`` lists when it can, else collected by Spark (one
+        job).  Rows with a null ts never match a probe and are not
+        indexed."""
+        source = _identity(view.files)
+        part = None
+        if source is not None:
+            part = self._read(view, self._window(view, self._lo, self._hi), view.files)
+        if part is None:
+            part, source = self._collect(view), None
+        return self._merge(None, part, source)
+
+    def _delta(self, old: _View, view: _View) -> _Index | None:
+        """``old``'s index brought up to ``view``'s listing by reading
+        only the files added since; None (rebuild in full) unless every
+        file the index was read from is still listed with its size,
+        mtime and inode, the served schema is unchanged and the driver
+        can read the added files."""
+        index = old.index
+        if index is None or index.source is None or (old.schema, old.ns) != (view.schema, view.ns):
+            return None
+        source = _identity(view.files)
+        if source is None or any(source.get(f) != st for f, st in index.source.items()):
+            return None
+        added = [f for f in view.files if f not in index.source]
+        if not added:
+            return index._replace(source=source)
+        part = self._read(view, self._window(view, self._lo, self._hi), added)
+        return None if part is None else self._merge(index, part, source)
 
     def open(self) -> float:
-        """Build the index; returns the seconds it took (the open-time
-        cost a deployment pays once, reported so benchmarks cannot hide
-        it)."""
+        """Build the index from every listed file — on the driver, or by
+        one Spark job where the driver read declines (see ``_build``) —
+        and return the seconds it took (the open-time cost a deployment
+        pays once, reported so benchmarks cannot hide it).  A full
+        ``refresh()`` builds the same way."""
         t0 = time.perf_counter()
         view = self._view
         self._view = view._replace(index=self._build(view))
@@ -194,14 +299,15 @@ class PointServer:
         """Whether the indexed slice fully covers a probe: ts window
         inside the indexed window AND, for a symbol-sliced server, the
         probe restricted to a SUBSET of the indexed symbols — a ts-only
-        probe against a symbol-sliced index would silently drop the
-        other symbols, so it must fall back to the parquet path."""
+        probe (``symbols`` None or empty: no restriction, as everywhere
+        else) against a symbol-sliced index would silently drop the
+        other symbols, so it must take another path."""
         if self._lo is not None and lo_ns < self._lo:
             return False
         if self._hi is not None and hi_ns > self._hi:
             return False
         if self._symbols is not None and (
-            symbols is None or not set(symbols) <= set(self._symbols)
+            not symbols or not set(symbols) <= set(self._symbols)
         ):
             return False
         return True
@@ -251,8 +357,8 @@ class PointServer:
         self, view: _View, lo_ns: int, hi_ns: int, symbols: list[str] | None
     ) -> pa.Table:
         """The index rows ``ts_bound`` admits for ``[lo_ns, hi_ns]``."""
-        keys, table = view.index
-        lo, hi = (lo_ns, hi_ns + 999) if view.ns else (lo_ns // 1000, hi_ns // 1000)
+        keys, table = view.index.keys, view.index.table
+        lo, hi = self._window(view, lo_ns, hi_ns)
         i = int(np.searchsorted(keys, lo, side="left"))
         j = int(np.searchsorted(keys, hi, side="right"))
         return self._only(table.slice(i, max(j - i, 0)), symbols)
@@ -261,30 +367,11 @@ class PointServer:
         self, view: _View, lo_ns: int, hi_ns: int, symbols: list[str] | None
     ) -> pa.Table | None:
         """The parquet path's rows read on the driver from the row groups
-        whose footer ts range meets ``ts_bound``'s window
-        (``catalog.local_rows`` over the files ``raw`` lists), in the
-        served schema; None when only Spark can give them exactly.  The
-        timestamp layouts need a UTC session: Spark reads the UTC
-        layout's bounds, and serves NTZ values, in the session time
-        zone."""
-        if view.files is None or (
-            not view.ns and self._spark.conf.get("spark.sql.session.timeZone") != "UTC"
-        ):
-            return None
-        window = (lo_ns, hi_ns + 999) if view.ns else (lo_ns // 1000, hi_ns // 1000)
-        part = local_rows(self._spark, self._path, to_arrow_schema(view.raw.schema), "ts",
-                          window=window, files=view.files)
-        if part is None:
-            return None
-        served = to_arrow_schema(view.schema)
-        # with_ts: nanos truncate toward zero to micros (Spark's ``div``,
-        # Arrow's integer divide); NTZ micros are read as UTC instants
-        ts = part.column("ts")
-        if view.ns:
-            ts = pc.divide(ts, 1000)
-        i = part.schema.get_field_index("ts")
-        part = part.set_column(i, served.field("ts"), ts.cast(served.field("ts").type))
-        return self._only(part, symbols).cast(served)
+        of the files ``raw`` lists whose footer ts range meets
+        ``ts_bound``'s window, in the served schema; None when only
+        Spark can give them exactly."""
+        part = self._read(view, self._window(view, lo_ns, hi_ns), view.files)
+        return None if part is None else self._only(part.drop_columns([_KEY]), symbols)
 
     def _only(self, part: pa.Table, symbols: list[str] | None) -> pa.Table:
         """``part`` restricted to ``symbols`` (all rows when None/empty)."""
@@ -302,36 +389,78 @@ class PointServer:
         from the index), ``footer_empty`` (outside the footer ts bounds,
         answered empty without a job), ``local_reads`` (read on the
         driver from the footer-pruned row groups, no job),
-        ``parquet_fallbacks`` — plus the rows the index holds and the
-        last ``open()``/``refresh()`` seconds (None before the first
-        call)."""
+        ``parquet_fallbacks`` — and refresh counters, ``delta_refreshes``
+        (only added files read) and ``full_refreshes``; plus the rows the
+        index holds, the slice rows the last refresh read into it
+        (``refresh_rows_read``: the added files' on a delta refresh, all
+        of them on a full one) and the last ``open()``/``refresh()``
+        seconds (None before the first call)."""
         index = self._view.index
         with self._lock:
             counts = dict(self._counts)
+            rows_read = self._refresh_rows
         return {
             **counts,
             "indexed_rows": 0 if index is None else index.table.num_rows,
+            "refresh_rows_read": rows_read,
             "open_s": self._open_s,
             "refresh_s": self._refresh_s,
         }
 
     def refresh(self) -> float:
-        """Rebuild the index after the underlying table changed
+        """Bring the index up to date after the underlying table changed
         (append/compaction/retention); a long-lived server calls this
         from its ingest hook.  Re-resolves the datasource (fresh file
         listing and footer bounds; the schema comes from the catalog's
-        memo, so no inference job) and builds the new index — one Spark
-        job in all — then swaps the new view in with one assignment:
-        probes issued meanwhile read the old view.  Returns the seconds
-        it took."""
+        memo, so no inference job), then either
+
+        * delta: when every file the index was read from is still
+          listed with the size, mtime and inode it had, reads only the
+          added files on the driver and merges their slice rows into the
+          index, as the reference updates its tree after each write — no
+          Spark job; or
+        * full: otherwise — a file removed or rewritten (``maintain``,
+          retention, compaction), a changed served schema, an index
+          Spark collected, added files the driver cannot read — rebuilds
+          the index as ``open()`` builds it.
+
+        Either way the new view is swapped in with one assignment, so
+        probes issued meanwhile read the old view.  A delta-refreshed
+        index holds the keys and rows a fresh ``open()`` over the same
+        files holds; the order of rows with equal ts differs between the
+        two and is unspecified, as on the parquet path.  Returns the
+        seconds it took."""
         t0 = time.perf_counter()
         # the session cache's relation entry pins the file listing —
         # an external writer's commit is invisible until it is dropped
         session_cache.drop("relation", self._path)
-        view = self._resolve()
-        self._view = view._replace(index=self._build(view))
+        old, view = self._view, self._resolve()
+        index = self._delta(old, view)
+        if index is not None:
+            kind, rows = "delta_refreshes", index.table.num_rows - old.index.table.num_rows
+        else:
+            index = self._build(view)
+            kind, rows = "full_refreshes", index.table.num_rows
+        self._view = view._replace(index=index)
+        with self._lock:
+            self._counts[kind] += 1
+            self._refresh_rows = rows
         self._refresh_s = time.perf_counter() - t0
         return self._refresh_s
 
     def close(self) -> None:
         self._view = self._view._replace(index=None)
+
+
+def _identity(files: list[Path] | None) -> dict[Path, tuple[int, int, int]] | None:
+    """(size, mtime_ns, inode) of each of ``files``: what a rewrite in
+    place or a replace by rename changes, short of a same-size rewrite
+    within one tick of the filesystem clock; None for a listing that is
+    not local, or a file that cannot be stat-ed."""
+    if files is None:
+        return None
+    try:
+        return {f: (st.st_size, st.st_mtime_ns, st.st_ino)
+                for f in files for st in (f.stat(),)}
+    except OSError:
+        return None

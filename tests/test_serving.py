@@ -134,7 +134,7 @@ def test_symbol_sliced_server(spark, monkeypatch):
     returns the full q04-equivalent result; (c) construction with the
     default symbol_col works against the events schema (round-6 advice:
     the old code filtered a nonexistent `symbol` column and ignored the
-    slice in _in_cache)."""
+    slice in _in_cache); (d) ``symbols=[]`` is a ts-only probe too."""
     from low_latency_time_series_database_tsdb_for_market_data_spark.operators.reference_surface import (  # noqa: E501
         _T1_NS,
         _T2_NS,
@@ -174,6 +174,11 @@ def test_symbol_sliced_server(spark, monkeypatch):
         q3 = srv.range(_T1_NS, _T2_NS, symbols=["click", "view"])
         assert_df_equal(_sorted(q3), want3, name="superset driver read")
         assert srv.stats()["local_reads"] == 2
+        # (d) an empty symbol list restricts nothing, as on the parquet
+        # path: every event type, not the indexed clicks alone
+        q4 = srv.range(_T1_NS, _T2_NS, symbols=[])
+        assert_df_equal(_sorted(q4), want2, name="empty symbol list")
+        assert srv.stats()["index_hits"] == 1 and srv.stats()["local_reads"] == 3
         _over_cap(monkeypatch)
         q2 = srv.range(_T1_NS, _T2_NS)
         _assert_parquet(q2)
@@ -188,8 +193,9 @@ def test_symbol_sliced_server(spark, monkeypatch):
 def test_refresh_picks_up_externally_appended_rows(spark, tmp_path):
     """The index is a snapshot: another process committing files is
     invisible until refresh() re-resolves the table.  Simulated by
-    copying a part file in at the filesystem level.  Probes issued while
-    refresh() runs read the old index or the new one, never neither."""
+    copying a part file in at the filesystem level, which a delta
+    refresh reads alone.  Probes issued while refresh() runs read the
+    old index or the new one, never neither."""
     import shutil
     import threading
     from pathlib import Path
@@ -231,6 +237,7 @@ def test_refresh_picks_up_externally_appended_rows(spark, tmp_path):
             t.join(60)
         assert not t.is_alive()
         assert not errors and seen <= {before, 2 * before}, (errors, seen)
+        assert srv.stats()["delta_refreshes"] == 1  # only the copy was read
         assert srv.point(lo).count() == 2 * before
         _assert_local(spark, srv.point(lo))
     finally:
@@ -333,8 +340,9 @@ def test_stats_count_a_mixed_probe_sequence(spark, dup_layouts, monkeypatch):
     d = dup_layouts["us"]
     srv = PointServer(spark, d, lo_ns=_B_NS, hi_ns=_B_NS + _DAY_NS)
     assert srv.stats() == {"index_hits": 0, "footer_empty": 0, "local_reads": 0,
-                           "parquet_fallbacks": 0, "indexed_rows": 0, "open_s": None,
-                           "refresh_s": None}
+                           "parquet_fallbacks": 0, "delta_refreshes": 0,
+                           "full_refreshes": 0, "indexed_rows": 0,
+                           "refresh_rows_read": None, "open_s": None, "refresh_s": None}
     assert srv.table_min_ns() == _B_NS - 1000
     try:
         srv.open()
@@ -361,9 +369,17 @@ def test_stats_count_a_mixed_probe_sequence(spark, dup_layouts, monkeypatch):
                                    "parquet_fallbacks", "indexed_rows")} == {
             "index_hits": 2, "footer_empty": 2, "local_reads": 1, "parquet_fallbacks": 1,
             "indexed_rows": 6}
+        # nothing changed: a delta refresh that reads no file
+        assert (st["delta_refreshes"], st["full_refreshes"], st["refresh_rows_read"]) == (1, 0, 0)
     finally:
         srv.close()
     assert srv.stats()["indexed_rows"] == 0
+    # a refresh after close() has no index to extend: it rebuilds
+    srv.refresh()
+    st = srv.stats()
+    assert (st["delta_refreshes"], st["full_refreshes"], st["refresh_rows_read"]) == (1, 1, 6)
+    assert st["indexed_rows"] == 6
+    srv.close()
 
 
 def test_stats_survive_concurrent_probes(spark, dup_layouts):
@@ -494,3 +510,117 @@ def test_timestamp_layouts_need_a_utc_session(spark, dup_layouts):
         spark.conf.set(key, saved)
     assert servers["us"].stats()["parquet_fallbacks"] == 1
     assert servers["ns"].stats()["local_reads"] == 1
+
+
+def _write_feed(table, name: str, unit: str, rows: list[tuple[int, str]], first_id: int) -> None:
+    """A feed file of ``rows`` (epoch ns, event_type) in ``unit``'s ts
+    layout, with the columns ``_write_events`` writes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts_type = pa.timestamp("us", tz="UTC") if unit == "us_utc" else pa.timestamp(unit)
+    n = len(rows)
+    pq.write_table(pa.table({
+        "event_id": pa.array(range(first_id, first_id + n), pa.int64()),
+        "ts": pa.array([t if unit == "ns" else t // 1000 for t, _ in rows], ts_type),
+        "user_id": pa.array([7] * n, pa.int64()),
+        "event_type": pa.array([e for _, e in rows]),
+        "value": pa.array([2.5] * n, pa.float64()),
+        "props": pa.array(["{}"] * n),
+    }), table / name, version="2.6")
+
+
+def _index_of(srv):
+    """The server's key array, and its (key, row) pairs as a multiset:
+    equal for two servers iff they hold the same keys in the same order
+    and the same rows under each key."""
+    idx = srv._view.index
+    keys = idx.keys.tolist()
+    return keys, sorted(zip(keys, map(repr, idx.table.to_pylist())))
+
+
+# rows a writer appends: ties with the fixture's keys, a sub-microsecond
+# neighbour, rows outside the windowed slice, both event types
+_ADDED = [(_B_NS, "click"), (_B_NS + 1, "view"), (_B_NS + 5000, "click"),
+          (_B_NS + 2_000_000, "view"), (_B_NS - 10**12, "click"), (_B_NS + 2 * _DAY_NS, "view")]
+
+
+@pytest.mark.parametrize("unit", ["ns", "us", "us_utc"])
+def test_delta_refresh_equals_a_fresh_open(spark, dup_layouts, tmp_path, unit):
+    """Files only added: refresh() reads just those on the driver (no
+    Spark job) and merges them, leaving the index a fresh open() over
+    the same files builds — same keys, same rows per key — for a full,
+    a window-sliced and a symbol-sliced server.  A file rewritten in
+    place, or files replaced as a compaction replaces them, rebuild in
+    full, as do added files the driver cannot read."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from low_latency_time_series_database_tsdb_for_market_data_spark import serving
+
+    d = tmp_path / unit
+    shutil.copytree(dup_layouts[unit], d)
+    table = d / "events.parquet"
+    kinds = [{}, {"lo_ns": _B_NS - 500, "hi_ns": _B_NS + 5001},
+             {"lo_ns": _B_NS - 500, "symbols": ["click"]}]
+    servers = [PointServer(spark, str(d), **kw) for kw in kinds]
+
+    def check(delta: int, full: int) -> None:
+        for kw, srv in zip(kinds, servers):
+            st = srv.stats()
+            assert (st["delta_refreshes"], st["full_refreshes"]) == (delta, full), (kw, st)
+            fresh = PointServer(spark, str(d), **kw)
+            assert _jobs(spark, fresh.open, f"fresh-open-{unit}-{delta}-{full}") == 0
+            assert _index_of(srv) == _index_of(fresh), kw
+            for lo, hi in _PROBES:
+                syms = kw.get("symbols")
+                if srv._in_cache(lo, hi, syms):
+                    got = srv.range(lo, hi, syms)
+                    assert sorted(got.collect()) == sorted(
+                        _parquet_path(spark, str(d), lo, hi, syms).collect()), (kw, lo, hi)
+            fresh.close()
+
+    def refresh_all(group: str) -> int:
+        return _jobs(spark, lambda: [s.refresh() for s in servers], f"{group}-{unit}")
+
+    try:
+        for srv in servers:
+            srv.open()
+        _write_feed(table, "part-2.parquet", unit, _ADDED, 100)
+        assert refresh_all("delta-refresh") == 0
+        check(1, 0)
+        assert [s.stats()["refresh_rows_read"] for s in servers] == [6, 3, 2]
+        _write_feed(table, "part-3.parquet", unit, _ADDED[::-1], 200)
+        assert refresh_all("delta-refresh-2") == 0
+        check(2, 0)
+        # rewritten in place: the old rows must go
+        _write_feed(table, "part-2.parquet", unit, _ADDED[:2], 100)
+        refresh_all("rewrite")
+        check(2, 1)
+        # compacted: files removed, one new file holding their rows
+        merged = pq.read_table(table / "part-1.parquet")
+        (table / "part-1.parquet").unlink()
+        (table / "part-3.parquet").unlink()
+        pq.write_table(merged, table / "part-9.parquet")
+        refresh_all("compact")
+        check(2, 2)
+        assert [s.stats()["refresh_rows_read"] for s in servers] == [
+            s.stats()["indexed_rows"] for s in servers]
+        # added files the driver declines: rebuilt, by Spark
+        _write_feed(table, "part-4.parquet", unit, _ADDED, 300)
+        real = serving.local_rows
+        serving.local_rows = lambda *a, **k: None
+        try:
+            assert refresh_all("declined") > 0
+        finally:
+            serving.local_rows = real
+        check(2, 3)
+        # an index Spark collected is never extended: the next refresh
+        # rebuilds, on the driver again
+        _write_feed(table, "part-5.parquet", unit, _ADDED, 400)
+        assert refresh_all("after-spark") == 0
+        check(2, 4)
+    finally:
+        for srv in servers:
+            srv.close()

@@ -15,6 +15,25 @@ from low_latency_time_series_database_tsdb_for_market_data_spark.registry import
 REG = load_all()
 
 
+def _round4(y: float) -> float:
+    """``y`` rounded to 4 decimals as q39 (and DuckDB's ``ROUND(y, 4)``)
+    round it: the double ``y * 1e4`` to the nearest integer, halves away
+    from zero, divided back.  Python's ``round(y, 4)`` rounds the exact
+    binary value of ``y`` instead, and ``round(y * 1e4)`` halves to
+    even."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(y * 1e4).to_integral_value(ROUND_HALF_UP)) / 1e4
+
+
+def test_round4_takes_half_way_products_away_from_zero():
+    y = 459.31084999999996
+    assert y * 1e4 == 4593108.5
+    assert _round4(y) == 459.3109 and round(y, 4) == 459.3108
+    assert _round4(-y) == -459.3109
+    assert _round4(0.00005) == 0.0001 and round(0.5) == 0
+
+
 def test_connected_components_golden(spark):
     """Chain 1-2-3 and pair 10-11 resolve to min-labeled components."""
     edges = spark.createDataFrame(
@@ -46,7 +65,8 @@ def test_connected_components_closes_candidate_edges(spark, sf_dir):
 
 def test_ewma_recurrence(spark, sf_dir):
     """q39's output must satisfy y_t = a*x_t + (1-a)*y_{t-1} per symbol
-    (checked against a pure-Python scan of the same ordered stream)."""
+    (checked against a pure-Python scan of the same ordered stream,
+    rounded as q39 rounds)."""
     from low_latency_time_series_database_tsdb_for_market_data_spark.catalog import (
         table,
     )
@@ -69,7 +89,7 @@ def test_ewma_recurrence(spark, sf_dir):
         y = None
         for r in rows:
             y = r.value if y is None else a * r.value + (1 - a) * y
-            assert abs(got[r.event_id] - round(y, 4)) <= 1e-9, r.event_id
+            assert abs(got[r.event_id] - _round4(y)) <= 1e-9, r.event_id
             checked += 1
     assert checked == len(ev)
 

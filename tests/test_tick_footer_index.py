@@ -118,10 +118,26 @@ def test_load_raises_on_unreadable_table(spark, tmp_path, monkeypatch):
         cli.run(["query", "X", "0", "9"], spark, d)
 
 
-@pytest.mark.parametrize("symbol", ["BRK/B", "A=B", "X%1"])
+def _spark_inserts(monkeypatch) -> None:
+    """Send ``insert`` to its Spark write, as on a non-local table."""
+    monkeypatch.setattr(cli, "_spark_footer_metadata", lambda spark: None)
+
+
+@pytest.mark.parametrize("symbol", ["BRK/B", "A=B", "X%1", "007"])
 def test_seq_continuity_for_escaped_symbols(spark, tmp_path, symbol):
     """Spark escapes these symbols' partition directory names; seq must
-    still continue from the stored max through every writer."""
+    still continue from the stored max through every writer, the
+    driver-side insert among them."""
+    _seq_continuity(spark, tmp_path, symbol)
+
+
+@pytest.mark.parametrize("symbol", ["BRK/B", "A=B", "X%1", "007"])
+def test_seq_continuity_with_spark_inserts(spark, tmp_path, monkeypatch, symbol):
+    _spark_inserts(monkeypatch)
+    _seq_continuity(spark, tmp_path, symbol)
+
+
+def _seq_continuity(spark, tmp_path, symbol: str) -> None:
     d = str(tmp_path / "data")
     csv = tmp_path / "ticks.csv"
     csv.write_text("timestamp,price,volume\n100,1.5,10\n101,2.5,20\nbad,row\n102,3.5,30\n")
@@ -138,6 +154,9 @@ def test_seq_continuity_for_escaped_symbols(spark, tmp_path, symbol):
     q = cli.run(["query", symbol, "50", "102"], spark, d)
     assert q[0] == "Found 5 results:"
     assert q[1] == "Timestamp: 50 Price: 1.00 Volume: 1"
+    cli.run(["insert", symbol, "300", "1.0", "1"], spark, d)
+    assert _seqs(spark, d, symbol) == list(range(10))
+    assert cli.run(["last", symbol, "1"], spark, d)[1] == "Timestamp: 300 Price: 1.00 Volume: 1"
 
 
 def test_next_seq_falls_back_without_seq_stats(spark, tmp_path, monkeypatch):
@@ -189,6 +208,73 @@ def test_insert_writes_the_list_of_rows_schema(spark, tmp_path):
     assert pq.read_table(_parquet(d / "ticks")[0]).to_pylist() == [
         {"ts": 1000, "price": 10.5, "volume": 7, "seq": 0}
     ]
+
+
+def test_interrupted_insert_is_invisible(spark, tmp_path, monkeypatch):
+    """A driver insert killed mid-write leaves only its hidden
+    ``.part-….parquet`` temp file (complete or torn): Spark's read, the
+    seq counter, ``query``, ``last``, ``maintain``'s file counts and the
+    footer listing all skip it.  An insert that fails before its rename
+    removes the temp file."""
+    d = str(tmp_path / "data")
+    for ts in (10, 20):
+        cli.run(["insert", "S", str(ts), "1.0", "1"], spark, d)
+    part = Path(cli._symbol_dir(spark, d, "S"))
+    visible = _parquet(part)
+    pq.write_table(pa.table({"ts": [15], "price": [9.0], "volume": [9], "seq": [99]}),
+                   part / ".part-00000-killed.c000.snappy.parquet")
+    torn = visible[0].read_bytes()
+    (part / ".part-00000-torn.c000.snappy.parquet").write_bytes(torn[: len(torn) // 2])
+    assert len(_parquet(part)) == 4
+    assert spark.read.parquet(str(tmp_path / "data" / "ticks")).count() == 2
+    assert catalog._parquet_files(str(tmp_path / "data" / "ticks")) == visible
+    assert cli._next_seq(spark, d, "S") == 2
+    lines = ["Timestamp: 10 Price: 1.00 Volume: 1", "Timestamp: 20 Price: 1.00 Volume: 1"]
+    assert cli.run(["query", "S", "0", "99"], spark, d) == ["Found 2 results:"] + lines
+    assert cli.run(["last", "S", "5"], spark, d) == ["Last 2 ticks for S:"] + lines
+
+    def fail(*a):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(cli.os, "replace", fail)
+    with pytest.raises(OSError, match="disk full"):
+        cli.run(["insert", "S", "30", "1.0", "1"], spark, d)
+    monkeypatch.undo()
+    assert sorted(p.name for p in part.iterdir() if p.name.startswith(".part")) == [
+        ".part-00000-killed.c000.snappy.parquet", ".part-00000-torn.c000.snappy.parquet"]
+    assert cli.run(["maintain"], spark, d) == ["Compacted 2 ticks: 2 -> 1 files"]
+    assert cli.run(["insert", "S", "30", "1.0", "1"], spark, d) == ["Inserted tick for S"]
+    assert cli.run(["last", "S", "1"], spark, d)[1:] == ["Timestamp: 30 Price: 1.00 Volume: 1"]
+    assert cli._next_seq(spark, d, "S") == 3
+
+
+def test_driver_inserts_read_like_spark_inserts(spark, tmp_path, monkeypatch):
+    """The same inserts written on the driver and by Spark's writer
+    print the same lines, whether read on the driver or through Spark,
+    for every escaped symbol, with duplicate ts; the driver's files
+    are the Spark files' twins, footer signature included."""
+    ticks = [(110, "9.5", 5), (100, "1.25", 1), (110, "2.75", 3), (125, "2.0", 2)]
+    dirs = {"driver": str(tmp_path / "driver"), "spark": str(tmp_path / "spark")}
+    for how, d in dirs.items():
+        with monkeypatch.context() as m:
+            if how == "spark":
+                _spark_inserts(m)
+            for sym in _SYMBOLS:
+                for ts, price, vol in ticks:
+                    cli.run(["insert", sym, str(ts), price, str(vol)], spark, d)
+    for sym in _SYMBOLS:
+        files = {how: _parquet(Path(cli._symbol_dir(spark, d, sym))) for how, d in dirs.items()}
+        assert len(files["driver"]) == len(files["spark"]) == len(ticks)
+        sig = {how: {catalog._footer_signature(pq.read_metadata(f)) for f in fs}
+               for how, fs in files.items()}
+        assert sig["driver"] == sig["spark"] and len(sig["driver"]) == 1
+        for argv in (["query", sym, "100", "110"], ["query", sym, "0", "99"],
+                     ["last", sym, "3"], ["last", sym, "9"]):
+            lines = {how: _both(spark, monkeypatch, argv, d) for how, d in dirs.items()}
+            got, jobs, want = lines["driver"]
+            assert (got, jobs) == (want, 0) and lines["spark"] == lines["driver"], argv
+        assert cli.run(["last", sym, "2"], spark, dirs["driver"])[1:] == [
+            "Timestamp: 110 Price: 2.75 Volume: 3", "Timestamp: 125 Price: 2.00 Volume: 2"]
 
 
 def test_compact_barrier_raises_on_short_stage(spark, tmp_path, monkeypatch):
@@ -300,11 +386,15 @@ def test_import_of_all_malformed_csv(spark, tmp_path):
 
 def test_cli_jobs_per_operation(spark, tmp_path, monkeypatch):
     """The footer index and the schema memo leave one Spark job per
-    insert, one-split import, stream drain and PointServer refresh, and
-    at most three per maintain; ``query`` and ``last`` read on the
-    driver and run none, as does a PointServer probe inside its indexed
-    slice or outside it.  A query over the driver-read cap runs its one
-    Spark job."""
+    one-split import and stream drain, and at most three per maintain.
+    ``insert`` writes its file on the driver, and ``query`` and ``last``
+    read there: none of them runs a job.  Nor does a PointServer
+    ``open()`` of a local slice under the driver-read cap, a
+    ``refresh()`` after files were only added (a delta refresh), or a
+    probe inside its indexed slice or outside it.  A query over the
+    driver-read cap runs its one Spark job; a refresh after a file was
+    rewritten in place, or after files were compacted, rebuilds the
+    index in full."""
     from pyspark.sql.streaming.readwriter import DataStreamWriter
 
     from low_latency_time_series_database_tsdb_for_market_data_spark.serving import PointServer
@@ -348,11 +438,12 @@ def test_cli_jobs_per_operation(spark, tmp_path, monkeypatch):
                           f"{tmp_path.name}-drain", run_ids)
 
     srv = PointServer(spark, str(feed.parent))
-    srv.open()
+    jobs["open"] = _jobs(spark, srv.open, f"{tmp_path.name}-open")
     shutil.copy(feed / "part-0.parquet", feed / "part-2.parquet")
     late = None
     try:
         jobs["refresh"] = _jobs(spark, srv.refresh, f"{tmp_path.name}-refresh")
+        assert (srv.stats()["delta_refreshes"], srv.stats()["full_refreshes"]) == (1, 0)
         late = PointServer(spark, str(feed.parent), lo_ns=2**62)  # probes fall outside
         late.open()
         rows: list = []
@@ -362,12 +453,22 @@ def test_cli_jobs_per_operation(spark, tmp_path, monkeypatch):
             spark, lambda: rows.extend(late.range(0, 2**61).collect()),
             f"{tmp_path.name}-out-of-slice-probe")
         assert len(rows) == 24 and late.stats()["local_reads"] == 1
+        # rewritten in place, then compacted into one file: full rebuilds
+        shutil.copy(feed / "part-0.parquet", feed / "part-1.parquet")
+        srv.refresh()
+        merged = pa.concat_tables([pq.read_table(f) for f in sorted(feed.glob("*.parquet"))])
+        for f in feed.glob("*.parquet"):
+            f.unlink()
+        pq.write_table(merged, feed / "part-c.parquet")
+        srv.refresh()
+        assert (srv.stats()["delta_refreshes"], srv.stats()["full_refreshes"]) == (1, 2)
+        assert srv.stats()["indexed_rows"] == 12
     finally:
         srv.close()
         if late is not None:
             late.close()
-    want = {"insert": 1, "query": 0, "last": 0, "query_over_cap": 1, "import": 1,
-            "drain": 1, "refresh": 1, "probe": 0, "out_of_slice_probe": 0}
+    want = {"insert": 0, "query": 0, "last": 0, "query_over_cap": 1, "import": 1,
+            "drain": 1, "open": 0, "refresh": 0, "probe": 0, "out_of_slice_probe": 0}
     assert {k: jobs[k] for k in want} == want and jobs["maintain"] <= 3, jobs
 
 
