@@ -268,6 +268,7 @@ def main() -> None:
     from low_latency_time_series_database_tsdb_for_market_data_spark.catalog import (
         events_raw,
         table,
+        ts_min_epoch_ns,
         with_ts,
     )
     from low_latency_time_series_database_tsdb_for_market_data_spark.registry import (
@@ -330,10 +331,10 @@ def main() -> None:
 
     srv = PointServer(spark, SF_DIR)
     point_cache_open_sec = srv.open()
-    probe_ns = srv.table_min_ns()
+    probe_ns = ts_min_epoch_ns(spark, f"{SF_DIR}/events.parquet")
     if probe_ns is None:
-        # footer stats absent/untrusted (e.g. a rewritten fixture):
-        # fall back to a data probe for the min ts instead of crashing
+        # the footers cannot answer (e.g. a rewritten fixture without
+        # stats): fall back to a data probe for the min ts
         from pyspark.sql import functions as F
 
         probe_ns = (

@@ -27,6 +27,16 @@ range probe, `bplus_tree.hpp:70-91`).  `ts_bound`/`ts_lit` build literals
 of the matching type so no cast ever lands on the column side of the
 comparison (a column-side cast would silently kill pushdown).
 
+One footer reader: ``footer_groups`` is the only code that reads
+row-group statistics.  It walks the files Spark lists (``_spark_listing``),
+keeps those a read of the table or of one partition scans (``_read_set``)
+and yields each non-empty row group with the raw int64 min/max of one
+column (``_row_groups``), or declines with None wherever the footers
+cannot give exactly what Spark reads.  Every footer question is answered
+from those groups: the driver-side reads (``local_rows``), the ts bounds
+(``ts_bounds_epoch_ns``) and the CLI's next seq.  A decline sends the
+caller to its Spark job.
+
 Schema memo: a ``spark.read.parquet`` without a schema runs a one-task
 job that infers the data schema from ONE footer — the first listed file
 by full path string — and the session's converter confs.  ``read_parquet``
@@ -43,6 +53,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import os
+from contextlib import contextmanager
 from pathlib import Path
 from typing import NamedTuple
 
@@ -178,24 +189,13 @@ def _parquet_files(path: str) -> list[Path] | None:
     return sorted(f for f in files if f.name.endswith(".parquet"))
 
 
-def _footer_metadatas(path: str):
-    """Parquet FileMetaData for every file Spark would read under `path`
-    (a file or a directory tree), or None when the path is missing, not
-    local, unlistable, holds no files, or lists a file whose name does
-    not end in ``.parquet`` (Spark reads it whatever its suffix, so the
-    footers of the ``.parquet`` files alone would miss its rows).  Shared
-    walk for the footer probes — they are optimizations, so every such
-    case maps to None and the caller's Spark data probe."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    try:
-        files = _spark_listing(path)
-        if not files or not all(f.name.endswith(".parquet") for f in files):
-            return None
-        return [pq.ParquetFile(f).metadata for f in sorted(files)]
-    except (OSError, pa.ArrowInvalid):  # unlistable/corrupt -> data probe
-        return None
+def file_identity(f: Path) -> tuple[int, int, int]:
+    """(size, mtime_ns, inode) of ``f``: what a rewrite in place or a
+    replace by rename changes, short of a same-size rewrite within one
+    tick of the filesystem clock.  Raises OSError when ``f`` cannot be
+    stat-ed."""
+    st = f.stat()
+    return st.st_size, st.st_mtime_ns, st.st_ino
 
 
 def input_files(df: DataFrame) -> list[Path] | None:
@@ -318,6 +318,60 @@ def _row_groups(pf, schema, col: str, no_nulls: bool,
     return out
 
 
+@contextmanager
+def footer_groups(
+    spark: SparkSession,
+    path: str,
+    schema,
+    col: str,
+    *,
+    no_nulls: bool = False,
+    partition: tuple[str, str] | None = None,
+    files: list[Path] | None = None,
+):
+    """The footer index of a local parquet table: yields every non-empty
+    row group a Spark read of ``path`` scans, with the raw int64 footer
+    min/max of ``col`` (``_Group``), or None when the footers cannot
+    give exactly what Spark reads.  No data page is read and no Spark
+    job runs.  The files stay open until the block exits, so a read of
+    the groups sees the files whose footers were read.
+
+    ``files`` is the listing Spark's relation pinned (default: Spark's
+    listing of ``path`` now); ``partition=(name, value)`` keeps one
+    partition's files, as ``_read_set`` does.  Every file must hold the
+    ``schema`` columns as ``_row_groups`` admits them, and ``no_nulls``
+    declines a ``col`` with nulls.  None also when the path is missing
+    or not local, or a file or footer cannot be read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    opened = []
+    groups = None
+    try:
+        root = local_path(path)
+        if root is not None and root.exists():
+            listing = _spark_listing(path) if files is None else files
+            read = _read_set(spark, root, listing, partition)
+            if read is not None:
+                nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "true"
+                groups = []
+                for f in sorted(read):
+                    opened.append(pq.ParquetFile(f))
+                    g = _row_groups(opened[-1], schema, col, no_nulls, nanos)
+                    if g is None:
+                        groups = None
+                        break
+                    groups += g
+    # a file or footer pyarrow cannot read: Spark reads it, or raises
+    except (OSError, pa.ArrowInvalid, pa.ArrowNotImplementedError):
+        groups = None
+    try:
+        yield groups
+    finally:
+        for pf in opened:
+            pf.close()
+
+
 def _read_groups(groups: list[_Group], schema):
     """The ``schema`` columns of ``groups``, each file's part cast to
     ``schema`` (nullable, so required and optional columns concatenate)."""
@@ -361,12 +415,11 @@ def local_rows(
     that column and only directories whose unescaped value is ``value``
     are read; without it every file must sit straight under ``path``.
     Every listed file must be named ``*.parquet``: Spark reads a file of
-    any other name too, and the footer probes (``_footer_metadatas``)
-    decline such a listing the same way.
+    any other name too.
 
     ``col`` is a physical INT64 column (an integer or a timestamp, seen
-    as its raw count) whose footer min/max prunes row groups before any
-    data is read:
+    as its raw count) whose footer min/max (``footer_groups``) prunes
+    row groups before any data is read:
 
     * ``window=(lo, hi)``: the rows with ``lo <= col <= hi``;
     * ``top=n``: the ``n`` rows with the largest ``col``, ascending.  Row
@@ -384,173 +437,108 @@ def local_rows(
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    root = local_path(path)
-    if root is None or (top is not None and top < 0):
+    if top is not None and top < 0:
         return None
     if window is not None and not all(_INT64[0] <= b <= _INT64[1] for b in window):
         return None
     schema = pa.schema([f.with_nullable(True) for f in schema])
-    opened = []
     try:
-        if not root.exists():
-            return None
-        listing = _spark_listing(path) if files is None else files
-        read = _read_set(spark, root, listing, partition)
-        if read is None:
-            return None
-        nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "true"
-        groups = []
-        for f in sorted(read):
-            opened.append(pq.ParquetFile(f))
-            g = _row_groups(opened[-1], schema, col, top is not None, nanos)
-            if g is None:
+        with footer_groups(spark, path, schema, col, no_nulls=top is not None,
+                           partition=partition, files=files) as groups:
+            if groups is None:
                 return None
-            groups += g
-        if window is not None:
-            lo, hi = window
-            groups = [g for g in groups if g.hi >= lo and g.lo <= hi]
-            if sum(g.rows for g in groups) > LOCAL_READ_MAX_ROWS:
+            if window is not None:
+                lo, hi = window
+                groups = [g for g in groups if g.hi >= lo and g.lo <= hi]
+                if sum(g.rows for g in groups) > LOCAL_READ_MAX_ROWS:
+                    return None
+                tbl = _read_groups(groups, schema)
+                key = _key(tbl, col)
+                return tbl.filter(pc.and_(pc.greater_equal(key, lo), pc.less_equal(key, hi)))
+            groups.sort(key=lambda g: g.hi, reverse=True)
+            first, rows = 0, 0
+            while first < len(groups) and rows < top:
+                rows += groups[first].rows
+                first += 1
+            if rows > LOCAL_READ_MAX_ROWS:
                 return None
-            tbl = _read_groups(groups, schema)
-            key = _key(tbl, col)
-            return tbl.filter(pc.and_(pc.greater_equal(key, lo), pc.less_equal(key, hi)))
-        groups.sort(key=lambda g: g.hi, reverse=True)
-        first, rows = 0, 0
-        while first < len(groups) and rows < top:
-            rows += groups[first].rows
-            first += 1
-        if rows > LOCAL_READ_MAX_ROWS:
-            return None
-        tbl = _read_groups(groups[:first], schema)
-        if top and rows >= top:
-            keys = _key(tbl, col).to_numpy()
-            t = np.partition(keys, rows - top)[rows - top]
-            more = [g for g in groups[first:] if g.hi >= t]
-            if rows + sum(g.rows for g in more) > LOCAL_READ_MAX_ROWS:
-                return None
-            tbl = pa.concat_tables([tbl, _read_groups(more, schema)])
-        tbl = tbl.sort_by([(col, "descending")]).slice(0, top)
-        return tbl.sort_by([(col, "ascending")])
-    # a file, footer or page pyarrow cannot read (or decode): Spark reads
-    # it, or raises for it
+            tbl = _read_groups(groups[:first], schema)
+            if top and rows >= top:
+                keys = _key(tbl, col).to_numpy()
+                t = np.partition(keys, rows - top)[rows - top]
+                more = [g for g in groups[first:] if g.hi >= t]
+                if rows + sum(g.rows for g in more) > LOCAL_READ_MAX_ROWS:
+                    return None
+                tbl = pa.concat_tables([tbl, _read_groups(more, schema)])
+            tbl = tbl.sort_by([(col, "descending")]).slice(0, top)
+            return tbl.sort_by([(col, "ascending")])
+    # a page pyarrow cannot read (or decode): Spark reads it, or raises
+    # for it
     except (OSError, pa.ArrowInvalid, pa.ArrowNotImplementedError):
         return None
-    finally:
-        for pf in opened:
-            pf.close()
 
 
-def _utc_naive(v) -> _dt.datetime | None:
-    """A timestamp statistic as a naive UTC datetime, or None when the
-    statistic is not a datetime at all."""
-    if not isinstance(v, _dt.datetime):
-        return None
-    if v.tzinfo is not None:  # adjusted-to-UTC stats are tz-aware
-        v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-    return v
+# nanoseconds per unit of a timestamp column's raw count
+_NS_PER = {"us": 1000, "ns": 1}
 
 
-def ts_bounds_epoch_ns(path: str, col: str = "ts") -> tuple[int, int] | None:
-    """(min, max) ts as UTC epoch nanos read from parquet FOOTER
-    statistics in one walk — no data scan, no Spark job.  Row-group
-    min/max stats are this engine's index (SURVEY §1.3); a point-probe
-    that only needs a scalar bound should read the index footers exactly
-    like the reference descends its B+ tree root
-    (`bplus_tree.hpp:95-106`), not run an aggregation job.
+def ts_bounds_epoch_ns(spark: SparkSession, path: str,
+                       col: str = "ts") -> tuple[int, int] | None:
+    """(min, max) ts as UTC epoch nanos from the footer index
+    (``footer_groups``): the raw min/max of the ``ts`` row groups,
+    scaled by the column's unit — micros ×1000, nanos as stored (the
+    raw count Spark's nanosAsLong reads).  No data scan, no Spark job:
+    a probe that needs only a scalar bound reads the index footers as
+    the reference descends its B+ tree root (`bplus_tree.hpp:95-106`).
 
-    Returns None (caller falls back to a Spark agg probe) when any row
-    group lacks stats, for the int64-nanos physical layout — pyarrow
-    converts its stats to datetimes whose sub-microsecond behaviour is
-    not worth trusting for an exactness-gated literal — or when the path
-    is not locally listable (object stores): the probe is an
-    optimization, so every failure degrades to the data probe."""
+    None (the caller runs a Spark agg) when the footers cannot answer:
+    the walk declines, the table holds no rows, or the column is not a
+    micros or nanos timestamp of one type in every file.  Raw counts of
+    adjusted-to-UTC files are UTC already; NTZ counts are read as UTC,
+    as the catalog's UTC-pinned session reads them."""
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    mds = _footer_metadatas(path)
-    if mds is None:
-        return None
-    lo: _dt.datetime | None = None
-    hi: _dt.datetime | None = None
     try:
-        for md in mds:
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            if col not in idx:
-                return None
-            lt = str(md.schema.column(idx[col]).logical_type)
-            if not lt.startswith("Timestamp(") or "timeUnit=microseconds" not in lt:
-                return None  # nanos/other layouts: let Spark probe the data
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx[col]).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                mn, mx = _utc_naive(st.min), _utc_naive(st.max)
-                if mn is None or mx is None:
-                    return None
-                lo = mn if lo is None or mn < lo else lo
-                hi = mx if hi is None or mx > hi else hi
-    # what decoding a malformed statistic can raise: a value past
-    # datetime's year-9999 range fails the conversion with OverflowError
-    # or ValueError, and bytes pyarrow cannot decode raise ArrowException.
-    # All of them mean "the footers cannot answer", never a wrong bound;
-    # any other error is a bug and propagates
-    except (OverflowError, ValueError, pa.ArrowException):
+        files = _spark_listing(path)
+        field = pq.read_schema(files[0]).field(col) if files else None
+    except (OSError, KeyError, pa.ArrowInvalid, pa.ArrowNotImplementedError):
         return None
-    if lo is None or hi is None:
+    if field is None or not pa.types.is_timestamp(field.type) or field.type.unit not in _NS_PER:
         return None
-    us = _dt.timedelta(microseconds=1)
-    return ((lo - _EPOCH) // us) * 1000, ((hi - _EPOCH) // us) * 1000
+    with footer_groups(spark, path, pa.schema([field]), col, files=files) as groups:
+        if not groups:
+            return None
+        scale = _NS_PER[field.type.unit]
+        return min(g.lo for g in groups) * scale, max(g.hi for g in groups) * scale
 
 
-def ts_min_epoch_ns(path: str, col: str = "ts") -> int | None:
-    """Minimum ts as UTC epoch nanos from the footer statistics, or None
+def ts_min_epoch_ns(spark: SparkSession, path: str, col: str = "ts") -> int | None:
+    """Minimum ts as UTC epoch nanos from the footer index, or None
     (see :func:`ts_bounds_epoch_ns`)."""
-    bounds = ts_bounds_epoch_ns(path, col)
+    bounds = ts_bounds_epoch_ns(spark, path, col)
     return None if bounds is None else bounds[0]
 
 
-def ts_max_epoch_ns(path: str, col: str = "ts") -> int | None:
-    """Maximum ts as UTC epoch nanos from the footer statistics, or None
-    (see :func:`ts_bounds_epoch_ns`)."""
-    bounds = ts_bounds_epoch_ns(path, col)
-    return None if bounds is None else bounds[1]
-
-
 def parquet_num_rows(path: str) -> int | None:
-    """Exact row count from parquet footer metadata — no scan, no Spark
-    job (None if the path holds no parquet files).  Footers are the
-    catalog's statistics store; planning-time scalars (block counts,
-    quantizer k) should read them, not run count jobs."""
-    mds = _footer_metadatas(path)
-    if mds is None:
-        return None
-    return sum(md.num_rows for md in mds)
+    """Exact row count from the footers' ``num_rows`` — no scan, no
+    Spark job.  None when the footers cannot answer: the path is
+    missing, not local or unlistable, holds no files, or lists a file
+    pyarrow cannot read or whose name does not end in ``.parquet``
+    (Spark reads it whatever its suffix, so the ``.parquet`` footers
+    alone would miss its rows).  Planning-time scalars (block counts,
+    quantizer k) read it instead of running count jobs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-
-def parquet_int_max(path: str, col: str) -> int | None:
-    """Maximum of integer column ``col`` from parquet footer statistics —
-    no scan, no Spark job.  None when the footers cannot answer: the
-    path is missing, not local or holds no rows, a file lacks ``col`` or
-    stores it as anything but a plain integer, or a non-empty row group
-    has no min/max stats.  The caller then runs its Spark aggregation."""
-    mds = _footer_metadatas(path)
-    if mds is None:
-        return None
-    hi: int | None = None
-    for md in mds:
-        names = [md.schema.column(i).name for i in range(md.num_columns)]
-        if col not in names:
+    try:
+        files = _spark_listing(path)
+        if not files or not all(f.name.endswith(".parquet") for f in files):
             return None
-        i = names.index(col)
-        for rg in range(md.num_row_groups):
-            if md.row_group(rg).num_rows == 0:
-                continue
-            st = md.row_group(rg).column(i).statistics
-            if st is None or not st.has_min_max or not isinstance(st.max, int):
-                return None  # no stats, or a date/time logical type
-            hi = st.max if hi is None else max(hi, st.max)
-    return hi
+        return sum(pq.read_metadata(f).num_rows for f in files)
+    except (OSError, pa.ArrowInvalid):
+        return None
 
 
 # fingerprint of a path whose files cannot be stat-ed: distinct from any
@@ -560,24 +548,20 @@ UNSTATABLE = ("<unstat-able>",)
 
 def parquet_fingerprint(path: str) -> tuple:
     """Cheap identity of a parquet file/dir: sorted (name, size,
-    mtime_ns) of every file Spark lists, whatever its suffix — os.stat
-    only, no footer reads, no Spark job.  The verdicts' ``session_cache``
-    entries (the verdict model, the corpus signature table) pass it as
-    their fingerprint, so a table regenerated in place within a
-    long-lived session rebuilds them instead of serving stale training,
-    and frees what it replaces.  A path that cannot be listed or stat-ed
-    (or is not local) fingerprints as ``UNSTATABLE``, never as the
-    ``()`` of an empty dir, so a readability blip cannot alias a
-    fingerprinted key."""
+    mtime_ns, inode) of every file Spark lists, whatever its suffix
+    (``file_identity``) — os.stat only, no footer reads, no Spark job.
+    The verdicts' ``session_cache`` entries (the verdict model, the
+    corpus signature table) pass it as their fingerprint, so a table
+    regenerated in place within a long-lived session rebuilds them
+    instead of serving stale training, and frees what it replaces.  A
+    path that cannot be listed or stat-ed (or is not local)
+    fingerprints as ``UNSTATABLE``, never as the ``()`` of an empty
+    dir, so a readability blip cannot alias a fingerprinted key."""
     try:
         files = _spark_listing(path)
         if files is None:
             return UNSTATABLE
-        return tuple(
-            (f.name, st.st_size, st.st_mtime_ns)
-            for f in sorted(files)
-            for st in (f.stat(),)
-        )
+        return tuple((f.name, *file_identity(f)) for f in sorted(files))
     except OSError:
         return UNSTATABLE
 

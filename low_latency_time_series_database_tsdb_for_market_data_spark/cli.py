@@ -25,19 +25,19 @@ writer.  Timestamps are epoch seconds held as int64, exactly the
 reference's opaque-u64 model (`timeseries_db.hpp:19-24`).
 
 Index reads: the parquet footers are this table's index (SURVEY §1.3), as
-the B+ tree is the reference's.  The next arrival seq is read from the
-seq statistics in the footers under the symbol's partition directory,
-and `maintain` takes its row counts from footer ``num_rows`` — neither
-runs a Spark job.  ``query`` and ``last`` read on the driver
-(``catalog.local_rows``): the row groups of the symbol's partition whose
-footer ts range meets the window, or those with the largest footer seq,
-are read with pyarrow, filtered or cut to n and ordered there.  Only
-inputs the footers cannot serve fall back to Spark: a non-local path, a
-row group without stats, a footer that cannot be read, a listed file not
-named ``*.parquet`` or not directly in a ``symbol=`` directory, a file
-whose columns differ from TICK_SCHEMA, a bound outside int64, a
-negative n (Spark raises), or more than ``catalog.LOCAL_READ_MAX_ROWS``
-rows in the kept row groups.
+the B+ tree is the reference's, and one walk reads them
+(``catalog.footer_groups``).  The next arrival seq is the largest footer
+seq max of the symbol's partition, and `maintain` takes its row counts
+from footer ``num_rows`` — neither runs a Spark job.  ``query`` and
+``last`` read on the driver (``catalog.local_rows``): the row groups of
+the symbol's partition whose footer ts range meets the window, or those
+with the largest footer seq, are read with pyarrow, filtered or cut to n
+and ordered there.  Only inputs the footers cannot serve fall back to
+Spark: a non-local path, a row group without stats, a footer that cannot
+be read, a listed file not named ``*.parquet`` or not directly in a
+``symbol=`` directory, a file whose columns differ from TICK_SCHEMA, a
+bound outside int64, a negative n (Spark raises), or more than
+``catalog.LOCAL_READ_MAX_ROWS`` rows in the kept row groups.
 
 Inserts are written on the driver too: on a local table ``insert``
 writes its rows with pyarrow as one parquet file in the symbol's
@@ -120,24 +120,27 @@ def _next_seq(spark: SparkSession, data_dir: str, symbol: str) -> int:
     """Next arrival seq for ``symbol``: one past its stored max, 0 for a
     new symbol or a missing table.
 
-    The max comes from the footer index — the seq min/max statistics of
-    the parquet files under the symbol's partition directory
-    (``catalog.parquet_int_max``), the way the reference's writer keeps
-    its counter in memory instead of scanning.  No Spark job runs.  The
-    directory is named by Spark's own escaping, so a symbol like
-    ``BRK/B`` is found and its seq does not restart at 0.  Fallback: when
-    the footers cannot answer (a row group without stats, a non-local
-    path), the max(seq) aggregation over the partition-pruned scan
-    answers instead."""
-    from .catalog import local_path, parquet_int_max
+    The max is the largest footer max of the ``seq`` row groups in the
+    symbol's partition (``catalog.footer_groups``, the walk behind the
+    driver reads), the way the reference's writer keeps its counter in
+    memory instead of scanning: no data page is read and no Spark job
+    runs.  The directory is named by Spark's own escaping, so a symbol
+    like ``BRK/B`` is found and its seq does not restart at 0.
+    Fallback: where the footers cannot answer (the driver reads'
+    triggers: a row group without stats, a non-local path, an
+    unexpected file or column), the max(seq) aggregation over the
+    partition-pruned scan answers instead."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    part = _symbol_dir(spark, data_dir, symbol)
-    local = local_path(part)
+    from .catalog import footer_groups, local_path
+
+    local = local_path(_symbol_dir(spark, data_dir, symbol))
     if local is not None and not local.exists():
         return 0
-    hi = parquet_int_max(part, "seq")
-    if hi is None:
-        hi = _probe_max_seq(spark, data_dir, symbol)
+    with footer_groups(spark, _table_path(data_dir), to_arrow_schema(_DATA_SCHEMA), "seq",
+                       partition=("symbol", symbol)) as groups:
+        his = None if groups is None else [g.hi for g in groups]
+    hi = _probe_max_seq(spark, data_dir, symbol) if his is None else max(his, default=None)
     return 0 if hi is None else hi + 1
 
 

@@ -122,15 +122,16 @@ def q05_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The probe itself is the INDEX read, not a data scan: parquet footer
     row-group statistics give the table min directly
-    (`catalog.ts_min_epoch_ns`) — the same metadata the scan uses for
-    pruning, so no Spark job runs for the scalar (measured: −2 s off the
-    cold-session point latency at sf0.1).  Fallback for stat-less or
-    int64-nanos layouts is a layout-neutral agg probe that returns epoch
+    (`catalog.ts_min_epoch_ns`, exact in every ts layout) — the same
+    metadata the scan uses for pruning, so no Spark job runs for the
+    scalar (measured: −2 s off the cold-session point latency at sf0.1).
+    Fallback where the footers cannot answer (no stats, a non-local or
+    nested table) is a layout-neutral agg probe that returns epoch
     integers, never a Python datetime — a collected TimestampType
     datetime goes through the driver's OS timezone, which would corrupt
     the literal on any non-UTC host."""
     raw = events_raw(spark, sf_dir)
-    epoch_ns = ts_min_epoch_ns(f"{sf_dir}/events.parquet")
+    epoch_ns = ts_min_epoch_ns(spark, f"{sf_dir}/events.parquet")
     if epoch_ns is None:
         if ts_is_long(raw):
             epoch_ns = raw.agg(F.min("ts")).collect()[0][0]

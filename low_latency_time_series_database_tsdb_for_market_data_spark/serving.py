@@ -28,15 +28,13 @@ A probe takes one of three paths, counted apart in ``stats()``:
   — prune the files the relation lists to the row groups that meet the
   window, which pyarrow reads on the driver (``catalog.local_rows``);
   the rows are converted to the served schema as ``with_ts`` converts
-  them and handed back as a ``LocalRelation`` too, so no job runs;
+  them and handed back as a ``LocalRelation`` too, so no job runs.  A
+  window outside the table keeps no row group and reads nothing;
 * parquet (``parquet_fallbacks``): a Spark scan of the parquet table,
   when the driver cannot give exactly its rows (a non-local path, a
   row group without stats, an unexpected file or column, a timestamp
   layout in a non-UTC session, or more than
   ``catalog.LOCAL_READ_MAX_ROWS`` rows in the kept row groups).
-
-A window outside the footer ts bounds answers empty first
-(``footer_empty``).
 
 Keys and bounds follow ``catalog.ts_bound`` exactly, so an in-slice probe
 returns the rows the parquet path returns: in the int64-nanos layout the
@@ -95,10 +93,10 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from . import session_cache
 from .catalog import (
     events_raw,
+    file_identity,
     input_files,
     local_rows,
     ts_bound,
-    ts_bounds_epoch_ns,
     ts_is_long,
     with_ts,
 )
@@ -123,7 +121,6 @@ class _View(NamedTuple):
     raw: DataFrame  # the parquet relation: the fallback path
     schema: T.StructType  # served schema, with_ts(raw).schema
     ns: bool  # int64-nanos layout: keys are raw ts
-    bounds: tuple[int, int] | None  # footer ts bounds, epoch ns
     files: list | None  # the files ``raw`` lists, when all are local
     index: _Index | None  # None until open(), and after close()
 
@@ -167,7 +164,7 @@ class PointServer:
         self._symbols = list(symbols) if symbols else None
         self._symbol_col = symbol_col
         self._counts = dict.fromkeys(
-            ("index_hits", "footer_empty", "local_reads", "parquet_fallbacks",
+            ("index_hits", "local_reads", "parquet_fallbacks",
              "delta_refreshes", "full_refreshes"), 0)
         self._lock = threading.Lock()
         self._open_s: float | None = None
@@ -176,12 +173,9 @@ class PointServer:
         self._view = self._resolve()
 
     def _resolve(self) -> _View:
-        """The parquet relation plus its footer ts bounds, read AFTER the
-        relation is listed: an append between the two only widens the
-        bounds, so the known-empty test below never hides a listed row."""
+        """The parquet relation and the files it lists, with no index."""
         raw = events_raw(self._spark, self._sf_dir)
-        return _View(raw, with_ts(raw).schema, ts_is_long(raw),
-                     ts_bounds_epoch_ns(self._path), input_files(raw), None)
+        return _View(raw, with_ts(raw).schema, ts_is_long(raw), input_files(raw), None)
 
     def _window(self, view: _View, lo_ns: int | None, hi_ns: int | None) -> tuple[int, int]:
         """``ts_bound``'s window for ``[lo_ns, hi_ns]`` in raw ts units
@@ -217,21 +211,25 @@ class PointServer:
         part = part.set_column(i, served.field("ts"), ts.cast(served.field("ts").type))
         return part.cast(served).append_column(_KEY, key)
 
+    def _spark_slice(self, raw: DataFrame, lo_ns: int | None, hi_ns: int | None,
+                     symbols: list[str] | None) -> DataFrame:
+        """``raw``'s rows with a ts in ``ts_bound``'s window for
+        ``[lo_ns, hi_ns]`` (None: an open end) and, when ``symbols`` is
+        non-empty, one of ``symbols``: the Spark read behind both the
+        parquet probe path and the collected build."""
+        out = raw.where(F.col("ts").isNotNull())
+        if lo_ns is not None:
+            out = out.where(F.col("ts") >= ts_bound(raw, lo_ns))
+        if hi_ns is not None:
+            out = out.where(F.col("ts") <= ts_bound(raw, hi_ns, upper=True))
+        if symbols:
+            out = out.where(F.col(self._symbol_col).isin(list(symbols)))
+        return out
+
     def _collect(self, view: _View) -> pa.Table:
         """The slice with its probe key, collected by Spark (one job):
         the build wherever the driver read declines."""
-        raw = view.raw
-        slice_df = raw.where(F.col("ts").isNotNull())
-        if self._lo is not None:
-            slice_df = slice_df.where(F.col("ts") >= ts_bound(raw, self._lo))
-        if self._hi is not None:
-            slice_df = slice_df.where(
-                F.col("ts") <= ts_bound(raw, self._hi, upper=True)
-            )
-        if self._symbols:
-            slice_df = slice_df.where(
-                F.col(self._symbol_col).isin(self._symbols)
-            )
+        slice_df = self._spark_slice(view.raw, self._lo, self._hi, self._symbols)
         # the served ts in micros: with_ts casts NTZ to timestamp the same way
         key = F.col("ts") if view.ns else F.unix_micros(F.col("ts").cast("timestamp"))
         return with_ts(slice_df.withColumn(_KEY, key)).toArrow()
@@ -312,10 +310,6 @@ class PointServer:
             return False
         return True
 
-    def table_min_ns(self) -> int | None:
-        bounds = self._view.bounds
-        return None if bounds is None else bounds[0]
-
     def point(
         self, epoch_ns: int, symbols: list[str] | None = None
     ) -> DataFrame:
@@ -331,27 +325,12 @@ class PointServer:
             self._count("index_hits")
             part = self._lookup(view, lo_ns, hi_ns, symbols)
             return self._spark.createDataFrame(part, view.schema)
-        if view.bounds is not None and (
-            hi_ns // 1000 < view.bounds[0] // 1000
-            or lo_ns // 1000 > view.bounds[1] // 1000
-        ):
-            # the window misses every row group's stats: the parquet
-            # path would read nothing, so answer without a job
-            self._count("footer_empty")
-            empty = to_arrow_schema(view.schema).empty_table()
-            return self._spark.createDataFrame(empty, view.schema)
         part = self._local(view, lo_ns, hi_ns, symbols)
         if part is not None:
             self._count("local_reads")
             return self._spark.createDataFrame(part, view.schema)
         self._count("parquet_fallbacks")
-        out = view.raw.where(
-            (F.col("ts") >= ts_bound(view.raw, lo_ns))
-            & (F.col("ts") <= ts_bound(view.raw, hi_ns, upper=True))
-        )
-        if symbols:
-            out = out.where(F.col(self._symbol_col).isin(list(symbols)))
-        return with_ts(out)
+        return with_ts(self._spark_slice(view.raw, lo_ns, hi_ns, symbols))
 
     def _lookup(
         self, view: _View, lo_ns: int, hi_ns: int, symbols: list[str] | None
@@ -385,11 +364,11 @@ class PointServer:
             self._counts[kind] += 1
 
     def stats(self) -> dict:
-        """Probe counters since construction — ``index_hits`` (served
-        from the index), ``footer_empty`` (outside the footer ts bounds,
-        answered empty without a job), ``local_reads`` (read on the
-        driver from the footer-pruned row groups, no job),
-        ``parquet_fallbacks`` — and refresh counters, ``delta_refreshes``
+        """Probe counters since construction, one per probe path —
+        ``index_hits`` (served from the index), ``local_reads`` (read on
+        the driver from the footer-pruned row groups, no job; a window
+        outside the table among them) and ``parquet_fallbacks`` — and
+        refresh counters, ``delta_refreshes``
         (only added files read) and ``full_refreshes``; plus the rows the
         index holds, the slice rows the last refresh read into it
         (``refresh_rows_read``: the added files' on a delta refresh, all
@@ -410,9 +389,9 @@ class PointServer:
     def refresh(self) -> float:
         """Bring the index up to date after the underlying table changed
         (append/compaction/retention); a long-lived server calls this
-        from its ingest hook.  Re-resolves the datasource (fresh file
-        listing and footer bounds; the schema comes from the catalog's
-        memo, so no inference job), then either
+        from its ingest hook.  Re-resolves the datasource (a fresh file
+        listing; the schema comes from the catalog's memo, so no
+        inference job), then either
 
         * delta: when every file the index was read from is still
           listed with the size, mtime and inode it had, reads only the
@@ -453,14 +432,11 @@ class PointServer:
 
 
 def _identity(files: list[Path] | None) -> dict[Path, tuple[int, int, int]] | None:
-    """(size, mtime_ns, inode) of each of ``files``: what a rewrite in
-    place or a replace by rename changes, short of a same-size rewrite
-    within one tick of the filesystem clock; None for a listing that is
-    not local, or a file that cannot be stat-ed."""
+    """``catalog.file_identity`` of each of ``files``; None for a listing
+    that is not local, or a file that cannot be stat-ed."""
     if files is None:
         return None
     try:
-        return {f: (st.st_size, st.st_mtime_ns, st.st_ino)
-                for f in files for st in (f.stat(),)}
+        return {f: file_identity(f) for f in files}
     except OSError:
         return None

@@ -101,26 +101,38 @@ def test_range_filter_matches_and_pushes_down_both_layouts(spark, layouts):
     assert got["ns"] == got["us"] == got["us_utc"] == [1, 2]
 
 
-def test_point_probe_matches_both_layouts(spark, layouts):
+def test_point_probe_matches_both_layouts(spark, layouts, monkeypatch):
+    """q05's min-ts probe reads the footer index with no Spark job in
+    every layout (raw ns, NTZ micros, adjusted-to-UTC micros); with the
+    walk declined, its agg fallback runs Spark jobs and finds the same
+    row."""
+    import contextlib
+
+    from low_latency_time_series_database_tsdb_for_market_data_spark import catalog
     from low_latency_time_series_database_tsdb_for_market_data_spark.registry import (
         load_all,
     )
 
     q05 = load_all()["q05_point_lookup"].fn
-    got = {
-        unit: sorted(r.event_id for r in q05(spark, d).collect())
-        for unit, d in layouts.items()
-    }
-    # ns takes the Spark-agg fallback; us reads NTZ footer stats; us_utc
-    # reads TZ-AWARE footer stats (the astimezone branch) — all one row
-    assert got["ns"] == got["us"] == got["us_utc"] == [0]
+    for declined in (False, True):
+        if declined:
+            monkeypatch.setattr(catalog, "footer_groups",
+                                lambda *a, **k: contextlib.nullcontext(None))
+        got, jobs = {}, {}
+        for unit, d in layouts.items():
+            events_raw(spark, d)  # the relation, resolved before counting
+            built = []
+            jobs[unit] = _jobs(spark, lambda: built.append(q05(spark, d)),
+                               f"q05-probe-{unit}-{declined}")
+            got[unit] = sorted(r.event_id for r in built[0].collect())
+        assert got["ns"] == got["us"] == got["us_utc"] == [0]
+        assert all((n > 0) == declined for n in jobs.values()), (declined, jobs)
 
 
-def test_footer_stats_helpers_both_layouts(layouts, tmp_path):
-    """The planning-time footer readers: exact num_rows for any layout;
-    min-ts only for the micros layout (the nanos layout must return None
-    so callers take the Spark-agg fallback q05's both-layout test
-    exercises), and None again for paths with no parquet files."""
+def test_footer_stats_helpers_both_layouts(spark, layouts, tmp_path):
+    """The planning-time footer readers: exact num_rows and min-ts for
+    every layout (the nanos layout's min is its exact raw ns), and None
+    for paths with no parquet files."""
     from low_latency_time_series_database_tsdb_for_market_data_spark.catalog import (
         parquet_num_rows,
         ts_min_epoch_ns,
@@ -130,14 +142,14 @@ def test_footer_stats_helpers_both_layouts(layouts, tmp_path):
         assert parquet_num_rows(f"{d}/events.parquet") == len(_ROWS_US)
     for unit in ("us", "us_utc"):  # NTZ and tz-aware stats, same instant
         assert (
-            ts_min_epoch_ns(f"{layouts[unit]}/events.parquet")
+            ts_min_epoch_ns(spark, f"{layouts[unit]}/events.parquet")
             == (_BASE_US - 1) * 1000
         )
-    assert ts_min_epoch_ns(f"{layouts['ns']}/events.parquet") is None
+    assert ts_min_epoch_ns(spark, f"{layouts['ns']}/events.parquet") == (_BASE_US - 1) * 1000
     empty = tmp_path / "empty"
     empty.mkdir()
     assert parquet_num_rows(str(empty)) is None
-    assert ts_min_epoch_ns(str(empty)) is None
+    assert ts_min_epoch_ns(spark, str(empty)) is None
 
 
 def test_streaming_ingest_both_layouts(spark, layouts, tmp_path):

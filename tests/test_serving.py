@@ -15,8 +15,8 @@ from pyspark.sql import functions as F
 from low_latency_time_series_database_tsdb_for_market_data_spark import catalog
 from low_latency_time_series_database_tsdb_for_market_data_spark.catalog import (
     events_raw,
+    ts_bounds_epoch_ns,
     ts_min_epoch_ns,
-    ts_max_epoch_ns,
 )
 from low_latency_time_series_database_tsdb_for_market_data_spark.registry import (
     load_all,
@@ -63,11 +63,12 @@ def test_point_server_matches_q05(spark):
     srv = PointServer(spark, SF)
     try:
         srv.open()
-        got = _sorted(srv.point(srv.table_min_ns()))
+        lo = ts_min_epoch_ns(spark, f"{SF}/events.parquet")
+        got = _sorted(srv.point(lo))
         want = _sorted(reg["q05_point_lookup"].fn(spark, SF))
         assert_df_equal(got, want, name="server point vs q05")
         # the in-slice probe really serves from the index, with no job
-        _assert_local(spark, srv.point(srv.table_min_ns()))
+        _assert_local(spark, srv.point(lo))
     finally:
         srv.close()
 
@@ -86,9 +87,9 @@ def test_range_matches_q04_and_footer_bounds(spark):
         got = _sorted(srv.range(_T1_NS, _T2_NS))
         want = _sorted(reg["q04_range_scan"].fn(spark, SF))
         assert_df_equal(got, want, name="server range vs q04")
-        # footer max twin agrees with the data
-        mx = ts_max_epoch_ns(f"{SF}/events.parquet")
-        if mx is not None:
+        # the footer max agrees with the data
+        bounds = ts_bounds_epoch_ns(spark, f"{SF}/events.parquet")
+        if bounds is not None:
             raw = events_raw(spark, SF)
             from low_latency_time_series_database_tsdb_for_market_data_spark.catalog import (  # noqa: E501
                 with_ts,
@@ -99,7 +100,7 @@ def test_range_matches_q04_and_footer_bounds(spark):
                 .agg(F.max(F.unix_micros("ts")))
                 .collect()[0][0]
             )
-            assert mx == data_max * 1000
+            assert bounds[1] == data_max * 1000
     finally:
         srv.close()
 
@@ -109,7 +110,7 @@ def test_probe_outside_cached_slice_falls_back(spark, monkeypatch):
     probe correctly: by a driver read of the footer-pruned row groups
     (no job), or over the driver read's cap by the parquet path."""
     reg = load_all()
-    lo = ts_min_epoch_ns(f"{SF}/events.parquet")
+    lo = ts_min_epoch_ns(spark, f"{SF}/events.parquet")
     srv = PointServer(spark, SF, lo_ns=lo + 10**15)  # index starts later
     try:
         srv.open()
@@ -211,7 +212,7 @@ def test_refresh_picks_up_externally_appended_rows(spark, tmp_path):
     srv = PointServer(spark, live)
     try:
         srv.open()
-        lo = srv.table_min_ns()
+        lo = ts_min_epoch_ns(spark, f"{live}/events.parquet")
         before = srv.point(lo).count()
         # external writer: duplicate a part file at the filesystem level
         # (no Spark write path, no refreshByPath)
@@ -334,16 +335,16 @@ def test_in_slice_probes_match_parquet_path(spark, dup_layouts, unit):
 
 
 def test_stats_count_a_mixed_probe_sequence(spark, dup_layouts, monkeypatch):
-    """Index hits, footer-answered empties, driver reads and parquet
-    fallbacks are counted apart; a window outside the footer ts bounds
-    answers empty, equal to the parquet path, without a Spark job."""
+    """Index hits, driver reads and parquet fallbacks are counted apart;
+    a window outside the table is a driver read that answers empty,
+    equal to the parquet path, without a Spark job."""
     d = dup_layouts["us"]
     srv = PointServer(spark, d, lo_ns=_B_NS, hi_ns=_B_NS + _DAY_NS)
-    assert srv.stats() == {"index_hits": 0, "footer_empty": 0, "local_reads": 0,
+    assert srv.stats() == {"index_hits": 0, "local_reads": 0,
                            "parquet_fallbacks": 0, "delta_refreshes": 0,
                            "full_refreshes": 0, "indexed_rows": 0,
                            "refresh_rows_read": None, "open_s": None, "refresh_s": None}
-    assert srv.table_min_ns() == _B_NS - 1000
+    assert ts_min_epoch_ns(spark, f"{d}/events.parquet") == _B_NS - 1000
     try:
         srv.open()
         srv.point(_B_NS).collect()                      # hit
@@ -365,9 +366,9 @@ def test_stats_count_a_mixed_probe_sequence(spark, dup_layouts, monkeypatch):
         srv.refresh()
         st = srv.stats()
         assert st["open_s"] > 0 and st["refresh_s"] > 0
-        assert {k: st[k] for k in ("index_hits", "footer_empty", "local_reads",
+        assert {k: st[k] for k in ("index_hits", "local_reads",
                                    "parquet_fallbacks", "indexed_rows")} == {
-            "index_hits": 2, "footer_empty": 2, "local_reads": 1, "parquet_fallbacks": 1,
+            "index_hits": 2, "local_reads": 3, "parquet_fallbacks": 1,
             "indexed_rows": 6}
         # nothing changed: a delta refresh that reads no file
         assert (st["delta_refreshes"], st["full_refreshes"], st["refresh_rows_read"]) == (1, 0, 0)
@@ -407,16 +408,17 @@ def test_stats_survive_concurrent_probes(spark, dup_layouts):
 
 
 def test_nanos_layout_has_no_footer_shortcut(spark, dup_layouts, monkeypatch):
-    """The int64-nanos layout has no trusted footer bounds, so a probe
-    outside the table is no footer-answered empty: the driver read
-    prunes every row group (no job), and with the driver read declined
-    the parquet path finds nothing."""
+    """The int64-nanos layout's footer bounds are its exact raw ns, and
+    a probe outside the table takes no shortcut past the three probe
+    paths: the driver read prunes every row group (no job), and with the
+    driver read declined the parquet path finds nothing."""
     from low_latency_time_series_database_tsdb_for_market_data_spark import serving
 
     srv = PointServer(spark, dup_layouts["ns"], lo_ns=_B_NS)
     try:
         srv.open()
-        assert srv.table_min_ns() is None
+        assert ts_bounds_epoch_ns(spark, f"{dup_layouts['ns']}/events.parquet") == (
+            _B_NS - 1000, _B_NS + _DAY_NS)
         q = srv.range(0, _B_NS - 2000)
         _assert_local(spark, q)
         assert q.collect() == []
@@ -426,7 +428,7 @@ def test_nanos_layout_has_no_footer_shortcut(spark, dup_layouts, monkeypatch):
         assert q.collect() == []
         assert srv.stats()["local_reads"] == 1
         assert srv.stats()["parquet_fallbacks"] == 1
-        assert srv.stats()["footer_empty"] == 0
+        assert "footer_empty" not in srv.stats()
     finally:
         srv.close()
 
@@ -452,10 +454,14 @@ def test_out_of_slice_probes_match_parquet_path(spark, dup_layouts, unit):
             assert _plan(got).startswith("LocalTableScan"), (unit, lo, hi, syms)
             assert sorted(got.collect()) == sorted(want.collect()), (unit, lo, hi, syms)
         st = [s.stats() for s in (late, by_sym)]
-        assert sum(x["local_reads"] + x["footer_empty"] for x in st) == len(cases)
+        assert sum(x["local_reads"] for x in st) == len(cases)
         assert sum(x["local_reads"] for x in st) > 0
         assert sum(x["parquet_fallbacks"] + x["index_hits"] for x in st) == 0
         _assert_local(spark, late.range(_B_NS - 1000, _B_NS))
+        # windows wholly before and after the table: empty, with no job
+        for lo, hi in [(0, _B_NS - 2000), (_B_NS + 2 * _DAY_NS, 2**62)]:
+            _assert_local(spark, late.range(lo, hi))
+            assert late.range(lo, hi).collect() == [], (unit, lo, hi)
     finally:
         for srv in (late, by_sym):
             srv.close()

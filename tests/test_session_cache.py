@@ -63,6 +63,29 @@ def test_cold_even_half_state_counts_each_build_once(spark, own_sf_dir):
     assert sum(spent.values()) <= wall
 
 
+def test_even_half_state_pins_each_field_once(spark, own_sf_dir, monkeypatch):
+    """The build pins bands and members already; the state keeps those
+    checkpoints rather than checkpointing them again, so after a cold
+    build and one count per field, before any GC, each field's rows are
+    held by one persisted RDD: the state's bands and members RDDs are
+    the build's own."""
+    from low_latency_time_series_database_tsdb_for_market_data_spark.operators.llm import (
+        incremental,
+    )
+
+    built = []
+    real = incremental.dedup_state_build
+    monkeypatch.setattr(incremental, "dedup_state_build",
+                        lambda *a, **k: built.append(real(*a, **k)) or built[-1])
+    state = even_half_state(spark, own_sf_dir)
+    _state_rows(state)
+    persisted = {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+    (raw,) = built
+    assert _rdd_ids(state.bands) == _rdd_ids(raw.bands)
+    assert _rdd_ids(state.members) == _rdd_ids(raw.members)
+    assert _rdd_ids(*state) <= persisted
+
+
 def test_regenerated_tables_rebuild_and_free_checkpoints(spark, own_sf_dir):
     d = own_sf_dir
     bands = corpus_band_rows(spark, d)

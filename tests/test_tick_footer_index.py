@@ -6,6 +6,7 @@ the footer answers equal to what Spark reads."""
 from __future__ import annotations
 
 import itertools
+import os
 import shutil
 from pathlib import Path
 
@@ -13,6 +14,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from low_latency_time_series_database_tsdb_for_market_data_spark import catalog, cli
 from low_latency_time_series_database_tsdb_for_market_data_spark.sources import writer
@@ -27,6 +29,16 @@ def _seqs(spark, d: str, symbol: str) -> list[int]:
 
 def _parquet(path: Path) -> list[Path]:
     return sorted(path.glob("**/*.parquet"))
+
+
+def _seq_his(spark, d: str, symbol: str) -> list[int] | None:
+    """The footer seq maxima of the symbol's row groups, as the footer
+    walk behind ``cli._next_seq`` reads them; None where it declines."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    with catalog.footer_groups(spark, cli._table_path(d), to_arrow_schema(cli._DATA_SCHEMA),
+                               "seq", partition=("symbol", symbol)) as groups:
+        return None if groups is None else [g.hi for g in groups]
 
 
 def _jobs(spark, fn, group: str, *more_groups: list[str]) -> int:
@@ -59,10 +71,10 @@ def test_footer_walk_skips_spark_hidden_paths(spark, tmp_path):
     assert want == 3
     assert catalog.parquet_num_rows(str(table)) == want
     assert catalog.parquet_num_rows(f"file://{table}") == want
-    assert catalog.parquet_int_max(str(table / "symbol=AAPL"), "seq") == 2
+    assert max(_seq_his(spark, d, "AAPL")) == 2
 
 
-def test_footer_probes_decline_what_they_cannot_serve(tmp_path):
+def test_footer_probes_decline_what_they_cannot_serve(spark, tmp_path):
     assert catalog.local_path("s3a://bucket/ticks") is None
     assert catalog.parquet_num_rows("s3a://bucket/ticks") is None
     assert catalog.parquet_num_rows(str(tmp_path / "missing")) is None
@@ -70,12 +82,14 @@ def test_footer_probes_decline_what_they_cannot_serve(tmp_path):
     bad.parent.mkdir()
     bad.write_bytes(b"not parquet")
     assert catalog.parquet_num_rows(str(bad.parent)) is None
-    # a timestamp column's stats are datetimes, not a seq
+    # a timestamp column is not a seq, and a missing column has no stats
     f = tmp_path / "t" / "part-0.parquet"
     f.parent.mkdir()
     pq.write_table(pa.table({"ts": pa.array([1, 2], pa.timestamp("us"))}), f)
-    assert catalog.parquet_int_max(str(f.parent), "ts") is None
-    assert catalog.parquet_int_max(str(f.parent), "seq") is None
+    for col in ("ts", "seq"):
+        with catalog.footer_groups(spark, str(f.parent), pa.schema([(col, pa.int64())]),
+                                   col) as groups:
+            assert groups is None, col
 
 
 def test_fingerprint_unstatable_is_distinct(tmp_path, monkeypatch):
@@ -89,6 +103,22 @@ def test_fingerprint_unstatable_is_distinct(tmp_path, monkeypatch):
 
     def deny(self, *a, **k):
         raise PermissionError(13, "denied", str(self))
+
+    # a table replaced by rename with its size and mtime kept: only the
+    # inode tells, and both the fingerprint and PointServer see it
+    from low_latency_time_series_database_tsdb_for_market_data_spark.serving import _identity
+
+    docs = tmp_path / "documents.parquet"
+    pq.write_table(pa.table({"doc_id": [1, 2]}), docs)
+    st = docs.stat()
+    before = (catalog.parquet_fingerprint(str(docs)), _identity([docs]))
+    shutil.copy(docs, tmp_path / "next.parquet")
+    os.replace(tmp_path / "next.parquet", docs)
+    os.utime(docs, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert (docs.stat().st_size, docs.stat().st_mtime_ns) == (st.st_size, st.st_mtime_ns)
+    after = (catalog.parquet_fingerprint(str(docs)), _identity([docs]))
+    assert after[0] != before[0] and after[1] != before[1]
+    assert after[0][0][1:] == after[1][docs] == catalog.file_identity(docs)
 
     monkeypatch.setattr(Path, "stat", deny)
     got = catalog.parquet_fingerprint(str(empty))
@@ -176,7 +206,7 @@ def test_next_seq_falls_back_without_seq_stats(spark, tmp_path, monkeypatch):
         ),
     )
     pq.write_table(planted, f"{part}/part-nostats.parquet", write_statistics=False)
-    assert catalog.parquet_int_max(part, "seq") is None
+    assert _seq_his(spark, d, "S") is None
 
     calls = []
     real = cli._probe_max_seq
@@ -634,6 +664,10 @@ def test_driver_reads_fall_back_where_they_cannot_be_exact(spark, tmp_path, monk
         else:
             _plant(path, **({"price": pa.array([4.0], pa.float32())} if why == "float price" else {}))
         assert _local(spark, d, "S", window=(0, 99)) is None, why
+        assert _seq_his(spark, d, "S") is None, why
+        # the next seq agrees with Spark's max(seq) + 1, or raises as it does
+        assert _outcome(lambda: cli._next_seq(spark, d, "S")) == _outcome(
+            lambda: cli._probe_max_seq(spark, d, "S") + 1), why
         for argv in (["query", "S", "0", "99"], ["last", "S", "2"]):
             got = _outcome(lambda: cli.run(argv, spark, d))
             with monkeypatch.context() as m:
@@ -657,11 +691,11 @@ def test_footer_probes_agree_with_spark_on_any_suffix(spark, tmp_path, monkeypat
     table = tmp_path / "data" / "ticks"
     part = table / "symbol=AAPL"
     assert catalog.parquet_num_rows(str(table)) == 3
-    assert catalog.parquet_int_max(str(part), "seq") == 2
+    assert max(_seq_his(spark, d, "AAPL")) == 2
     _plant(part / "part-extra.snappy.pq")
     assert spark.read.parquet(str(table)).count() == 4
     assert catalog.parquet_num_rows(str(table)) is None
-    assert catalog.parquet_int_max(str(part), "seq") is None
+    assert _seq_his(spark, d, "AAPL") is None
     assert cli._next_seq(spark, d, "AAPL") == 10  # Spark's max(seq) 9, plus one
     assert "part-extra.snappy.pq" in [name for name, *_ in catalog.parquet_fingerprint(str(table))]
     for argv in (["query", "AAPL", "0", "99"], ["last", "AAPL", "1"]):
@@ -671,6 +705,8 @@ def test_footer_probes_agree_with_spark_on_any_suffix(spark, tmp_path, monkeypat
     ev = tmp_path / "ev" / "events.parquet"
     ev.mkdir(parents=True)
     shutil.move(_write_events(str(tmp_path / "ev"), "us"), ev / "part-0.parquet")
-    assert catalog.ts_bounds_epoch_ns(str(ev)) is not None
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    lo, hi = catalog.events_raw(spark, str(ev.parent)).agg(F.min(us), F.max(us)).collect()[0]
+    assert catalog.ts_bounds_epoch_ns(spark, str(ev)) == (lo * 1000, hi * 1000)
     shutil.copy(ev / "part-0.parquet", ev / "part-1.pq")
-    assert catalog.ts_bounds_epoch_ns(str(ev)) is None
+    assert catalog.ts_bounds_epoch_ns(spark, str(ev)) is None
