@@ -231,7 +231,9 @@ def input_files(df: DataFrame) -> list[Path] | None:
 # events rows (six columns, two of them strings) took 60/90 ms vs
 # 129/204 ms at 1M/2M.  The cap stays well below the crossover, so wider
 # rows are still faster on the driver, and it bounds the driver memory
-# one read takes.
+# one read takes.  A driver compaction (``writer._compact_on_driver``)
+# is bounded by it too: at 0.98M rows it took 0.34 s against Spark's
+# 1.25 s, with 48 MB of Arrow memory at its peak.
 LOCAL_READ_MAX_ROWS = 1_000_000
 
 _INT64 = (-(2**63), 2**63 - 1)
@@ -596,8 +598,10 @@ def _footer_signature(md) -> tuple | None:
     return tuple(cols), (md.metadata or {}).get(_ROW_METADATA)
 
 
-def _schema_memo_key(spark: SparkSession, path: str) -> tuple | None:
-    """The memo key of a schema-less read of ``path``, or None where the
+def _schema_memo_key(spark: SparkSession, path: str,
+                     files: list[Path] | None = None) -> tuple | None:
+    """The memo key of a schema-less read of ``path`` listing ``files``
+    (default: Spark's listing of ``path`` now), or None where the
     memo does not apply and Spark must infer: a glob or non-local path,
     no files, summary files or ``mergeSchema`` (inference then reads
     more than one footer), an unreadable or nested first footer, or a
@@ -616,7 +620,8 @@ def _schema_memo_key(spark: SparkSession, path: str) -> tuple | None:
     if spark.conf.get("spark.sql.parquet.mergeSchema").lower() == "true":
         return None
     try:
-        files = _spark_listing(path)
+        if files is None:
+            files = _spark_listing(path)
         if not files or any(f.name in _SUMMARY_FILES for f in files):
             return None
         first = min(files, key=lambda f: str(f).encode("utf-16-be", "surrogatepass"))

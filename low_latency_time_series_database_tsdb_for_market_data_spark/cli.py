@@ -42,22 +42,34 @@ bound outside int64, a negative n (Spark raises), or more than
 Inserts are written on the driver too: on a local table ``insert``
 writes its rows with pyarrow as one parquet file in the symbol's
 partition directory, with the footer Spark's writer would give it
-(``_append``); other tables keep the Spark write.
+(``_append``); other tables keep the Spark write.  So is ``maintain``:
+it compacts each symbol partition of a local table of up to
+``catalog.LOCAL_READ_MAX_ROWS`` rows into one file with pyarrow
+(``writer.compact_ticks``), and larger or non-local tables keep the
+Spark rewrite.
 
 Spark jobs per command on a local table: ``query`` 0, ``last`` 0,
-``insert`` 0, and an ``import`` of a one-split CSV 1 (the write; its
-count is read back from the footers).  On any other table ``insert``
-runs 1 (the write).
+``insert`` 0, ``maintain`` 0, and an ``import`` of a one-split CSV 1
+(the write; its count is read back from the footers).  On any other
+table ``insert`` runs 1 (the write) and ``maintain`` 3.
+
+One writer at a time, as the reference's one writer thread under
+``write_mutex``: every command holds the table's advisory lock
+(``writer.table_lock``).  ``insert``, ``import``, ``benchmark`` and
+``maintain`` take ``flock`` on ``<data_dir>/_ticks.lock`` exclusive, so
+two inserts never read the same next seq and an insert never lands in
+a table ``maintain`` has counted and is about to replace.  ``query`` and
+``last`` take ``<data_dir>/_ticks.read.lock`` shared, which only
+``maintain``'s swap takes exclusive: a read never sees the swap half
+done, and waits for no writer but the swap.  A command that waits
+longer than ``writer.LOCK_TIMEOUT_S`` raises.  A non-local table gets
+no lock and needs an external coordinator between writers.
 """
 
 from __future__ import annotations
 
-import os
-import re
 import sys
 import time
-import uuid
-from pathlib import Path
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -88,6 +100,13 @@ HELP = """Usage:
 
 def _table_path(data_dir: str) -> str:
     return f"{data_dir}/ticks"
+
+
+def _locked(data_dir: str, shared: bool = False):
+    """The tick table's advisory lock (``writer.table_lock``)."""
+    from .sources.writer import table_lock
+
+    return table_lock(_table_path(data_dir), shared=shared)
 
 
 def _load(spark: SparkSession, data_dir: str, symbol: str) -> DataFrame | None:
@@ -144,73 +163,34 @@ def _next_seq(spark: SparkSession, data_dir: str, symbol: str) -> int:
     return 0 if hi is None else hi + 1
 
 
-def _spark_footer_metadata(spark: SparkSession) -> dict[bytes, bytes] | None:
-    """The key-value metadata Spark's parquet writer puts in the footer
-    of a tick data file (``ParquetWriteSupport``): the row schema as
-    the JVM renders it and the short Spark version.  None when this
-    session's writer would write what a driver-side file does not
-    reproduce: a codec other than snappy, or a LEGACY datetime or INT96
-    rebase mode (which add their own keys)."""
-    conf = spark.conf
-    if conf.get("spark.sql.parquet.compression.codec").lower() != "snappy" or "LEGACY" in (
-        conf.get("spark.sql.parquet.datetimeRebaseModeInWrite").upper(),
-        conf.get("spark.sql.parquet.int96RebaseModeInWrite").upper(),
-    ):
-        return None
-    row = spark._jvm.org.apache.spark.sql.types.DataType.fromJson(_DATA_SCHEMA.json()).json()
-    version = re.match(r"\d+\.\d+\.\d+", spark.version).group(0)
-    return {
-        b"org.apache.spark.version": version.encode(),
-        b"org.apache.spark.sql.parquet.row.metadata": row.encode(),
-    }
-
-
-def _write_part(part_dir: Path, table, metadata: dict[bytes, bytes]) -> None:
-    """Write ``table`` as one new data file of ``part_dir``, named as a
-    Spark task names its output.  The file is written under a
-    ``.``-prefixed name, which Spark's listing and the footer probes
-    skip, and renamed into place once complete: a killed insert leaves
-    at most a hidden file, never a torn one that readers list."""
-    import pyarrow.parquet as pq
-
-    name = f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"
-    tmp = part_dir / f".{name}"
-    part_dir.mkdir(parents=True, exist_ok=True)
-    try:
-        # pyarrow keeps the schema metadata only beside its own
-        # ARROW:schema key, which Spark does not read
-        pq.write_table(table.replace_schema_metadata(metadata), tmp, compression="snappy")
-        os.replace(tmp, part_dir / name)
-    except BaseException:
-        tmp.unlink(missing_ok=True)
-        raise
-
-
 def _append(
     spark: SparkSession, data_dir: str, symbol: str, rows: list[tuple[int, float, int]]
 ) -> int:
     """Append (ts, price, volume) rows with monotone seq; returns count.
 
     CLI appends are small interactive batches, so assigning seq from the
-    driver-side max (:func:`_next_seq`) is correct (single-writer, like
-    the reference's one writer thread).  Bulk pipelines use
-    sources/writer.py where seq comes from the source.
+    driver-side max (:func:`_next_seq`) is correct: the caller holds
+    the table's exclusive lock (:func:`_locked`) across the read and the
+    write, so one writer appends at a time, like the reference's one
+    writer thread.  Bulk pipelines use sources/writer.py where seq comes
+    from the source.
 
     On a local table the rows are written on the driver, as the
     reference's writer appends to its column files: one ts-sorted
     parquet file in the symbol's partition directory (the escaped name
-    :func:`_symbol_dir` gives), typed to TICK_SCHEMA without ``symbol``
-    and carrying Spark's footer metadata (:func:`_spark_footer_metadata`),
-    so Spark reads it, and infers the same schema from it, as it would
-    read a file of its own.  No Spark job runs.  Otherwise the rows go
-    to Spark as an Arrow table typed to TICK_SCHEMA, a LocalRelation,
-    and ``write_ticks`` writes them (one job)."""
+    :func:`_symbol_dir` gives), written by ``writer._write_part``, typed
+    to TICK_SCHEMA without ``symbol`` and carrying Spark's footer
+    metadata (``writer._spark_footer_metadata``), so Spark reads it, and
+    infers the same schema from it, as it would read a file of its own.
+    No Spark job runs.  Otherwise the rows go to Spark as an Arrow table
+    typed to TICK_SCHEMA, a LocalRelation, and ``write_ticks`` writes
+    them (one job)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from . import session_cache
     from .catalog import local_path
-    from .sources.writer import write_ticks
+    from .sources import writer
 
     base = _next_seq(spark, data_dir, symbol)
     data = [
@@ -220,11 +200,11 @@ def _append(
     table = pa.Table.from_pylist(data, schema=to_arrow_schema(TICK_SCHEMA))
     path = _table_path(data_dir)
     part = local_path(_symbol_dir(spark, data_dir, symbol))
-    metadata = None if part is None else _spark_footer_metadata(spark)
+    metadata = None if part is None else writer._spark_footer_metadata(spark, _DATA_SCHEMA)
     if metadata is None:
-        write_ticks(spark.createDataFrame(table, TICK_SCHEMA), path, mode="append")
+        writer.write_ticks(spark.createDataFrame(table, TICK_SCHEMA), path, mode="append")
     else:
-        _write_part(part, table.drop_columns(["symbol"]).sort_by("ts"), metadata)
+        writer._write_part(part, table.drop_columns(["symbol"]).sort_by("ts"), metadata)
         # as write_ticks does: cached relations must re-list
         session_cache.drop("relation", path)
     return len(data)
@@ -241,7 +221,8 @@ def _fmt(rows) -> list[str]:
 def cmd_insert(
     spark: SparkSession, data_dir: str, symbol: str, ts: int, price: float, volume: int
 ) -> list[str]:
-    _append(spark, data_dir, symbol, [(ts, price, volume)])
+    with _locked(data_dir):
+        _append(spark, data_dir, symbol, [(ts, price, volume)])
     return [f"Inserted tick for {symbol}"]
 
 
@@ -267,17 +248,20 @@ def cmd_query(
     window (:func:`_local_slice`) — no Spark job.  When it cannot, the
     partition-pruned Spark scan collects the slice.  Either way the rows
     are sorted on the driver by (ts, seq), a total order (seq is unique
-    per symbol), so both paths print the same lines."""
-    tbl = _local_slice(spark, data_dir, symbol, "ts", window=(start, end))
-    if tbl is not None:
-        rows = tbl.sort_by([("ts", "ascending"), ("seq", "ascending")]).to_pylist()
-    else:
-        df = _load(spark, data_dir, symbol)
-        rows = (
-            []
-            if df is None
-            else df.where((F.col("ts") >= start) & (F.col("ts") <= end)).collect()
-        )
+    per symbol), so both paths print the same lines.  The read holds
+    the table's shared lock."""
+    with _locked(data_dir, shared=True):
+        tbl = _local_slice(spark, data_dir, symbol, "ts", window=(start, end))
+        if tbl is not None:
+            rows = tbl.sort_by([("ts", "ascending"), ("seq", "ascending")]).to_pylist()
+        else:
+            df = _load(spark, data_dir, symbol)
+            rows = (
+                []
+                if df is None
+                else df.where((F.col("ts") >= start) & (F.col("ts") <= end)).collect()
+            )
+    if tbl is None:
         rows.sort(key=lambda r: (r["ts"], r["seq"]))
     return [f"Found {len(rows)} results:"] + _fmt(rows)
 
@@ -286,15 +270,17 @@ def cmd_last(spark: SparkSession, data_dir: str, symbol: str, n: int) -> list[st
     """Last-N in arrival order, emitted oldest-first (S6).  The driver
     reads the row groups with the largest footer seq until they hold the
     top n (:func:`_local_slice`); otherwise, and for n < 0 (which Spark
-    rejects), the Spark sort-limit answers."""
-    tbl = _local_slice(spark, data_dir, symbol, "seq", top=n)
-    if tbl is not None:
-        rows = tbl.to_pylist()
-    else:
-        df = _load(spark, data_dir, symbol)
-        rows = []
-        if df is not None:
-            rows = df.orderBy(F.desc("seq")).limit(n).orderBy("seq").collect()
+    rejects), the Spark sort-limit answers.  The read holds the table's
+    shared lock."""
+    with _locked(data_dir, shared=True):
+        tbl = _local_slice(spark, data_dir, symbol, "seq", top=n)
+        if tbl is not None:
+            rows = tbl.to_pylist()
+        else:
+            df = _load(spark, data_dir, symbol)
+            rows = []
+            if df is not None:
+                rows = df.orderBy(F.desc("seq")).limit(n).orderBy("seq").collect()
     return [f"Last {len(rows)} ticks for {symbol}:"] + _fmt(rows)
 
 
@@ -340,43 +326,44 @@ def cmd_import(
     from .sources.csv_ticks import read_tick_csv
     from .sources.writer import write_ticks
 
-    base = _next_seq(spark, data_dir, symbol)
-    parsed = read_tick_csv(spark, csv_path)
-    splits = parsed._jdf.queryExecution().toRdd().getNumPartitions()
-    if splits == 1 and local_path(_table_path(data_dir)) is not None:
-        bases, total = [0], None  # total read from the footers below
-    else:
-        counts = _split_counts(parsed)
-        # dense base array indexed by partition id (empty splits hold a 0
-        # placeholder): element_at on an array literal is an O(1) index,
-        # where a literal map would be a per-row linear key scan at import
-        # scale
-        bases, total = [], 0
-        for pid in range(max(counts) + 1 if counts else 0):
-            bases.append(total)
-            total += counts.get(pid, 0)
-    if total != 0:
-        local_idx = F.monotonically_increasing_id() - F.shiftleft(
-            F.spark_partition_id().cast("long"), 33
-        )
-        seq = (
-            F.lit(base)
-            + F.element_at(
-                F.array(*[F.lit(b) for b in bases]),
-                F.spark_partition_id() + 1,
+    with _locked(data_dir):
+        base = _next_seq(spark, data_dir, symbol)
+        parsed = read_tick_csv(spark, csv_path)
+        splits = parsed._jdf.queryExecution().toRdd().getNumPartitions()
+        if splits == 1 and local_path(_table_path(data_dir)) is not None:
+            bases, total = [0], None  # total read from the footers below
+        else:
+            counts = _split_counts(parsed)
+            # dense base array indexed by partition id (empty splits hold a 0
+            # placeholder): element_at on an array literal is an O(1) index,
+            # where a literal map would be a per-row linear key scan at import
+            # scale
+            bases, total = [], 0
+            for pid in range(max(counts) + 1 if counts else 0):
+                bases.append(total)
+                total += counts.get(pid, 0)
+        if total != 0:
+            local_idx = F.monotonically_increasing_id() - F.shiftleft(
+                F.spark_partition_id().cast("long"), 33
             )
-            + local_idx
-        ).cast("long")
-        df = parsed.select(
-            F.col("ts"),
-            F.col("price"),
-            F.col("volume"),
-            seq.alias("seq"),
-            F.lit(symbol).alias("symbol"),
-        )
-        write_ticks(df, _table_path(data_dir), mode="append")
-    if total is None:
-        total = _next_seq(spark, data_dir, symbol) - base
+            seq = (
+                F.lit(base)
+                + F.element_at(
+                    F.array(*[F.lit(b) for b in bases]),
+                    F.spark_partition_id() + 1,
+                )
+                + local_idx
+            ).cast("long")
+            df = parsed.select(
+                F.col("ts"),
+                F.col("price"),
+                F.col("volume"),
+                seq.alias("seq"),
+                F.lit(symbol).alias("symbol"),
+            )
+            write_ticks(df, _table_path(data_dir), mode="append")
+        if total is None:
+            total = _next_seq(spark, data_dir, symbol) - base
     return [f"Imported {total} ticks for {symbol} from {csv_path}"]
 
 
@@ -386,36 +373,37 @@ def cmd_benchmark(
     """Generate-insert-query benchmark (S10, `cli.cpp:106-139`): sequential
     1 Hz timestamps from now, price ~ U(100,200), volume ~ U(100,10000)."""
     now = int(time.time())
-    # seq must continue from the symbol's current max (same contract as
-    # _append), else a benchmark on a pre-populated symbol duplicates seq
-    # values and corrupts `last` ordering / (ts, seq) tie-breaking
-    base = _next_seq(spark, data_dir, symbol)
-    gen = spark.range(count).select(
-        (F.lit(now) + F.col("id")).alias("ts"),
-        (100.0 + F.rand(7) * 100.0).alias("price"),
-        (100 + (F.rand(11) * 9900).cast("long")).alias("volume"),
-        (F.lit(base) + F.col("id")).alias("seq"),
-        F.lit(symbol).alias("symbol"),
-    )
-    gen.write.mode("overwrite").format("noop").save()  # exclude generation
+    with _locked(data_dir):
+        # seq must continue from the symbol's current max (same contract as
+        # _append), else a benchmark on a pre-populated symbol duplicates seq
+        # values and corrupts `last` ordering / (ts, seq) tie-breaking
+        base = _next_seq(spark, data_dir, symbol)
+        gen = spark.range(count).select(
+            (F.lit(now) + F.col("id")).alias("ts"),
+            (100.0 + F.rand(7) * 100.0).alias("price"),
+            (100 + (F.rand(11) * 9900).cast("long")).alias("volume"),
+            (F.lit(base) + F.col("id")).alias("seq"),
+            F.lit(symbol).alias("symbol"),
+        )
+        gen.write.mode("overwrite").format("noop").save()  # exclude generation
 
-    from .sources.writer import write_ticks
+        from .sources.writer import write_ticks
 
-    t0 = time.perf_counter()
-    write_ticks(gen, _table_path(data_dir), mode="append")
-    insert_ms = max(1, int((time.perf_counter() - t0) * 1000))
-    out = [
-        f"Inserted {count} ticks in {insert_ms}ms "
-        f"({count * 1000.0 / insert_ms} ticks/second)"
-    ]
+        t0 = time.perf_counter()
+        write_ticks(gen, _table_path(data_dir), mode="append")
+        insert_ms = max(1, int((time.perf_counter() - t0) * 1000))
+        out = [
+            f"Inserted {count} ticks in {insert_ms}ms "
+            f"({count * 1000.0 / insert_ms} ticks/second)"
+        ]
 
-    t0 = time.perf_counter()
-    n = (
-        _load(spark, data_dir, symbol)
-        .where((F.col("ts") >= now) & (F.col("ts") <= now + count - 1))
-        .count()
-    )
-    query_ms = max(1, int((time.perf_counter() - t0) * 1000))
+        t0 = time.perf_counter()
+        n = (
+            _load(spark, data_dir, symbol)
+            .where((F.col("ts") >= now) & (F.col("ts") <= now + count - 1))
+            .count()
+        )
+        query_ms = max(1, int((time.perf_counter() - t0) * 1000))
     out.append(
         f"Queried {n} ticks in {query_ms}ms ({n * 1000.0 / query_ms} ticks/second)"
     )
@@ -428,21 +416,24 @@ def cmd_maintain(
     """Engine extension (no reference analogue — its files live forever,
     `timeseries_db.cpp:157-168`): compact the tick table to bound file
     count and restore the time-clustered layout that keeps row-group
-    stats selective after many small appends.  Stage-then-swap, so a
-    crash leaves a complete table at one of the two paths.  The table is
-    read with TICK_SCHEMA, as ``_load`` reads it, so no schema-inference
-    job runs and the symbol partition stays a string."""
+    stats selective after many small appends.  ``writer.compact_locked``
+    does it under the table's exclusive lock, taken before the check for
+    an empty table: on the driver for a local table of up to
+    ``catalog.LOCAL_READ_MAX_ROWS`` rows (one file per symbol, no Spark
+    job) and by Spark's rewrite otherwise, then it swaps the compacted
+    copy in by two renames.  The table is read with
+    TICK_SCHEMA, as ``_load`` reads it, so no schema-inference job runs
+    and the symbol partition stays a string."""
     from .catalog import _parquet_files
-    from .sources.writer import compact_ticks
+    from .sources.writer import compact_locked
 
     path = _table_path(data_dir)
-    # only files Spark reads count: a crashed append's _temporary/ is
-    # not data
-    if not _parquet_files(path):
-        return ["Nothing to maintain: no tick table at " + path]
-    audit = compact_ticks(
-        spark, path, target_files=target_files, schema=TICK_SCHEMA
-    )
+    with _locked(data_dir):  # finishes a swap a crash interrupted first
+        # only files Spark reads count: a crashed append's _temporary/
+        # is not data
+        if not _parquet_files(path):
+            return ["Nothing to maintain: no tick table at " + path]
+        audit = compact_locked(spark, path, target_files, schema=TICK_SCHEMA)
     return [
         f"Compacted {audit['rows']} ticks: "
         f"{audit['files_before']} -> {audit['files_after']} files"

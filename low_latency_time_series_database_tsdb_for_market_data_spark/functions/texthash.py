@@ -99,11 +99,6 @@ def salted_md5(seed: Column | int, s: Column) -> Column:
     return F.md5(F.concat(seed_c.cast("string"), F.lit(":"), s))
 
 
-def hex_nibble(c: Column) -> Column:
-    """Hex char -> 0..15 (JVM-side conv; oracle uses a CASE chain)."""
-    return F.conv(c, 16, 10).cast("int")
-
-
 def simhash_prefix16(hash_col: Column) -> Column:
     """The 16 leading bits of an md5-hex column as one int (0..65535) —
     a single conv() per row; bit tests are then integer shifts."""
@@ -138,13 +133,3 @@ def simhash_prefix(hash_col: Column, nbits: int) -> Column:
     if nbits % 4 or nbits > 60:
         raise ValueError("nbits must be a multiple of 4, at most 60")
     return F.conv(F.substring(hash_col, 1, nbits // 4), 16, 10).cast("bigint")
-
-
-def simhash_bits(hash_col: Column, nbits: int) -> list[Column]:
-    """MSB-first 0/1 bit columns of ``simhash_prefix`` — all derived from
-    ONE conv() subexpression (codegen CSE), like ``simhash16``."""
-    pre = simhash_prefix(hash_col, nbits)
-    return [
-        F.shiftright(pre, nbits - 1 - b).bitwiseAND(F.lit(1))
-        for b in range(nbits)
-    ]

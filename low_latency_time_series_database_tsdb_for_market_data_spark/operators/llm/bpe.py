@@ -228,16 +228,6 @@ def bpe_train(
     return state, merges
 
 
-def bpe_segment_counts(docs: DataFrame, n_merges: int = _BPE_MERGES):
-    """(per-word subword counts, merge table) for a documents frame —
-    the reusable product surface behind q251: train on the corpus
-    vocabulary, return (word, n_sub) plus the merge list.  Consumers
-    join n_sub back onto any word-keyed frame (fertility, packing
-    budgets, surprisal denominators) without re-walking text."""
-    state, merges = bpe_train(_word_vocab(docs), n_merges)
-    return state.select("word", F.size("syms").cast("bigint").alias("n_sub")), merges
-
-
 def _bpe_oracle_sql(n_merges: int) -> str:
     """The training recurrence unrolled stage by stage in DuckDB SQL.
 

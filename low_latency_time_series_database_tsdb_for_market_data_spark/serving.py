@@ -65,10 +65,12 @@ tick into its tree and rebuilds the tree only at open
 (`timeseries_db.cpp:60-155`), ``refresh()`` is incremental when it can
 be: if every file the index was read from is still listed with the
 size, mtime and inode it had when read, only the added files are read
-(on the driver) and their keys merged into the index.  A file removed
-or rewritten (``maintain``, retention, compaction), a changed served
-schema, an index Spark collected, or added files the driver cannot read
-rebuild the index in full, as ``open()`` builds it.  (A rewrite that
+(on the driver) and their keys merged into the index, from the
+driver's own listing and without resolving the relation again.  A file
+removed or rewritten (``maintain``, retention, compaction), a first
+footer that could change the served schema, an index Spark collected,
+or added files the driver cannot read rebuild the index in full, as
+``open()`` builds it.  (A rewrite that
 keeps a file's size and inode within one tick of the filesystem clock
 goes unseen, as by any stat-based listing cache.)  Both leave the same
 keys and the same rows per key; the order of rows with equal ts is
@@ -77,6 +79,7 @@ unspecified, as it is on the parquet path.
 
 from __future__ import annotations
 
+import os
 import threading
 import time
 from pathlib import Path
@@ -92,9 +95,12 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import session_cache
 from .catalog import (
+    _schema_memo_key,
+    _spark_listing,
     events_raw,
     file_identity,
     input_files,
+    local_path,
     local_rows,
     ts_bound,
     ts_is_long,
@@ -118,10 +124,14 @@ class _View(NamedTuple):
     swaps it in with one assignment, so a concurrent probe sees either
     the old view or the new one, never a half-built index."""
 
-    raw: DataFrame  # the parquet relation: the fallback path
+    # [the parquet relation], the fallback path; [None] after a delta
+    # refresh that listed new files, until a probe needs it (``_raw``)
+    raw: list
+    data: pa.Schema  # the relation's columns, as Arrow types
     schema: T.StructType  # served schema, with_ts(raw).schema
     ns: bool  # int64-nanos layout: keys are raw ts
-    files: list | None  # the files ``raw`` lists, when all are local
+    files: list | None  # the files indexed, when all are local
+    key: tuple | None  # catalog._schema_memo_key of ``files``
     index: _Index | None  # None until open(), and after close()
 
 
@@ -175,7 +185,42 @@ class PointServer:
     def _resolve(self) -> _View:
         """The parquet relation and the files it lists, with no index."""
         raw = events_raw(self._spark, self._sf_dir)
-        return _View(raw, with_ts(raw).schema, ts_is_long(raw), input_files(raw), None)
+        files = input_files(raw)
+        key = None if files is None else _schema_memo_key(self._spark, self._abs_path(), files)
+        return _View([raw], to_arrow_schema(raw.schema), with_ts(raw).schema, ts_is_long(raw),
+                     files, key, None)
+
+    def _abs_path(self) -> str:
+        """The table's path made absolute, as a relation lists its files
+        (called only for a table whose files are local)."""
+        return os.path.abspath(local_path(self._path))
+
+    def _raw(self, view: _View) -> DataFrame:
+        """``view``'s parquet relation, resolved on first use after a
+        delta refresh (a fresh listing, which may hold files committed
+        since the refresh)."""
+        if view.raw[0] is None:
+            view.raw[0] = events_raw(self._spark, self._sf_dir)
+        return view.raw[0]
+
+    def _relist(self, old: _View) -> _View | None:
+        """``old`` over the driver's listing of the table now, when the
+        served schema provably stays: the listing's schema memo key
+        (``catalog._schema_memo_key``) equals ``old``'s.  None (resolve
+        the relation again) otherwise, or when the table is not local.
+        A listing that changed drops the session cache's relation entry,
+        which pins the old one, and leaves the view's relation to be
+        resolved on first use."""
+        if old.files is None or old.key is None:
+            return None
+        path = self._abs_path()
+        files = _spark_listing(path)
+        if _schema_memo_key(self._spark, path, files) != old.key:
+            return None
+        if set(files) == set(old.files):
+            return old._replace(files=files)
+        session_cache.drop("relation", self._path)
+        return old._replace(raw=[None], files=files)
 
     def _window(self, view: _View, lo_ns: int | None, hi_ns: int | None) -> tuple[int, int]:
         """``ts_bound``'s window for ``[lo_ns, hi_ns]`` in raw ts units
@@ -187,7 +232,7 @@ class PointServer:
         return lo, hi
 
     def _read(self, view: _View, window: tuple[int, int], files: list[Path]) -> pa.Table | None:
-        """The rows of ``files`` (listed by ``view.raw``) whose raw ts
+        """The rows of ``files`` (of ``view.files``) whose raw ts
         lies in ``window``, read on the driver from the footer-pruned row
         groups (``catalog.local_rows``) and converted to the served
         schema, plus the probe key ``_KEY`` (the raw ts as an int64);
@@ -198,8 +243,7 @@ class PointServer:
             not view.ns and self._spark.conf.get("spark.sql.session.timeZone") != "UTC"
         ):
             return None
-        part = local_rows(self._spark, self._path, to_arrow_schema(view.raw.schema), "ts",
-                          window=window, files=files)
+        part = local_rows(self._spark, self._path, view.data, "ts", window=window, files=files)
         if part is None:
             return None
         served = to_arrow_schema(view.schema)
@@ -229,7 +273,7 @@ class PointServer:
     def _collect(self, view: _View) -> pa.Table:
         """The slice with its probe key, collected by Spark (one job):
         the build wherever the driver read declines."""
-        slice_df = self._spark_slice(view.raw, self._lo, self._hi, self._symbols)
+        slice_df = self._spark_slice(self._raw(view), self._lo, self._hi, self._symbols)
         # the served ts in micros: with_ts casts NTZ to timestamp the same way
         key = F.col("ts") if view.ns else F.unix_micros(F.col("ts").cast("timestamp"))
         return with_ts(slice_df.withColumn(_KEY, key)).toArrow()
@@ -250,7 +294,7 @@ class PointServer:
 
     def _build(self, view: _View) -> _Index:
         """The index of the whole slice: read on the driver from every
-        file ``view.raw`` lists when it can, else collected by Spark (one
+        file of ``view.files`` when it can, else collected by Spark (one
         job).  Rows with a null ts never match a probe and are not
         indexed."""
         source = _identity(view.files)
@@ -261,14 +305,13 @@ class PointServer:
             part, source = self._collect(view), None
         return self._merge(None, part, source)
 
-    def _delta(self, old: _View, view: _View) -> _Index | None:
-        """``old``'s index brought up to ``view``'s listing by reading
-        only the files added since; None (rebuild in full) unless every
-        file the index was read from is still listed with its size,
-        mtime and inode, the served schema is unchanged and the driver
-        can read the added files."""
-        index = old.index
-        if index is None or index.source is None or (old.schema, old.ns) != (view.schema, view.ns):
+    def _delta(self, view: _View) -> _Index | None:
+        """``view``'s index brought up to its listing by reading only the
+        files added since; None (rebuild in full) unless every file the
+        index was read from is still listed with its size, mtime and
+        inode, and the driver can read the added files."""
+        index = view.index
+        if index is None or index.source is None:
             return None
         source = _identity(view.files)
         if source is None or any(source.get(f) != st for f, st in index.source.items()):
@@ -330,7 +373,7 @@ class PointServer:
             self._count("local_reads")
             return self._spark.createDataFrame(part, view.schema)
         self._count("parquet_fallbacks")
-        return with_ts(self._spark_slice(view.raw, lo_ns, hi_ns, symbols))
+        return with_ts(self._spark_slice(self._raw(view), lo_ns, hi_ns, symbols))
 
     def _lookup(
         self, view: _View, lo_ns: int, hi_ns: int, symbols: list[str] | None
@@ -389,19 +432,25 @@ class PointServer:
     def refresh(self) -> float:
         """Bring the index up to date after the underlying table changed
         (append/compaction/retention); a long-lived server calls this
-        from its ingest hook.  Re-resolves the datasource (a fresh file
-        listing; the schema comes from the catalog's memo, so no
-        inference job), then either
+        from its ingest hook.  Lists the table on the driver (Spark's
+        listing rule, ``catalog._spark_listing``), then either
 
-        * delta: when every file the index was read from is still
-          listed with the size, mtime and inode it had, reads only the
-          added files on the driver and merges their slice rows into the
-          index, as the reference updates its tree after each write — no
-          Spark job; or
+        * delta: when the listing's schema memo key equals the indexed
+          one (so the served schema cannot have changed) and every file
+          the index was read from is still listed with the size, mtime
+          and inode it had, reads only the added files on the driver and
+          merges their slice rows into the index, as the reference
+          updates its tree after each write.  The relation is not
+          resolved again: the parquet fallback resolves it on first use
+          when files were added.  No Spark job runs; or
         * full: otherwise — a file removed or rewritten (``maintain``,
-          retention, compaction), a changed served schema, an index
-          Spark collected, added files the driver cannot read — rebuilds
-          the index as ``open()`` builds it.
+          retention, compaction), a changed first footer or conf the
+          schema depends on, an index Spark collected, a non-local
+          table, added files the driver cannot read — drops the session
+          cache's relation entry (it pins the old listing), resolves
+          the relation again (the schema comes from the catalog's memo,
+          so no inference job) and rebuilds the index as ``open()``
+          builds it.
 
         Either way the new view is swapped in with one assignment, so
         probes issued meanwhile read the old view.  A delta-refreshed
@@ -410,14 +459,14 @@ class PointServer:
         two and is unspecified, as on the parquet path.  Returns the
         seconds it took."""
         t0 = time.perf_counter()
-        # the session cache's relation entry pins the file listing —
-        # an external writer's commit is invisible until it is dropped
-        session_cache.drop("relation", self._path)
-        old, view = self._view, self._resolve()
-        index = self._delta(old, view)
+        old = self._view
+        view = self._relist(old)
+        index = None if view is None else self._delta(view)
         if index is not None:
             kind, rows = "delta_refreshes", index.table.num_rows - old.index.table.num_rows
         else:
+            session_cache.drop("relation", self._path)
+            view = self._resolve()
             index = self._build(view)
             kind, rows = "full_refreshes", index.table.num_rows
         self._view = view._replace(index=index)

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from .. import session_cache
 from ..streaming.rollup import _partial_bars, fold_bars
-from .writer import read_ticks, write_ticks
+from .writer import read_ticks, swap_lock, table_lock, write_ticks
 
 
 def _tick_partials(ticks: DataFrame, bucket: str) -> DataFrame:
@@ -84,14 +84,22 @@ def recover_retention(raw_dir: str, bars_dir: str) -> list[str]:
     are untouched, so any stage remnants are rolled back and the next
     pass re-runs from scratch.  Called automatically at the top of
     :func:`apply_retention`; safe to call any time (no-op when no stage
-    or marker exists).  Returns the list of actions taken."""
+    or marker exists).  Holds ``raw_dir``'s exclusive lock
+    (``writer.table_lock``).  Returns the list of actions taken."""
+    with table_lock(raw_dir):
+        return _recover(raw_dir, bars_dir)
+
+
+def _recover(raw_dir: str, bars_dir: str) -> list[str]:
+    """:func:`recover_retention`'s work; the caller holds the lock."""
     raw_stage, bars_stage, marker = _stage_paths(raw_dir, bars_dir)
     actions: list[str] = []
     if Path(marker).exists():
         if Path(raw_stage).exists():
-            if Path(raw_dir).exists():
-                _shutil.rmtree(raw_dir)
-            _shutil.move(raw_stage, raw_dir)
+            with swap_lock(raw_dir):  # a locked reader sees neither half
+                if Path(raw_dir).exists():
+                    _shutil.rmtree(raw_dir)
+                _shutil.move(raw_stage, raw_dir)
             session_cache.drop("relation", raw_dir)
             actions.append("raw_swap_finished")
         if Path(bars_stage).exists():
@@ -142,9 +150,21 @@ def apply_retention(
 
     Returns an audit dict {expired_rows, retained_rows, bars_appended}
     where bars_appended counts the partial-bar ROWS APPENDED BY THIS
-    PASS (not the bars table total)."""
+    PASS (not the bars table total).
+
+    The whole pass holds ``raw_dir``'s exclusive lock
+    (``writer.table_lock``), the one the CLI's writers and
+    ``compact_ticks`` take, so no locked writer's rows land in the raw
+    table between the count and the swap."""
+    with table_lock(raw_dir):
+        return _retain(spark, raw_dir, bars_dir, cutoff, bucket, _crash_at)
+
+
+def _retain(spark: SparkSession, raw_dir: str, bars_dir: str, cutoff: _dt.datetime,
+            bucket: str, _crash_at: str | None) -> dict:
+    """:func:`apply_retention`'s pass; the caller holds the lock."""
     raw_stage, bars_stage, marker = _stage_paths(raw_dir, bars_dir)
-    recover_retention(raw_dir, bars_dir)
+    _recover(raw_dir, bars_dir)
     if not _has_parquet(raw_dir):  # everything already archived
         return {"expired_rows": 0, "retained_rows": 0, "bars_appended": 0}
     raw = read_ticks(spark, raw_dir)

@@ -149,8 +149,9 @@ def test_load_raises_on_unreadable_table(spark, tmp_path, monkeypatch):
 
 
 def _spark_inserts(monkeypatch) -> None:
-    """Send ``insert`` to its Spark write, as on a non-local table."""
-    monkeypatch.setattr(cli, "_spark_footer_metadata", lambda spark: None)
+    """Send ``insert`` to its Spark write, as on a non-local table (and
+    ``maintain`` to its Spark compaction)."""
+    monkeypatch.setattr(writer, "_spark_footer_metadata", lambda *a: None)
 
 
 @pytest.mark.parametrize("symbol", ["BRK/B", "A=B", "X%1", "007"])
@@ -266,7 +267,7 @@ def test_interrupted_insert_is_invisible(spark, tmp_path, monkeypatch):
     def fail(*a):
         raise OSError("disk full")
 
-    monkeypatch.setattr(cli.os, "replace", fail)
+    monkeypatch.setattr(writer.os, "replace", fail)
     with pytest.raises(OSError, match="disk full"):
         cli.run(["insert", "S", "30", "1.0", "1"], spark, d)
     monkeypatch.undo()
@@ -308,22 +309,32 @@ def test_driver_inserts_read_like_spark_inserts(spark, tmp_path, monkeypatch):
 
 
 def test_compact_barrier_raises_on_short_stage(spark, tmp_path, monkeypatch):
+    """A stage one row short fails the barrier, leaves the live table
+    as it was and deletes the stage, on the Spark path (``write_ticks``
+    drops the row) and on the driver path (``_write_part`` drops it)."""
     d = str(tmp_path / "data")
     for ts in (1, 2, 3, 4):
         cli.run(["insert", "AAPL", str(ts), "1.0", "1"], spark, d)
     table = tmp_path / "data" / "ticks"
     before = cli.run(["query", "AAPL", "0", "9"], spark, d)
     files = _parquet(table)
-    real = writer.write_ticks
+    real_write, real_part = writer.write_ticks, writer._write_part
 
     def drop_one(df, path, **kw):
-        return real(df.where("seq != 0"), path, **kw)
+        return real_write(df.where("seq != 0"), path, **kw)
 
-    monkeypatch.setattr(writer, "write_ticks", drop_one)
-    with pytest.raises(RuntimeError, match="compact stage incomplete: 3 != 4"):
-        writer.compact_ticks(spark, str(table))
-    assert _parquet(table) == files
-    assert cli.run(["query", "AAPL", "0", "9"], spark, d) == before
+    def drop_one_on_driver(part_dir, tbl, metadata):
+        return real_part(part_dir, tbl.slice(1), metadata)
+
+    for name, fn, schema in (("write_ticks", drop_one, None),
+                             ("_write_part", drop_one_on_driver, cli.TICK_SCHEMA)):
+        with monkeypatch.context() as m:
+            m.setattr(writer, name, fn)
+            with pytest.raises(RuntimeError, match="compact stage incomplete: 3 != 4"):
+                writer.compact_ticks(spark, str(table), schema=schema)
+        assert _parquet(table) == files
+        assert not (tmp_path / "data" / "ticks__compact_stage").exists()
+        assert cli.run(["query", "AAPL", "0", "9"], spark, d) == before
 
 
 def _plant_leftover(table: Path, src: Path) -> None:
@@ -416,9 +427,11 @@ def test_import_of_all_malformed_csv(spark, tmp_path):
 
 def test_cli_jobs_per_operation(spark, tmp_path, monkeypatch):
     """The footer index and the schema memo leave one Spark job per
-    one-split import and stream drain, and at most three per maintain.
-    ``insert`` writes its file on the driver, and ``query`` and ``last``
-    read there: none of them runs a job.  Nor does a PointServer
+    one-split import and stream drain.  ``insert`` and ``maintain`` write
+    their files on the driver, and ``query`` and ``last`` read there:
+    none of them runs a job, and the table lock they take adds none.  A
+    maintain over the driver-read cap runs Spark's compaction and prints
+    the same line.  Nor does a PointServer
     ``open()`` of a local slice under the driver-read cap, a
     ``refresh()`` after files were only added (a delta refresh), or a
     probe inside its indexed slice or outside it.  A query over the
@@ -442,10 +455,15 @@ def test_cli_jobs_per_operation(spark, tmp_path, monkeypatch):
         for argv in (["insert", "AAPL", "3", "1.0", "1"], ["query", "AAPL", "0", "9"],
                      ["last", "AAPL", "2"], ["import", "AAPL", csv], ["maintain"])
     }
+    cli.run(["insert", "AAPL", "4", "1.0", "1"], spark, d)
     with monkeypatch.context() as m:
         m.setattr(catalog, "LOCAL_READ_MAX_ROWS", 1)
         jobs["query_over_cap"] = _jobs(spark, lambda: cli.run(["query", "AAPL", "0", "9"], spark, d),
                                        f"{tmp_path.name}-query-over-cap")
+        out = []
+        jobs["maintain_over_cap"] = _jobs(spark, lambda: out.extend(cli.run(["maintain"], spark, d)),
+                                          f"{tmp_path.name}-maintain-over-cap")
+    assert out == ["Compacted 5 ticks: 2 -> 1 files"]
 
     # a stream's batches run under its run id's job group
     run_ids: list[str] = []
@@ -498,8 +516,9 @@ def test_cli_jobs_per_operation(spark, tmp_path, monkeypatch):
         if late is not None:
             late.close()
     want = {"insert": 0, "query": 0, "last": 0, "query_over_cap": 1, "import": 1,
-            "drain": 1, "open": 0, "refresh": 0, "probe": 0, "out_of_slice_probe": 0}
-    assert {k: jobs[k] for k in want} == want and jobs["maintain"] <= 3, jobs
+            "maintain": 0, "drain": 1, "open": 0, "refresh": 0, "probe": 0,
+            "out_of_slice_probe": 0}
+    assert {k: jobs[k] for k in want} == want and 0 < jobs["maintain_over_cap"] <= 3, jobs
 
 
 # -- driver-side reads: ``query`` and ``last`` answered from the footer-pruned
