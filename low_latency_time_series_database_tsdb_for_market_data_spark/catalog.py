@@ -198,6 +198,27 @@ def file_identity(f: Path) -> tuple[int, int, int]:
     return st.st_size, st.st_mtime_ns, st.st_ino
 
 
+def file_identities(files: list[Path] | None) -> dict[Path, tuple[int, int, int]] | None:
+    """``file_identity`` of each of ``files`` (a listing, as
+    ``_spark_listing`` gives it); None for a listing that is not local,
+    or when a file cannot be stat-ed: a snapshot that tells whether a
+    table's files changed since, compared whole."""
+    if files is None:
+        return None
+    try:
+        return {f: file_identity(f) for f in files}
+    except OSError:
+        return None
+
+
+def partition_dir(spark: SparkSession, path: str, name: str, value: str) -> str:
+    """The directory of the table at ``path`` that holds its ``name=value``
+    partition, named with Spark's own escaping (``symbol=BRK%2FB`` for
+    ``BRK/B``), as Spark's writer names it."""
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    return f"{path.rstrip('/')}/{name}={utils.escapePathName(value)}"
+
+
 def input_files(df: DataFrame) -> list[Path] | None:
     """The files the file relation ``df`` listed when it was built (Spark
     pins that listing until the relation is rebuilt), as local paths;
@@ -244,6 +265,7 @@ class _Group(NamedTuple):
     """One non-empty row group and its footer min/max of the key column."""
 
     file: object  # the open pyarrow ParquetFile
+    part: str | None  # the file's partition value, None unpartitioned
     index: int
     rows: int
     lo: int
@@ -251,41 +273,45 @@ class _Group(NamedTuple):
 
 
 def _read_set(spark, root: Path, files: list[Path],
-              partition: tuple[str, str] | None) -> list[Path] | None:
+              partition: tuple[str, str | None] | None) -> dict[Path, str | None] | None:
     """The files of ``files`` a read of ``partition`` (name, value)
-    scans, or of the whole table without one; None when the layout is
-    not one whose rows the driver can give exactly: a listed file not
-    named ``*.parquet``, or anything but one ``name=v`` directory level
-    (partitioned) or files straight under ``root`` (unpartitioned).
-    Directory values are compared after Spark's unescaping, as Spark's
-    partition discovery does, and the null partition never matches."""
+    scans, or of the whole table without one, each with its unescaped
+    partition value (None unpartitioned); every partition's files for a
+    value of None.  None when the layout is not one whose rows the
+    driver can give exactly: a listed file not named ``*.parquet``,
+    anything but one ``name=v`` directory level (partitioned) or files
+    straight under ``root`` (unpartitioned), or the null partition when
+    every partition is read (its value has no name).  Directory values
+    are compared after Spark's unescaping, as Spark's partition
+    discovery does, and the null partition never matches a value."""
     if not all(f.name.endswith(".parquet") for f in files):
         return None
     if partition is None:
-        return files if all(f == root or f.parent == root for f in files) else None
+        return {f: None for f in files} if all(f == root or f.parent == root for f in files) else None
     name, value = partition
     unescape = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    out = []
+    out = {}
     for f in files:
         if root not in f.parents or len(f.relative_to(root).parts) != 2:
             return None
         key, _, v = f.parent.name.partition("=")
-        if key != name or not v:
+        if key != name or not v or (value is None and v == _HIVE_NULL):
             return None
-        if v != _HIVE_NULL and (unescape.unescapePathName(v) if "%" in v else v) == value:
-            out.append(f)
+        u = unescape.unescapePathName(v) if "%" in v else v
+        if v != _HIVE_NULL and value in (None, u):
+            out[f] = u
     return out
 
 
-def _row_groups(pf, schema, col: str, no_nulls: bool,
+def _row_groups(pf, part: str | None, schema, col: str, no_nulls: bool,
                 nanos_as_long: bool) -> list[_Group] | None:
-    """The non-empty row groups of one open file with their footer
-    min/max of ``col``, or None when the file cannot be read exactly:
-    a ``schema`` column missing or of another type (the one conversion
-    allowed is TIMESTAMP(NANOS) to int64, which Spark's nanosAsLong
-    reads as the raw count), column names equal but for case, ``col``
-    not a physical INT64, or a row group without min/max stats (or with
-    nulls, when ``no_nulls``)."""
+    """The non-empty row groups of one open file of partition ``part``
+    with their footer min/max of ``col``, or None when the file cannot
+    be read exactly: a ``schema`` column missing or of another type (the
+    one conversion allowed is TIMESTAMP(NANOS) to int64, which Spark's
+    nanosAsLong reads as the raw count), column names equal but for
+    case, ``col`` not a physical INT64, or a row group without min/max
+    stats (or with nulls, when ``no_nulls``)."""
     import pyarrow as pa
 
     arrow = pf.schema_arrow
@@ -316,7 +342,7 @@ def _row_groups(pf, schema, col: str, no_nulls: bool,
             return None
         if no_nulls and (not st.has_null_count or st.null_count):
             return None
-        out.append(_Group(pf, r, rg.num_rows, st.min_raw, st.max_raw))
+        out.append(_Group(pf, part, r, rg.num_rows, st.min_raw, st.max_raw))
     return out
 
 
@@ -340,10 +366,12 @@ def footer_groups(
 
     ``files`` is the listing Spark's relation pinned (default: Spark's
     listing of ``path`` now); ``partition=(name, value)`` keeps one
-    partition's files, as ``_read_set`` does.  Every file must hold the
-    ``schema`` columns as ``_row_groups`` admits them, and ``no_nulls``
-    declines a ``col`` with nulls.  None also when the path is missing
-    or not local, or a file or footer cannot be read."""
+    partition's files, or with a value of None every partition's, as
+    ``_read_set`` does, and each group carries its file's partition
+    value.  Every file must hold the ``schema`` columns as
+    ``_row_groups`` admits them, and ``no_nulls`` declines a ``col``
+    with nulls.  None also when the path is missing or not local, or a
+    file or footer cannot be read."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -359,7 +387,7 @@ def footer_groups(
                 groups = []
                 for f in sorted(read):
                     opened.append(pq.ParquetFile(f))
-                    g = _row_groups(opened[-1], schema, col, no_nulls, nanos)
+                    g = _row_groups(opened[-1], read[f], schema, col, no_nulls, nanos)
                     if g is None:
                         groups = None
                         break
@@ -525,17 +553,27 @@ def ts_min_epoch_ns(spark: SparkSession, path: str, col: str = "ts") -> int | No
 
 def parquet_num_rows(path: str) -> int | None:
     """Exact row count from the footers' ``num_rows`` — no scan, no
-    Spark job.  None when the footers cannot answer: the path is
-    missing, not local or unlistable, holds no files, or lists a file
-    pyarrow cannot read or whose name does not end in ``.parquet``
-    (Spark reads it whatever its suffix, so the ``.parquet`` footers
-    alone would miss its rows).  Planning-time scalars (block counts,
-    quantizer k) read it instead of running count jobs."""
+    Spark job — of the files Spark lists under ``path``
+    (``_footer_rows``); None also when the path cannot be listed.
+    Planning-time scalars (block counts, quantizer k) read it instead
+    of running count jobs."""
+    try:
+        return _footer_rows(_spark_listing(path))
+    except OSError:
+        return None
+
+
+def _footer_rows(files: list[Path] | None) -> int | None:
+    """The rows of ``files``, a listing of a table, from their footers'
+    ``num_rows``, or None when the footers cannot answer: the listing is
+    not local or holds no files, or lists a file pyarrow cannot read or
+    whose name does not end in ``.parquet`` (Spark reads it whatever
+    its suffix, so the ``.parquet`` footers alone would miss its
+    rows)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     try:
-        files = _spark_listing(path)
         if not files or not all(f.name.endswith(".parquet") for f in files):
             return None
         return sum(pq.read_metadata(f).num_rows for f in files)

@@ -46,7 +46,11 @@ partition directory, with the footer Spark's writer would give it
 it compacts each symbol partition of a local table of up to
 ``catalog.LOCAL_READ_MAX_ROWS`` rows into one file with pyarrow
 (``writer.compact_ticks``), and larger or non-local tables keep the
-Spark rewrite.
+Spark rewrite.  Either copy replaces the table by the writer's one
+stage-and-swap, the one retention's expiry goes through too: a
+row-count barrier, a re-check of the table's files, two renames, and a
+crash between the renames finished by the next command to take the
+lock.
 
 Spark jobs per command on a local table: ``query`` 0, ``last`` 0,
 ``insert`` 0, ``maintain`` 0, and an ``import`` of a one-split CSV 1
@@ -59,9 +63,9 @@ One writer at a time, as the reference's one writer thread under
 ``maintain`` take ``flock`` on ``<data_dir>/_ticks.lock`` exclusive, so
 two inserts never read the same next seq and an insert never lands in
 a table ``maintain`` has counted and is about to replace.  ``query`` and
-``last`` take ``<data_dir>/_ticks.read.lock`` shared, which only
-``maintain``'s swap takes exclusive: a read never sees the swap half
-done, and waits for no writer but the swap.  A command that waits
+``last`` take ``<data_dir>/_ticks.read.lock`` shared, which only a
+rewrite's swap (``maintain``'s or retention's) takes exclusive: a read
+never sees the swap half done, and waits for no writer but the swap.  A command that waits
 longer than ``writer.LOCK_TIMEOUT_S`` raises.  A non-local table gets
 no lock and needs an external coordinator between writers.
 """
@@ -124,9 +128,11 @@ def _load(spark: SparkSession, data_dir: str, symbol: str) -> DataFrame | None:
 
 def _symbol_dir(spark: SparkSession, data_dir: str, symbol: str) -> str:
     """The symbol's partition directory, named with Spark's own escaping
-    (``BRK/B`` is stored under ``symbol=BRK%2FB``)."""
-    escape = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    return f"{_table_path(data_dir)}/symbol={escape.escapePathName(symbol)}"
+    (``BRK/B`` is stored under ``symbol=BRK%2FB``;
+    ``catalog.partition_dir``)."""
+    from .catalog import partition_dir
+
+    return partition_dir(spark, _table_path(data_dir), "symbol", symbol)
 
 
 def _probe_max_seq(spark: SparkSession, data_dir: str, symbol: str) -> int | None:
@@ -416,24 +422,22 @@ def cmd_maintain(
     """Engine extension (no reference analogue — its files live forever,
     `timeseries_db.cpp:157-168`): compact the tick table to bound file
     count and restore the time-clustered layout that keeps row-group
-    stats selective after many small appends.  ``writer.compact_locked``
-    does it under the table's exclusive lock, taken before the check for
-    an empty table: on the driver for a local table of up to
+    stats selective after many small appends.  ``writer.compact_ticks``
+    does it under the table's exclusive lock, from one listing of the
+    table: it finishes a swap a crash interrupted, leaves a table with
+    no data file Spark reads alone (a crashed append's ``_temporary/``
+    is not data), compacts on the driver for a local table of up to
     ``catalog.LOCAL_READ_MAX_ROWS`` rows (one file per symbol, no Spark
-    job) and by Spark's rewrite otherwise, then it swaps the compacted
-    copy in by two renames.  The table is read with
-    TICK_SCHEMA, as ``_load`` reads it, so no schema-inference job runs
-    and the symbol partition stays a string."""
-    from .catalog import _parquet_files
-    from .sources.writer import compact_locked
+    job) and by Spark's rewrite otherwise, then swaps the compacted copy
+    in by two renames.  The table is read with TICK_SCHEMA, as ``_load``
+    reads it, so no schema-inference job runs and the symbol partition
+    stays a string."""
+    from .sources.writer import compact_ticks
 
     path = _table_path(data_dir)
-    with _locked(data_dir):  # finishes a swap a crash interrupted first
-        # only files Spark reads count: a crashed append's _temporary/
-        # is not data
-        if not _parquet_files(path):
-            return ["Nothing to maintain: no tick table at " + path]
-        audit = compact_locked(spark, path, target_files, schema=TICK_SCHEMA)
+    audit = compact_ticks(spark, path, target_files, schema=TICK_SCHEMA)
+    if not audit["files_before"]:
+        return ["Nothing to maintain: no tick table at " + path]
     return [
         f"Compacted {audit['rows']} ticks: "
         f"{audit['files_before']} -> {audit['files_after']} files"

@@ -121,15 +121,3 @@ def hex_nibble_sql(sub_expr: str) -> str:
     """DuckDB CASE chain: hex char expression -> 0..15."""
     cases = " ".join(f"WHEN '{c}' THEN {i}" for i, c in enumerate("0123456789abcdef"))
     return f"(CASE {sub_expr} {cases} END)"
-
-
-def simhash_prefix(hash_col: Column, nbits: int) -> Column:
-    """The nbits leading bits of an md5-hex column as ONE BIGINT — the
-    generalized ``simhash_prefix16`` (nbits must be a multiple of 4 and
-    <= 60 so the value stays positive in a signed 64-bit int; 60 is the
-    wide-signature default: div/mod band math stays sign-free where a
-    full 64-bit signature would need two's-complement games in every
-    engine)."""
-    if nbits % 4 or nbits > 60:
-        raise ValueError("nbits must be a multiple of 4, at most 60")
-    return F.conv(F.substring(hash_col, 1, nbits // 4), 16, 10).cast("bigint")

@@ -98,7 +98,7 @@ from .catalog import (
     _schema_memo_key,
     _spark_listing,
     events_raw,
-    file_identity,
+    file_identities,
     input_files,
     local_path,
     local_rows,
@@ -114,7 +114,7 @@ _INT64 = (-(2**63), 2**63 - 1)
 class _Index(NamedTuple):
     keys: np.ndarray  # sorted probe keys: raw ns, or unix micros
     table: pa.Table  # the slice in the served schema, in key order
-    # _identity of each file the index was read from on the driver,
+    # file_identities of the files the index was read from on the driver,
     # taken before the read; None for a Spark-collected index
     source: dict[Path, tuple[int, int, int]] | None
 
@@ -297,7 +297,7 @@ class PointServer:
         file of ``view.files`` when it can, else collected by Spark (one
         job).  Rows with a null ts never match a probe and are not
         indexed."""
-        source = _identity(view.files)
+        source = file_identities(view.files)
         part = None
         if source is not None:
             part = self._read(view, self._window(view, self._lo, self._hi), view.files)
@@ -313,7 +313,7 @@ class PointServer:
         index = view.index
         if index is None or index.source is None:
             return None
-        source = _identity(view.files)
+        source = file_identities(view.files)
         if source is None or any(source.get(f) != st for f, st in index.source.items()):
             return None
         added = [f for f in view.files if f not in index.source]
@@ -479,13 +479,3 @@ class PointServer:
     def close(self) -> None:
         self._view = self._view._replace(index=None)
 
-
-def _identity(files: list[Path] | None) -> dict[Path, tuple[int, int, int]] | None:
-    """``catalog.file_identity`` of each of ``files``; None for a listing
-    that is not local, or a file that cannot be stat-ed."""
-    if files is None:
-        return None
-    try:
-        return {f: file_identity(f) for f in files}
-    except OSError:
-        return None

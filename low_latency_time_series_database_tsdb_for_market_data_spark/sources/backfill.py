@@ -31,7 +31,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from .csv_ticks import read_tick_csv
-from .writer import write_ticks
+from .writer import table_lock, write_ticks
 
 
 def default_file_id(path: str) -> str:
@@ -70,7 +70,10 @@ def ingest_files_idempotent(
 ) -> dict:
     """Ingest every file matching `src_glob` that the manifest has not
     seen; append their rows to the tick table; record them.  Re-running
-    with the same sources is a no-op.  Returns an audit dict
+    with the same sources is a no-op.  The append holds the table's
+    writer lock (``writer.table_lock``), so it never lands in a table a
+    compaction or retention pass has counted, and waits for them (it
+    raises after ``writer.LOCK_TIMEOUT_S``).  Returns an audit dict
     {files_seen, files_ingested, rows_ingested}."""
     seen = _read_manifest(manifest_path)
     files = sorted(_glob.glob(src_glob))
@@ -91,7 +94,8 @@ def ingest_files_idempotent(
     try:
         rows = df.count()
         if rows:
-            write_ticks(df, table_dir, mode="append")
+            with table_lock(table_dir):  # the CLI's writers and rewrites take it
+                write_ticks(df, table_dir, mode="append")
     finally:
         df.unpersist()
     # manifest records AFTER the table append (see module doc)

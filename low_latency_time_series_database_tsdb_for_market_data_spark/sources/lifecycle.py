@@ -11,10 +11,13 @@ crash-safe on its own:
   2. retention  — expire raw ticks older than the cutoff into partial
                   bars (`retention.apply_retention`, two-stage commit);
   3. compaction — bound the raw table's file count and restore the
-                  time-clustered layout (`writer.compact_ticks`,
-                  stage-then-swap), skipped when the file count is
-                  already at target (an empty pass would rewrite the
-                  table for nothing).
+                  time-clustered layout (`writer.compact_ticks`),
+                  skipped when the file count is already at target (an
+                  empty pass would rewrite the table for nothing).
+
+Retention and compaction replace the raw table by the writer's one
+stage-and-swap, and all three steps take the table's writer lock
+(`writer.table_lock`) for their writes.
 
 Ordering matters and is the cheap one: backfill first so today's files
 age correctly, retention before compaction so the rewrite only touches
@@ -25,10 +28,10 @@ aggregates them so one log line captures the night's work.
 from __future__ import annotations
 
 import datetime as _dt
-from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+from ..catalog import _parquet_files
 from .backfill import ingest_files_idempotent
 from .retention import apply_retention
 from .writer import compact_ticks
@@ -63,8 +66,8 @@ def run_maintenance(
             spark, table_dir, bars_dir, cutoff
         )
     tf = target_files or 2 * spark.sparkContext.defaultParallelism
-    n_files = len(list(Path(table_dir).glob("**/*.parquet")))
-    if n_files > tf:
+    # the files Spark reads: no _temporary/ or hidden leftover counts
+    if len(_parquet_files(table_dir) or ()) > tf:
         audit["compaction"] = compact_ticks(
             spark, table_dir, target_files=tf
         )

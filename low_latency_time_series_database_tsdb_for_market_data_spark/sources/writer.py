@@ -13,7 +13,17 @@ discipline SURVEY.md §4.2.1 calls for:
 
 The reference's ``write_mutex`` (`timeseries_db.cpp:44-155`) becomes
 :func:`table_lock`, an advisory per-table file lock that the CLI's
-commands, :func:`compact_ticks` and retention take.
+commands, :func:`compact_ticks`, retention and backfill take.
+
+Both rewrites of a tick table — compaction here and retention's expiry
+(``retention.apply_retention``) — end in the one stage-and-swap this
+module owns: the new copy is written to a stage beside the table, passes
+a row-count barrier (:func:`_staged`), and replaces the table by two
+renames under :func:`swap_lock` only if the table's files are still the
+ones the rewrite counted (:func:`_swap`).  One crash rule covers both: a
+crash between the two renames leaves that rewrite's hidden old copy
+beside a missing table, and the next writer or reader to take the lock
+puts that rewrite's stage in place (:func:`_finish_swap`).
 
 ``seq`` (arrival order) must be assigned by the SOURCE (e.g. event_id) —
 never monotonically_increasing_id in a correctness path (SURVEY.md §7).
@@ -35,14 +45,13 @@ from pyspark.sql import types as T
 
 from .. import catalog, session_cache
 from ..catalog import (
-    _HIVE_NULL,
-    _parquet_files,
+    _footer_rows,
     _read_groups,
     _spark_listing,
-    file_identity,
+    file_identities,
     footer_groups,
     local_path,
-    parquet_num_rows,
+    partition_dir,
     read_parquet,
 )
 
@@ -121,18 +130,18 @@ def table_lock(path: str, shared: bool = False):
     waiter would lock another inode.
 
     * A writer (the default) takes the first exclusive: CLI ``insert``,
-      ``import`` and ``benchmark``, ``maintain`` (:func:`compact_ticks`)
-      and retention, so two inserts never read the same next seq and no
-      insert lands in a table a compaction has counted.  Other writers
-      (a stream's sink, a backfill) do not take it, and a compaction
-      that finds the table changed under it raises.  On taking it, a
-      writer first finishes a compaction swap a crash interrupted
-      (:func:`_finish_swap`).
+      ``import`` and ``benchmark``, ``maintain`` (:func:`compact_ticks`),
+      retention and a backfill's append, so two inserts never read the
+      same next seq and no insert lands in a table a rewrite has
+      counted.  A stream's sink does not take it, and a rewrite that
+      finds the table changed under it raises or rolls back
+      (:func:`_swap`).  On taking it, a writer first finishes a swap a
+      crash interrupted (:func:`_finish_swap`).
     * A reader (``shared=True``: CLI ``query`` and ``last``) takes the
       second shared, which a swap takes exclusive (:func:`swap_lock`)
       for its two renames and the old copy's deletion — so a read never
       sees the table half swapped, and never waits for a writer's
-      import or compaction, only for the swap.  A reader that finds a
+      import or rewrite, only for the swap.  A reader that finds a
       swap a crash interrupted finishes it before it reads.  A reader of
       a table whose parent directory does not exist (nothing to read)
       takes no lock.
@@ -153,14 +162,14 @@ def table_lock(path: str, shared: bool = False):
     if shared:
         while True:
             with _flock(read_lock, shared=True, reader=True):
-                if not _swap_interrupted(live):
+                if live.exists() or not _old_copy(live):
                     yield
                     return
             with _flock(read_lock, shared=False):
                 _finish_swap(live)
     with _flock(write_lock, shared=False):
         os.close(os.open(read_lock, os.O_RDONLY | os.O_CREAT, 0o666))
-        if _swap_paths(live)[1].exists():
+        if _old_copy(live):
             with _flock(read_lock, shared=False):
                 _finish_swap(live)
         yield
@@ -317,56 +326,91 @@ def _count_distinct(col) -> int:
     return len(np.unique(bits)) + (col.null_count > 0)
 
 
-def _swap_paths(live: Path) -> tuple[Path, Path]:
-    """(stage, old) of a compaction of ``live``: the compacted copy is
+# the two rewrites that replace a tick table by a stage written beside
+# it: compaction (``compact_ticks``) and retention (``retention``)
+_REWRITES = ("compact", "retain")
+
+
+def _stage(path: str, kind: str) -> str:
+    """The stage a ``kind`` rewrite of the table at ``path`` writes."""
+    return f"{path.rstrip('/')}__{kind}_stage"
+
+
+def _swap_paths(live: Path, kind: str) -> tuple[Path, Path]:
+    """(stage, old) of a ``kind`` rewrite of ``live``: the new copy is
     staged beside it, and the live copy moves to a hidden name before
     the stage takes its place."""
-    return (live.with_name(f"{live.name}__compact_stage"),
-            live.with_name(f".{live.name}__compact_old"))
+    return Path(_stage(str(live), kind)), live.with_name(f".{live.name}__{kind}_old")
 
 
-def _swap_interrupted(live: Path) -> bool:
-    """A crash came between a swap's two renames: the table is missing
-    from ``live`` and its old copy is there."""
-    return not live.exists() and _swap_paths(live)[1].exists()
+def _old_copy(live: Path) -> bool:
+    """A swap's old copy of ``live`` is beside it: the swap is not done."""
+    return any(_swap_paths(live, kind)[1].exists() for kind in _REWRITES)
 
 
 def _finish_swap(live: Path) -> None:
-    """Complete a compaction swap that a crash interrupted; the caller
-    holds :func:`swap_lock`.  The stage passed the row-count barrier
-    before the first rename, so a table missing from ``live`` beside an
-    old copy is the stage's to take.  Then drop the old copy."""
-    stage, old = _swap_paths(live)
-    if old.exists():
-        if not live.exists():
-            os.rename(stage if stage.exists() else old, live)
-        shutil.rmtree(old, ignore_errors=True)
+    """Complete a swap that a crash interrupted; the caller holds
+    :func:`swap_lock`.  The listing check came before the first rename,
+    so a table missing from ``live`` beside an old copy is the stage's
+    of that swap to take, and no other stage's (a killed compaction may
+    leave its stage beside a retention's swap).  Then drop the old
+    copy."""
+    for kind in _REWRITES:
+        stage, old = _swap_paths(live, kind)
+        if old.exists():
+            if not live.exists():
+                os.rename(stage if stage.exists() else old, live)
+            shutil.rmtree(old, ignore_errors=True)
 
 
-def _identities(path: str) -> dict[Path, tuple[int, int, int]] | None:
-    """``catalog.file_identity`` of every file Spark lists under
-    ``path``; None when the path is not local."""
-    files = _spark_listing(path)
-    return None if files is None else {f: file_identity(f) for f in files}
+def _discard(stage: str) -> None:
+    """Delete a rewrite's stage, if there is one."""
+    shutil.rmtree(local_path(stage) or stage, ignore_errors=True)
 
 
-def _swap(path: str, stage: str, listing) -> None:
-    """Replace the table at ``path`` with ``stage`` by two renames — live
-    to its hidden old name, stage to live — then delete the old copy,
-    all under :func:`swap_lock`, so a reader sees the old table or the
-    new one, never neither.  Raises, leaving the live table untouched
-    and the stage deleted, when the files listed under ``path`` are no
-    longer ``listing``: a writer that does not take the lock changed the
-    table after it was counted."""
-    if _identities(path) != listing:
-        shutil.rmtree(local_path(stage) or stage, ignore_errors=True)
-        raise RuntimeError(f"compact: {path} changed during the compaction; table left as it was")
+def _row_count(spark: SparkSession, path: str, files: list[Path] | None) -> int:
+    """Rows Spark reads under ``path``, whose listing is ``files``: 0 for
+    none, footer ``num_rows`` when local, else a count() job."""
+    n = 0 if files == [] else _footer_rows(files)
+    return spark.read.parquet(path).count() if n is None else n
+
+
+def _staged(spark: SparkSession, path: str, kind: str, rows: int) -> int:
+    """The barrier a ``kind`` rewrite of ``path`` passes before its swap:
+    its stage must hold ``rows`` rows, else the stage is deleted and
+    RuntimeError raised.  Returns the stage's data file count; one
+    listing of the stage gives both."""
+    stage = _stage(path, kind)
+    files = _spark_listing(stage)
+    staged = _row_count(spark, stage, files)
+    if staged != rows:  # barrier: must survive python -O (assert strips)
+        _discard(stage)
+        raise RuntimeError(f"{kind} stage incomplete: {staged} != {rows}")
+    return sum(f.name.endswith(".parquet") for f in files or ())
+
+
+def _swap(path: str, kind: str, listing) -> bool:
+    """Replace the table at ``path`` with its ``kind`` stage by two
+    renames — live to its hidden old name, stage to live — then delete
+    the old copy, all under :func:`swap_lock`, so a reader sees the old
+    table or the new one, never neither.  ``listing`` is the
+    ``catalog.file_identities`` of the files the rewrite counted; the
+    swap is made only when the table is missing (a crash came between
+    its removal and the second rename) or its files are still those,
+    and otherwise False is returned with nothing touched: a writer that
+    does not take the lock changed the table after it was counted."""
     live = local_path(path) or Path(path)
-    _, old = _swap_paths(live)
+    stage, old = _swap_paths(live, kind)
     with swap_lock(path):
-        os.rename(live, old)
-        os.rename(local_path(stage) or stage, live)
-        shutil.rmtree(old)
+        if live.exists():
+            now = file_identities(_spark_listing(path))
+            if now is None or now != listing:
+                return False
+            os.rename(live, old)
+        os.rename(stage, live)
+        shutil.rmtree(old, ignore_errors=True)
+    session_cache.drop("relation", path)  # in-place swap: cached listings are stale
+    return True
 
 
 # data column types whose parquet form a pyarrow write gives exactly as
@@ -374,28 +418,29 @@ def _swap(path: str, stage: str, listing) -> None:
 _DRIVER_TYPES = (T.LongType, T.DoubleType)
 
 
-def _compact_on_driver(spark: SparkSession, path: str, stage: str, schema: T.StructType | None,
-                       files: list[Path] | None, rows: int) -> bool:
+def _compact_on_driver(spark: SparkSession, path: str, stage: str,
+                       schema: T.StructType | None, files: list[Path] | None) -> int | None:
     """Write the compaction of ``files``, Spark's listing of the table at
-    ``path`` holding ``rows`` rows, to ``stage`` on the driver and return
-    True; or return False, having written nothing, where only Spark's
+    ``path``, to ``stage`` on the driver and return the rows it holds;
+    or return None, having written nothing, where only Spark's
     compaction gives its output exactly.  No Spark job runs.
 
-    Each ``symbol=`` partition is read through the footer walk
-    (``catalog.footer_groups``), sorted by (ts, seq) with nulls first as
-    Spark sorts, and written as one file with :func:`_write_part` under
-    the directory Spark's writer names it.  The footer is the one a
-    Spark compaction writes: Spark reads every column of a file relation
-    as nullable, so the row metadata is the nullable data schema (import
-    files hold nullable columns already, insert files non-null ones).
+    One footer walk (``catalog.footer_groups``) over every ``symbol=``
+    partition gives the row count and the row groups; each partition's
+    rows are sorted by (ts, seq) with nulls first as Spark sorts, and
+    written as one file with :func:`_write_part` under the directory
+    Spark's writer names it.  The footer is the one a Spark compaction
+    writes: Spark reads every column of a file relation as nullable, so
+    the row metadata is the nullable data schema (import files hold
+    nullable columns already, insert files non-null ones).
 
-    False for: a non-local path; no ``schema`` (the partition column is
+    None for: a non-local path; no ``schema`` (the partition column is
     then typed by directory inference) or one without a string
     ``symbol`` partition and ``ts``/``seq`` data columns, or with a data
     column not long or double; a codec or rebase mode the driver's files
-    do not reproduce (:func:`_spark_footer_metadata`); a listing of
-    anything but ``*.parquet`` files one ``symbol=`` level down, the
-    null partition among them; anything the footer walk declines; more
+    do not reproduce (:func:`_spark_footer_metadata`); anything the
+    footer walk declines (a listing of anything but ``*.parquet`` files
+    one ``symbol=`` level down, the null partition among them); more
     than ``catalog.LOCAL_READ_MAX_ROWS`` rows.  That cap, sized for a
     query's read, also bounds this path well: on benchmark-shaped tables
     (3 symbols, 20 000-row imports plus inserts; 4-core VM, medians of
@@ -404,46 +449,33 @@ def _compact_on_driver(spark: SparkSession, path: str, stage: str, schema: T.Str
     48 MB of Arrow memory."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    root = local_path(path)
-    if root is None or files is None or schema is None or rows > catalog.LOCAL_READ_MAX_ROWS:
-        return False
+    if local_path(path) is None or files is None or schema is None:
+        return None
     data = [f for f in schema if f.name != "symbol"]
     names = {f.name for f in data}
     if (len(data) == len(schema) or not isinstance(schema["symbol"].dataType, T.StringType)
             or not {"ts", "seq"} <= names
             or not all(isinstance(f.dataType, _DRIVER_TYPES) for f in data)):
-        return False
+        return None
     data = T.StructType([T.StructField(f.name, f.dataType, True) for f in data])
     metadata = _spark_footer_metadata(spark, data)
     if metadata is None:
-        return False
-    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    values = set()
-    for f in files:
-        parts = f.relative_to(root).parts
-        if len(parts) != 2:
-            return False
-        key, _, v = parts[0].partition("=")
-        if key != "symbol" or v in ("", _HIVE_NULL):
-            return False
-        values.add(utils.unescapePathName(v) if "%" in v else v)
+        return None
     arrow = to_arrow_schema(data)
-    tables = {}
-    for value in sorted(values):
-        with footer_groups(spark, path, arrow, "ts", partition=("symbol", value),
-                           files=files) as groups:
-            if groups is None:
-                return False
-            tables[value] = _read_groups(groups, arrow)
+    with footer_groups(spark, path, arrow, "ts", partition=("symbol", None),
+                       files=files) as groups:
+        rows = None if groups is None else sum(g.rows for g in groups)
+        if rows is None or rows > catalog.LOCAL_READ_MAX_ROWS:
+            return None
+        tables = {v: _read_groups([g for g in groups if g.part == v], arrow)
+                  for v in {g.part for g in groups}}
     out = local_path(stage)
     shutil.rmtree(out, ignore_errors=True)
     out.mkdir(parents=True)
     for value, tbl in tables.items():
-        if tbl.num_rows:
-            tbl = tbl.sort_by([("ts", "ascending"), ("seq", "ascending")],
-                              null_placement="at_start")
-            _write_part(out / f"symbol={utils.escapePathName(value)}", tbl, metadata)
-    return True
+        tbl = tbl.sort_by([("ts", "ascending"), ("seq", "ascending")], null_placement="at_start")
+        _write_part(Path(partition_dir(spark, str(out), "symbol", value)), tbl, metadata)
+    return rows
 
 
 def compact_ticks(
@@ -462,7 +494,8 @@ def compact_ticks(
     appends interleave time ranges across files; compaction re-sorts
     them.
 
-    Two paths write the compacted copy, both beside the original:
+    Two paths write the compacted copy, both to a stage beside the
+    original:
 
     * on the driver (:func:`_compact_on_driver`), for a local table read
       with a tick ``schema`` (the CLI passes its TICK_SCHEMA) of at most
@@ -478,58 +511,37 @@ def compact_ticks(
 
     The whole pass holds the table's exclusive lock (:func:`table_lock`),
     so no CLI insert or import lands after the table was counted and is
-    then swapped away.  The swap is gated by a barrier: the staged row
-    count must equal the original's, else RuntimeError: the original
-    stays in place and the stage is deleted.  Both counts come from the footer index
-    (``catalog.parquet_num_rows`` — committed files' ``num_rows``, over
-    exactly the files Spark lists), not from two count() jobs; a path
-    the footers cannot serve (not local) falls back to count().  Just
-    before the swap the listing is checked again against the one
-    counted (:func:`_swap`).  A crash leaves the whole table at the
-    live path, the stage or the hidden old copy; the next writer or
-    reader to take the lock finishes the swap.  File counts are of the files
-    Spark reads (``catalog._parquet_files``), so a crashed append's
-    ``_temporary/`` leftovers are not counted.  A non-local table gets
-    no lock, and needs an external coordinator between its writers.
+    then swapped away.  It lists the table once: that listing gives the
+    file count before, the row count (the footers' ``num_rows``, read
+    once by the driver path's footer walk, or a count() where no footer
+    can answer), the files the driver path reads and the identities the
+    swap re-checks.  A table with no data file is left alone.  Then the
+    one stage-and-swap of both rewrites: the row-count barrier
+    (:func:`_staged`; a short stage is deleted and RuntimeError
+    raised), and :func:`_swap`, which raises here, leaving the live
+    table untouched and the stage deleted, when the listing changed.  A
+    crash leaves the whole table at the live path, the stage or the
+    hidden old copy; the next writer or reader to take the lock
+    finishes the swap.  File counts are of the files Spark reads, so a
+    crashed append's ``_temporary/`` or a killed driver write's hidden
+    file is not counted.  A non-local table gets no lock, and needs an
+    external coordinator between its writers.
     Returns {rows, files_before, files_after}."""
+    stage = _stage(path, "compact")
     with table_lock(path):
-        return compact_locked(spark, path, target_files, schema)
-
-
-def compact_locked(spark: SparkSession, path: str, target_files: int | None = None,
-                   schema: T.StructType | None = None) -> dict:
-    """:func:`compact_ticks` for a caller that holds the table's
-    exclusive lock already (CLI ``maintain``, which checks the table is
-    not empty under the same lock)."""
-    stage = f"{path.rstrip('/')}__compact_stage"
-    listing = _identities(path)
-    files_before = len(_parquet_files(path) or ())
-    rows = _row_count(spark, path)
-    files = None if listing is None else list(listing)
-    if not _compact_on_driver(spark, path, stage, schema, files, rows):
-        write_ticks(
-            read_parquet(spark, path, schema),
-            stage,
-            mode="overwrite",
-            colocate=True,
-            target_files=target_files,
-        )
-    staged = _row_count(spark, stage)
-    if staged != rows:  # barrier: must survive python -O (assert strips)
-        shutil.rmtree(local_path(stage) or stage, ignore_errors=True)
-        raise RuntimeError(f"compact stage incomplete: {staged} != {rows}")
-    _swap(path, stage, listing)
-    session_cache.drop("relation", path)  # in-place swap: cached listings are stale
-    files_after = len(_parquet_files(path) or ())
-    return {
-        "rows": rows,
-        "files_before": files_before,
-        "files_after": files_after,
-    }
-
-
-def _row_count(spark: SparkSession, path: str) -> int:
-    """Rows Spark reads under ``path``: footer ``num_rows`` when local,
-    else a count() job."""
-    n = parquet_num_rows(path)
-    return spark.read.parquet(path).count() if n is None else n
+        files = _spark_listing(path)
+        before = sum(f.name.endswith(".parquet") for f in files or ())
+        if files is not None and not before:
+            return {"rows": 0, "files_before": 0, "files_after": 0}
+        listing = file_identities(files)
+        rows = _compact_on_driver(spark, path, stage, schema, files)
+        if rows is None:
+            rows = _row_count(spark, path, files)
+            write_ticks(read_parquet(spark, path, schema), stage, mode="overwrite",
+                        colocate=True, target_files=target_files)
+        after = _staged(spark, path, "compact", rows)
+        if not _swap(path, "compact", listing):
+            _discard(stage)
+            raise RuntimeError(f"compact: {path} changed during the compaction; "
+                               "table left as it was")
+    return {"rows": rows, "files_before": before, "files_after": after}

@@ -29,14 +29,6 @@ from pyspark.sql import types as T
 from ..session import tune
 
 
-def require_nanos_as_long(spark: SparkSession) -> None:
-    """Permit the TIMESTAMP(NANOS) physical layout (reads as int64 long).
-    No-op for micros/NTZ files; without it a nanos file fails at schema
-    read.  Every streaming reader sets it here so standalone use works —
-    never rely on a prior catalog.table() call having set it session-wide."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-
 def stream_schema(spark: SparkSession, source_dir: str) -> T.StructType:
     """Schema for the file stream source, inferred from the source's own
     parquet footers (file streams require a declared schema; hard-coding
@@ -52,10 +44,12 @@ def stream_schema(spark: SparkSession, source_dir: str) -> T.StructType:
     Also pins the session to UTC (tune) — with_ts_event's TIMESTAMP_NTZ
     branch casts via the session zone, and a foreign non-UTC session
     would otherwise shift ts_event relative to the batch catalog path."""
-    from ..catalog import read_parquet
+    from ..catalog import _allow_nanos, read_parquet
 
     tune(spark)
-    require_nanos_as_long(spark)
+    # set here, not left to a prior catalog.table() call, so a stream
+    # reader works standalone
+    _allow_nanos(spark)
     return read_parquet(spark, source_dir).schema
 
 

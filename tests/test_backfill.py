@@ -147,3 +147,30 @@ def test_lifecycle_backfill_compact_retain_query(spark, sf_dir, tmp_path):
 
     got = unified_bars(spark, table, bars).toPandas()
     assert_df_equal(got, expected, name="lifecycle bars")
+
+
+def test_backfill_waits_for_the_writer_lock(spark, sf_dir, tmp_path, monkeypatch):
+    """The backfill's append takes the table's writer lock, as the CLI's
+    writers and the rewrites do: behind a held lock it waits, raises
+    after ``LOCK_TIMEOUT_S`` with nothing written or recorded, and
+    ingests once the lock is free."""
+    import time
+
+    import pytest
+
+    from low_latency_time_series_database_tsdb_for_market_data_spark.sources import writer
+
+    src = tmp_path / "src"
+    src.mkdir()
+    shutil.copy(_tick_file(spark, sf_dir, tmp_path / "p1", 0, 50), src / "day1.parquet")
+    table, manifest = str(tmp_path / "table"), str(tmp_path / "manifest.txt")
+    monkeypatch.setattr(writer, "LOCK_TIMEOUT_S", 0.3)
+    with writer.table_lock(table):
+        t0 = time.monotonic()
+        with pytest.raises(TimeoutError):
+            ingest_files_idempotent(spark, f"{src}/*.parquet", table, manifest)
+        assert time.monotonic() - t0 >= 0.3
+    assert not (tmp_path / "table").exists() and not (tmp_path / "manifest.txt").exists()
+    audit = ingest_files_idempotent(spark, f"{src}/*.parquet", table, manifest)
+    assert audit["files_ingested"] == 1
+    assert read_ticks(spark, table).count() == audit["rows_ingested"] > 0

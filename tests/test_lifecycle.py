@@ -117,3 +117,17 @@ def test_steps_gate_on_arguments(spark, sf_dir, tmp_path):
         spark, table_dir, str(tmp_path / "b2"), target_files=n_files
     )
     assert audit == {"backfill": None, "retention": None, "compaction": None}
+
+
+def test_hidden_leftover_does_not_trigger_compaction(spark, sf_dir, tmp_path):
+    """A driver write killed before its rename leaves a hidden
+    ``.part-….parquet`` that Spark never reads: the file count that
+    gates compaction skips it, as it skips ``_temporary/``."""
+    import shutil
+
+    table_dir = str(tmp_path / "t3")
+    write_ticks(tick_view(spark, sf_dir), table_dir, mode="overwrite", target_files=2)
+    files = sorted(Path(table_dir).glob("**/*.parquet"))
+    shutil.copy(files[0], files[0].with_name(".part-00000-killed.c000.snappy.parquet"))
+    audit = run_maintenance(spark, table_dir, str(tmp_path / "b3"), target_files=len(files))
+    assert audit["compaction"] is None

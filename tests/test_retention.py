@@ -4,7 +4,10 @@ through mid-bucket cutoffs, repeated passes, and idempotent re-runs."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from low_latency_time_series_database_tsdb_for_market_data_spark.sources.retention import (
@@ -377,3 +380,135 @@ def test_crash_mid_bars_move_recovers_conservation(spark, sf_dir, tmp_path):
     assert audit["retained_rows"] + ticks.where(
         F.col("ts") < F.lit(cutoff)
     ).count() == n_total
+
+
+# -- the raw swap is the writer's: a changed table is never overwritten ------
+
+def _small_ticks(spark, seqs):
+    """Ticks of one symbol, seq ``q`` at second ``70 * q`` of 2024-01-01."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [("A", t0 + dt.timedelta(seconds=70 * q), 1.0 + q, 1, q) for q in seqs]
+    return spark.createDataFrame(
+        rows, "symbol string, ts timestamp, price double, volume long, seq long")
+
+
+def _raw_seqs(raw_dir) -> list[int]:
+    import pyarrow.parquet as pq
+
+    from low_latency_time_series_database_tsdb_for_market_data_spark import catalog
+
+    return sorted(q for f in catalog._parquet_files(raw_dir)
+                  for q in pq.read_table(f, columns=["seq"]).column("seq").to_pylist())
+
+
+def _cutoff_after_seq0():
+    import datetime as dt
+
+    return dt.datetime(2024, 1, 1, 0, 1)  # seq 0 (second 0) expires, seq 1 (70) stays
+
+
+def _expected_bars(spark, tmp_path, seqs):
+    full = str(tmp_path / "full")
+    write_ticks(_small_ticks(spark, seqs), full, mode="overwrite")
+    return _bars_pdf(unified_bars(spark, full, str(tmp_path / "nobars")))
+
+
+def test_unlocked_append_during_staging_is_not_lost(spark, tmp_path, monkeypatch):
+    """A writer that takes no lock (a stream's sink) appends while the
+    pass stages its survivors: the listing check before the raw swap
+    sees it, and the pass rolls back and raises with the table as it
+    is, the appended rows included.  The next pass expires exactly
+    once."""
+    from low_latency_time_series_database_tsdb_for_market_data_spark.sources import retention
+
+    raw_dir, bars_dir = str(tmp_path / "raw"), str(tmp_path / "bars")
+    write_ticks(_small_ticks(spark, [0, 1, 2]), raw_dir)
+    expected = _expected_bars(spark, tmp_path, [0, 1, 2, 3])
+    real = retention.write_ticks
+
+    def append_then_stage(df, path, **kw):
+        real(_small_ticks(spark, [3]), raw_dir)  # unlocked, mid-pass
+        return real(df, path, **kw)
+
+    monkeypatch.setattr(retention, "write_ticks", append_then_stage)
+    with pytest.raises(RuntimeError, match="changed during the pass"):
+        apply_retention(spark, raw_dir, bars_dir, _cutoff_after_seq0())
+    monkeypatch.undo()
+    assert _raw_seqs(raw_dir) == [0, 1, 2, 3]
+    for p in retention._stage_paths(raw_dir, bars_dir):
+        assert not Path(p).exists()
+    audit = apply_retention(spark, raw_dir, bars_dir, _cutoff_after_seq0())
+    assert (audit["expired_rows"], audit["retained_rows"]) == (1, 3)
+    assert _raw_seqs(raw_dir) == [1, 2, 3]
+    assert_df_equal(_bars_pdf(unified_bars(spark, raw_dir, bars_dir)), expected,
+                    name="bars after a rolled-back pass")
+
+
+def test_append_after_committed_crash_survives(spark, tmp_path):
+    """A crash after the commit marker, then an append: recovery finds
+    the raw table changed since the pass counted it and rolls the pass
+    back (its bars never moved) instead of swapping the stage over the
+    append; the re-run expires seq 0 once and keeps the append."""
+    from low_latency_time_series_database_tsdb_for_market_data_spark.sources.retention import (  # noqa: E501
+        _stage_paths,
+    )
+
+    raw_dir, bars_dir = str(tmp_path / "raw"), str(tmp_path / "bars")
+    write_ticks(_small_ticks(spark, [0, 1, 2]), raw_dir)
+    expected = _expected_bars(spark, tmp_path, [0, 1, 2, 3])
+    with pytest.raises(RuntimeError, match="injected crash"):
+        apply_retention(spark, raw_dir, bars_dir, _cutoff_after_seq0(), _crash_at="committed")
+    write_ticks(_small_ticks(spark, [3]), raw_dir)
+    audit = apply_retention(spark, raw_dir, bars_dir, _cutoff_after_seq0())
+    assert (audit["expired_rows"], audit["retained_rows"]) == (1, 3)
+    assert _raw_seqs(raw_dir) == [1, 2, 3]
+    for p in _stage_paths(raw_dir, bars_dir):
+        assert not Path(p).exists()
+    assert_df_equal(_bars_pdf(unified_bars(spark, raw_dir, bars_dir)), expected,
+                    name="bars after an append past a committed crash")
+
+
+@pytest.mark.parametrize("taker", ["reader", "retention"])
+def test_retention_crash_between_renames_takes_its_own_stage(spark, tmp_path, monkeypatch,
+                                                            taker):
+    """A crash between the raw swap's two renames, beside a stale stage a
+    killed compaction left: the next taker of the lock (a reader, or
+    the next pass) puts retention's stage in place, never the
+    compaction's, and the bars fold exactly once."""
+    import os
+    import shutil
+
+    from low_latency_time_series_database_tsdb_for_market_data_spark.sources import writer
+
+    raw_dir, bars_dir = str(tmp_path / "raw"), str(tmp_path / "bars")
+    write_ticks(_small_ticks(spark, [0, 1, 2]), raw_dir)
+    expected = _expected_bars(spark, tmp_path, [0, 1, 2])
+    stale = tmp_path / "raw__compact_stage"
+    shutil.copytree(raw_dir, stale)
+    stale_files = sorted(stale.rglob("*"))
+    renames = []
+    real = os.rename
+
+    def crash_second(src, dst):
+        renames.append(src)
+        if len(renames) == 2:
+            raise OSError("killed")
+        real(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(writer.os, "rename", crash_second)
+        with pytest.raises(OSError, match="killed"):
+            apply_retention(spark, raw_dir, bars_dir, _cutoff_after_seq0())
+    assert not Path(raw_dir).exists() and (tmp_path / ".raw__retain_old").exists()
+    if taker == "reader":
+        with writer.table_lock(raw_dir, shared=True):
+            assert _raw_seqs(raw_dir) == [1, 2]
+    audit = apply_retention(spark, raw_dir, bars_dir, _cutoff_after_seq0())
+    assert audit["expired_rows"] == 0
+    assert _raw_seqs(raw_dir) == [1, 2]
+    assert not (tmp_path / ".raw__retain_old").exists()
+    assert sorted(stale.rglob("*")) == stale_files  # never moved
+    assert_df_equal(_bars_pdf(unified_bars(spark, raw_dir, bars_dir)), expected,
+                    name=f"bars after a crash between renames, repaired by the {taker}")

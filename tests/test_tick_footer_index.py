@@ -105,18 +105,17 @@ def test_fingerprint_unstatable_is_distinct(tmp_path, monkeypatch):
         raise PermissionError(13, "denied", str(self))
 
     # a table replaced by rename with its size and mtime kept: only the
-    # inode tells, and both the fingerprint and PointServer see it
-    from low_latency_time_series_database_tsdb_for_market_data_spark.serving import _identity
-
+    # inode tells, and both the fingerprint and the identity snapshot
+    # (PointServer's and the rewrites' swap check) see it
     docs = tmp_path / "documents.parquet"
     pq.write_table(pa.table({"doc_id": [1, 2]}), docs)
     st = docs.stat()
-    before = (catalog.parquet_fingerprint(str(docs)), _identity([docs]))
+    before = (catalog.parquet_fingerprint(str(docs)), catalog.file_identities([docs]))
     shutil.copy(docs, tmp_path / "next.parquet")
     os.replace(tmp_path / "next.parquet", docs)
     os.utime(docs, ns=(st.st_atime_ns, st.st_mtime_ns))
     assert (docs.stat().st_size, docs.stat().st_mtime_ns) == (st.st_size, st.st_mtime_ns)
-    after = (catalog.parquet_fingerprint(str(docs)), _identity([docs]))
+    after = (catalog.parquet_fingerprint(str(docs)), catalog.file_identities([docs]))
     assert after[0] != before[0] and after[1] != before[1]
     assert after[0][0][1:] == after[1][docs] == catalog.file_identity(docs)
 

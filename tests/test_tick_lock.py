@@ -44,8 +44,8 @@ def test_insert_during_maintain_is_not_lost(spark, tmp_path, monkeypatch):
     late: list[threading.Thread] = []
     out: list = []
 
-    def counted(spark_, path):
-        n = real(spark_, path)
+    def counted(spark_, path, *listing):
+        n = real(spark_, path, *listing)
         if not late:
             late.append(threading.Thread(
                 target=lambda: out.append(cli.run(["insert", "AAPL", "4", "1.0", "1"], spark, d))))
@@ -228,9 +228,9 @@ def test_maintain_refuses_a_table_changed_without_the_lock(spark, tmp_path, monk
     part = Path(cli._symbol_dir(spark, d, "S"))
     real = writer._row_count
 
-    def counted(spark_, path):
-        n = real(spark_, path)
-        if not path.endswith("__compact_stage"):
+    def counted(spark_, path, *listing):  # the stage's count: after the table's
+        n = real(spark_, path, *listing)
+        if path.endswith("__compact_stage"):
             shutil.copy(_parquet(part)[0], part / "part-unlocked.parquet")
         return n
 
@@ -422,9 +422,9 @@ def test_driver_compaction_declines_without_a_tick_schema(spark, tmp_path):
     files = catalog._spark_listing(path)
     for p, schema, listed in (("s3a://bucket/ticks", cli.TICK_SCHEMA, None), (path, None, files),
                               (path, wide, files)):
-        assert writer._compact_on_driver(spark, p, stage, schema, listed, 1) is False
+        assert writer._compact_on_driver(spark, p, stage, schema, listed) is None
     assert not Path(stage).exists()
-    assert writer._compact_on_driver(spark, path, stage, cli.TICK_SCHEMA, files, 1) is True
+    assert writer._compact_on_driver(spark, path, stage, cli.TICK_SCHEMA, files) == 1
 
 
 def test_count_distinct_equals_arrow_hash_count():
@@ -450,3 +450,46 @@ def test_count_distinct_equals_arrow_hash_count():
     ]
     for col in cols:
         assert writer._count_distinct(col) == pc.count_distinct(col, mode="all").as_py(), col
+
+
+def test_maintain_lists_the_table_once(spark, tmp_path, monkeypatch):
+    """``maintain`` of a 24-file table walks the live table twice (the
+    one listing its counts, driver read and swap check come from, then
+    the swap's re-check), the stage once (its barrier and file count),
+    opens each live footer once, and runs no Spark job."""
+    import pyarrow.parquet.core as pq_core
+
+    d = str(tmp_path / "data")
+    for k in range(24):
+        _insert(spark, d, "ABC"[k % 3], k)
+    table = tmp_path / "data" / "ticks"
+    before = _parquet(table)
+    walks, opens = [], []
+    real_walk = os.walk
+
+    def walk(top, *a, **k):
+        walks.append(Path(top).name)
+        return real_walk(top, *a, **k)
+
+    class Opened(pq.ParquetFile):
+        def __init__(self, source, *a, **k):
+            if isinstance(source, (str, os.PathLike)):  # else read_metadata's handle
+                opens.append(Path(source))
+            super().__init__(source, *a, **k)
+
+    def read_metadata(where, *a, **k):
+        opens.append(Path(where))
+        return real_metadata(where, *a, **k)
+
+    real_metadata = pq.read_metadata
+    out: list = []
+    with monkeypatch.context() as m:
+        m.setattr(catalog.os, "walk", walk)
+        m.setattr(pq, "ParquetFile", Opened)
+        m.setattr(pq_core, "ParquetFile", Opened)
+        m.setattr(pq, "read_metadata", read_metadata)
+        jobs = _jobs(spark, lambda: out.extend(cli.run(["maintain"], spark, d)), "maintain-24")
+    assert out == ["Compacted 24 ticks: 24 -> 3 files"] and jobs == 0
+    assert (walks.count("ticks"), walks.count("ticks__compact_stage")) == (2, 1), walks
+    assert sorted(p for p in opens if table in p.parents) == before
+    assert cli.run(["query", "B", "0", "99"], spark, d)[0] == "Found 8 results:"
