@@ -108,6 +108,9 @@ from .catalog import (
 )
 
 _KEY = "__probe_key"
+# the column ``symbols`` slices: the events table's symbol analogue
+# (TESTDATA.md)
+_SYMBOL_COL = "event_type"
 _INT64 = (-(2**63), 2**63 - 1)
 
 
@@ -162,17 +165,13 @@ class PointServer:
         lo_ns: int | None = None,
         hi_ns: int | None = None,
         symbols: list[str] | None = None,
-        symbol_col: str = "event_type",
     ) -> None:
         self._spark = spark
         self._path = f"{sf_dir}/events.parquet"
         self._sf_dir = sf_dir
         self._lo = lo_ns
         self._hi = hi_ns
-        # the events table's symbol analogue is event_type (TESTDATA.md);
-        # deployments with a real symbol column pass symbol_col="symbol"
         self._symbols = list(symbols) if symbols else None
-        self._symbol_col = symbol_col
         self._counts = dict.fromkeys(
             ("index_hits", "local_reads", "parquet_fallbacks",
              "delta_refreshes", "full_refreshes"), 0)
@@ -267,7 +266,7 @@ class PointServer:
         if hi_ns is not None:
             out = out.where(F.col("ts") <= ts_bound(raw, hi_ns, upper=True))
         if symbols:
-            out = out.where(F.col(self._symbol_col).isin(list(symbols)))
+            out = out.where(F.col(_SYMBOL_COL).isin(list(symbols)))
         return out
 
     def _collect(self, view: _View) -> pa.Table:
@@ -399,7 +398,7 @@ class PointServer:
         """``part`` restricted to ``symbols`` (all rows when None/empty)."""
         if not symbols:
             return part
-        col = part.column(self._symbol_col)
+        col = part.column(_SYMBOL_COL)
         return part.filter(pc.is_in(col, pa.array(list(symbols), col.type)))
 
     def _count(self, kind: str) -> None:

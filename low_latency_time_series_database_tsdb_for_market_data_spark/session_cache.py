@@ -4,9 +4,11 @@ Each kind is something a session would otherwise recompute on every use:
 ``relation`` (a resolved parquet read per path: ~0.1-0.2 s of listing and
 py4j work, and ``catalog.table()`` runs many times per query), ``schema``
 (a schema Spark inferred, keyed by exactly what inference reads),
-``corpus_bands``, ``even_half_state`` and ``verdict_model`` (the
-verification verdicts' shared state, a pure function of one table,
-fingerprinted by its file stats) and ``warm`` (``warm_start`` ran).
+``corpus_bands`` and ``even_half_state`` (the dedup verdicts' shared
+state), ``verdict_model`` (two entries per data dir for the ANN recall
+verdicts: the ground truth all four read, and that truth plus the
+training the IVF three share) — each a pure function of one table,
+fingerprinted by its file stats — and ``warm`` (``warm_start`` ran).
 Nothing else: ordinary registry queries keep their own plans, so no
 cached result stands in for a query's work.  Values must stay valid
 while their input is unchanged: writers that

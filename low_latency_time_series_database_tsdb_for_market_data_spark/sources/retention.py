@@ -175,10 +175,10 @@ def apply_retention(
 
     The raw swap is ``writer._swap``, the one a compaction makes: two
     renames under the readers' lock, made only if the raw table still
-    holds the files counted.  A writer that does not take the lock (a
-    stream's sink) and appends during the pass makes it roll back and
-    raise RuntimeError, the table left as it was, appended rows
-    included.
+    holds the files counted.  A writer that bypasses the lock (a bare
+    ``write_ticks`` call) and appends during the pass makes it roll
+    back and raise RuntimeError, the table left as it was, appended
+    rows included.
 
     ``_crash_at`` is a test-only fault-injection point naming a step to
     die before ('bars_staged' | 'committed' | 'raw_swapped').
@@ -188,9 +188,9 @@ def apply_retention(
     PASS (not the bars table total).
 
     The whole pass holds ``raw_dir``'s exclusive lock
-    (``writer.table_lock``), the one the CLI's writers, backfill and
-    ``compact_ticks`` take, so no locked writer's rows land in the raw
-    table between the count and the swap."""
+    (``writer.table_lock``), the one the CLI's writers, backfill, a
+    stream's sink and ``compact_ticks`` take, so no locked writer's rows
+    land in the raw table between the count and the swap."""
     with table_lock(raw_dir):
         return _retain(spark, raw_dir, bars_dir, cutoff, bucket, _crash_at)
 

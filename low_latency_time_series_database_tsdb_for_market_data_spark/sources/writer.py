@@ -131,12 +131,12 @@ def table_lock(path: str, shared: bool = False):
 
     * A writer (the default) takes the first exclusive: CLI ``insert``,
       ``import`` and ``benchmark``, ``maintain`` (:func:`compact_ticks`),
-      retention and a backfill's append, so two inserts never read the
-      same next seq and no insert lands in a table a rewrite has
-      counted.  A stream's sink does not take it, and a rewrite that
-      finds the table changed under it raises or rolls back
-      (:func:`_swap`).  On taking it, a writer first finishes a swap a
-      crash interrupted (:func:`_finish_swap`).
+      retention, a backfill's append and each batch of a stream's sink,
+      so two inserts never read the same next seq and no append lands
+      in a table a rewrite has counted.  A rewrite that finds the table
+      changed under it anyway (a writer that bypassed the lock) raises
+      or rolls back (:func:`_swap`).  On taking it, a writer first
+      finishes a swap a crash interrupted (:func:`_finish_swap`).
     * A reader (``shared=True``: CLI ``query`` and ``last``) takes the
       second shared, which a swap takes exclusive (:func:`swap_lock`)
       for its two renames and the old copy's deletion — so a read never
@@ -193,15 +193,14 @@ def write_ticks(
     ticks: DataFrame,
     path: str,
     mode: str = "append",
-    symbol_col: str = "symbol",
-    ts_col: str = "ts",
     colocate: bool = False,
     presorted: bool = False,
     target_files: int | None = None,
 ) -> None:
-    """Append ticks to a partitioned, time-sorted parquet table with one
-    Spark write.  It takes no lock: a caller that shares the table with
-    the CLI holds :func:`table_lock`.
+    """Append ticks to a table partitioned by ``symbol`` and sorted by
+    (symbol, ts), with one Spark write.  It takes no lock: every caller
+    in the package (the CLI's writers, backfill, a stream's sink, a
+    rewrite's stage) holds :func:`table_lock` around it.
 
     Default (colocate=False) is SHUFFLE-FREE: each input task local-sorts
     by (symbol, ts) and writes its slice of every symbol's directory.
@@ -234,12 +233,12 @@ def write_ticks(
     writer requires ordering on the partition column and would otherwise
     insert a SECOND sort of every row."""
     if colocate:
-        ticks = ticks.repartitionByRange(symbol_col, ts_col)
+        ticks = ticks.repartitionByRange("symbol", "ts")
     if target_files is not None:
         ticks = ticks.coalesce(target_files)
     if not presorted:
-        ticks = ticks.sortWithinPartitions(symbol_col, ts_col)
-    ticks.write.mode(mode).partitionBy(symbol_col).parquet(path)
+        ticks = ticks.sortWithinPartitions("symbol", "ts")
+    ticks.write.mode(mode).partitionBy("symbol").parquet(path)
     # the writer owns the invalidation (ADVICE r12): any session that
     # cached this path's relation must re-list after the files change
     session_cache.drop("relation", path)

@@ -81,8 +81,13 @@ def ingest_available_now(
     """Drain everything currently in source_dir into the partitioned tick
     table at dest_dir, then stop — the streaming equivalent of the
     reference's append_batch + sync().  Exactly-once via checkpoint +
-    parquet commit protocol."""
-    from ..sources.writer import write_ticks
+    parquet commit protocol.  Each batch's write holds the table's
+    writer lock (``writer.table_lock``), as every writer of a tick table
+    does: a batch never lands in a table a rewrite has counted, and one
+    that finds a crashed rewrite's swap half done finishes it first.  A
+    batch that cannot take the lock within ``writer.LOCK_TIMEOUT_S``
+    fails the drain uncommitted, so a re-run writes it once."""
+    from ..sources.writer import table_lock, write_ticks
 
     stream = open_tick_stream(spark, source_dir)
 
@@ -94,7 +99,8 @@ def ingest_available_now(
             F.col("user_id").alias("volume"),
             F.col("event_id").alias("seq"),
         )
-        write_ticks(ticks, dest_dir)
+        with table_lock(dest_dir):
+            write_ticks(ticks, dest_dir)
 
     q = (
         stream.writeStream.foreachBatch(sink)

@@ -4,6 +4,8 @@ and the multimodal mapInPandas pipeline."""
 
 from __future__ import annotations
 
+import pytest
+
 from low_latency_time_series_database_tsdb_for_market_data_spark.operators.llm import (
     multimodal,
 )
@@ -882,35 +884,94 @@ def test_pq_reconstructs_codebook_vectors_exactly(spark):
     assert hit["vec_id"] == 999 and abs(hit["adist"]) < 1e-9
 
 
-def test_q204_verdict_row_and_planted_break(spark, sf_dir):
-    """q204 (r8 verdict item #2): the healthy pipeline must emit
-    pq_ok=1 with the exact top-1 matching brute force; and the verdict
-    must actually be LIVE — recomputing it with a sabotaged PQ top-10
-    (disjoint ids) must flip it to 0.  The oracle only ever states 1,
-    so a real regression fails the driver hash."""
-    from low_latency_time_series_database_tsdb_for_market_data_spark.registry import (
-        load_all,
-    )
-
-    reg = load_all()
-    row = reg["q204_pq_recall_verdict"].fn(spark, sf_dir).head()
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    assert row.n_vectors == e.count()
-    assert row.pq_ok == 1
-    # brute-force top-1 in numpy, double precision, same tie rule
+def _l2_order(e, label=None) -> list[int]:
+    """vec_ids of ``e`` (a DataFrame of the embeddings table) by exact
+    squared L2 to the probe (vec 0), numpy in double, ties to the lower
+    id, the probe excluded; only rows of ``label`` when given."""
     import numpy as np
 
     pdf = e.toPandas().sort_values("vec_id")
     x = np.stack(pdf.embedding.to_numpy()).astype(np.float64)
     ids = pdf.vec_id.to_numpy()
-    p = x[ids == 0][0]
-    d2 = ((x - p) ** 2).sum(axis=1)
-    order = np.lexsort((ids, d2))
-    top1 = next(int(ids[i]) for i in order if ids[i] != 0)
-    assert row.top1_exact == top1
-    # the verdict arithmetic: disjoint overlap must fail the 0.9 bar
-    assert not (0 * 10 >= 9 * 10)
-    assert 9 * 10 >= 9 * 10  # 9/10 still passes (the documented bar)
+    d2 = ((x - x[ids == 0][0]) ** 2).sum(axis=1)
+    keep = ids != 0 if label is None else (ids != 0) & (pdf.label.to_numpy() == label)
+    return [int(ids[i]) for i in np.lexsort((ids, d2)) if keep[i]]
+
+
+def test_q204_verdict_row(spark, sf_dir):
+    """q204 (r8 verdict item #2): the healthy pipeline must emit
+    pq_ok=1 with the exact top-1 matching brute force.  The oracle only
+    ever states 1, so a real regression fails the driver hash
+    (test_recall_verdict_planted_break shows the flag is live)."""
+    row = REG["q204_pq_recall_verdict"].fn(spark, sf_dir).head()
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    assert row.n_vectors == e.count()
+    assert row.pq_ok == 1
+    assert row.top1_exact == _l2_order(e)[0]
+
+
+# name -> (the shortlist rerank it calls, its recall flag)
+_RECALL_VERDICTS = {
+    "q204_pq_recall_verdict": ("pq_search_rerank", "pq_ok"),
+    "q245_ivfpq_recall_verdict": ("ivfpq_search_rerank", "ivfpq_ok"),
+    "q249_ivfpq_pruned_verdict": ("ivfpq_search_rerank", "ivfpq_ok"),
+    "q253_ann_filtered_verdict": ("ivfpq_search_rerank", "ivfpq_ok"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_RECALL_VERDICTS))
+def test_recall_verdict_planted_break(spark, sf_dir, monkeypatch, name):
+    """Each recall verdict is live: with its shortlist rerank sabotaged
+    to return 10 ids disjoint from the exact top-10 (unfiltered and
+    label-filtered), its recall flag reads 0, while every other column
+    (n_vectors or n_label, top1_exact, the plan flags) is unchanged."""
+    from low_latency_time_series_database_tsdb_for_market_data_spark.operators.llm import (
+        similarity,
+    )
+
+    rerank, flag = _RECALL_VERDICTS[name]
+    fn = REG[name].fn
+    healthy = fn(spark, sf_dir).head().asDict()
+    assert healthy[flag] == 1
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    exact = set(_l2_order(e)[:10]) | set(_l2_order(e, similarity._FILTER_LABEL)[:10])
+    wrong = [i for i in _l2_order(e) if i not in exact][:10]
+    assert len(wrong) == 10
+    monkeypatch.setattr(similarity, rerank, lambda *a, **k: spark.createDataFrame(
+        [(i, 0.0) for i in wrong], "vec_id bigint, dist double"))
+    broken = fn(spark, sf_dir).head().asDict()
+    assert broken[flag] == 0
+    assert {**broken, flag: 1} == healthy
+
+
+def test_q204_reads_the_shared_truth(spark, sf_dir, tmp_path, monkeypatch):
+    """q204 takes its probe, corpus count and exact top-10 from the
+    session's verdict truth (``similarity._verdict_truth``): cold, its
+    construction computes them (the probe's head() 1 job, the exact
+    top-10 1, the count 2); with the truth cached it runs 4 jobs fewer
+    and returns the same row.  It never trains IVF centroids."""
+    import shutil
+
+    from low_latency_time_series_database_tsdb_for_market_data_spark.catalog import table
+    from low_latency_time_series_database_tsdb_for_market_data_spark.operators.llm import (
+        similarity,
+    )
+    from tests.test_tick_footer_index import _jobs
+
+    d = str(tmp_path)  # a private copy: the truth starts cold
+    shutil.copy(f"{sf_dir}/embeddings.parquet", f"{d}/embeddings.parquet")
+    table(spark, d, "embeddings")  # the relation's listing is not q204's
+
+    def no_training(*a, **k):
+        raise AssertionError("q204 trained IVF centroids")
+
+    monkeypatch.setattr(similarity, "train_centroids", no_training)
+    fn = REG["q204_pq_recall_verdict"].fn
+    built = []
+    cold = _jobs(spark, lambda: built.append(fn(spark, d)), f"{tmp_path.name}-q204-cold")
+    warm = _jobs(spark, lambda: built.append(fn(spark, d)), f"{tmp_path.name}-q204-warm")
+    assert cold - warm == 4, (cold, warm)
+    assert built[0].collect() == built[1].collect()
 
 
 def test_resize_images_real_bmp_ppm_pixels(spark):

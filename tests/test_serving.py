@@ -132,8 +132,8 @@ def test_symbol_sliced_server(spark, monkeypatch):
     that slice serves FROM the index and matches the raw-path filter
     exactly; (b) a ts-only probe must NOT serve from the symbol-sliced
     index (it would silently drop the other event types) and still
-    returns the full q04-equivalent result; (c) construction with the
-    default symbol_col works against the events schema (round-6 advice:
+    returns the full q04-equivalent result; (c) the slice filters the
+    events schema's symbol column, event_type (round-6 advice:
     the old code filtered a nonexistent `symbol` column and ignored the
     slice in _in_cache); (d) ``symbols=[]`` is a ts-only probe too."""
     from low_latency_time_series_database_tsdb_for_market_data_spark.operators.reference_surface import (  # noqa: E501

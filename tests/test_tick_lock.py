@@ -243,6 +243,24 @@ def test_maintain_refuses_a_table_changed_without_the_lock(spark, tmp_path, monk
     assert cli.run(["query", "S", "0", "9"], spark, d)[0] == "Found 3 results:"
 
 
+def _crash_between_renames(monkeypatch, rewrite) -> None:
+    """Run ``rewrite`` with the second ``os.rename`` of its swap killed:
+    the live table sits at its hidden old name, the stage beside it."""
+    renames = []
+    real = os.rename
+
+    def crash_second(src, dst):
+        renames.append(src)
+        if len(renames) == 2:
+            raise OSError("killed")
+        real(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(writer.os, "rename", crash_second)
+        with pytest.raises(OSError, match="killed"):
+            rewrite()
+
+
 def test_crash_between_swap_renames_is_finished_by_next_taker(spark, tmp_path, monkeypatch):
     """A crash after the live table moved to its hidden old name but
     before the stage took its place: the next reader (``query``,
@@ -254,19 +272,7 @@ def test_crash_between_swap_renames_is_finished_by_next_taker(spark, tmp_path, m
     live, old = tmp_path / "data" / "ticks", tmp_path / "data" / ".ticks__compact_old"
 
     def crash() -> None:
-        renames = []
-        real = os.rename
-
-        def crash_second(src, dst):
-            renames.append(src)
-            if len(renames) == 2:
-                raise OSError("killed")
-            real(src, dst)
-
-        with monkeypatch.context() as m:
-            m.setattr(writer.os, "rename", crash_second)
-            with pytest.raises(OSError, match="killed"):
-                cli.run(["maintain"], spark, d)
+        _crash_between_renames(monkeypatch, lambda: cli.run(["maintain"], spark, d))
         assert not live.exists() and old.exists()
 
     crash()
@@ -283,6 +289,58 @@ def test_crash_between_swap_renames_is_finished_by_next_taker(spark, tmp_path, m
     assert not old.exists()
     assert cli.run(["query", "S", "0", "9"], spark, d)[0] == "Found 5 results:"
     assert cli._next_seq(spark, d, "S") == 5
+
+
+def _drain(tmp_path: Path) -> tuple[Path, list[str]]:
+    """A one-file events feed (4 rows, ``event_id`` 0-3, all ``view``)
+    and the (source, table, checkpoint) of a drain into ``data/ticks``."""
+    from tests.test_catalog_adaptive import _write_events
+
+    feed = tmp_path / "feed" / "events.parquet"
+    feed.mkdir(parents=True)
+    shutil.move(_write_events(str(tmp_path), "us"), feed / "part-0.parquet")
+    return feed, [str(feed), str(tmp_path / "data" / "ticks"), str(tmp_path / "ckpt")]
+
+
+def test_drain_finishes_a_crashed_swap_before_it_appends(spark, tmp_path, monkeypatch):
+    """A stream's sink takes the writer lock, so a drain into a table
+    whose compaction crashed between its two renames first puts the
+    stage in place, then appends: every row survives.  Without the lock
+    the drain recreated the table with only its own batch, and the next
+    locked writer deleted the old copy."""
+    from low_latency_time_series_database_tsdb_for_market_data_spark.streaming import (
+        ingest_available_now,
+    )
+
+    feed, drain = _drain(tmp_path)
+    ingest_available_now(spark, *drain)
+    live, old = Path(drain[1]), tmp_path / "data" / ".ticks__compact_old"
+    _crash_between_renames(monkeypatch, lambda: writer.compact_ticks(spark, drain[1]))
+    assert not live.exists() and old.exists()
+    shutil.copy(feed / "part-0.parquet", feed / "part-1.parquet")
+    ingest_available_now(spark, *drain)
+    assert live.exists() and not old.exists()
+    assert not (tmp_path / "data" / "ticks__compact_stage").exists()
+    assert spark.read.parquet(drain[1]).count() == 8
+
+
+def test_drain_behind_a_held_lock_fails_then_reruns_once(spark, tmp_path, monkeypatch):
+    """A drain whose sink cannot take the writer lock fails after
+    ``LOCK_TIMEOUT_S`` with nothing written; its batch is not committed,
+    so a re-run ingests that batch exactly once."""
+    from low_latency_time_series_database_tsdb_for_market_data_spark.streaming import (
+        ingest_available_now,
+    )
+
+    _, drain = _drain(tmp_path)
+    monkeypatch.setattr(writer, "LOCK_TIMEOUT_S", 0.2)
+    with writer.table_lock(drain[1]):
+        with pytest.raises(Exception, match="not acquired within 0.2 s"):
+            ingest_available_now(spark, *drain)
+    assert not Path(drain[1]).exists()
+    ingest_available_now(spark, *drain)
+    rows = spark.read.parquet(drain[1]).select("seq").collect()
+    assert sorted(r.seq for r in rows) == [0, 1, 2, 3]
 
 
 # -- the driver compaction against Spark's, on the same table ----------------
