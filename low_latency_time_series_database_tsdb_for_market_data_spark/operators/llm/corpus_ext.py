@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ...catalog import table
 from ...functions.deterministic import ratio_e4, ratio_e4_signed
+from ...functions.pairs import capped_bucket_sets, in_set_pairs, pin_under_cap
 from ...functions.texthash import exploded_ngrams, shingles, tokens
 from ...registry import query
 from .text import simhash_cte, simhash_cte_wide, simhash_df
@@ -30,14 +31,15 @@ from .text import simhash_cte, simhash_cte_wide, simhash_df
 # boundary).  Verification keeps pairs within _HAM_MAX bits.
 _HAM_MAX = 3
 
-# Per-(band, value) membership cap — dedup.py's strict-cap discipline
-# (`dedup.py:125-245`) applied to simhash buckets: a row_number over the
+# Per-(band, value) membership cap — the strict-cap discipline of
+# `functions/pairs.py` applied to simhash buckets: a row_number over the
 # bucket window bounds the collect_set array BEFORE it is built, and the
 # query FAILS LOUDLY if any bucket reached the cap rather than silently
 # diverging from the uncapped oracle.  sf0.1's hottest bucket holds ~900
 # docs (templated synthetic text); 4096 gives headroom while pinning the
 # worst per-bucket array at ~64 KB and the pair fan-out at C(4096, 2).
 _MAX_BAND_DOCS = 4096
+_CAP_REMEDY = "Widen the banding (64-bit signature) or raise the cap."
 
 
 @query(
@@ -118,30 +120,22 @@ def simhash_pairs(
     neighbourhood would dwarf its 32k-value buckets."""
     spark = d.sparkSession
     sim = simhash_df(d)
-    sigs = (
-        sim.groupBy("simhash")
-        .agg(
-            F.sort_array(F.collect_set("doc_id")).alias("ds"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .localCheckpoint()  # 4 consumers; <= 65,536 rows
+    sigs = sim.groupBy("simhash").agg(
+        F.sort_array(F.collect_set("doc_id")).alias("ds"),
+        F.count(F.lit(1)).alias("n"),
     )
+
     # strict cap: per band, bucket membership = sum of same-value sigs
-    over = None
-    for bexpr in ("simhash div 256", "simhash % 256"):
-        b = (
-            sigs.groupBy(F.expr(bexpr).alias("bv"))
-            .agg(F.sum("n").alias("m"))
-            .where(F.col("m") >= max_band)
+    def band_sizes(pinned: DataFrame) -> DataFrame:
+        b0, b1 = (
+            pinned.groupBy(F.expr(bv)).agg(F.sum("n").alias("m")).select("m")
+            for bv in ("simhash div 256", "simhash % 256")
         )
-        over = b if over is None else over.unionAll(b)
-    if over.limit(1).count():
-        raise RuntimeError(
-            f"simhash_pairs: a simhash band bucket reached the "
-            f"per-bucket cap ({max_band}); results would silently "
-            "diverge from the uncapped oracle.  Widen the banding (64-bit "
-            "signature) or raise the cap."
-        )
+        return b0.unionAll(b1)
+
+    sigs = pin_under_cap(  # 4 consumers; <= 65,536 rows
+        sigs, max_band, "simhash_pairs", _CAP_REMEDY, band_sizes
+    )
     pc = lambda v: bin(v).count("1")  # noqa: E731
     masks = [
         (e << shift, pc(e))
@@ -177,17 +171,9 @@ def simhash_pairs(
             "hamming",
         )
     )
-    same = (
-        sigs.where(F.col("n") > 1)
-        .select(F.posexplode("ds").alias("i", "a"), "ds")
-        .select(
-            F.col("a").alias("doc_a"),
-            F.explode(
-                F.slice("ds", F.col("i") + 2, F.size("ds"))
-            ).alias("doc_b"),
-            F.lit(0).cast("bigint").alias("hamming"),
-        )
-    )
+    same = in_set_pairs(
+        sigs.where(F.col("n") > 1), "ds", "doc_a", "doc_b"
+    ).withColumn("hamming", F.lit(0).cast("bigint"))
     return cross.unionAll(same)
 
 
@@ -223,47 +209,13 @@ def simhash_pairs_wide(
             )
         ).alias("band", "bv"),
     )
-    return _banded_hamming_pairs(banded, max_band, ham_max)
-
-
-def _banded_hamming_pairs(
-    banded: DataFrame, max_band: int, ham_max: int
-) -> DataFrame:
-    """Shared tail of the simhash pair searches: capped in-set pair
-    generation per (band, bv) bucket + Hamming verify — the strict-cap
-    discipline documented on q95."""
-    from pyspark.sql import Window
-
-    bw = Window.partitionBy("band", "bv").orderBy("doc_id")
-    groups = (
-        banded.withColumn("rn", F.row_number().over(bw))
-        .where(F.col("rn") <= max_band)
-        .groupBy("band", "bv")
-        .agg(
-            F.sort_array(
-                F.collect_set(F.struct("doc_id", "simhash"))
-            ).alias("ds"),
-            F.max("rn").alias("max_rn"),
-        )
-        .where(F.size("ds") > 1)
+    groups = pin_under_cap(
+        capped_bucket_sets(
+            banded, ["band", "bv"], F.struct("doc_id", "simhash"), max_band
+        ),
+        max_band, "simhash_pairs_wide", _CAP_REMEDY,
     )
-    # bucket-scale materialization (KB-MB): the cap probe and the pair
-    # generation share it instead of recomputing the signature pipeline
-    groups = groups.localCheckpoint()
-    if groups.where(F.col("max_rn") >= max_band).limit(1).count():
-        raise RuntimeError(
-            f"simhash_pairs: a simhash band bucket reached the "
-            f"per-bucket cap ({max_band}); results would silently "
-            "diverge from the uncapped oracle.  Widen the banding (64-bit "
-            "signature) or raise the cap."
-        )
-    groups = groups.drop("max_rn")
-    pairs = groups.select(
-        F.posexplode("ds").alias("i", "a"), "ds"
-    ).select(
-        "a",
-        F.explode(F.slice("ds", F.col("i") + 2, F.size("ds"))).alias("b"),
-    )
+    pairs = in_set_pairs(groups, "ds", "a", "b")
     ham = F.bit_count(
         F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
     ).cast("bigint")

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ...catalog import table
 from ...functions.deterministic import ratio_e4
+from ...functions.pairs import in_set_pairs
 from ...functions.texthash import exploded_ngrams, hex_nibble_sql, ngrams, tokens
 from ...registry import query
 from .pipeline_ext import _ngram_sql
@@ -126,12 +127,7 @@ def q91_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_set("source")).alias("ss"))
         .where(F.size("ss") > 1)
     )
-    pairs = groups.select(
-        F.posexplode("ss").alias("i", "src_a"), "ss"
-    ).select(
-        "src_a",
-        F.explode(F.slice("ss", F.col("i") + 2, F.size("ss"))).alias("src_b"),
-    )
+    pairs = in_set_pairs(groups, "ss", "src_a", "src_b")
     return pairs.groupBy("src_a", "src_b").agg(
         F.count(F.lit(1)).alias("n_shared")
     )

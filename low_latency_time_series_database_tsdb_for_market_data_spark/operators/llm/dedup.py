@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ...catalog import table
 from ...functions.deterministic import ratio_e4
+from ...functions.pairs import capped_bucket_sets, in_set_pairs, pin_under_cap
 from ...functions.texthash import N_MINHASH, exploded_ngrams, shingles, tokens
 from ...registry import query
 
@@ -51,12 +52,6 @@ def shingle_rows(docs: DataFrame, par: int) -> DataFrame:
     parquet arrives as ONE split, and on a real cluster the input is
     already split so this shuffle of (doc_id, text) is no-op-sized."""
     return exploded_ngrams(docs.repartition(par), 3, "s", ["doc_id"])
-
-
-def _shingle_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """shingle_rows over the testdata documents table (_SHINGLES_SQL twin)."""
-    d = table(spark, sf_dir, "documents")
-    return shingle_rows(d, spark.sparkContext.defaultParallelism)
 
 
 def _rot(h, width: int, seed: int):
@@ -257,8 +252,6 @@ def lsh_candidate_pairs(reps: DataFrame, par: int,
     of text, so a caller that already holds a corpus-wide signature
     table passes the doc_id-filtered slice instead of re-hashing the
     text; value-identical by construction."""
-    from pyspark.sql import Window
-
     if strict_cap and max_bucket < 2:
         raise ValueError(
             "strict_cap requires max_bucket >= 2 (max_bucket=1 disables "
@@ -266,41 +259,20 @@ def lsh_candidate_pairs(reps: DataFrame, par: int,
             "degenerate mode is intended)"
         )
 
-    w = Window.partitionBy("band", "band_key").orderBy("doc_id")
-    groups = (
-        (band_rows(reps, par) if bands is None else bands)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= max_bucket)
-        .groupBy("band", "band_key")
-        .agg(
-            F.sort_array(F.collect_set("doc_id")).alias("ds"),
-            F.max("rn").alias("max_rn"),
-        )
-        .where(F.size("ds") > 1)
+    groups = capped_bucket_sets(
+        band_rows(reps, par) if bands is None else bands,
+        ["band", "band_key"], F.col("doc_id"), max_bucket,
     )
     if strict_cap:
-        # materialize once; the checkpoint is bucket-scale (vocabulary-ish,
-        # KB-MB), and downstream connected_components re-reads it instead
-        # of recomputing the MinHash pipeline.  Round 14 (guide §2.4, r13
-        # verdict item #4): the cap guard RIDES the materialization — a
-        # LAZY checkpoint plus one max(max_rn) aggregate both persists the
-        # frame and returns the guard signal in a single job, where the
-        # old eager checkpoint + limit(1).count() probe paid two.
-        groups = groups.localCheckpoint(eager=False)
-        hot_max = groups.agg(F.max("max_rn")).collect()[0][0]
-        if hot_max is not None and hot_max >= max_bucket:
-            raise RuntimeError(
-                f"candidate_edges: an LSH bucket reached the per-bucket cap "
-                f"({max_bucket}); results would silently diverge from the "
-                "uncapped oracle semantics.  Inspect hot_buckets(), then "
-                "raise max_bucket/banding width, or pass strict_cap=False "
-                "to accept deterministic truncation."
-            )
-    groups = groups.drop("max_rn")
-    pairs = groups.select(F.posexplode("ds").alias("i", "a"), "ds").select(
-        "a",
-        F.explode(F.slice("ds", F.col("i") + 2, F.size("ds"))).alias("b"),
-    )
+        # the pinned sets are bucket-scale (KB-MB); downstream
+        # connected_components re-reads them instead of recomputing the
+        # MinHash pipeline
+        groups = pin_under_cap(
+            groups, max_bucket, "candidate_edges",
+            "Inspect hot_buckets(), then raise max_bucket/banding width, or "
+            "pass strict_cap=False to accept deterministic truncation.",
+        )
+    pairs = in_set_pairs(groups, "ds", "a", "b")
     # dedup_pairs=False: callers that run their OWN distinct over a
     # union with these pairs (candidate_edges) skip the redundant inner
     # exchange; direct consumers keep the default multi-band collapse
@@ -574,8 +546,9 @@ def q56_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     irrelevant for a near-dup *verifier*, and sub-ppb at these corpus
     sizes).  Jaccard arithmetic is integer-count based, so it is
     order-exact."""
+    d = table(spark, sf_dir, "documents")
     return (
-        capped_pair_counts(spark, sf_dir)
+        capped_pair_counts(d, spark.sparkContext.defaultParallelism)
         .where(F.col("c") * 5 >= (F.col("na") + F.col("nb") - F.col("c")) * 3)
         .select(
             F.col("ia").alias("doc_a"),
@@ -585,14 +558,15 @@ def q56_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def capped_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q56's IDF-pruned pair generation WITHOUT the final threshold:
-    (ia, ib, c, na, nb) — shared-shingle count and per-doc retained-set
-    sizes for every co-occurring doc pair over the retained (DF < cap)
-    shingle vocabulary.  q56 filters it at Jaccard >= 0.6; q236 sweeps
-    the whole threshold curve off the same single corpus shuffle."""
-    d = table(spark, sf_dir, "documents")
-    cap_row = d.agg(
+def capped_pair_counts(docs: DataFrame, par: int) -> DataFrame:
+    """q56's IDF-pruned pair generation over any (doc_id, text) frame,
+    WITHOUT a final threshold: (ia, ib, c, na, nb) — shared-shingle count
+    and per-doc retained-set sizes for every co-occurring doc pair over
+    the retained (DF < cap) shingle vocabulary.  q56 filters it at
+    Jaccard >= 0.6, q236 sweeps the whole threshold curve and
+    `containment_pairs` keeps the excerpt class, each off the same
+    single corpus shuffle."""
+    cap_row = docs.agg(
         F.greatest(
             F.lit(_DF_MIN_CAP),
             F.ceil(F.count(F.lit(1)) * _DF_FRAC),
@@ -607,7 +581,7 @@ def capped_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The checkpointed set is O(vocabulary) rows with <cap-element arrays,
     # megabytes even when the corpus is terabytes.
     grouped = (
-        _shingle_rows(spark, sf_dir)
+        shingle_rows(docs.select("doc_id", "text"), par)
         .select(F.xxhash64("s").alias("hs"), "doc_id")
         .groupBy("hs")
         .agg(F.sort_array(F.collect_set("doc_id")).alias("ds"))
@@ -624,12 +598,7 @@ def capped_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     common = (
-        grouped.where(F.size("ds") > 1)
-        .select(F.posexplode("ds").alias("i", "ia"), "ds")
-        .select(
-            "ia",
-            F.explode(F.slice("ds", F.col("i") + 2, F.size("ds"))).alias("ib"),
-        )
+        in_set_pairs(grouped.where(F.size("ds") > 1), "ds", "ia", "ib")
         .groupBy("ia", "ib")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -703,7 +672,9 @@ def q81_stop_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost collapses).  One explode + one distinct-agg; at 100 TB the DF
     table is computed once per corpus snapshot and broadcast to the
     verify stage."""
-    rows = _shingle_rows(spark, sf_dir)
+    rows = shingle_rows(
+        table(spark, sf_dir, "documents"), spark.sparkContext.defaultParallelism
+    )
     return (
         rows.groupBy(F.col("s").alias("shingle"))
         .agg(F.countDistinct("doc_id").alias("doc_freq"))
@@ -1351,45 +1322,12 @@ def _containment_oracle(prefix_cte: str, src: str) -> str:
 def containment_pairs(docs: DataFrame, par: int) -> DataFrame:
     """Containment near-dup pairs over any (doc_id, text) frame — the
     library surface behind q159/q166; see q159's docstring for the
-    semantics and the 100 TB shape (identical machinery to q56, only
-    the keep-predicate differs)."""
-    cap_row = docs.agg(
-        F.greatest(
-            F.lit(_DF_MIN_CAP),
-            F.ceil(F.count(F.lit(1)) * _DF_FRAC),
-        ).alias("cap")
-    )
-    grouped = (
-        shingle_rows(docs.select("doc_id", "text"), par)
-        .select(F.xxhash64("s").alias("hs"), "doc_id")
-        .groupBy("hs")
-        .agg(F.sort_array(F.collect_set("doc_id")).alias("ds"))
-        .crossJoin(F.broadcast(cap_row))
-        .where(F.size("ds") < F.col("cap"))
-        .localCheckpoint(eager=False)
-    )
-    sizes = (
-        grouped.select(F.explode("ds").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    common = (
-        grouped.where(F.size("ds") > 1)
-        .select(F.posexplode("ds").alias("i", "ia"), "ds")
-        .select(
-            "ia",
-            F.explode(F.slice("ds", F.col("i") + 2, F.size("ds"))).alias("ib"),
-        )
-        .groupBy("ia", "ib")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("ia"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("ib"), F.col("n").alias("nb"))
+    semantics and the 100 TB shape: `capped_pair_counts` (q56's
+    machinery) with only the keep-predicate changed."""
     mn = F.least(F.col("na"), F.col("nb"))
     union_sz = F.col("na") + F.col("nb") - F.col("c")
     return (
-        common.join(F.broadcast(sa), "ia")
-        .join(F.broadcast(sb), "ib")
+        capped_pair_counts(docs, par)
         .where((F.col("c") * 5 >= mn * 4) & (F.col("c") * 5 < union_sz * 3))
         .select(
             F.col("ia").alias("doc_a"),

@@ -964,7 +964,8 @@ def q236_jaccard_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     thr = spark.createDataFrame(
         [(t,) for t in (5, 6, 7, 8, 9)], "t10 bigint"
     )
-    pairs = capped_pair_counts(spark, sf_dir).select(
+    d = table(spark, sf_dir, "documents")
+    pairs = capped_pair_counts(d, spark.sparkContext.defaultParallelism).select(
         "ia", "ib", "c",
         (F.col("na") + F.col("nb") - F.col("c")).alias("u"),
     )

@@ -98,6 +98,7 @@ def q244_streaming_dedup_verdict(
     import shutil
     import tempfile
 
+    from ..streaming.epochs import epoch_dir
     from ..streaming.incremental_dedup import StreamingDedup
     from .llm.incremental import (
         corpus_band_rows,
@@ -122,7 +123,7 @@ def q244_streaming_dedup_verdict(
     snap_files = max(1, -(-n_docs // 200_000))
     try:
         save_dedup_state(
-            even_half_state(spark, sf_dir), f"{state_dir}/epoch=0",
+            even_half_state(spark, sf_dir), epoch_dir(state_dir, 0),
             target_files=snap_files,
         )
         fold = StreamingDedup(

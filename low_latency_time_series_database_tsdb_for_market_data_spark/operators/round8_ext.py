@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions.deterministic import cents, ratio_e4
+from ..functions.pairs import in_set_pairs
 from ..registry import query
 
 
@@ -666,16 +667,9 @@ def q197_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
         .where(F.size("ps") > 1)
     )
-    pairs = sets.select(
-        F.posexplode("ps").alias("i", "part_a"), "ps"
-    ).select(
-        "part_a",
-        F.explode(F.slice("ps", F.col("i") + 2, F.size("ps"))).alias(
-            "part_b"
-        ),
-    )
     return (
-        pairs.groupBy("part_a", "part_b")
+        in_set_pairs(sets, "ps", "part_a", "part_b")
+        .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("n_orders"))
         .orderBy(F.desc("n_orders"), "part_a", "part_b")
         .limit(20)

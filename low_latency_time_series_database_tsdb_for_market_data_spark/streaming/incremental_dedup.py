@@ -27,20 +27,17 @@ pipeline capability (SURVEY §2.2 "LLM-pipeline ops").
 
 from __future__ import annotations
 
-import shutil
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.llm.incremental import (
-    DedupState,
     dedup_state_apply,
     dedup_state_build,
     load_dedup_state,
     load_survivors,
     save_dedup_state,
 )
+from .epochs import epoch_dir, prior_epoch, prune_epochs, state_epochs
 
 DOCS_SCHEMA = (
     "doc_id bigint, text string, lang string, source string, n_chars bigint"
@@ -75,48 +72,15 @@ class StreamingDedup:
         # leaves it None
         self.bands_lookup = bands_lookup
 
-    def _epochs(self) -> list[int]:
-        root = Path(self.state_dir)
-        if not root.exists():
-            return []
-        return sorted(
-            int(p.name.split("=")[1])
-            for p in root.iterdir()
-            if p.name.startswith("epoch=")
-        )
-
-    def _prior_state(self, epoch_id: int) -> DedupState | None:
-        prior = [e for e in self._epochs() if e < epoch_id]
-        if not prior:
-            return None
-        return load_dedup_state(
-            self.spark, f"{self.state_dir}/epoch={prior[-1]}"
-        )
-
     def process_batch(self, docs: DataFrame, epoch_id: int) -> DataFrame:
         """Fold one micro-batch; snapshot the post-batch state and
-        return the delta (doc_id, cluster_id, status).
-
-        Epoch monotonicity guard (round-11 advice fix): legitimate
-        epoch_ids are strictly advancing, or equal to the newest
-        snapshot (an at-least-once RETRY, which rewrites from the prior
-        snapshot).  An epoch_id BELOW the newest snapshot means the
-        caller restarted with a fresh checkpoint against an old
-        state_dir — folding would write a snapshot that the
-        keep-two-largest retention immediately deletes while
-        ``survivors()`` silently serves the stale epoch, so fail fast
-        instead."""
-        existing = self._epochs()
-        if existing and epoch_id < existing[-1]:
-            raise ValueError(
-                f"epoch_id {epoch_id} is behind the newest state snapshot "
-                f"epoch={existing[-1]} under {self.state_dir}: the stream "
-                "checkpoint and the dedup state_dir are mismatched "
-                "(fresh checkpoint against old state?).  Point the query "
-                "at a fresh state_dir or restore the matching checkpoint."
-            )
-        state = self._prior_state(epoch_id)
-        if state is None:
+        return the delta (doc_id, cluster_id, status).  An epoch_id
+        behind the newest snapshot (a fresh checkpoint against an old
+        state_dir) raises (`epochs.prior_epoch`) instead of folding into
+        a snapshot the retention deletes while ``survivors()`` serves
+        the stale epoch."""
+        prior = prior_epoch(self.state_dir, epoch_id)
+        if prior is None:
             new_state = dedup_state_build(
                 docs, self.par, bands_lookup=self.bands_lookup
             )
@@ -130,28 +94,28 @@ class StreamingDedup:
                 .alias("status"),
             )
         else:
+            state = load_dedup_state(
+                self.spark, epoch_dir(self.state_dir, prior)
+            )
             new_state, delta = dedup_state_apply(
                 state, docs, self.par, bands_lookup=self.bands_lookup
             )
         save_dedup_state(
             new_state,
-            f"{self.state_dir}/epoch={epoch_id}",
+            epoch_dir(self.state_dir, epoch_id),
             target_files=self.snapshot_files,
         )
-        for e in self._epochs()[:-2]:  # keep current + previous
-            shutil.rmtree(
-                f"{self.state_dir}/epoch={e}", ignore_errors=True
-            )
+        prune_epochs(self.state_dir)
         return delta
 
     def survivors(self) -> DataFrame:
         """Survivor set from the LATEST snapshot (members table only —
         the one parquet relation a survivors read needs)."""
-        epochs = self._epochs()
+        epochs = state_epochs(self.state_dir)
         if not epochs:
             raise ValueError("no dedup state snapshots yet")
         return load_survivors(
-            self.spark, f"{self.state_dir}/epoch={epochs[-1]}"
+            self.spark, epoch_dir(self.state_dir, epochs[-1])
         )
 
 
@@ -182,7 +146,7 @@ def dedup_stream_available_now(
         if batch_df.isEmpty():
             return
         delta = fold.process_batch(batch_df, epoch_id)
-        delta.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
+        delta.write.mode("overwrite").parquet(epoch_dir(out_dir, epoch_id))
 
     q = (
         stream.writeStream.foreachBatch(sink)

@@ -80,13 +80,16 @@ def ingest_available_now(
 ) -> None:
     """Drain everything currently in source_dir into the partitioned tick
     table at dest_dir, then stop — the streaming equivalent of the
-    reference's append_batch + sync().  Exactly-once via checkpoint +
-    parquet commit protocol.  Each batch's write holds the table's
-    writer lock (``writer.table_lock``), as every writer of a tick table
-    does: a batch never lands in a table a rewrite has counted, and one
-    that finds a crashed rewrite's swap half done finishes it first.  A
-    batch that cannot take the lock within ``writer.LOCK_TIMEOUT_S``
-    fails the drain uncommitted, so a re-run writes it once."""
+    reference's append_batch + sync().  At-least-once: the sink appends
+    and does not check the epoch, so a crash between a batch's write
+    and the checkpoint's commit log makes the re-run append that batch
+    again (its rows then appear twice).  Each batch's write holds the
+    table's writer lock (``writer.table_lock``), as every writer of a
+    tick table does: a batch never lands in a table a rewrite has
+    counted, and one that finds a crashed rewrite's swap half done
+    finishes it first.  A batch that cannot take the lock within
+    ``writer.LOCK_TIMEOUT_S`` fails the drain uncommitted, so a re-run
+    writes it once."""
     from ..sources.writer import table_lock, write_ticks
 
     stream = open_tick_stream(spark, source_dir)

@@ -70,11 +70,11 @@ def interval_pair_stream(
 # ---------------------------------------------------------------------------
 
 import os
-import shutil
 
 from pyspark.sql import SparkSession
 
 from ..operators.asof import asof_join
+from .epochs import epoch_dir, prior_epoch, prune_epochs
 from .ingest import open_tick_stream
 
 
@@ -106,8 +106,8 @@ class AsofEnrichState:
     union+fill; the state update is one hash-agg (max of a
     (ts, seq, payload) struct — HashAggregate, no sort) over
     state + batch rights.  Nothing is collected; snapshots are
-    dim-sized.  (Local-FS snapshot listing here; a deployment swaps
-    the os/shutil calls for its table format or HDFS client.)"""
+    dim-sized.  Snapshot listing, the epoch-reset guard and retention
+    are `streaming/epochs.py`'s."""
 
     def __init__(
         self,
@@ -133,32 +133,25 @@ class AsofEnrichState:
         seen += [c for c in self.payload if c not in seen]
         return seen
 
-    def _epochs(self) -> list[int]:
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(self.state_dir)
-            if d.startswith("epoch=")
-        )
-
     def read_state(self, epoch_id: int, like: DataFrame) -> DataFrame:
         """Latest snapshot STRICTLY BEFORE epoch_id (retry-safe), or an
-        empty frame with the right-side schema."""
-        prior = [e for e in self._epochs() if e < epoch_id]
+        empty frame with the right-side schema; raises on an epoch_id
+        behind the newest snapshot (`epochs.prior_epoch`)."""
+        prior = prior_epoch(self.state_dir, epoch_id)
         cols = self._cols()
-        if not prior:
+        if prior is None:
             return self.spark.createDataFrame(
                 [], like.select(*cols).schema
             )
         return self.spark.read.parquet(
-            f"{self.state_dir}/epoch={prior[-1]}"
+            epoch_dir(self.state_dir, prior)
         ).select(*cols)
 
     def _write_state(self, state: DataFrame, epoch_id: int) -> None:
         state.write.mode("overwrite").parquet(
-            f"{self.state_dir}/epoch={epoch_id}"
+            epoch_dir(self.state_dir, epoch_id)
         )
-        for e in self._epochs()[:-2]:  # keep current + previous
-            shutil.rmtree(f"{self.state_dir}/epoch={e}", ignore_errors=True)
+        prune_epochs(self.state_dir)
 
     def process_batch(
         self, left: DataFrame, right: DataFrame, epoch_id: int
@@ -227,7 +220,7 @@ def asof_enrich_available_now(
             split_left(batch_df), split_right(batch_df), epoch_id
         )
         enriched.write.mode("overwrite").parquet(
-            f"{out_dir}/epoch={epoch_id}"
+            epoch_dir(out_dir, epoch_id)
         )
 
     q = (

@@ -17,8 +17,10 @@ Design — partial-aggregate append + merge-on-read:
 
 At 100 TB/day the rollup table is ~(symbols x buckets x batches) rows —
 orders of magnitude smaller than ticks; periodic compaction (re-reduce
-partials per bucket) keeps read fan-in bounded.  Exactly-once comes from
-the checkpoint + the sink's idempotent epoch handling.
+partials per bucket) keeps read fan-in bounded.  At-least-once: the
+sink appends each batch's partials without checking the epoch, so a crash
+between that write and the checkpoint's commit log makes the re-run
+append the batch's partials again, and `read_bars` counts them twice.
 """
 
 from __future__ import annotations

@@ -27,7 +27,7 @@ BUDGET: dict[str, int] = {
     "q66_dedup_clusters": 9,
     "q70_dedup_survivors": 9,
     "q77_symbol_correlation": 1,
-    "q95_simhash_pairs": 7,
+    "q95_simhash_pairs": 6,
     "q100_dup_rate_by_source": 1,
     "q101_lead_lag": 1,
     "q112_market_beta": 2,
@@ -36,7 +36,7 @@ BUDGET: dict[str, int] = {
     "q128_centroid_separation": 1,
     "q129_edit_distance_pairs": 6,
     "q159_containment_pairs": 4,
-    "q160_simhash_wide_pairs": 5,
+    "q160_simhash_wide_pairs": 4,
     "q166_containment_planted": 4,
     "q204_pq_recall_verdict": 7,
     "q210_stickiness": 1,

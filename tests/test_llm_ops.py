@@ -670,6 +670,55 @@ def test_q166_planted_containment_pairs_exact(spark, sf_dir):
     assert r2.containment_e4 == (14 * 20000 + 17) // 34 / 10000.0
 
 
+def _two_near_dup_docs(spark):
+    """Docs 1 and 2 differ in one token of 60; docs 3-59 share nothing."""
+    words = [f"tok{i:03d}" for i in range(60)]
+    rows = [(1, " ".join(words), "en", "web", 1)]
+    rows.append((2, " ".join(words[:-1] + ["changed"]), "en", "web", 1))
+    for i in range(3, 60):
+        rows.append(
+            (i, " ".join(f"doc{i}_{j}" for j in range(40)), "en", "web", 1)
+        )
+    return spark.createDataFrame(
+        rows, "doc_id bigint, text string, lang string, source string,"
+        " n_chars bigint"
+    )
+
+
+def test_in_set_pairs_emits_each_ordered_pair_once(spark):
+    """Arrays of 0, 1, 2 and 4 elements give exactly C(n, 2) pairs each,
+    every one with a < b."""
+    from math import comb
+
+    from low_latency_time_series_database_tsdb_for_market_data_spark.functions.pairs import (
+        in_set_pairs,
+    )
+
+    sets = {0: [], 1: [7], 2: [3, 9], 4: [-5, 0, 2, 11]}
+    df = spark.createDataFrame(
+        [(k, v) for k, v in sets.items()], "k int, xs array<bigint>"
+    )
+    for k, xs in sets.items():
+        got = in_set_pairs(df.where(f"k = {k}"), "xs", "a", "b").collect()
+        assert len(got) == comb(len(xs), 2)
+        assert sorted((r.a, r.b) for r in got) == [
+            (x, y) for i, x in enumerate(xs) for y in xs[i + 1:]
+        ]
+
+
+def test_simhash_wide_strict_cap_raises(spark):
+    """The wide search's strict cap: docs 1 and 2 share a band bucket, so
+    a cap of 2 is reached and the search raises instead of truncating."""
+    from low_latency_time_series_database_tsdb_for_market_data_spark.operators.llm.corpus_ext import (  # noqa: E501
+        simhash_pairs_wide,
+    )
+
+    d = _two_near_dup_docs(spark)
+    with pytest.raises(RuntimeError, match="per-bucket cap"):
+        simhash_pairs_wide(d, max_band=2)
+    assert [(r.doc_a, r.doc_b) for r in simhash_pairs_wide(d).collect()] == [(1, 2)]
+
+
 def test_q160_wide_bands_shrink_buckets_and_find_planted_pair(spark, tmp_path):
     """The 60-bit/4-band signature must (a) find a planted one-token
     near-dup pair within Hamming 3, and (b) produce strictly more
@@ -688,18 +737,8 @@ def test_q160_wide_bands_shrink_buckets_and_find_planted_pair(spark, tmp_path):
         load_all,
     )
 
-    words = [f"tok{i:03d}" for i in range(60)]
-    rows = [(1, " ".join(words), "en", "web", 1)]
-    rows.append((2, " ".join(words[:-1] + ["changed"]), "en", "web", 1))
-    for i in range(3, 60):
-        rows.append(
-            (i, " ".join(f"doc{i}_{j}" for j in range(40)), "en", "web", 1)
-        )
     fixture = str(tmp_path / "wide")
-    d = spark.createDataFrame(
-        rows, "doc_id bigint, text string, lang string, source string,"
-        " n_chars bigint"
-    )
+    d = _two_near_dup_docs(spark)
     d.write.parquet(f"{fixture}/documents.parquet")
 
     reg = load_all()

@@ -1603,6 +1603,9 @@ def test_streaming_incremental_dedup_matches_batch_build(spark, sf_dir, tmp_path
     from low_latency_time_series_database_tsdb_for_market_data_spark.streaming import (
         dedup_stream_available_now,
     )
+    from low_latency_time_series_database_tsdb_for_market_data_spark.streaming.epochs import (
+        state_epochs,
+    )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     src = str(tmp_path / "docs_src")
@@ -1621,7 +1624,7 @@ def test_streaming_incremental_dedup_matches_batch_build(spark, sf_dir, tmp_path
         str(tmp_path / "state"),
         max_files_per_trigger=1,
     )
-    assert max(fold._epochs()) >= 2  # really ran multiple micro-batches
+    assert max(state_epochs(fold.state_dir)) >= 2  # really ran multiple micro-batches
 
     got = sorted(r.doc_id for r in fold.survivors().collect())
     par = spark.sparkContext.defaultParallelism
@@ -1659,3 +1662,43 @@ def test_streaming_dedup_rejects_epoch_reset(spark, sf_dir, tmp_path):
     with pytest.raises(ValueError, match="mismatched"):
         fold.process_batch(docs, 0)
     assert fold.survivors().count() == n_before  # state untouched
+
+
+def test_asof_enrich_state_rejects_epoch_reset(spark, tmp_path):
+    """The as-of twin of the dedup fold's epoch-reset guard: a fresh
+    checkpoint (epoch_id restarting at 0) over a state_dir holding epochs
+    5 and 6 must fail fast, not enrich against no prior state and write a
+    snapshot the keep-two retention deletes at once.  Retrying the newest
+    epoch stays allowed and reproduces its output."""
+    import pytest
+
+    from low_latency_time_series_database_tsdb_for_market_data_spark.streaming.joins import (
+        AsofEnrichState,
+    )
+
+    state_dir = tmp_path / "state"
+    st = AsofEnrichState(
+        spark,
+        str(state_dir),
+        on=["k"],
+        left_ts="ts",
+        right_ts="r_ts",
+        right_seq="r_seq",
+        payload={"r_ts": "asof_ts", "quote": "asof_quote"},
+    )
+
+    def rights(rows):
+        return spark.createDataFrame(rows, "k string, r_ts long, r_seq long, quote long")
+
+    def lefts(rows):
+        return spark.createDataFrame(rows, "event_id long, k string, ts long")
+
+    st.process_batch(lefts([]), rights([("A", 10, 1, 100)]), 5).count()
+    out6 = st.process_batch(lefts([(1, "A", 50)]), rights([]), 6).collect()
+    assert [(r.asof_ts, r.asof_quote) for r in out6] == [(10, 100)]
+    # at-least-once retry of the newest epoch: allowed, same output
+    assert st.process_batch(lefts([(1, "A", 50)]), rights([]), 6).collect() == out6
+
+    with pytest.raises(ValueError, match="mismatched"):
+        st.process_batch(lefts([(1, "A", 50)]), rights([]), 0)
+    assert sorted(p.name for p in state_dir.iterdir()) == ["epoch=5", "epoch=6"]

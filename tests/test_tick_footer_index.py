@@ -646,6 +646,35 @@ def test_driver_reads_over_overlapping_row_groups(spark, tmp_path, monkeypatch):
     assert _local(spark, d, "S", top=3).column("seq").to_pylist() == [7, 8, 9]
 
 
+def test_driver_compaction_bounds_row_groups(spark, tmp_path, monkeypatch):
+    """A symbol compacted on the driver is written in row groups of at
+    most 65 536 rows (``writer._ROW_GROUP_ROWS``), so a window inside one
+    group's ts range reads that group's rows only, not the whole
+    symbol."""
+    n = 140_000
+    part = tmp_path / "data" / "ticks" / "symbol=S"
+    part.mkdir(parents=True)
+    for k, lo in enumerate((0, n // 2)):
+        ts = list(range(lo, lo + n // 2))[::-1]
+        pq.write_table(pa.table({"ts": ts, "price": [1.5] * len(ts), "volume": ts, "seq": ts}),
+                       part / f"part-{k}.parquet")
+    d = str(tmp_path / "data")
+    assert _jobs(spark, lambda: cli.run(["maintain"], spark, d), f"{tmp_path.name}-maintain") == 0
+    (f,) = _parquet(part)
+    assert pq.read_metadata(f).num_rows == n
+    read = []
+    real = catalog._read_groups
+
+    def counted(groups, schema):
+        read.append(sum(g.rows for g in groups))
+        return real(groups, schema)
+
+    monkeypatch.setattr(catalog, "_read_groups", counted)
+    got = _local(spark, d, "S", window=(100, 199))
+    assert got.column("ts").to_pylist() == list(range(100, 200))
+    assert read == [65_536]
+
+
 def test_driver_reads_fall_back_where_they_cannot_be_exact(spark, tmp_path, monkeypatch):
     """Each fallback trigger alone sends ``query``/``last`` to Spark (or
     raises where Spark raises), and the lines are the Spark read's."""
