@@ -56,9 +56,12 @@ def pin_under_cap(
     remedy: str,
     sizes: Callable[[DataFrame], DataFrame] = lambda f: f.select("max_rn"),
 ) -> DataFrame:
-    """``frame`` pinned by a lazy localCheckpoint, after one job that
-    both materializes it and reads the largest bucket size
-    (``sizes(pinned)``'s one column; default its ``max_rn``).  Raises
+    """``frame`` pinned by a lazy localCheckpoint, then the largest
+    bucket size (``sizes(pinned)``'s one column; default its
+    ``max_rn``) read by one aggregate over the pin.  With AQE on, the
+    pin itself runs ``frame``'s shuffle and broadcast stages while it
+    is built; the aggregate then materializes the narrow final stage
+    into the pinned blocks as it reads the size.  Raises
     ``RuntimeError`` naming ``who`` when that size reaches ``cap``: a
     bucket of exactly ``cap`` members trips it too, since the capped
     sets cannot tell it from a truncated one."""

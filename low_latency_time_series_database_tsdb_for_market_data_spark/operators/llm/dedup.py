@@ -132,29 +132,11 @@ def _exact_collapse(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     doc_id; members attach to the representative by a direct edge (they
     are near-dups by definition — Jaccard 1.0), so downstream connected
     components are unchanged while MinHash/LSH run on distinct texts
-    only.  One window shuffle on the 32-byte fingerprint."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("fp")
-    tagged = docs.select(
-        "doc_id", "text", F.md5("text").alias("fp")
-    ).withColumn("rep", F.min("doc_id").over(w))
-    reps = tagged.where(F.col("doc_id") == F.col("rep")).select("doc_id", "text")
-    dup_edges = tagged.where(F.col("doc_id") != F.col("rep")).select(
-        F.col("rep").alias("a"), F.col("doc_id").alias("b")
-    )
-    return reps, dup_edges
-
-
-def _exact_collapse_pinned(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """_exact_collapse off ONE pinned window pass (round 14, guide
-    §2.4): callers that consume BOTH outputs (reps feed the signature
-    pipeline, dup_edges the edge union) otherwise execute the fp-window
-    once per consumer, and re-hash md5(text) wherever they need the
-    fingerprint again — here the tagged frame is pinned once and reps
-    carry their fp through.  Value-identical to _exact_collapse; reps
-    gain an fp column (md5(text), the same value every consumer
-    recomputed)."""
+    only.  One window shuffle on the 32-byte fingerprint, pinned once:
+    reps (doc_id, text, fp = md5(text)) and dup_edges (a, b) are narrow
+    filters over the pinned frame, so a caller consuming both, or
+    reading reps several times, runs the window once and never
+    re-hashes the text for its fingerprint."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("fp")
@@ -222,9 +204,9 @@ def candidate_edges(docs: DataFrame, par: int,
     size(ds) == max_rn >= 2), so strict mode requires max_bucket >= 2 —
     max_bucket=1 keeps one doc per bucket, which disables LSH pair
     generation altogether and is only meaningful with strict_cap=False."""
-    # pinned collapse (round 14): both outputs are consumed here, so the
-    # fp-window executes once instead of once per union branch
-    reps, dup_edges = _exact_collapse_pinned(docs)
+    # both outputs are consumed here; the pinned collapse runs the
+    # fp-window once instead of once per union branch
+    reps, dup_edges = _exact_collapse(docs)
     # dedup_pairs=False: the union's own distinct below subsumes the
     # inner one — two chained distincts were two full exchanges of the
     # same pair set (round-13 optimization; result identical)
@@ -374,7 +356,8 @@ def connected_components(
         .select(
             "doc_id", F.least(F.col("doc_id"), F.col("nb")).alias("cluster_id")
         )
-        # lazy: the prev_sum agg just below materializes it in its own job
+        # lazy, but with AQE on the pin runs the groupBy's shuffle stage
+        # now; the prev_sum agg just below runs the final stage
         .localCheckpoint(eager=False)
     )
     # labels only ever decrease (min-propagation), so the label SUM is
@@ -391,7 +374,8 @@ def connected_components(
             labels.unionByName(nbr)
             .groupBy("doc_id")
             .agg(F.min("cluster_id").alias("cluster_id"))
-            # lazy: the cur_sum agg below materializes it
+            # lazy, but with AQE on the pin runs this round's join and
+            # groupBy shuffle stages now; the cur_sum agg runs the rest
             .localCheckpoint(eager=False)
         )
         cur_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
@@ -587,7 +571,9 @@ def capped_pair_counts(docs: DataFrame, par: int) -> DataFrame:
         .agg(F.sort_array(F.collect_set("doc_id")).alias("ds"))
         .crossJoin(F.broadcast(cap_row))
         .where(F.size("ds") < F.col("cap"))
-        # lazy: the first sizes broadcast build materializes it
+        # lazy, but with AQE on the pin runs the shingle shuffle and the
+        # cap_row broadcast now; the first sizes broadcast build runs
+        # the narrow final stage
         .localCheckpoint(eager=False)
     )
     # per-doc retained-shingle counts from the SAME aggregation: explode
@@ -1211,8 +1197,8 @@ def q129_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     result set (and the oracle) is unchanged by construction
     (test_edit_gate_is_admissible plants boundary pairs on both sides).
 
-    Shape: reps localCheckpoint-materialize ONCE (one corpus scan) and
-    feed the LSH candidate stage AND both text join-backs; candidate
+    Shape: reps come off the pinned exact collapse (one corpus scan)
+    and feed the LSH candidate stage AND both text join-backs; candidate
     count is linear in corpus size under the strict per-bucket cap
     (inherited from `lsh_candidate_pairs` — a hot bucket raises rather
     than silently diverging from the uncapped oracle); the verify joins
@@ -1221,7 +1207,6 @@ def q129_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism
     reps, _ = _exact_collapse(d)
-    reps = reps.localCheckpoint(eager=False)
     cand = lsh_candidate_pairs(reps, par).select(
         F.col("a").alias("doc_a"), F.col("b").alias("doc_b")
     )

@@ -38,7 +38,7 @@ Applying a batch B:
 
 Exactness: ``apply(build(A), B)`` equals ``build(A | B)`` row-for-row
 (test_incremental_dedup.py pins it, bridge case included) whenever no
-LSH bucket trips the hard cap; strict mode raises on a capped bucket
+LSH bucket trips the hard cap; the fold raises on a capped bucket
 exactly like dedup.py::candidate_edges, because a truncated bucket
 could otherwise admit different pairs in the two execution orders.
 
@@ -50,24 +50,19 @@ join.  Nothing about the batch path shuffles the historical corpus.
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ...catalog import parquet_fingerprint, read_parquet, table
 from .dedup import (
     _MAX_BUCKET_DOCS,
-    _exact_collapse_pinned,
+    _exact_collapse,
     band_rows,
     connected_components,
     lsh_candidate_pairs,
 )
-
-
-# the strict-cap guard's one worker, shared by every fold (a pool per
-# fold churned a thread per call)
-_GUARD_POOL = ThreadPoolExecutor(max_workers=1, thread_name_prefix="dedup-cap-guard")
 
 
 class DedupState(NamedTuple):
@@ -108,7 +103,7 @@ def dedup_state_build(
     re-hashing text.  Value-identical either way."""
     # pinned collapse (round 14): one fp-window pass feeds reps AND the
     # dup edges; reps carry fp so the texts table below skips a re-hash
-    reps, dup_edges = _exact_collapse_pinned(docs)
+    reps, dup_edges = _exact_collapse(docs)
     # ONE pinned signature frame feeds both the state band table and
     # the pair generation (the un-pinned form hashed every rep's text
     # twice — once per consumer)
@@ -135,7 +130,9 @@ def dedup_state_build(
         # texts derives from members, so writing/consuming both state
         # tables would otherwise execute the connected-components DAG
         # twice per snapshot (round-11 q244 profiling: one CC pass per
-        # epoch saved); lazy — first consumer materializes it
+        # epoch saved).  Lazy, but with AQE on the pin runs the join's
+        # shuffle and broadcast stages now; the first consumer runs only
+        # the narrow final stage
         .localCheckpoint(eager=False)
     )
     texts = (
@@ -159,33 +156,33 @@ def _assert_buckets_under_cap(
     the full pipeline enforces — otherwise the two execution orders
     could truncate differently and incremental != full.
 
-    Round 14 (guide §2.4, r13 verdict item #1): the guard RIDES the
-    probe join instead of scanning the corpus band table itself —
-    ``hits`` is the pinned (band, band_key, doc_id, old_id) collision
-    frame the cross-edge stage needs anyway, and the state's per-bucket
-    membership ns == countDistinct(old_id) over it EXACTLY (band rows
-    are unique per (doc, band), so old_ids are distinct within a
-    bucket; a state bucket the batch touches contributes all its rows
-    to the join).  One corpus-bands scan per fold, not two, and the
-    guard job doubles as the materialization of the batch's band rows
-    and collision pairs."""
-    nb = new_bands.groupBy("band", "band_key").agg(
-        F.count(F.lit(1)).alias("nn")
+    One aggregate over the two pinned frames: per (band, band_key), nn
+    counts the batch's band rows and h its collision rows in ``hits``
+    (the (band, band_key, doc_id, old_id) frame the cross edges read).
+    Band rows are unique per (doc, band) on both sides, so a touched
+    bucket with ns state members has exactly nn * ns collision rows,
+    and nn + h div nn is its combined membership.  The state's band
+    table is never scanned here, and both inputs are already
+    materialized by the connected-components pass, so the guard costs
+    only the aggregate's own jobs."""
+    per_bucket = (
+        new_bands.select(
+            "band", "band_key", F.lit(1).alias("nb"), F.lit(0).alias("nh")
+        )
+        .unionByName(
+            hits.select(
+                "band", "band_key", F.lit(0).alias("nb"), F.lit(1).alias("nh")
+            )
+        )
+        .groupBy("band", "band_key")
+        .agg(F.sum("nb").alias("nn"), F.sum("nh").alias("h"))
     )
-    ns = hits.groupBy("band", "band_key").agg(
-        F.countDistinct("old_id").alias("ns")
-    )
-    hot = (
-        nb.join(ns, ["band", "band_key"], "left")
-        .where(F.col("nn") + F.coalesce(F.col("ns"), F.lit(0)) > max_bucket)
-        .limit(1)
-        .count()
-    )
-    if hot:
+    peak = per_bucket.agg(F.max(F.expr("nn + h div nn"))).collect()[0][0]
+    if peak is not None and peak > max_bucket:
         raise RuntimeError(
             "incremental dedup: an LSH bucket touched by this batch "
             f"exceeds max_bucket={max_bucket} docs; widen the banding or "
-            "raise the cap (strict mode fails loudly rather than "
+            "raise the cap (the fold fails loudly rather than "
             "diverging from the full-run result)"
         )
 
@@ -195,7 +192,6 @@ def dedup_state_apply(
     new_docs: DataFrame,
     par: int,
     max_bucket: int = _MAX_BUCKET_DOCS,
-    strict_cap: bool = True,
     broadcast_probe: bool = True,
     bands_lookup: DataFrame | None = None,
 ) -> tuple[DedupState, DataFrame]:
@@ -220,7 +216,7 @@ def dedup_state_apply(
     # consumer and re-hashed md5(text) for the rep projection); rb is a
     # narrow filter over the pinned tagged frame, so it needs no pin of
     # its own
-    rb, dup_edges_b = _exact_collapse_pinned(new_docs)
+    rb, dup_edges_b = _exact_collapse(new_docs)
 
     # (a) reps whose text is already known: edge to the existing cluster
     # (batch side broadcasts -> the corpus text table is scanned, not
@@ -257,9 +253,8 @@ def dedup_state_apply(
     # over a bucketed state instead (co-located on the state side).
     # The collision frame is PINNED and the strict-cap guard computes
     # its state-side bucket counts FROM it (see
-    # _assert_buckets_under_cap): the guard job materializes the batch
-    # band rows + collisions the cross-edge stage needs anyway, and the
-    # corpus band table is scanned once per fold, not twice.
+    # _assert_buckets_under_cap), so the corpus band table is scanned
+    # once per fold, not twice.
     sb = state.bands.select(
         F.col("doc_id").alias("old_id"), "band", "band_key"
     )
@@ -289,10 +284,8 @@ def dedup_state_apply(
     # max_bucket, so any batch bucket that the pair generation's
     # row_number cap could actually truncate (> max_bucket members)
     # raises before results are emitted; a bucket at exactly max_bucket
-    # loses nothing.  Skipping the inner guard saves its eager
-    # checkpoint + count job per fold.  When the caller disabled the
-    # combined guard, the inner one stays off too (that is the
-    # accept-truncation mode).
+    # loses nothing.  Skipping the inner guard saves its pin and max
+    # job per fold.
     in_batch = lsh_candidate_pairs(
         fresh, par, max_bucket=max_bucket, strict_cap=False,
         bands=bands_b, dedup_pairs=False,
@@ -307,100 +300,78 @@ def dedup_state_apply(
     )
     cc = connected_components(edges)
 
-    # strict-cap guard placement (round 14, guide §2.4 + §2.6): the
-    # connected-components materialization above has already computed
-    # and cached bands_b and the hits checkpoint (its edges consume
-    # both), so the guard's two bucket-scale aggregates read cached
-    # blocks — ~a scheduling tick, where the old pre-pair-generation
-    # placement paid a full standalone materialization job per fold.
-    # It runs from a single-thread pool so the job OVERLAPS the
-    # driver-side construction of the output state below (guide §2.6:
-    # overlap independent work); the result is joined before this
-    # function returns, so a capped bucket still raises BEFORE any
-    # state is returned or snapshotted — fail-loud preserved.  The work
-    # discarded on the failure path stays bounded because any state
-    # built/folded through these APIs has every bucket < cap (build and
-    # every prior fold enforced it), so hits <= nn * cap rows per band
-    # even on the violating batch.
-    guard_fut = (
-        _GUARD_POOL.submit(_assert_buckets_under_cap, bands_b, hits, max_bucket)
-        if strict_cap
-        else None
-    )
-    try:
-        members_b = (
-            new_docs.select("doc_id")
-            .join(cc, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("cluster_id", "doc_id").alias("cluster_id"),
-            )
-        ).localCheckpoint(eager=False)
-
-        # old clusters appearing as CC nodes remap to the merged canonical
-        old_clusters = state.members.select(
-            F.col("cluster_id").alias("doc_id")
-        ).distinct()
-        remap = (
-            cc.join(old_clusters, "doc_id")
-            .where(F.col("doc_id") != F.col("cluster_id"))
-            .select(
-                F.col("doc_id").alias("old_cluster"),
-                F.col("cluster_id").alias("new_cluster"),
-            )
-        ).localCheckpoint(eager=False)
-
-        def remapped(df: DataFrame) -> DataFrame:
-            other = [c for c in df.columns if c != "cluster_id"]
-            return (
-                df.join(
-                    remap, df["cluster_id"] == remap["old_cluster"], "left"
-                )
-                .select(
-                    *other,
-                    F.coalesce("new_cluster", df["cluster_id"]).alias(
-                        "cluster_id"
-                    ),
-                )
-            )
-
-        texts_b = (
-            # fp carried through from the pinned collapse — no md5 re-hash
-            fresh.select("fp", F.col("doc_id").alias("rep_id"))
-            .join(
-                members_b.select(F.col("doc_id").alias("rep_id"), "cluster_id"),
-                "rep_id",
-            )
-            .select("fp", "rep_id", "cluster_id")
-        )
-        new_state = DedupState(
-            texts=remapped(state.texts).unionByName(texts_b),
-            bands=state.bands.unionByName(bands_b),
-            members=remapped(state.members).unionByName(members_b),
-        )
-
-        delta = members_b.select(
+    # strict-cap guard, on this thread so its jobs carry the caller's job
+    # group: the connected-components materialization above has already
+    # computed and cached bands_b and the hits checkpoint (its edges
+    # consume both), so the guard's aggregate reads cached blocks.  It
+    # runs before any state is built or snapshotted, so a capped bucket
+    # raises first.
+    _assert_buckets_under_cap(bands_b, hits, max_bucket)
+    members_b = (
+        new_docs.select("doc_id")
+        .join(cc, "doc_id", "left")
+        .select(
             "doc_id",
-            "cluster_id",
-            F.when(F.col("doc_id") == F.col("cluster_id"), "survivor")
-            .otherwise("duplicate")
-            .alias("status"),
-        ).unionByName(
-            remap.select(
-                F.col("old_cluster").alias("doc_id"),
-                F.col("new_cluster").alias("cluster_id"),
-                F.lit("demoted").alias("status"),
+            F.coalesce("cluster_id", "doc_id").alias("cluster_id"),
+        )
+    ).localCheckpoint(eager=False)
+
+    # old clusters appearing as CC nodes remap to the merged canonical
+    old_clusters = state.members.select(
+        F.col("cluster_id").alias("doc_id")
+    ).distinct()
+    remap = (
+        cc.join(old_clusters, "doc_id")
+        .where(F.col("doc_id") != F.col("cluster_id"))
+        .select(
+            F.col("doc_id").alias("old_cluster"),
+            F.col("cluster_id").alias("new_cluster"),
+        )
+    ).localCheckpoint(eager=False)
+
+    def remapped(df: DataFrame) -> DataFrame:
+        other = [c for c in df.columns if c != "cluster_id"]
+        return (
+            df.join(
+                remap, df["cluster_id"] == remap["old_cluster"], "left"
+            )
+            .select(
+                *other,
+                F.coalesce("new_cluster", df["cluster_id"]).alias(
+                    "cluster_id"
+                ),
             )
         )
-        if guard_fut is not None:
-            guard_fut.result()  # re-raises the cap violation, if any
-        return new_state, delta
-    finally:
-        # an error above left the guard pending: cancel it, or wait for
-        # it if it already runs (its own error is dropped so the first
-        # one propagates) — no guard job outlives the fold
-        if guard_fut is not None and not guard_fut.cancel():
-            guard_fut.exception()
+
+    texts_b = (
+        # fp carried through from the pinned collapse — no md5 re-hash
+        fresh.select("fp", F.col("doc_id").alias("rep_id"))
+        .join(
+            members_b.select(F.col("doc_id").alias("rep_id"), "cluster_id"),
+            "rep_id",
+        )
+        .select("fp", "rep_id", "cluster_id")
+    )
+    new_state = DedupState(
+        texts=remapped(state.texts).unionByName(texts_b),
+        bands=state.bands.unionByName(bands_b),
+        members=remapped(state.members).unionByName(members_b),
+    )
+
+    delta = members_b.select(
+        "doc_id",
+        "cluster_id",
+        F.when(F.col("doc_id") == F.col("cluster_id"), "survivor")
+        .otherwise("duplicate")
+        .alias("status"),
+    ).unionByName(
+        remap.select(
+            F.col("old_cluster").alias("doc_id"),
+            F.col("new_cluster").alias("cluster_id"),
+            F.lit("demoted").alias("status"),
+        )
+    )
+    return new_state, delta
 
 
 def save_dedup_state(
@@ -417,40 +388,26 @@ def save_dedup_state(
     snapshots of digest-sized tables otherwise emit
     shuffle-partition-many tiny files, and both the commit overhead
     per epoch and the next epoch's scan planning pay for every one of
-    them.
-
-    The three table writes are INDEPENDENT jobs over shared pinned
-    upstream state, so they run from a small thread pool (guide §2.6:
-    overlap independent jobs — one write's straggling tail back-fills
-    with the next write's tasks instead of idling the executors).
-    Shared lazy checkpoints materialize under BlockManager block locks,
-    so concurrent consumers compute each block once; any write failure
-    propagates out of the pool."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _write(df: DataFrame, name: str) -> None:
+    them."""
+    for name, df in (
+        ("members", state.members),
+        ("texts", state.texts),
+        ("bands", state.bands),
+    ):
         if target_files is not None:
             df = df.coalesce(target_files)
         df.write.mode("overwrite").parquet(f"{path}/{name}")
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        list(
-            pool.map(
-                lambda t: _write(*t),
-                (
-                    (state.members, "members"),
-                    (state.texts, "texts"),
-                    (state.bands, "bands"),
-                ),
-            )
-        )
-
 
 def load_dedup_state(spark: SparkSession, path: str) -> DedupState:
+    """The three state tables of one snapshot, read through
+    ``catalog.read_parquet``: every snapshot's tables have the same
+    schemas, so each is inferred once per session, not once per
+    epoch."""
     return DedupState(
-        texts=spark.read.parquet(f"{path}/texts"),
-        bands=spark.read.parquet(f"{path}/bands"),
-        members=spark.read.parquet(f"{path}/members"),
+        texts=read_parquet(spark, f"{path}/texts"),
+        bands=read_parquet(spark, f"{path}/bands"),
+        members=read_parquet(spark, f"{path}/members"),
     )
 
 
@@ -460,7 +417,7 @@ def load_survivors(spark: SparkSession, path: str) -> DataFrame:
     texts/bands datasources too (what load_dedup_state +
     dedup_survivors paid) is pure per-call overhead (round 14, r13
     verdict item #1 "share one state-parquet open")."""
-    m = spark.read.parquet(f"{path}/members")
+    m = read_parquet(spark, f"{path}/members")
     return m.where(F.col("doc_id") == F.col("cluster_id")).select("doc_id")
 
 
@@ -512,7 +469,6 @@ def load_dedup_state_bucketed(
 # ---------------------------------------------------------------------------
 
 from ... import session_cache  # noqa: E402
-from ...catalog import parquet_fingerprint, table  # noqa: E402
 from ...registry import query  # noqa: E402
 from .dedup import _HASHED_SQL, _rot_sql, N_MINHASH  # noqa: E402
 

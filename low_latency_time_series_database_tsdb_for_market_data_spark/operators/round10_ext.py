@@ -1391,7 +1391,6 @@ def q241_near_dup_rate_by_source(
     d = table(spark, sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism
     reps, dup_edges = _exact_collapse_docs(d)
-    reps = reps.localCheckpoint(eager=False)  # q129 discipline
     # dedup_pairs=False (round 14, guide §2.4): the endpoint-level
     # distinct below subsumes ANY pair multiplicity (a doc flagged by
     # several band collisions is still one endpoint row), so the

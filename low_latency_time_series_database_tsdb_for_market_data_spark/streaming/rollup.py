@@ -85,11 +85,10 @@ def continuous_ohlc(
     q.awaitTermination()
 
 
-def fold_bars(partials: DataFrame) -> DataFrame:
-    """Fold partial bars (any number per (symbol, bucket), from any mix
-    of micro-batches, compactions, or retention passes) into final OHLC
-    bars — the monoid merge every reader of the rollup algebra shares."""
-    merged = partials.groupBy("symbol", "bucket").agg(
+def _merge_partials(partials: DataFrame) -> DataFrame:
+    """Merge partial bars to one partial per (symbol, bucket) — the
+    monoid merge every reader and compactor of the rollup shares."""
+    return partials.groupBy("symbol", "bucket").agg(
         F.sum("n").alias("n"),
         F.sum("sum_pc").alias("sum_pc"),
         F.min("low").alias("low"),
@@ -97,7 +96,13 @@ def fold_bars(partials: DataFrame) -> DataFrame:
         F.min("open_t").alias("open_t"),
         F.max("close_t").alias("close_t"),
     )
-    return merged.select(
+
+
+def fold_bars(partials: DataFrame) -> DataFrame:
+    """Fold partial bars (any number per (symbol, bucket), from any mix
+    of micro-batches, compactions, or retention passes) into final OHLC
+    bars."""
+    return _merge_partials(partials).select(
         "symbol",
         "bucket",
         "n",
@@ -117,12 +122,6 @@ def read_bars(spark: SparkSession, rollup_dir: str) -> DataFrame:
 def compact_rollup(spark: SparkSession, rollup_dir: str, out_dir: str) -> None:
     """Re-reduce partials to one row per (symbol, bucket) — run
     periodically to bound merge-on-read fan-in."""
-    p = spark.read.parquet(rollup_dir)
-    p.groupBy("symbol", "bucket").agg(
-        F.sum("n").alias("n"),
-        F.sum("sum_pc").alias("sum_pc"),
-        F.min("low").alias("low"),
-        F.max("high").alias("high"),
-        F.min("open_t").alias("open_t"),
-        F.max("close_t").alias("close_t"),
-    ).write.mode("overwrite").parquet(out_dir)
+    _merge_partials(spark.read.parquet(rollup_dir)).write.mode(
+        "overwrite"
+    ).parquet(out_dir)

@@ -117,7 +117,7 @@ def test_incremental_state_roundtrip(spark, tmp_path):
 def test_incremental_strict_cap_raises_on_hot_bucket(spark):
     """A batch pushing a touched bucket past the cap fails loudly
     (the truncation orders could differ between incremental and full,
-    so strict mode refuses to guess)."""
+    so the fold refuses to guess)."""
     import pytest
 
     base = " ".join(f"h{j}" for j in range(40))
@@ -126,65 +126,14 @@ def test_incremental_strict_cap_raises_on_hot_bucket(spark):
     state = dedup_state_build(_df(spark, a), 8)
     with pytest.raises(RuntimeError, match="exceeds max_bucket"):
         dedup_state_apply(state, _df(spark, b), 8, max_bucket=4)
-    # opt-out matches candidate_edges' production escape hatch
-    st, _ = dedup_state_apply(
-        state, _df(spark, b), 8, max_bucket=4, strict_cap=False
-    )
-    assert st.members.count() == 6
-
-
-def test_fold_error_never_leaves_the_cap_guard_running(spark, monkeypatch):
-    """Fault injection between the strict-cap guard's submit and its
-    result: the injected error propagates (not the guard's own), and the
-    guard is either cancelled before it starts or waited for — no guard
-    job outlives the fold."""
-    import threading
-    import time
-
-    import pytest
-
-    from low_latency_time_series_database_tsdb_for_market_data_spark.operators.llm import (
-        incremental,
-    )
-
-    state_a = dedup_state_build(_df(spark, _A), 8)
-    started, raised, finished = threading.Event(), threading.Event(), threading.Event()
-
-    def slow_failing_guard(*_a, **_k):
-        started.set()
-        raised.wait(10)  # still running well after the fold's error
-        time.sleep(0.3)
-        finished.set()
-        raise RuntimeError("guard: exceeds max_bucket")
-
-    def injected(wait_for_guard: bool):
-        def fail(**_k):
-            if wait_for_guard:
-                assert started.wait(10)
-            raised.set()
-            raise ValueError("injected")
-        return fail
-
-    monkeypatch.setattr(incremental, "_assert_buckets_under_cap", slow_failing_guard)
-    # (a) the guard is running when the error hits: the fold waits for it
-    monkeypatch.setattr(incremental, "DedupState", injected(True))
-    with pytest.raises(ValueError, match="injected"):
-        dedup_state_apply(state_a, _df(spark, _B), 8)
-    assert finished.is_set()
-    # (b) the guard is still queued behind other work: it is cancelled
-    for ev in (started, raised, finished):
-        ev.clear()
-    gate = threading.Event()
-    blocker = incremental._GUARD_POOL.submit(gate.wait, 10)
-    monkeypatch.setattr(incremental, "DedupState", injected(False))
-    try:
-        with pytest.raises(ValueError, match="injected"):
-            dedup_state_apply(state_a, _df(spark, _B), 8)
-    finally:
-        gate.set()
-    blocker.result()
-    incremental._GUARD_POOL.submit(lambda: None).result()  # drain the queue
-    assert not started.is_set()
+    # two state docs and two batch docs in one bucket: the guard reads
+    # the state's 2 members off 2 x 2 collision rows, so a cap of 4
+    # holds and a cap of 3 trips
+    state = dedup_state_build(_df(spark, a[:2]), 8)
+    st, _ = dedup_state_apply(state, _df(spark, b[:2]), 8, max_bucket=4)
+    assert [r.doc_id for r in dedup_survivors(st).collect()] == [0]
+    with pytest.raises(RuntimeError, match="exceeds max_bucket"):
+        dedup_state_apply(state, _df(spark, b[:2]), 8, max_bucket=3)
 
 
 def test_bucketed_state_roundtrip_and_apply_equivalence(spark, tmp_path):
@@ -273,33 +222,6 @@ def test_bucketed_state_probe_join_no_state_exchange(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         for t in ("t_pstate_texts", "t_pstate_bands", "t_pstate_members"):
             drop_table(spark, t)
-
-def test_exact_collapse_pinned_matches_unpinned(spark):
-    """Round-14 internals change: _exact_collapse_pinned (one pinned
-    fp-window pass, reps carry fp) must emit the identical reps and dup
-    edges as the classic _exact_collapse, with fp == md5(text)."""
-    from low_latency_time_series_database_tsdb_for_market_data_spark.operators.llm.dedup import (
-        _exact_collapse,
-        _exact_collapse_pinned,
-    )
-
-    docs = _df(spark, _A + _B)
-    r0, d0 = _exact_collapse(docs)
-    r1, d1 = _exact_collapse_pinned(docs)
-    a = r0.select("doc_id", "text").toPandas().sort_values(
-        "doc_id", ignore_index=True
-    )
-    b = r1.select("doc_id", "text").toPandas().sort_values(
-        "doc_id", ignore_index=True
-    )
-    assert a.equals(b)
-    assert sorted(map(tuple, d0.collect())) == sorted(
-        map(tuple, d1.collect())
-    )
-    fp = r1.withColumn("want", F.md5("text")).where(
-        F.col("fp") != F.col("want")
-    )
-    assert fp.count() == 0
 
 
 def test_load_survivors_matches_state_survivors(spark, tmp_path):

@@ -323,7 +323,8 @@ def test_lsh_pairs_dedup_flag_value_identical(spark, sf_dir):
 
     docs = table(spark, sf_dir, "documents")
     reps, _ = _exact_collapse(docs)
-    reps = reps.localCheckpoint(eager=False)
+    # reps carry their fingerprint through the collapse
+    assert reps.where(F.col("fp") != F.md5("text")).count() == 0
     a = (
         lsh_candidate_pairs(reps, 8)
         .orderBy("a", "b")
